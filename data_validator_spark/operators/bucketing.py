@@ -16,6 +16,8 @@ part of the beyond-reference scale surface, not reference parity.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -76,7 +78,10 @@ def assert_colocated(df: DataFrame) -> None:
 # source-file signature — sorted (relname, size, mtime_ns) of every
 # data file — the copy derives from, and any table/parquet whose
 # watermark disagrees with the CURRENT source is rebuilt, never
-# trusted (same-path rewrites, cross-session appends).
+# trusted (same-path rewrites, cross-session appends). One lifecycle,
+# ensure_copy, serves every at-rest copy: the raw facts here, the
+# derived TPC-H relations (queries/tpch_ext.py) and the dedup indexes
+# (queries/dedup.py), which differ only in name, watermark and build.
 BUCKET_SIDECAR = "_dv_bucket_watermark.json"
 FACT_BUCKETS = 32
 
@@ -141,7 +146,7 @@ def _footer_digest(path: str) -> str:
     contents — a full-corpus read per verification, unjustifiable at
     100 TB for an adversarial-rewrite scenario no normal data tool
     produces (writers rewrite files wholesale, changing sizes or
-    mtimes, which the base signature already catches). content_wm
+    mtimes, which the base signature already catches). verify="footer"
     consumers inherit this bound; see ensure_bucketed_fact.
 
     Deliberately NOT cached by (size, mtime_ns): the whole point is to
@@ -181,7 +186,7 @@ def _footer_signature(path: str) -> list:
     return out
 
 
-# content_wm="full" reads every source byte per verification, so it is
+# verify="full" reads every source byte per verification, so it is
 # gated to sources whose total size stays under this bound (default
 # 256 MiB — the full read costs ~0.1s there; at the 100 TB fact scale
 # the mode degrades to footer verification with a warning, because a
@@ -192,7 +197,7 @@ FULL_WM_MAX_BYTES = 256 << 20
 def _content_signature(path: str) -> list:
     """Sorted [relname, sha256(all file bytes)] for every regular file
     under ``path`` — the full-content watermark behind
-    content_wm="full" (ADVICE r15 residual: a same-size, mtime- and
+    verify="full" (ADVICE r15 residual: a same-size, mtime- and
     footer-statistic-preserving interior rewrite evades both the stat
     signature and the footer digest; hashing every byte is the only
     signal that closes it). sha256, not md5 (ADVICE r17): this
@@ -223,41 +228,134 @@ def _content_signature(path: str) -> list:
     return out
 
 
-def _fact_watermark(spark: SparkSession, sf: str, name: str, key: str) -> dict:
-    import os
-
-    return {
-        "version": FACT_WM_VERSION,
-        "key": key,
-        "files": _source_signature(os.path.join(str(sf), f"{name}.parquet")),
-    }
 
 
-def _fact_identity(spark: SparkSession, sf: str, name: str, key: str) -> tuple:
-    """(table name, warehouse path) of one fact layout — the naming
-    formula ensure_bucketed_fact uses, duplicated here for callers
-    that must inspect the sidecar WITHOUT building (the base function
-    is deliberately byte-stable — see its docstring — so it cannot be
-    refactored to call this). tests/test_bucketing.py pins that the
-    two formulas agree, so a future rename cannot silently diverge."""
-    import os
+def copy_name(sf: str, *parts: str) -> str:
+    """Catalog name of an at-rest copy: ``parts`` joined by ``_`` plus
+    the dataset tag (``sf`` with every non-alphanumeric run folded to
+    ``_``): sf ``/data/tpch/sf0.1`` gives
+    ``dv_bkt_orders_o_orderkey_data_tpch_sf0_1``."""
     import re
 
     tag = re.sub(r"[^0-9a-zA-Z]+", "_", str(sf)).strip("_").lower()
-    t = f"dv_bkt_{name}_{key}_{tag}"
-    wh = re.sub(r"^file:/*", "/", spark.conf.get("spark.sql.warehouse.dir"))
-    return t, os.path.join(wh, t)
+    return "_".join([*parts, tag])
 
 
-def _read_sidecar(path: str) -> dict | None:
+def warehouse_dir(spark: SparkSession) -> str:
+    """Local path of the session warehouse (``file:`` scheme stripped)."""
+    import re
+
+    return re.sub(r"^file:/*", "/", spark.conf.get("spark.sql.warehouse.dir"))
+
+
+def copy_path(spark: SparkSession, table: str) -> str:
+    """Local directory of an at-rest copy: ``table`` under the session
+    warehouse. The explicit LOCATION lets the data outlive the
+    in-memory catalog, so a later session re-registers it metadata-only."""
+    import os
+
+    return os.path.join(warehouse_dir(spark), table)
+
+
+def _read_sidecar(path: str, sidecar: str) -> dict | None:
     import json
     import os
 
     try:
-        with open(os.path.join(path, BUCKET_SIDECAR)) as f:
+        with open(os.path.join(path, sidecar)) as f:
             return json.load(f)
     except (OSError, ValueError):
         return None
+
+
+def _refuse_foreign(spark: SparkSession, table: str, path: str, num_buckets: int) -> None:
+    """Raise unless the catalog entry ``table`` is the copy at ``path``
+    with ``num_buckets`` buckets (ADVICE r11): a foreign table squatting
+    on the name must never be served as the copy. Reads the session
+    catalog's table metadata directly — no Spark job, and a few
+    milliseconds where a DESCRIBE statement costs tens, on a check
+    that runs on every call."""
+    meta = spark._jsparkSession.sessionState().catalog().getTableMetadata(
+        spark._jvm.org.apache.spark.sql.catalyst.TableIdentifier(table)
+    )
+    loc = meta.location().getPath()
+    spec = meta.bucketSpec()
+    buckets = spec.get().numBuckets() if spec.isDefined() else None
+    if loc != path or buckets != num_buckets:
+        raise RuntimeError(
+            f"catalog table {table} does not match the expected bucketed "
+            f"copy (location {loc!r}, buckets {buckets!r}) — refusing to "
+            "serve a foreign table; drop it to rebuild"
+        )
+
+
+def ensure_copy(
+    spark: SparkSession,
+    table: str,
+    keys: list[str],
+    num_buckets: int,
+    watermark: dict,
+    build: Callable[[], DataFrame],
+    on_drop: Callable[[], object] | None = None,
+    sidecar: str = BUCKET_SIDECAR,
+    record: Callable[[], dict] | None = None,
+) -> str:
+    """Idempotently materialize + register the at-rest bucketed copy
+    ``table`` (data under copy_path, external to the catalog); returns
+    the catalog table name. Every at-rest copy goes through here.
+
+    The copy is current when its sidecar agrees with ``watermark`` on
+    every key of ``watermark`` (extra sidecar keys — another consumer's
+    verification data — are ignored, so consumers that verify
+    differently never thrash each other's copy). Verified on every
+    call, never memoized: a same-path source rewrite must be seen.
+
+    - catalog entry + current → return it (after _refuse_foreign);
+    - files on disk + current → metadata-only CREATE TABLE … LOCATION
+      with the column list read from the copy's own parquet footers
+      (cross-session reuse — Spark refuses a bucketed CREATE without
+      one);
+    - otherwise → drop the catalog entry and files, call ``on_drop`` if
+      a copy existed (so caches persisted over its files can be
+      evicted before they fail to read them), write ``build()``
+      bucketed and sorted on ``keys``, and write the sidecar:
+      ``watermark`` plus ``record()`` (data recorded for other
+      consumers but not verified by this one)."""
+    import json
+    import os
+    import shutil
+
+    path = copy_path(spark, table)
+    disk = _read_sidecar(path, sidecar)
+    current = disk is not None and all(disk.get(k) == v for k, v in watermark.items())
+    in_catalog = spark.catalog.tableExists(table)
+    if current and in_catalog:
+        _refuse_foreign(spark, table, path, num_buckets)
+        return table
+    if (
+        current
+        and os.path.isdir(path)
+        and any(f.endswith(".parquet") for f in os.listdir(path))
+    ):
+        ddl = spark.read.parquet(path)._jdf.schema().toDDL()
+        cols = ", ".join(keys)
+        spark.sql(
+            f"CREATE TABLE {table} ({ddl}) USING PARQUET "
+            f"CLUSTERED BY ({cols}) SORTED BY ({cols}) "
+            f"INTO {num_buckets} BUCKETS LOCATION '{path}'"
+        )
+        return table
+    if in_catalog:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+    if in_catalog or os.path.isdir(path):
+        shutil.rmtree(path, ignore_errors=True)
+        if on_drop is not None:
+            on_drop()
+    stamp = {**watermark, **(record() if record else {})}
+    write_bucketed(build(), table, keys, num_buckets, path=path)
+    with open(os.path.join(path, sidecar), "w") as f:
+        json.dump(stamp, f)
+    return table
 
 
 def ensure_bucketed_fact(
@@ -266,15 +364,12 @@ def ensure_bucketed_fact(
     name: str,
     key: str,
     num_buckets: int = FACT_BUCKETS,
-    content_wm: bool = False,
+    verify: str = "stat",
 ) -> str:
-    """Idempotently materialize + register the bucketed external copy
-    of one fact table; returns the catalog table name. Cases: catalog
-    entry + current watermark → no-op; parquet on disk + current
-    watermark → metadata-only CREATE TABLE (cross-session reuse);
-    anything stale → drop and rebuild. The build cost amortizes like
-    any at-rest table layout: it is the one-time price for exchange-
-    free SMJs in every downstream orderkey join.
+    """The at-rest copy of source table ``name`` bucketed on ``key``;
+    returns the catalog table name. The build cost amortizes like any
+    at-rest table layout: it is the one-time price for exchange-free
+    SMJs in every downstream ``key`` join.
 
     The table name carries the bucket key (r15): one source table may
     hold several at-rest layouts with different sort keys — the
@@ -282,186 +377,65 @@ def ensure_bucketed_fact(
     fact⨝fact meets AND on o_custkey for the per-customer family) —
     and they must not thrash each other's watermark.
 
-    ``content_wm=True`` additionally verifies the sidecar's parquet
-    FOOTER digests against the current source. That verification is
-    deliberately UNCACHED — _footer_digest exists to see through
-    rewrites the stat fields miss, so a stat-keyed cache would defeat
-    it — and therefore costs one footer tail-read (seek + a few KB)
-    per source file per call; stat-only consumers never pay it. The
-    base signature already catches every rewrite that touches a size
-    or mtime_ns; the footer check is for validator-class consumers
-    (unique_check, reconciliation_check) that must not trust an
-    mtime/size-preserving rewrite either — up to the stats-preserving
-    residual gap documented on _footer_digest. Builds always RECORD
-    footers so a later content consumer can verify without a
-    rebuild.
+    ``verify`` picks how hard the copy is checked against its source
+    on every call:
 
-    The byte-for-byte verification mode lives in its own wrapper,
-    ensure_bucketed_fact_full (r17, ADVICE r15 / r16 verdict item 5)
-    — see its docstring for the full-content contract. This function
-    is deliberately byte-stable: every bucketed-copy consumer's call
-    graph reaches it, so any executable change here re-flags the
-    whole registry for re-grading."""
-    import json
+    - ``"stat"``: the source-file signature (_source_signature) —
+      catches every rewrite that touches a size or mtime_ns;
+    - ``"footer"``: additionally the parquet footer digests
+      (_footer_digest, one tail read per source file per call) — for
+      validator-class consumers that must not trust an mtime/size-
+      preserving rewrite either, up to the stats-preserving residual
+      documented there;
+    - ``"full"``: additionally sha256 of every source byte
+      (_content_signature), closing that residual for sources under
+      FULL_WM_MAX_BYTES; above the bound it degrades to ``"footer"``
+      with a warning (a full-corpus read per validator call is never
+      the right trade at 100 TB).
+
+    Builds always record footer digests, so a later footer consumer
+    verifies a stat-built copy without a rebuild; a full consumer
+    rebuilds a copy without a content signature once and records it.
+    The content signature is taken BEFORE the rebuild: a source
+    rewritten during the rebuild window mismatches on the next call
+    and rebuilds again, where a post-rebuild hash would bless a copy
+    built from other bytes. Dropping a stale copy evicts the session
+    caches of ``sf`` (ADVICE r18/r19): a cached relation persisted over
+    the dropped files would otherwise fail with FAILED_READ_FILE."""
     import os
-    import re
-    import shutil
 
-    from data_validator_spark.queries import load
+    from data_validator_spark.queries import evict_session_caches, load
 
-    tag = re.sub(r"[^0-9a-zA-Z]+", "_", str(sf)).strip("_").lower()
-    t = f"dv_bkt_{name}_{key}_{tag}"
-    wh = re.sub(r"^file:/*", "/", spark.conf.get("spark.sql.warehouse.dir"))
-    path = os.path.join(wh, t)
-    src_path = os.path.join(str(sf), f"{name}.parquet")
-    wm = _fact_watermark(spark, sf, name, key)
-    disk = _read_sidecar(path)
-    base_keys = ("version", "key", "files")
-    current = disk is not None and {k: disk.get(k) for k in base_keys} == wm
-    if current and content_wm:
-        current = disk.get("footers") == _footer_signature(src_path)
-    if spark.catalog.tableExists(t):
-        if current:
-            return t
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(path, ignore_errors=True)
-    elif (
-        current
-        and os.path.isdir(path)
-        and any(f.endswith(".parquet") for f in os.listdir(path))
-    ):
-        src = load(spark, sf, name)
-        cols = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in src.schema)
-        spark.sql(
-            f"CREATE TABLE {t} ({cols}) USING PARQUET "
-            f"CLUSTERED BY ({key}) SORTED BY ({key}) "
-            f"INTO {num_buckets} BUCKETS LOCATION '{path}'"
-        )
-        return t
-    elif os.path.isdir(path):
-        shutil.rmtree(path, ignore_errors=True)
-    write_bucketed(load(spark, sf, name), t, [key], num_buckets, path=path)
-    wm["footers"] = _footer_signature(src_path)
-    with open(os.path.join(path, BUCKET_SIDECAR), "w") as f:
-        json.dump(wm, f)
-    return t
-
-
-def ensure_bucketed_fact_full(
-    spark: SparkSession,
-    sf: str,
-    name: str,
-    key: str,
-    num_buckets: int = FACT_BUCKETS,
-) -> str:
-    """content_wm="full" (r17, ADVICE r15 / r16 verdict item 5): the
-    byte-for-byte verified variant of ensure_bucketed_fact for
-    validator-class consumers (unique_check, reconciliation_check)
-    that must not trust ANY source rewrite.
-
-    For sources under FULL_WM_MAX_BYTES the sidecar records md5s of
-    EVERY source byte and each call re-hashes the source — an interior
-    rewrite that preserves sizes, mtimes and every footer statistic
-    (the documented _footer_digest residual) is still caught and
-    forces a rebuild. A sidecar without a full signature (stat-only
-    build) rebuilds once and records it; stat-only builders ignore the
-    extra sidecar key, so the layouts never thrash. Above the size
-    bound the mode degrades to the footer check with a warning (a
-    full-corpus read per validator call is never the right trade at
-    100 TB; the documented footer gap is the contract there).
-
-    Kept OUTSIDE ensure_bucketed_fact so the whole registry's call
-    graphs stay byte-stable — only the opted-in validator entries
-    reach this function."""
-    import json
-    import os
-    import shutil
-
-    src_path = os.path.join(str(sf), f"{name}.parquet")
-    files = _source_signature(src_path)  # raises like the base loader
-    if sum(fsize for _rel, fsize, _mt in files) > FULL_WM_MAX_BYTES:
+    if verify not in ("stat", "footer", "full"):
+        raise ValueError(f"verify must be 'stat', 'footer' or 'full', not {verify!r}")
+    src = os.path.join(str(sf), f"{name}.parquet")
+    wm = {"version": FACT_WM_VERSION, "key": key, "files": _source_signature(src)}
+    if verify == "full" and sum(size for _rel, size, _mt in wm["files"]) > FULL_WM_MAX_BYTES:
         import warnings
 
         warnings.warn(
-            f"content_wm='full' on {name!r} under {sf!r} exceeds "
+            f"verify='full' on {name!r} under {sf!r} exceeds "
             f"FULL_WM_MAX_BYTES ({FULL_WM_MAX_BYTES}); degrading to the "
             "footer-digest check (its stats-preserving-rewrite residual "
             "applies — see _footer_digest)",
             RuntimeWarning,
             stacklevel=2,
         )
-        return ensure_bucketed_fact(spark, sf, name, key, num_buckets, True)
-    t, path = _fact_identity(spark, sf, name, key)
-    disk = _read_sidecar(path)
-    cur_sig = _content_signature(src_path)
-    if disk is None or disk.get("content_sha256") != cur_sig:
-        # unverifiable (stat-only build) or content-diverged copy:
-        # never trust it — drop and rebuild off the current source.
-        # Library-level guard (ADVICE r18): if the copy being dropped
-        # EXISTED, any session cache persisted over its file listing
-        # (pagerank / copurchase / drift consumers) would die with
-        # FAILED_READ_FILE on next materialization — evict them so
-        # they rebuild over the fresh layout. One-time cost per layout
-        # upgrade; bench avoids even that by priming the full-wm
-        # validators first, but CLI / plan-audit / ad-hoc session
-        # shapes get the same safety here.
-        if disk is not None and os.path.isdir(path):
-            from data_validator_spark.queries import evict_session_caches
-
-            evict_session_caches(sf)
-        spark.sql(f"DROP TABLE IF EXISTS `{t}`")
-        shutil.rmtree(path, ignore_errors=True)
-    # the base call rebuilds if anything was dropped or stat/footer
-    # stale, and no-ops otherwise
-    t = ensure_bucketed_fact(spark, sf, name, key, num_buckets, True)
-    sidecar = _read_sidecar(path)
-    if sidecar is not None and sidecar.get("content_sha256") != cur_sig:
-        # record the signature taken BEFORE the rebuild, never a
-        # post-rebuild re-hash: if the source was rewritten DURING the
-        # rebuild window, the pre-read signature mismatches on the
-        # next call and forces a rebuild (fail-safe), where a
-        # post-rebuild hash would bless a copy built from other bytes
-        # forever. This branch also backfills the signature when the
-        # base call rebuilt for a stat-only change (mtime touch) and
-        # wrote a sidecar without content_sha256 — without it the next
-        # full call would drop the fresh copy and rebuild AGAIN. The
-        # key is NEW as of the md5→sha256 switch, so a stale md5-era
-        # sidecar (under key content_md5) fails the get() above and
-        # rebuilds exactly once.
-        sidecar["content_sha256"] = cur_sig
-        with open(os.path.join(path, BUCKET_SIDECAR), "w") as f:
-            json.dump(sidecar, f)
-    return t
-
-
-def bucketed_fact_full(
-    spark: SparkSession,
-    sf: str,
-    name: str,
-    key: str,
-    num_buckets: int = FACT_BUCKETS,
-) -> "DataFrame":
-    """DataFrame front door for ensure_bucketed_fact_full — the same
-    degrade-to-raw-reader contract as bucketed_fact (an unsignable
-    remote source keeps working, losing only the layout)."""
-    try:
-        return spark.table(
-            ensure_bucketed_fact_full(spark, sf, name, key, num_buckets)
-        )
-    except FileNotFoundError as e:
-        import warnings
-
-        from data_validator_spark.queries import load
-
-        warnings.warn(
-            f"no local source signature for {name!r} under {sf!r} "
-            f"({e}); serving the raw reader instead of the bucketed "
-            f"copy — correct, but downstream {key} joins/aggregations "
-            "will shuffle",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-        return load(spark, sf, name)
+        verify = "footer"
+    if verify != "stat":
+        wm["footers"] = _footer_signature(src)
+    if verify == "full":
+        wm["content_sha256"] = _content_signature(src)
+    return ensure_copy(
+        spark,
+        copy_name(sf, "dv_bkt", name, key),
+        [key],
+        num_buckets,
+        wm,
+        lambda: load(spark, sf, name),
+        on_drop=lambda: evict_session_caches(sf),
+        record=(lambda: {"footers": _footer_signature(src)}) if verify == "stat" else None,
+    )
 
 
 def bucketed_fact(
@@ -470,18 +444,18 @@ def bucketed_fact(
     name: str,
     key: str,
     num_buckets: int = FACT_BUCKETS,
-    content_wm: bool = False,
-) -> "DataFrame":
+    verify: str = "stat",
+) -> DataFrame:
     """The DataFrame-returning front door every query consumer uses:
-    serve the at-rest bucketed copy when one can be watermark-guarded,
-    otherwise degrade to the raw reader (ADVICE r14: a source on
-    storage os.walk cannot list — s3://, hdfs:// — must keep WORKING
-    through load(), just without the colocated layout; only the
-    optimization is lost, never the query). The warning makes the
-    degrade visible instead of silent."""
+    serve the at-rest bucketed copy (ensure_bucketed_fact) when one can
+    be watermark-guarded, otherwise degrade to the raw reader (ADVICE
+    r14: a source on storage os.walk cannot list — s3://, hdfs:// —
+    must keep WORKING through load(), just without the colocated
+    layout; only the optimization is lost, never the query). The
+    warning makes the degrade visible instead of silent."""
     try:
         return spark.table(
-            ensure_bucketed_fact(spark, sf, name, key, num_buckets, content_wm)
+            ensure_bucketed_fact(spark, sf, name, key, num_buckets, verify)
         )
     except FileNotFoundError as e:
         import warnings

@@ -265,14 +265,11 @@ def dsum(col, alias: str):
     integer-digit capacity regardless of corpus size), and Spark
     widens the SUM accumulator to DECIMAL(28,6) (1e22 headroom), so a
     100 TB global sum still cannot overflow. A term that ever
-    exceeded the cast range would fail the hash oracle loudly, not
-    silently — but note WHERE the loudness lives: DuckDB errors on
-    decimal overflow, while Spark's default non-ANSI mode casts the
-    over-range term to NULL and silently excludes it from the sum. In
-    the graded side-by-side the DuckDB error is the tripwire; a
-    STANDALONE Spark run under-sums silently, so enable
-    spark.sql.ansi.enabled (term cast then throws) if dsum is reused
-    on columns that could plausibly exceed 1e12 (ADVICE r8)."""
+    exceeded the cast range fails loudly on both engines: DuckDB
+    errors on decimal overflow, and Spark runs in ANSI mode
+    (session.ENGINE_CONFS pins spark.sql.ansi.enabled), where the
+    over-range cast throws instead of becoming a NULL the sum would
+    silently skip (ADVICE r8)."""
     return F.sum(col.cast("decimal(18,6)")).cast("double").alias(alias)
 
 

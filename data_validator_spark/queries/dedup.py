@@ -17,6 +17,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from data_validator_spark.functions.text import rolling_shingle_hashes
+from data_validator_spark.operators.bucketing import copy_name, ensure_copy
 from data_validator_spark.operators.checkpoint import free_local_checkpoint
 from data_validator_spark.queries import (
     load,
@@ -1296,96 +1297,50 @@ def _corpus_watermark(spark, sf) -> dict:
     return wm
 
 
-def _read_findex_watermark(path: str) -> dict | None:
-    import json
-    import os
+def _ensure_index(spark, sf, table, kind: str, key: str, buckets: int, rows) -> str:
+    """Idempotently materialize + register one dedup index table
+    (``dv_dedup_{kind}_{tag}`` unless ``table`` names it) over the
+    EXISTING corpus (doc_id < pivot) through the shared copy lifecycle
+    (operators/bucketing.ensure_copy), guarded by the corpus watermark
+    (ADVICE r10): the sidecar records the documents snapshot (row
+    count + max doc_id) the table contents derive from, and any
+    on-disk or registered table whose watermark disagrees with the
+    CURRENT corpus is dropped and rebuilt instead of trusted. That
+    closes both divergence paths: (a) a dataset rewritten at the same
+    path (after evict_session_caches clears the stats probe) no longer
+    leaves stale rows in a live table, and (b) a cross-session append
+    rebuilds from the new pivot, so no doc_id range between the old
+    and new pivots goes unindexed. ``rows(pivot)`` is the corpus-side
+    content, bucketed on ``key``.
 
-    try:
-        with open(os.path.join(path, _FINDEX_WATERMARK_FILE)) as f:
-            return json.load(f)
-    except (OSError, ValueError):
-        return None
+    Every build resets the table's steady-state caches
+    (_invalidate_index_caches) — also a build where nothing was
+    dropped (table and files removed by hand), which the lifecycle's
+    drop hook cannot see."""
+    t = table or copy_name(sf, "dv_dedup", kind)
 
+    def build():
+        _invalidate_index_caches(t)
+        return rows(_incremental_pivot(spark, sf))
 
-def _write_findex_watermark(path: str, wm: dict) -> None:
-    import json
-    import os
-
-    # Leading underscore: Spark's file index skips `_`/`.` files, so
-    # the sidecar never pollutes the table's parquet scan.
-    with open(os.path.join(path, _FINDEX_WATERMARK_FILE), "w") as f:
-        json.dump(wm, f)
-
-
-def _findex_identity(spark, sf, table: str | None):
-    """(table_name, external_path) for the dataset's index table. The
-    data lives at an explicit LOCATION under the session warehouse so
-    it SURVIVES sessions even though the default in-memory catalog
-    does not — re-registration is a metadata-only CREATE TABLE."""
-    import os
-    import re
-
-    if table is None:
-        tag = re.sub(r"[^0-9a-zA-Z]+", "_", str(sf)).strip("_").lower()
-        table = f"dv_dedup_findex_{tag}"
-    wh = spark.conf.get("spark.sql.warehouse.dir")
-    wh = re.sub(r"^file:/*", "/", wh)
-    return table, os.path.join(wh, table)
+    return ensure_copy(
+        spark, t, [key], buckets, _corpus_watermark(spark, sf), build,
+        sidecar=_FINDEX_WATERMARK_FILE,
+    )
 
 
 def _ensure_findex(spark, sf, table: str | None = None) -> str:
-    """Idempotently materialize + register the fingerprint index table
-    built from the EXISTING corpus (doc_id < pivot), guarded by a
-    corpus watermark (ADVICE r10). The sidecar watermark records the
-    documents snapshot (row count + max doc_id) the table contents
-    derive from; any on-disk or registered table whose watermark
-    disagrees with the CURRENT corpus is dropped and rebuilt instead
-    of trusted. That closes both divergence paths: (a) a dataset
-    rewritten at the same path (after evict_session_caches clears the
-    stats probe) no longer leaves stale fingerprints in a live table,
-    and (b) a cross-session append rebuilds from the new pivot, so no
-    doc_id range between the old and new pivots goes unindexed.
-    Remaining cases: registered + watermark-current → no-op; data on
-    disk + watermark-current → metadata-only external CREATE TABLE;
-    else → bucketed (re)build."""
-    import os
-    import shutil
-
+    """The fingerprint index table: distinct fp60 of the existing
+    corpus, bucketed on fp60 (see _ensure_index)."""
     from data_validator_spark.functions.text import fingerprint60
-    from data_validator_spark.operators.bucketing import write_bucketed
 
-    t, path = _findex_identity(spark, sf, table)
-    wm = _corpus_watermark(spark, sf)
-    disk_wm = _read_findex_watermark(path)
-    if spark.catalog.tableExists(t):
-        if disk_wm == wm:
-            return t
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(path, ignore_errors=True)
-    elif (
-        disk_wm == wm
-        and os.path.isdir(path)
-        and any(f.endswith(".parquet") for f in os.listdir(path))
-    ):
-        spark.sql(
-            f"CREATE TABLE {t} (fp60 BIGINT) USING PARQUET "
-            f"CLUSTERED BY (fp60) SORTED BY (fp60) "
-            f"INTO {FINDEX_BUCKETS} BUCKETS LOCATION '{path}'"
-        )
-        return t
-    elif os.path.isdir(path):
-        shutil.rmtree(path, ignore_errors=True)
-    _invalidate_index_caches(t)
-    pivot = _incremental_pivot(spark, sf)
-    base = (
-        load_documents_by_id(spark, sf)
+    return _ensure_index(
+        spark, sf, table, "findex", "fp60", FINDEX_BUCKETS,
+        lambda pivot: load_documents_by_id(spark, sf)
         .where(F.col("doc_id") < F.lit(pivot))
         .select(fingerprint60(F.col("text")).alias("fp60"))
-        .distinct()
+        .distinct(),
     )
-    write_bucketed(base, t, ["fp60"], FINDEX_BUCKETS, path=path)
-    _write_findex_watermark(path, wm)
-    return t
 
 
 def q_dedup_index_refresh(spark, sf, table: str | None = None):
@@ -1570,12 +1525,12 @@ def _put_wm_cache(cache: dict, key: tuple, value) -> None:
 
 
 def _invalidate_index_caches(table: str) -> None:
-    """Drop steady-state entries for one index table. Called on the
-    REBUILD path of _ensure_findex/_ensure_bindex: a rebuild under an
-    UNCHANGED corpus watermark (manually dropped table/dir) restarts
-    the table at corpus-side-only content, so a cached probe/census
-    keyed by that same watermark would be stale-high and make the next
-    refresh skip a delta the rebuilt table genuinely lacks."""
+    """Drop steady-state entries for one index table. Called on every
+    build of _ensure_index: a rebuild under an UNCHANGED corpus
+    watermark (manually dropped table/dir) restarts the table at
+    corpus-side-only content, so a cached probe/census keyed by that
+    same watermark would be stale-high and make the next refresh skip
+    a delta the rebuilt table genuinely lacks."""
     for cache in (_BINDEX_MAX_CACHE, _BINDEX_OK_BUCKETS_CACHE, _FINDEX_DONE_CACHE):
         for key in [k for k in cache if k[2] == table]:
             val = cache.pop(key)
@@ -1609,53 +1564,15 @@ def _bindex_ok_buckets(spark, sf, t: str, wm: dict):
 
 
 def _ensure_bindex(spark, sf, table: str | None = None) -> str:
-    """Idempotently materialize + register the band-index table over
-    the EXISTING corpus (doc_id < pivot), watermark-guarded exactly
-    like _ensure_findex (same sidecar helpers): any table or parquet
-    whose recorded corpus snapshot disagrees with the current
-    documents table is dropped and rebuilt, never trusted."""
-    import os
-    import re
-    import shutil
-
-    from data_validator_spark.operators.bucketing import write_bucketed
-
-    if table is None:
-        tag = re.sub(r"[^0-9a-zA-Z]+", "_", str(sf)).strip("_").lower()
-        table = f"dv_dedup_bindex_{tag}"
-    wh = re.sub(r"^file:/*", "/", spark.conf.get("spark.sql.warehouse.dir"))
-    path = os.path.join(wh, table)
-    wm = _corpus_watermark(spark, sf)
-    disk_wm = _read_findex_watermark(path)
-    if spark.catalog.tableExists(table):
-        if disk_wm == wm:
-            return table
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        shutil.rmtree(path, ignore_errors=True)
-    elif (
-        disk_wm == wm
-        and os.path.isdir(path)
-        and any(f.endswith(".parquet") for f in os.listdir(path))
-    ):
-        spark.sql(
-            f"CREATE TABLE {table} (sig64 BIGINT, doc_id BIGINT) USING PARQUET "
-            f"CLUSTERED BY (sig64) SORTED BY (sig64) "
-            f"INTO {BINDEX_BUCKETS} BUCKETS LOCATION '{path}'"
-        )
-        return table
-    elif os.path.isdir(path):
-        shutil.rmtree(path, ignore_errors=True)
-    _invalidate_index_caches(table)
-    pivot = _incremental_pivot(spark, sf)
-    base = (
-        _band_df(spark, sf)
+    """The band-index table: distinct (sig64, doc_id) band postings of
+    the existing corpus, bucketed on sig64 (see _ensure_index)."""
+    return _ensure_index(
+        spark, sf, table, "bindex", "sig64", BINDEX_BUCKETS,
+        lambda pivot: _band_df(spark, sf)
         .where(F.col("doc_id") < F.lit(pivot))
         .select(_sig64_col().alias("sig64"), "doc_id")
-        .distinct()
+        .distinct(),
     )
-    write_bucketed(base, table, ["sig64"], BINDEX_BUCKETS, path=path)
-    _write_findex_watermark(path, wm)
-    return table
 
 
 def q_dedup_band_index_refresh(spark, sf, table: str | None = None):

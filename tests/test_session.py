@@ -26,6 +26,12 @@ def test_engine_confs_contain_sorted_bucket_scan_recognition():
     )
 
 
+def test_engine_confs_pin_ansi_mode():
+    """dsum's overflow contract: an over-range decimal cast must throw,
+    never become a NULL the sum skips."""
+    assert ENGINE_CONFS["spark.sql.ansi.enabled"] == "true"
+
+
 def test_apply_engine_confs_folds_into_builder():
     class FakeBuilder:
         def __init__(self):

@@ -28,6 +28,13 @@ def _rest(spark, path: str):
         return json.loads(r.read())
 
 
+def node_metrics(node: dict) -> dict:
+    """The time/rows/spill metrics of one SQL-plan node from the REST
+    API, by name (a node may carry any number of metrics, or none)."""
+    mets = {m["name"]: m["value"] for m in node.get("metrics", [])}
+    return {k: v for k, v in mets.items() if any(t in k for t in ("time", "rows", "spill"))}
+
+
 def main() -> int:
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     sf_dir = sys.argv[1]
@@ -94,18 +101,7 @@ def main() -> int:
             execs = _rest(spark, "/sql?length=200")
             last = max(execs, key=lambda e: e["id"])
             for node in last.get("nodes", []):
-                interesting = {
-                    k: v
-                    for k, v in (m.items() for m in [
-                        {mm["name"]: mm["value"] for mm in node.get("metrics", [])}
-                    ])
-                }
-                mets = interesting or {}
-                keep = {
-                    k: v
-                    for k, v in mets.items()
-                    if any(t in k for t in ("time", "rows", "spill"))
-                }
+                keep = node_metrics(node)
                 print(f"  node {node['nodeId']:3d} {node['nodeName'][:45]:45s} {keep}")
     return 0
 
