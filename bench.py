@@ -616,7 +616,7 @@ def main() -> int:
     # Prime pass (r6 verdict item: cold-cache accounting): several
     # queries share session-persisted relations (trigram model, gopher/
     # entropy signals, derived TPC-H relations, dup-pair candidates —
-    # queries/__init__.py:_SESSION_CACHES). Without priming, whichever
+    # the queries.SessionCache instances). Without priming, whichever
     # consumer the bench happens to reach first is charged the one-time
     # build (observed: 15.1s trigram build landing on ccnet_buckets,
     # 7.6s Python-worker spin-up landing on multimodal_meta in the r6
@@ -639,7 +639,7 @@ def main() -> int:
         # lineitem parts in the first r18 fresh-warehouse bench run).
         "unique_check",           # lineitem l_orderkey, full-content-watermark
         "reconciliation_check",   # + orders o_orderkey, full-content-watermark
-        # _SESSION_CACHES builders, one consumer per cache
+        # SessionCache builders, one consumer per cache
         "trigram_lm_score",       # corpus_ops._TRIGRAM_MODEL_CACHE
         "dsir_importance",        # corpus_ops._DSIR_CACHE
         "gopher_quality",         # mining_ops._GOPHER_CACHE
@@ -652,6 +652,7 @@ def main() -> int:
         # r13: the incremental minhash screen reads the PERSISTED band
         # index; the refresh builds it (plus the delta append), so the
         # screen's timed runs measure screening, not table creation
+        # (and fills dedup._BINDEX_MAX_CACHE)
         "dedup_band_index_refresh",
         "quality_ensemble",       # quality_ops._ENSEMBLE_DOCS_CACHE
         "ngram_contamination",    # quality_ops._CONTAM_TRAIN_CACHE (r16)
@@ -668,7 +669,7 @@ def main() -> int:
         "events_sessionized",
         # r15: the o_custkey/c_custkey at-rest copies serve the
         # per-customer family — rfm_segments builds the orders copy
-        # (plus its session-persisted per-customer relation),
+        # (plus warehouse_ops._RFM_CACHE/_RFM_BOUNDS_CACHE),
         # cdc_upsert the customer copy, token_count the doc_id
         # documents copy (graded doc family)
         "rfm_segments",
@@ -878,6 +879,20 @@ def main() -> int:
 
 
 STDOUT_BUDGET = 1800  # chars; driver tail-captures the last 2000
+# headline keys compact_line carries; everything else stays in the
+# detail file
+COMPACT_KEYS = (
+    "metric",
+    "value",
+    "unit",
+    "sf",
+    "runs_per_query",
+    "prime_pass_sec",
+    "contended",
+    "run_conditions",
+    "guard_failures",
+    "cc_chain",
+)
 
 
 LOADAVG_CONTENDED = 8.0  # 1-min loadavg before the run, 32-core box
@@ -980,20 +995,10 @@ def compact_line(out: dict, detail_file: str) -> str:
     (fast_queries_total_sec + queries_omitted). The full contention
     probe stays in the detail file; only the boolean rides the line."""
     results: dict = out["queries"]
-    base = {
-        k: v
-        for k, v in out.items()
-        if k
-        not in (
-            "queries",
-            "contention",
-            "runs_sec",
-            "query_start_epoch",
-            "load_after",
-            "py_worker_probe_sec",
-            "streaming_progress",
-        )
-    }
+    # an allowlist, so a new diagnostic key (a contention retry's
+    # attempt1/retry_pass, each a whole pass) never crowds the
+    # per-query timings out of the budget
+    base = {k: out[k] for k in COMPACT_KEYS if k in out}
     base["detail_file"] = detail_file
     base["n_queries"] = len(results)
     # -1.0 sentinels mark errored/missing entries; they are excluded

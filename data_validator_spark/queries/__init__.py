@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -167,44 +168,151 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-# Registry of every module-level session cache (keys are
-# (applicationId, sf[, name]); values are DataFrames, tuples of
-# DataFrames, or plain scalars such as probed counts). The caches
-# deliberately live for the whole application — the bench/driver
-# pattern touches each dataset repeatedly — but a long-lived session
-# hopping across many datasets accumulates pinned relations;
-# evict_session_caches() is the explicit release valve (ADVICE r5).
-# Scalar caches register too: a dataset rewritten at the same path
-# in one session must drop its cached counts alongside the relations
-# (ADVICE r9; eviction already tolerates non-DataFrame values).
-_SESSION_CACHES: list[dict] = []
+_SESSION_CACHES: list[SessionCache] = []
 
 
-def register_session_cache(cache: dict) -> dict:
-    _SESSION_CACHES.append(cache)
-    return cache
+class SessionCache:
+    """Values derived from a dataset, kept for the whole application.
+
+    Every cache registers itself in ``_SESSION_CACHES`` when it is
+    created, so ``evict_session_caches`` reaches all of them. The
+    caches deliberately live for the whole application — the
+    bench/driver pattern touches each dataset repeatedly — but a
+    long-lived session hopping across many datasets accumulates pinned
+    relations; eviction is the explicit release valve (ADVICE r5).
+
+    Key: ``(applicationId, str(sf), *sub)``. ``sub`` names one of
+    several values per dataset (a derived relation, an index table).
+
+    Persist policy: ``get`` returns the stored value on a hit; on a
+    miss it calls ``build()``, persists a DataFrame result
+    MEMORY_AND_DISK and stores tuples and scalars as built (a tuple
+    build persists its own members, because it reads them while
+    building). Scalars belong here too: a dataset rewritten at the
+    same path in one session must drop its cached counts alongside
+    the relations (ADVICE r9). ``put`` stores a value as given.
+
+    Supersession: an entry may carry a ``version`` (a corpus
+    watermark). A hit needs an equal version; storing a new version
+    drops the superseded entry for the same key at insert time
+    (ADVICE r16) — in the incremental-append workload every watermark
+    move would otherwise strand the previous MEMORY_AND_DISK relation
+    until an explicit eviction.
+
+    Eviction: ``evict(sf, *sub)`` unpersists the DataFrame members of
+    every matching entry and drops it."""
+
+    def __init__(self) -> None:
+        self._entries: dict[tuple, tuple] = {}  # key -> (version, value)
+        _SESSION_CACHES.append(self)
+
+    def __len__(self) -> int:
+        return len(self._entries)
+
+    def get(self, spark, sf, build=None, *sub, version=None):
+        """The cached value; on a miss, ``build()``'s (None when no
+        build is given)."""
+        key = (spark.sparkContext.applicationId, str(sf), *sub)
+        hit = self._entries.get(key)
+        if hit is not None and hit[0] == version:
+            return hit[1]
+        if build is None:
+            return None
+        value = build()
+        if isinstance(value, DataFrame):
+            value = value.persist(StorageLevel.MEMORY_AND_DISK)
+        self._store(key, version, value)
+        return value
+
+    def put(self, spark, sf, value, *sub, version=None) -> None:
+        self._store((spark.sparkContext.applicationId, str(sf), *sub), version, value)
+
+    def _store(self, key: tuple, version, value) -> None:
+        old = self._entries.get(key)
+        self._entries[key] = (version, value)
+        if old is not None and old[0] != version:
+            _release_superseded(old[1], value)
+
+    def evict(self, sf=None, *sub) -> int:
+        """Unpersist and drop every entry built for `sf` (all datasets
+        when None) whose sub-key starts with `sub`. Returns the number
+        of evicted entries."""
+        evicted = 0
+        for key in list(self._entries):
+            if sf is not None and key[1] != str(sf):
+                continue
+            if key[2 : 2 + len(sub)] != sub:
+                continue
+            _, val = self._entries.pop(key)
+            for df in val if isinstance(val, tuple) else (val,):
+                if isinstance(df, DataFrame):
+                    try:
+                        df.unpersist()
+                    except Exception:
+                        pass
+            evicted += 1
+        return evicted
 
 
-_SPLIT_COUNT_CACHE: dict[tuple, int] = register_session_cache({})
+def _release_superseded(old, new) -> None:
+    """Unpersist a superseded relation unless it shares its cache
+    registration with the new one.
+
+    Plan-identity guard: Spark's CacheManager keys cached data by
+    LOGICAL PLAN, not by DataFrame object — if the superseded and the
+    new relation are semantically the same plan (possible when only
+    the watermark moved), unpersisting the old one would silently
+    drop the NEW registration too, so such entries are dropped
+    without an unpersist (nothing is stranded: the cache entry is
+    shared). Scalar values are recognized by their missing _jdf
+    (AttributeError, distinguished from comparison failures per
+    ADVICE r17)."""
+    if old is new:
+        return
+    try:
+        jdfs = (old._jdf, new._jdf)
+    except AttributeError:
+        # scalar entry (probed count, watermark flag): nothing
+        # persisted, nothing to unpersist
+        return
+    try:
+        same = jdfs[0].queryExecution().analyzed().sameResult(
+            jdfs[1].queryExecution().analyzed()
+        )
+    except Exception:
+        # comparison itself failed (transient py4j/JVM error): we
+        # cannot PROVE the plans differ, and unpersisting a same-plan
+        # entry would drop the new registration's shared cache too.
+        # Skip the unpersist — leak-safe: worst case one relation
+        # stays pinned until evict_session_caches (ADVICE r17).
+        return
+    if same:
+        return
+    try:
+        old.unpersist()
+    except Exception:
+        pass
 
 
 def evict_session_caches(sf_dir: str | None = None) -> int:
     """Unpersist and drop every registered cached relation (or only
     those built for `sf_dir`). Returns the number of evicted entries.
     Safe to call at any point — consumers re-materialize on demand."""
-    evicted = 0
-    for cache in _SESSION_CACHES:
-        for key in list(cache):
-            if sf_dir is not None and str(sf_dir) not in map(str, key):
-                continue
-            val = cache.pop(key)
-            for df in val if isinstance(val, tuple) else (val,):
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
-            evicted += 1
-    return evicted
+    return sum(cache.evict(sf_dir) for cache in _SESSION_CACHES)
+
+
+# keyed by an input file set in the `sf` slot (see spread), so
+# evict_session_caches(sf) never matches it
+_SPLIT_COUNT_CACHE = SessionCache()
+_ROW_COUNT_CACHE = SessionCache()
+
+
+def row_count(spark: SparkSession, sf_dir: str, table: str) -> int:
+    """Row count of one table: a column-pruned count job, once per
+    (application, dataset, table) — the plan-time sizing probe."""
+    return _ROW_COUNT_CACHE.get(
+        spark, sf_dir, lambda: load(spark, sf_dir, table).count(), table
+    )
 
 
 def spread(df: DataFrame) -> DataFrame:
@@ -243,11 +351,9 @@ def spread(df: DataFrame) -> DataFrame:
     if not files:
         n = df.rdd.getNumPartitions()
     else:
-        key = (sc.applicationId, files)
-        n = _SPLIT_COUNT_CACHE.get(key)
-        if n is None:
-            n = df.rdd.getNumPartitions()
-            _SPLIT_COUNT_CACHE[key] = n
+        n = _SPLIT_COUNT_CACHE.get(
+            df.sparkSession, files, lambda: df.rdd.getNumPartitions()
+        )
     if n < target:
         return df.repartition(target)
     return df

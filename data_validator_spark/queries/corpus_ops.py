@@ -22,10 +22,10 @@ from pyspark.sql import functions as F
 
 from data_validator_spark.queries import (
     DEC,
+    SessionCache,
     load,
     load_documents_by_id,
     load_embeddings_by_id,
-    register_session_cache,
 )
 from data_validator_spark.queries.pipeline_ops import _hash60, _sql_hash60
 from data_validator_spark.functions.text import normalized_text, token_count
@@ -199,7 +199,7 @@ def _assign(df, centroids: list[tuple[int, list[float]]]):
     )
 
 
-_KMEANS_CENTROIDS_CACHE: dict = register_session_cache({})
+_KMEANS_CENTROIDS_CACHE = SessionCache()
 
 
 def q_kmeans_embeddings(spark, sf):
@@ -232,9 +232,7 @@ def q_kmeans_embeddings(spark, sf):
     # once per (session, dataset); repeat executions pay only the
     # final assignment scan (r16, the trigram-model caching rule).
     # k*dim plain floats on the driver: eviction-safe scalar cache.
-    ck = (spark.sparkContext.applicationId, str(sf))
-    centroids = _KMEANS_CENTROIDS_CACHE.get(ck)
-    if centroids is None:
+    def train():
         init = df.orderBy("vec_id").limit(KMEANS_K).collect()
         centroids = [(i, [float(x) for x in r.embedding]) for i, r in enumerate(init)]
         for _ in range(KMEANS_ITERS - 1):
@@ -249,7 +247,9 @@ def q_kmeans_embeddings(spark, sf):
             for r in rows:
                 by_cluster.setdefault(r.cluster_id, [0.0] * EMB_DIM)[r.pos] = r.c
             centroids = sorted((cid, cent) for cid, cent in by_cluster.items())
-        _KMEANS_CENTROIDS_CACHE[ck] = centroids
+        return centroids
+
+    centroids = _KMEANS_CENTROIDS_CACHE.get(spark, sf, train)
     assigned = _assign(df, centroids)
     return (
         assigned.groupBy("cluster_id")
@@ -347,9 +347,8 @@ def q_trigram_lm_score(spark, sf, base=None):
             )
         ).alias("t"),
     )
-    key = (spark.sparkContext.applicationId, str(sf))
-    model = _TRIGRAM_MODEL_CACHE.get(key)
-    if model is None:
+
+    def build():
         counts = tri.groupBy("t").agg(F.count("*").alias("cnt"))
         # total trigram count derived from the VOCABULARY-scale counts
         # relation (≤ |charset|³ rows) with one empty-frame window — a
@@ -358,16 +357,12 @@ def q_trigram_lm_score(spark, sf, base=None):
         # is the same exact long either way; the oracle keeps its
         # CROSS JOIN spelling)
         total = F.sum("cnt").over(Window.partitionBy())
-        model = counts.select(
-            "t", (F.col("cnt").cast("double") / total).alias("p")
-        )
-        from pyspark import StorageLevel
+        return counts.select("t", (F.col("cnt").cast("double") / total).alias("p"))
 
-        # the model is a vocabulary-scale relation (≤|Σ|³ rows) shared
-        # by trigram_lm_score, quality_ensemble, and ccnet_buckets —
-        # persist it so repeat consumers pay only the scoring pass
-        model = model.persist(StorageLevel.MEMORY_AND_DISK)
-        _TRIGRAM_MODEL_CACHE[key] = model
+    # the model is a vocabulary-scale relation (≤|Σ|³ rows) shared by
+    # trigram_lm_score, quality_ensemble, and ccnet_buckets — persist
+    # it so repeat consumers pay only the scoring pass
+    model = _TRIGRAM_MODEL_CACHE.get(spark, sf, build)
     return (
         tri.join(F.broadcast(model), "t")
         .groupBy("doc_id")
@@ -797,7 +792,7 @@ DSIR_BUCKETS = 4096  # hashed n-gram feature space (DSIR's 10^4 analog)
 
 
 # The trigram-LM probability model, shared by three registry entries.
-_TRIGRAM_MODEL_CACHE: dict = register_session_cache({})
+_TRIGRAM_MODEL_CACHE = SessionCache()
 
 
 # dsir's (doc_id, bucket, count, keep) relation feeds THREE subplan
@@ -806,19 +801,18 @@ _TRIGRAM_MODEL_CACHE: dict = register_session_cache({})
 # r5 plan audit counted 8 scans / 22 exchanges). Collapsing to
 # per-(doc, bucket) counts BEFORE the joins bounds the persisted
 # relation at |docs| × min(grams/doc, DSIR_BUCKETS) rows — far below
-# gram scale — and the session-keyed persist follows the
-# _BASKET_CACHE / _PAIRS_CACHE convention.
-_DSIR_CACHE: dict = register_session_cache({})
+# gram scale.
+_DSIR_CACHE = SessionCache()
 
 
 def _dsir_tagged(spark, sf):
+    return _DSIR_CACHE.get(spark, sf, lambda: _build_dsir_tagged(spark, sf))
+
+
+def _build_dsir_tagged(spark, sf):
     from data_validator_spark.queries.mining_ops import q_gopher_quality
     from data_validator_spark.queries.pipeline_ops import _hash60
 
-    key = (spark.sparkContext.applicationId, str(sf))
-    cached = _DSIR_CACHE.get(key)
-    if cached is not None:
-        return cached
     df = load_documents_by_id(spark, sf)
     toks = df.select(
         "doc_id", F.split(F.trim(F.col("text")), r"[ \t\n\x0B\f\r]+").alias("toks")
@@ -836,12 +830,7 @@ def _dsir_tagged(spark, sf):
     ).select("doc_id", F.pmod(_hash60(F.col("g")), F.lit(DSIR_BUCKETS)).alias("b"))
     dcounts = grams.groupBy("doc_id", "b").agg(F.count(F.lit(1)).alias("c"))
     target = q_gopher_quality(spark, sf).select("doc_id", "keep")
-    tagged = dcounts.join(target, "doc_id")
-    from pyspark import StorageLevel
-
-    tagged = tagged.persist(StorageLevel.MEMORY_AND_DISK)
-    _DSIR_CACHE[key] = tagged
-    return tagged
+    return dcounts.join(target, "doc_id")
 
 
 def q_dsir_importance(spark, sf):

@@ -19,11 +19,7 @@ from pyspark.sql import functions as F
 from data_validator_spark.functions.text import rolling_shingle_hashes
 from data_validator_spark.operators.bucketing import copy_name, ensure_copy
 from data_validator_spark.operators.checkpoint import free_local_checkpoint
-from data_validator_spark.queries import (
-    load,
-    load_documents_by_id,
-    register_session_cache,
-)
+from data_validator_spark.queries import SessionCache, load, load_documents_by_id
 
 # MinHash parameters: 64 permutations h_i(x) = (a_i*(x mod P) + b_i) mod P,
 # banded 16×4. P = 2^31-1 keeps a_i*(x%P)+b_i < 2^62 (no int64 overflow,
@@ -66,14 +62,17 @@ hs AS (SELECT doc_id,
 # on both sides of its Jaccard join (the nondeterministic projection
 # barrier would otherwise defeat ReuseExchange and hash the corpus
 # twice in one query).
-_HS_CACHE: dict = register_session_cache({})
+_HS_CACHE = SessionCache()
 
 
 def _shingle_hashes_df(spark, sf):
     """(doc_id, h: array<bigint>) — distinct 60-bit shingle hashes,
-    persisted and shared across the dedup family (see note above).
+    persisted and shared across the dedup family (see note above)."""
+    return _HS_CACHE.get(spark, sf, lambda: _build_shingle_hashes(spark, sf))
 
-    Built over the doc_id-bucketed documents copy (r17, the pagerank/
+
+def _build_shingle_hashes(spark, sf):
+    """Built over the doc_id-bucketed documents copy (r17, the pagerank/
     q19 InMemoryRelation rule): the bucketed scan's
     HashPartitioning(doc_id) survives the in-row hash kernels and the
     persist, so the InMemoryRelation serves every downstream doc_id
@@ -92,10 +91,6 @@ def _shingle_hashes_df(spark, sf):
     non-deterministic column in the projection stops the collapse, so
     the lambda slices a bound array instead.
     """
-    key = (spark.sparkContext.applicationId, str(sf))
-    cached = _HS_CACHE.get(key)
-    if cached is not None:
-        return cached
     df = load_documents_by_id(spark, sf)
     from data_validator_spark.functions.text import normalized_text, tokens
 
@@ -116,12 +111,7 @@ def _shingle_hashes_df(spark, sf):
         shingles,
         lambda s: F.conv(F.substring(F.md5(F.encode(s, "utf-8")), 1, 15), 16, 10).cast("long"),
     )
-    out = tk.select("doc_id", F.array_distinct(h).alias("h"))
-    from pyspark import StorageLevel
-
-    out = out.persist(StorageLevel.MEMORY_AND_DISK)
-    _HS_CACHE[key] = out
-    return out
+    return tk.select("doc_id", F.array_distinct(h).alias("h"))
 
 
 # -- dedup_exact -----------------------------------------------------------
@@ -231,15 +221,15 @@ MAX_BUCKET = 256
 # orders of magnitude smaller than the corpus at 100 TB — and a real
 # pipeline materializes the candidate set once, then runs every
 # verifier against it.
-_PAIRS_CACHE: dict = register_session_cache({})
+_PAIRS_CACHE = SessionCache()
 
 
 def _lsh_pairs_df(spark, sf):
     """(doc_a, doc_b) distinct candidate pairs, unordered, persisted."""
-    key = (spark.sparkContext.applicationId, str(sf))
-    cached = _PAIRS_CACHE.get(key)
-    if cached is not None:
-        return cached
+    return _PAIRS_CACHE.get(spark, sf, lambda: _build_lsh_pairs(spark, sf))
+
+
+def _build_lsh_pairs(spark, sf):
     bands = _band_df(spark, sf)
     buckets = (
         bands.groupBy("band", "sig")
@@ -261,17 +251,12 @@ def _lsh_pairs_df(spark, sf):
     # — subset rule — and the persisted relation then serves every
     # consumer's first join (on doc_a) exchange-free, where .distinct()
     # partitioned the cache on (doc_a, doc_b), which no join key uses
-    out = (
+    return (
         buckets.select(F.explode(pair_structs).alias("p"))
         .select(F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b"))
         .repartition("doc_a")
         .dropDuplicates(["doc_a", "doc_b"])
     )
-    from pyspark import StorageLevel
-
-    out = out.persist(StorageLevel.MEMORY_AND_DISK)
-    _PAIRS_CACHE[key] = out
-    return out
 
 
 def q_dedup_minhash_lsh(spark, sf):
@@ -422,15 +407,9 @@ def q_dedup_incremental_minhash(spark, sf):
     # the refresh's own cached max-doc_id scalar (one column-pruned
     # job per (session, watermark)); a fresh index without the delta
     # falls back to deriving the bands in-session.
-    probe_key = _wm_key(spark, sf, t, wm)
-    table_max = _BINDEX_MAX_CACHE.get(probe_key)
-    if table_max is None:
-        table_max = int(
-            spark.table(t)
-            .agg(F.coalesce(F.max("doc_id"), F.lit(-1)).alias("m"))
-            .first()["m"]
-        )
-        _put_wm_cache(_BINDEX_MAX_CACHE, probe_key, table_max)
+    table_max = _BINDEX_MAX_CACHE.get(
+        spark, sf, lambda: _table_max_doc_id(spark, t), t, version=wm
+    )
     if int(table_max) >= wm["max_doc_id"]:
         db = (
             spark.table(t)
@@ -1064,11 +1043,8 @@ DELTA_FRAC = 0.9
 # rescanning corpus text — the batch-append analog of ivm_agg
 # (warehouse_ops.py), composing doc_fingerprint + the
 # bloom_filter_semijoin pre-screen (accel_ops.py).
-_INC_INDEX_CACHE: dict = register_session_cache({})
-# Registered alongside the relations it describes: a dataset
-# rewritten at the same path must drop its cached pivot when
-# evict_session_caches() re-materializes the index (ADVICE r9).
-_INC_PIVOT_CACHE: dict[tuple, int] = register_session_cache({})
+_INC_INDEX_CACHE = SessionCache()
+_INC_PIVOT_CACHE = SessionCache()
 
 
 def _incremental_pivot(spark, sf) -> int:
@@ -1077,19 +1053,19 @@ def _incremental_pivot(spark, sf) -> int:
     per (application, dataset); as a LITERAL it pushes into the delta
     parquet scan as GreaterThanOrEqual — row-group pruning on the
     append files, which is the whole point of incremental dedup."""
-    key = (spark.sparkContext.applicationId, str(sf))
-    pivot = _INC_PIVOT_CACHE.get(key)
-    if pivot is None:
-        docs = load(spark, sf, "documents")
-        pivot = int(
-            docs.agg(
+    return _INC_PIVOT_CACHE.get(
+        spark,
+        sf,
+        lambda: int(
+            load(spark, sf, "documents")
+            .agg(
                 F.floor((F.max("doc_id") + F.lit(1)) * F.lit(DELTA_FRAC))
                 .cast("long")
                 .alias("p")
-            ).first()["p"]
-        )
-        _INC_PIVOT_CACHE[key] = pivot
-    return pivot
+            )
+            .first()["p"]
+        ),
+    )
 
 
 def _incremental_index(spark, sf):
@@ -1098,10 +1074,10 @@ def _incremental_index(spark, sf):
     its bounded Bloom bit set (≤ BLOOM_M rows regardless of corpus
     size). Both persisted — the 'index build' happens once; graded
     executions scan only the append delta."""
-    key = (spark.sparkContext.applicationId, str(sf))
-    cached = _INC_INDEX_CACHE.get(key)
-    if cached is not None:
-        return cached
+    return _INC_INDEX_CACHE.get(spark, sf, lambda: _build_incremental_index(spark, sf))
+
+
+def _build_incremental_index(spark, sf):
     from pyspark import StorageLevel
 
     from data_validator_spark.functions.text import doc_fingerprint
@@ -1126,7 +1102,6 @@ def _incremental_index(spark, sf):
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _INC_INDEX_CACHE[key] = (index, bits)
     return index, bits
 
 
@@ -1267,10 +1242,10 @@ FINDEX_DIGEST_BUCKETS = 16
 FINDEX_MOD = 1_000_003
 
 
-# Corpus-snapshot stats backing the findex watermark; registered so a
-# same-path dataset rewrite that calls evict_session_caches() also
-# invalidates the probe and forces a fresh disk-watermark comparison.
-_FINDEX_STATS_CACHE: dict[tuple, dict] = register_session_cache({})
+# Corpus-snapshot stats backing the findex watermark; a same-path
+# dataset rewrite that calls evict_session_caches() also invalidates
+# the probe and forces a fresh disk-watermark comparison.
+_FINDEX_STATS_CACHE = SessionCache()
 _FINDEX_WATERMARK_FILE = "_dv_findex_watermark.json"
 
 
@@ -1281,9 +1256,8 @@ def _corpus_watermark(spark, sf) -> dict:
     doc_id but changes text is invisible to any doc_id-level probe
     and needs an explicit rebuild). One cached column-pruned agg per
     (application, dataset)."""
-    key = (spark.sparkContext.applicationId, str(sf))
-    wm = _FINDEX_STATS_CACHE.get(key)
-    if wm is None:
+
+    def build():
         row = (
             load(spark, sf, "documents")
             .agg(
@@ -1292,9 +1266,9 @@ def _corpus_watermark(spark, sf) -> dict:
             )
             .first()
         )
-        wm = {"n_docs": int(row["n"]), "max_doc_id": int(row["m"])}
-        _FINDEX_STATS_CACHE[key] = wm
-    return wm
+        return {"n_docs": int(row["n"]), "max_doc_id": int(row["m"])}
+
+    return _FINDEX_STATS_CACHE.get(spark, sf, build)
 
 
 def _ensure_index(spark, sf, table, kind: str, key: str, buckets: int, rows) -> str:
@@ -1376,8 +1350,7 @@ def q_dedup_index_refresh(spark, sf, table: str | None = None):
     t = _ensure_findex(spark, sf, table)
     pivot = _incremental_pivot(spark, sf)
     wm = _corpus_watermark(spark, sf)
-    done_key = _wm_key(spark, sf, t, wm)
-    if _FINDEX_DONE_CACHE.get(done_key) is None:
+    if _FINDEX_DONE_CACHE.get(spark, sf, None, t, version=wm) is None:
         delta = (
             load(spark, sf, "documents")
             .where(F.col("doc_id") >= F.lit(pivot))
@@ -1396,7 +1369,7 @@ def q_dedup_index_refresh(spark, sf, table: str | None = None):
         # the distinct fingerprints of the full corpus — a repeated run
         # would anti-join to nothing, so skip the delta scan + append
         # job (r16, same steady-state rule as the band-index probe)
-        _put_wm_cache(_FINDEX_DONE_CACHE, done_key, True)
+        _FINDEX_DONE_CACHE.put(spark, sf, True, t, version=wm)
     idx = spark.table(t)
     return (
         idx.groupBy(
@@ -1446,10 +1419,11 @@ def _sig64_col():
 
 
 # Steady-state caches for the persisted-index maintenance ops (r16,
-# r15 verdict item 5 — the RFM boundary-cache pattern): both keyed on
-# (application, dataset, table, CORPUS WATERMARK), so a dataset
-# rewrite/append invalidates by key mismatch and evict_session_caches
-# drops them by the str(sf) component like every other session cache.
+# r15 verdict item 5 — the RFM boundary-cache pattern): each entry is
+# keyed on (application, dataset, table) and versioned by the CORPUS
+# WATERMARK, so a dataset rewrite/append invalidates by version
+# mismatch (and drops the superseded entry), and evict_session_caches
+# drops them by dataset like every other session cache.
 #   _BINDEX_MAX_CACHE: the refresh's max-doc_id idempotency probe —
 #   one scalar job per (session, watermark) instead of per run, and a
 #   probe that proves the table complete also skips the empty-delta
@@ -1458,70 +1432,20 @@ def _sig64_col():
 #   census (groupBy sig64 over the full corpus index) — persisted once
 #   per (session, watermark); its content is a pure function of the
 #   index, which the watermark pins.
-_BINDEX_MAX_CACHE: dict = register_session_cache({})
-_BINDEX_OK_BUCKETS_CACHE: dict = register_session_cache({})
+_BINDEX_MAX_CACHE = SessionCache()
+_BINDEX_OK_BUCKETS_CACHE = SessionCache()
 # fingerprint-index refreshes completed this session, by watermark —
 # a repeated run's delta anti-joins to nothing, so the whole
 # delta-scan + append job is skipped (same steady-state rule).
-_FINDEX_DONE_CACHE: dict = register_session_cache({})
+_FINDEX_DONE_CACHE = SessionCache()
 
 
-def _wm_key(spark, sf, table: str, wm: dict) -> tuple:
-    return (
-        spark.sparkContext.applicationId,
-        str(sf),
-        table,
-        wm["n_docs"],
-        wm["max_doc_id"],
+def _table_max_doc_id(spark, table: str) -> int:
+    return int(
+        spark.table(table)
+        .agg(F.coalesce(F.max("doc_id"), F.lit(-1)).alias("m"))
+        .first()["m"]
     )
-
-
-def _put_wm_cache(cache: dict, key: tuple, value) -> None:
-    """Insert a watermark-keyed entry, first popping + unpersisting any
-    SUPERSEDED entry for the same (application, dataset, table) prefix
-    (ADVICE r16): in the incremental-append workload these caches
-    exist for, every watermark move would otherwise strand the
-    previous MEMORY_AND_DISK relation until an explicit
-    evict_session_caches call — supersession is detectable exactly at
-    insert time, unlike the generic scalar caches. Scalar values are
-    recognized by their missing _jdf (AttributeError, distinguished
-    from comparison failures per ADVICE r17) and just pop.
-
-    Plan-identity guard: Spark's CacheManager keys cached data by
-    LOGICAL PLAN, not by DataFrame object — if the superseded and the
-    new relation are semantically the same plan (possible when only
-    the watermark key moved), unpersisting the old one would silently
-    drop the NEW registration too, so such entries are popped without
-    an unpersist (nothing is stranded: the cache entry is shared)."""
-    for k in [k for k in cache if k[:3] == key[:3] and k != key]:
-        val = cache.pop(k)
-        if val is value:
-            continue
-        try:
-            jdfs = (val._jdf, value._jdf)
-        except AttributeError:
-            # scalar entry (probed count, watermark dict): nothing
-            # persisted, nothing to unpersist
-            continue
-        try:
-            same = jdfs[0].queryExecution().analyzed().sameResult(
-                jdfs[1].queryExecution().analyzed()
-            )
-        except Exception:
-            # comparison itself failed (transient py4j/JVM error):
-            # we cannot PROVE the plans differ, and unpersisting a
-            # same-plan entry would drop the new registration's shared
-            # cache too (the CacheManager keys by logical plan). Skip
-            # the unpersist — leak-safe: worst case one relation stays
-            # pinned until evict_session_caches (ADVICE r17).
-            continue
-        if same:
-            continue
-        try:
-            val.unpersist()
-        except Exception:
-            pass
-    cache[key] = value
 
 
 def _invalidate_index_caches(table: str) -> None:
@@ -1532,35 +1456,25 @@ def _invalidate_index_caches(table: str) -> None:
     same watermark would be stale-high and make the next refresh skip
     a delta the rebuilt table genuinely lacks."""
     for cache in (_BINDEX_MAX_CACHE, _BINDEX_OK_BUCKETS_CACHE, _FINDEX_DONE_CACHE):
-        for key in [k for k in cache if k[2] == table]:
-            val = cache.pop(key)
-            try:
-                val.unpersist()
-            except Exception:
-                pass
+        cache.evict(None, table)
 
 
 def _bindex_ok_buckets(spark, sf, t: str, wm: dict):
     """sig64 values of non-degenerate corpus buckets (≤ MAX_BUCKET
     members), persisted per (session, watermark) — see cache note."""
-    key = _wm_key(spark, sf, t, wm)
-    cached = _BINDEX_OK_BUCKETS_CACHE.get(key)
-    if cached is not None:
-        return cached
-    from pyspark import StorageLevel
 
-    pivot = _incremental_pivot(spark, sf)
-    ok = (
-        spark.table(t)
-        .where(F.col("doc_id") < F.lit(pivot))
-        .groupBy("sig64")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .where(F.col("c") <= MAX_BUCKET)
-        .select("sig64")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    _put_wm_cache(_BINDEX_OK_BUCKETS_CACHE, key, ok)
-    return ok
+    def build():
+        pivot = _incremental_pivot(spark, sf)
+        return (
+            spark.table(t)
+            .where(F.col("doc_id") < F.lit(pivot))
+            .groupBy("sig64")
+            .agg(F.count(F.lit(1)).alias("c"))
+            .where(F.col("c") <= MAX_BUCKET)
+            .select("sig64")
+        )
+
+    return _BINDEX_OK_BUCKETS_CACHE.get(spark, sf, build, t, version=wm)
 
 
 def _ensure_bindex(spark, sf, table: str | None = None) -> str:
@@ -1606,14 +1520,9 @@ def q_dedup_band_index_refresh(spark, sf, table: str | None = None):
     # table provably covers the corpus (start > corpus max), the
     # delta is empty BY CONSTRUCTION, so the append job (a 32-bucket
     # zero-row write, ~0.5s of task scheduling) is skipped outright.
-    probe_key = _wm_key(spark, sf, t, wm)
-    table_max = _BINDEX_MAX_CACHE.get(probe_key)
+    table_max = _BINDEX_MAX_CACHE.get(spark, sf, None, t, version=wm)
     if table_max is None:
-        table_max = int(
-            spark.table(t)
-            .agg(F.coalesce(F.max("doc_id"), F.lit(-1)).alias("m"))
-            .first()["m"]
-        )
+        table_max = _table_max_doc_id(spark, t)
     start = max(pivot, int(table_max) + 1)
     if start <= wm["max_doc_id"]:
         delta = (
@@ -1632,7 +1541,7 @@ def q_dedup_band_index_refresh(spark, sf, table: str | None = None):
     # after a refresh the table holds every posting with doc_id up to
     # the corpus max (the delta slice is [start, corpus max] and the
     # corpus side below `start` was already present)
-    _put_wm_cache(_BINDEX_MAX_CACHE, probe_key, wm["max_doc_id"])
+    _BINDEX_MAX_CACHE.put(spark, sf, wm["max_doc_id"], t, version=wm)
     idx = spark.table(t)
     return (
         idx.groupBy(

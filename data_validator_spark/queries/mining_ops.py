@@ -21,10 +21,10 @@ from pyspark.sql import functions as F
 
 from data_validator_spark.queries import (
     DEC,
+    SessionCache,
     load,
     load_documents_by_id,
     load_events_by_user,
-    register_session_cache,
     spread,
     sql_dsum,
 )
@@ -235,10 +235,10 @@ GOPHER_MAX_DUP_BIGRAM_FRAC = 0.90
 # dsir_importance's target membership) — session-persist it like the
 # shingle/basket relations so each consumer reads the collapsed
 # doc-scale rows instead of re-running both explode+groupBy pipelines.
-_GOPHER_CACHE: dict = register_session_cache({})
+_GOPHER_CACHE = SessionCache()
 
 # char_entropy's per-doc relation, shared with quality_ensemble.
-_ENTROPY_CACHE: dict = register_session_cache({})
+_ENTROPY_CACHE = SessionCache()
 
 
 def q_gopher_quality(spark, sf, base=None):
@@ -265,10 +265,10 @@ def q_gopher_quality(spark, sf, base=None):
     quality_ensemble passes its shared cached docs so all three signal
     arms read ONE materialized scan instead of each re-reading parquet.
     """
-    key = (spark.sparkContext.applicationId, str(sf))
-    cached = _GOPHER_CACHE.get(key)
-    if cached is not None:
-        return cached
+    return _GOPHER_CACHE.get(spark, sf, lambda: _build_gopher_stats(spark, sf, base))
+
+
+def _build_gopher_stats(spark, sf, base):
     df = base if base is not None else load_documents_by_id(spark, sf)
     toks = df.select(
         "doc_id", F.explode(F.split(F.trim(F.col("text")), r"[ \t\n\x0B\f\r]+")).alias("t")
@@ -318,7 +318,7 @@ def q_gopher_quality(spark, sf, base=None):
         & (F.col("ttf") <= GOPHER_MAX_TOP_TOKEN_FRAC)
         & (F.col("dbf") <= GOPHER_MAX_DUP_BIGRAM_FRAC)
     )
-    stats = joined.select(
+    return joined.select(
         "doc_id",
         "n_tokens",
         "n_distinct",
@@ -327,11 +327,6 @@ def q_gopher_quality(spark, sf, base=None):
         F.col("dbf").cast(DEC).cast("double").alias("dup_bigram_frac"),
         keep.cast("int").alias("keep"),
     )
-    from pyspark import StorageLevel
-
-    stats = stats.persist(StorageLevel.MEMORY_AND_DISK)
-    _GOPHER_CACHE[key] = stats
-    return stats
 
 
 SQL_GOPHER = f"""
@@ -835,10 +830,10 @@ def q_char_entropy(spark, sf, base=None):
     is session-persisted (_ENTROPY_CACHE — consumed by both
     char_entropy and quality_ensemble's second arm).
     """
-    key = (spark.sparkContext.applicationId, str(sf))
-    cached = _ENTROPY_CACHE.get(key)
-    if cached is not None:
-        return cached
+    return _ENTROPY_CACHE.get(spark, sf, lambda: _build_char_entropy(spark, sf, base))
+
+
+def _build_char_entropy(spark, sf, base):
     if base is not None:
         docs = base.select("doc_id", "norm")
     else:
@@ -865,17 +860,12 @@ def q_char_entropy(spark, sf, base=None):
             (-F.sum((p * F.log(p)).cast(DEC))).alias("ent_dec"),
         )
     )
-    out = ent.select(
+    return ent.select(
         "doc_id",
         "n_chars_norm",
         F.col("ent_dec").cast("double").alias("entropy"),
         (F.col("ent_dec") >= ENTROPY_MIN).cast("int").alias("keep"),
     )
-    from pyspark import StorageLevel
-
-    out = out.persist(StorageLevel.MEMORY_AND_DISK)
-    _ENTROPY_CACHE[key] = out
-    return out
 
 
 SQL_CHAR_ENTROPY = f"""
@@ -912,12 +902,10 @@ COPURCHASE_TOPK = 100
 # The capped per-order basket-array relation (r18: elements carry
 # their part's order-count) backs the pair fan-out; without
 # materialization Catalyst re-runs the distinct + collect_list +
-# count-attach shuffles per call — the same shape
-# _ASSIGNED_CACHE/_HS_CACHE fix elsewhere, so the same session-keyed
-# persist. One |orders|-sized relation with ≤MAX_BASKET-element
-# struct arrays — smaller than the distinct (order, part) line
-# relation it replaced (r7).
-_BASKET_CACHE: dict = register_session_cache({})
+# count-attach shuffles per call. One |orders|-sized relation with
+# ≤MAX_BASKET-element struct arrays — smaller than the distinct
+# (order, part) line relation it replaced (r7).
+_BASKET_CACHE = SessionCache()
 
 
 def _basket_lines(spark, sf):
@@ -940,10 +928,10 @@ def _basket_lines(spark, sf):
     AQE broadcasts them while they fit, an at-scale build runs it as
     a partkey join) — one-time, amortized like every session cache.
     """
-    key = (spark.sparkContext.applicationId, str(sf))
-    cached = _BASKET_CACHE.get(key)
-    if cached is not None:
-        return cached
+    return _BASKET_CACHE.get(spark, sf, lambda: _build_basket_lines(spark, sf))
+
+
+def _build_basket_lines(spark, sf):
     # r14: scan the at-rest orderkey-bucketed lineitem copy (no
     # spread() — it would repartition away the bucketing). Both wide
     # exchanges of the old build vanish: the (l_orderkey, l_partkey)
@@ -971,7 +959,7 @@ def _basket_lines(spark, sf):
         .groupBy("p")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    baskets = (
+    return (
         sized.select("l_orderkey", F.explode("parts").alias("p"))
         .join(freq, "p")
         .groupBy("l_orderkey")
@@ -983,11 +971,6 @@ def _basket_lines(spark, sf):
             ).alias("items")
         )
     )
-    from pyspark import StorageLevel
-
-    baskets = baskets.persist(StorageLevel.MEMORY_AND_DISK)
-    _BASKET_CACHE[key] = baskets
-    return baskets
 
 
 def q_copurchase_similarity(spark, sf):

@@ -27,9 +27,10 @@ from pyspark.sql import functions as F
 
 from data_validator_spark.queries import (
     DEC,
+    SessionCache,
     load,
     load_documents_by_id,
-    register_session_cache,
+    row_count,
     spread,
 )
 from data_validator_spark.queries.pipeline_ops import _hash60, _sql_hash60
@@ -522,7 +523,7 @@ CONTAM_N = 5  # word n-gram width; 5 is the synthetic-vocab analog of
 # vocabulary makes 8-grams near-unique, which would test nothing)
 
 
-_CONTAM_TRAIN_CACHE: dict = register_session_cache({})
+_CONTAM_TRAIN_CACHE = SessionCache()
 
 
 def _contam_grams(spark, sf):
@@ -577,19 +578,14 @@ def q_ngram_contamination(spark, sf):
     # dominant cost, since train is ~98% of the corpus. Session-persist
     # it like the LSH shingle relation (_HS_CACHE); the distinct leaves
     # it hash-partitioned on gh, exactly what the leakage join needs.
-    key = (spark.sparkContext.applicationId, str(sf))
-    train = _CONTAM_TRAIN_CACHE.get(key)
-    if train is None:
-        from pyspark import StorageLevel
-
-        train = (
-            grams.where(F.col("bucket") < TRAIN_CUT)
-            .select("gh")
-            .distinct()
-            .select("gh", F.lit(1).alias("hit"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        _CONTAM_TRAIN_CACHE[key] = train
+    train = _CONTAM_TRAIN_CACHE.get(
+        spark,
+        sf,
+        lambda: grams.where(F.col("bucket") < TRAIN_CUT)
+        .select("gh")
+        .distinct()
+        .select("gh", F.lit(1).alias("hit")),
+    )
     test = grams.where(F.col("bucket") >= VAL_CUT).select("doc_id", "gh").distinct()
     per_doc = (
         test.join(train, "gh", "left")
@@ -752,30 +748,24 @@ ENSEMBLE_ENT_NORM = 4.0  # entropy ceiling used to normalize into [0,1]
 # derive from the same (doc_id, lang, text, norm) projection, and the
 # trigram arm alone consumes it three times — without materialization
 # Catalyst re-scans documents.parquet and recomputes norm per arm (7
-# scans total, the r5 plan audit's finding). Same session-keyed
-# persist discipline as dedup._PAIRS_CACHE / mining_ops._BASKET_CACHE.
-_ENSEMBLE_DOCS_CACHE: dict = register_session_cache({})
+# scans total, the r5 plan audit's finding).
+_ENSEMBLE_DOCS_CACHE = SessionCache()
 
 
 def _ensemble_docs(spark, sf):
     from data_validator_spark.functions.text import normalized_text
 
-    key = (spark.sparkContext.applicationId, str(sf))
-    cached = _ENSEMBLE_DOCS_CACHE.get(key)
-    if cached is not None:
-        return cached
     # lang rides along since r18: boilerplate_prefix groups its
     # shared-prefix census by language off this same relation, and a
     # short lang code widens the cached rows by a few bytes while
     # saving that query a full normalized_text recompute of the corpus
-    df = load_documents_by_id(spark, sf).select(
-        "doc_id", "lang", "text", normalized_text(F.col("text")).alias("norm")
+    return _ENSEMBLE_DOCS_CACHE.get(
+        spark,
+        sf,
+        lambda: load_documents_by_id(spark, sf).select(
+            "doc_id", "lang", "text", normalized_text(F.col("text")).alias("norm")
+        ),
     )
-    from pyspark import StorageLevel
-
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _ENSEMBLE_DOCS_CACHE[key] = df
-    return df
 
 
 def q_quality_ensemble(spark, sf):
@@ -880,7 +870,7 @@ ORDER BY g.doc_id
 # -- ccnet_buckets ---------------------------------------------------------
 CCNET_TILES = 3  # head / middle / tail
 # approx-path binned score relation, shared across repeat executions
-_CCNET_BINNED_CACHE: dict = register_session_cache({})
+_CCNET_BINNED_CACHE = SessionCache()
 # Size gate for the exact (global-ntile) path: above this many
 # documents the histogram tertile path is the DEFAULT (r8 verdict
 # item 3 — a user who forgets approx_profile must not get a
@@ -889,22 +879,6 @@ _CCNET_BINNED_CACHE: dict = register_session_cache({})
 # (≤ 50k docs) on the oracle-exact ntile spelling.
 CCNET_EXACT_MAX_DOCS_CONF = "spark.data_validator.ccnet_exact_max_docs"
 CCNET_EXACT_MAX_DOCS_DEFAULT = 1_000_000
-# Registered so evict_session_caches() drops the cached count when a
-# dataset is rewritten at the same path mid-session (ADVICE r9;
-# eviction tolerates scalar values).
-_DOC_COUNT_CACHE: dict[tuple, int] = register_session_cache({})
-
-
-def _doc_count(spark, sf) -> int:
-    """Cached documents row count (one column-pruned count job per
-    application+dataset — the same plan-time sizing probe as
-    similarity._derived_params)."""
-    key = (spark.sparkContext.applicationId, str(sf))
-    n = _DOC_COUNT_CACHE.get(key)
-    if n is None:
-        n = load(spark, sf, "documents").count()
-        _DOC_COUNT_CACHE[key] = n
-    return n
 
 
 def q_ccnet_buckets(spark, sf):
@@ -955,7 +929,7 @@ def q_ccnet_buckets(spark, sf):
     exact_max = int(
         spark.conf.get(CCNET_EXACT_MAX_DOCS_CONF, str(CCNET_EXACT_MAX_DOCS_DEFAULT))
     )
-    if _approx_enabled(spark) or _doc_count(spark, sf) > exact_max:
+    if _approx_enabled(spark) or row_count(spark, sf, "documents") > exact_max:
         # histogram-derived tertile boundaries: head = highest scores,
         # so the cumulative count runs over bins in DESCENDING order.
         # The binned score relation feeds TWO subtrees (the histogram
@@ -963,15 +937,14 @@ def q_ccnet_buckets(spark, sf):
         # execution of the trigram scoring pass is structural, not
         # dependent on exchange-reuse matching — the same pattern as
         # the ensemble's shared signal relations.
-        key = (spark.sparkContext.applicationId, str(sf), "ccnet_binned")
-        binned = _CCNET_BINNED_CACHE.get(key)
-        if binned is None:
-            from pyspark import StorageLevel
-
-            binned = scores.withColumn(
+        binned = _CCNET_BINNED_CACHE.get(
+            spark,
+            sf,
+            lambda: scores.withColumn(
                 "bin", F.floor(F.col("avg_logp") * F.lit(10000.0)).cast("long")
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            _CCNET_BINNED_CACHE[key] = binned
+            ),
+            "ccnet_binned",
+        )
         hist = binned.groupBy("bin").agg(F.count(F.lit(1)).alias("cnt"))
         wh = Window.orderBy(F.desc("bin")).rowsBetween(
             Window.unboundedPreceding, -1
@@ -1060,7 +1033,7 @@ hist_tiled AS (
   SELECT b.doc_id, b.n_trigrams, b.avg_logp, e.tile
   FROM binned b JOIN edges e USING (bin)),
 -- Arm predicates gate on the DOCUMENTS count — q_ccnet_buckets
--- dispatches on _doc_count (full table), not on the scores count;
+-- dispatches on row_count(documents), not on the scores count;
 -- docs whose normalized text has <3 chars drop out of scores, so
 -- near the gate boundary the two counts differ (ADVICE r10). The
 -- scores-derived n_total stays for the tile-edge division, which is

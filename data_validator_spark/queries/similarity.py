@@ -44,9 +44,9 @@ from pyspark.sql import functions as F
 
 from data_validator_spark.queries import (
     DEC,
-    load,
+    SessionCache,
     load_embeddings_by_id,
-    register_session_cache,
+    row_count,
 )
 
 DIM = 64
@@ -101,9 +101,6 @@ def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
 
 
-_COUNT_CACHE: dict[tuple, int] = {}
-
-
 def _derived_params(spark, sf) -> tuple[int, int]:
     """Corpus-size-derived (n_planes, nlist), computed at PLAN time
     from one zero-column count job (cached per application+dir).
@@ -117,11 +114,7 @@ def _derived_params(spark, sf) -> tuple[int, int]:
     (_SQL_PARAMS), so both engines bucket bit-identically."""
     import math
 
-    key = (spark.sparkContext.applicationId, sf)
-    n = _COUNT_CACHE.get(key)
-    if n is None:
-        n = load(spark, sf, "embeddings").count()
-        _COUNT_CACHE[key] = n
+    n = row_count(spark, sf, "embeddings")
     np_ = min(
         max(math.ceil(math.log2(max(n, 1) / TARGET_BUCKET_POP)), MIN_PLANES),
         MAX_PLANES,
@@ -292,9 +285,8 @@ WHERE cos_sim >= {COSINE_DEDUP_THRESHOLD} ORDER BY vec_a, vec_b
 # persist, every self-join/aggregation over the assignment re-runs
 # the scan + centroid probe + per-vector argmax window (semdedup's
 # plan paid 10 scans / 21 exchanges; with it, the corpus is scanned
-# once and every consumer reads the cached relation). Same pattern
-# and rationale as dedup.py's _HS_CACHE shingle relation.
-_ASSIGNED_CACHE: dict = register_session_cache({})
+# once and every consumer reads the cached relation).
+_ASSIGNED_CACHE = SessionCache()
 
 
 def _assigned(spark, sf):
@@ -303,10 +295,10 @@ def _assigned(spark, sf):
     deterministic centroids; every vector joins the broadcast centroid
     set and keeps its max-cosine list. No corpus shuffle; persisted
     per session (see _ASSIGNED_CACHE note)."""
-    key = (spark.sparkContext.applicationId, str(sf))
-    cached = _ASSIGNED_CACHE.get(key)
-    if cached is not None:
-        return cached
+    return _ASSIGNED_CACHE.get(spark, sf, lambda: _build_assigned(spark, sf))
+
+
+def _build_assigned(spark, sf):
     vecs = _vecs(spark, sf)
     _, nlist = _derived_params(spark, sf)
     cents = vecs.where(F.col("vec_id") < nlist).select(
@@ -332,12 +324,7 @@ def _assigned(spark, sf):
     # cached relation WITHOUT their own exchange. One extra shuffle at
     # index-build time buys shuffle-free execution for six operators
     # per session (r9: knn 1.44s -> the grouped-map exchange gone).
-    out = out.repartition("list_id")
-    from pyspark import StorageLevel
-
-    out = out.persist(StorageLevel.MEMORY_AND_DISK)
-    _ASSIGNED_CACHE[key] = out
-    return out
+    return out.repartition("list_id")
 
 
 def q_similarity_ann_ivf(spark, sf):
@@ -562,15 +549,12 @@ ORDER BY cluster_id
 # (candidate-bounded), but DERIVING them re-runs the brute-force
 # truth pass and the IVF retrieval per call — an ANN deployment
 # evaluates a BUILT index, so the materialized eval inputs are the
-# honest steady state (r17 verdict item 4). Session-persisted per
-# (application, dataset), the _PAIRS_CACHE convention.
-_ANN_EVAL_CACHE: dict = register_session_cache({})
+# honest steady state (r17 verdict item 4).
+_ANN_EVAL_CACHE = SessionCache()
 
 
 def _ann_eval_topk(spark, sf):
-    key = (spark.sparkContext.applicationId, str(sf))
-    cached = _ANN_EVAL_CACHE.get(key)
-    if cached is None:
+    def build():
         from pyspark import StorageLevel
 
         truth = (
@@ -583,9 +567,9 @@ def _ann_eval_topk(spark, sf):
             .select("query_id", "neighbor_id")
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        cached = (truth, retrieved)
-        _ANN_EVAL_CACHE[key] = cached
-    return cached
+        return truth, retrieved
+
+    return _ANN_EVAL_CACHE.get(spark, sf, build)
 
 
 def q_ann_recall_eval(spark, sf):

@@ -36,11 +36,11 @@ from data_validator_spark.operators.bucketing import (
 )
 from data_validator_spark.queries import (
     DEC,
+    SessionCache,
     dsum,
     evict_session_caches,
     load,
     load_lineitem_by_part,
-    register_session_cache,
     spread,
     sql_dsum,
 )
@@ -70,30 +70,18 @@ def _hash60(*cols):
 # single-threaded per query (r6 explain finding on q19). Materializing
 # each derived relation once per (session, SF) runs the hash chain in
 # parallel at spread()'s partitioning and lets every consumer filter
-# in-memory batches instead. Same session-keyed convention as
-# _BASKET_CACHE / _PAIRS_CACHE. (These relations only exist because
-# the synthetic corpus lacks the columns; a real deployment reads real
-# partsupp/shipmode columns and needs no cache.)
-_EXT_CACHE: dict = register_session_cache({})
-
-
-def _cached(spark, sf, name, build):
-    key = (spark.sparkContext.applicationId, str(sf), name)
-    cached = _EXT_CACHE.get(key)
-    if cached is not None:
-        return cached
-    from pyspark import StorageLevel
-
-    df = build().persist(StorageLevel.MEMORY_AND_DISK)
-    _EXT_CACHE[key] = df
-    return df
+# in-memory batches instead. Keyed per derived relation name. (These
+# relations only exist because the synthetic corpus lacks the columns;
+# a real deployment reads real partsupp/shipmode columns and needs no
+# cache.)
+_EXT_CACHE = SessionCache()
 
 
 def partsupp_df(spark, sf):
     """Derived partsupp, session-persisted (_EXT_CACHE). Explode part
     x {0..3}; the supplier count arrives as a broadcast 1-row
     aggregate (no collect, no shuffle of part)."""
-    return _cached(spark, sf, "partsupp", lambda: _partsupp_build(spark, sf))
+    return _EXT_CACHE.get(spark, sf, lambda: _partsupp_build(spark, sf), "partsupp")
 
 
 def _partsupp_build(spark, sf):
@@ -135,7 +123,9 @@ partsupp AS (
 def lineitem_ext_df(spark, sf):
     """lineitem + derived ship metadata from one md5 per line,
     session-persisted (_EXT_CACHE)."""
-    return _cached(spark, sf, "lineitem_ext", lambda: _lineitem_ext_build(spark, sf))
+    return _EXT_CACHE.get(
+        spark, sf, lambda: _lineitem_ext_build(spark, sf), "lineitem_ext"
+    )
 
 
 def _lineitem_ext_build(spark, sf):
@@ -214,7 +204,7 @@ def _part_ext_build(spark, sf):
 
 def part_ext_df(spark, sf):
     """part + derived p_container, session-persisted (_EXT_CACHE)."""
-    return _cached(spark, sf, "part_ext", lambda: _part_ext_build(spark, sf))
+    return _EXT_CACHE.get(spark, sf, lambda: _part_ext_build(spark, sf), "part_ext")
 
 
 # -- generalized derived-relation copies (r15: q19's partkey meet) ----------
@@ -627,13 +617,15 @@ def q19_discounted_revenue(spark, sf):
     # (A/B at sf0.1: 1.14s pure-parquet vs 0.42s cached-copy steady;
     # the old UNBUCKETED session cache was 0.48s and shuffled both
     # sides at scale).
-    li = _cached(
-        spark, sf, "lineitem_ext_by_part",
+    li = _EXT_CACHE.get(
+        spark, sf,
         lambda: spark.table(ensure_bucketed_lineitem_ext_by_part(spark, sf)),
+        "lineitem_ext_by_part",
     )
-    part = _cached(
-        spark, sf, "part_ext_by_key",
+    part = _EXT_CACHE.get(
+        spark, sf,
         lambda: spark.table(ensure_bucketed_part_ext(spark, sf)),
+        "part_ext_by_key",
     )
     q = F.col("l_quantity")
     sz = F.col("p_size")

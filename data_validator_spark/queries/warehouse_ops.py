@@ -20,10 +20,10 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from data_validator_spark.queries import (
+    SessionCache,
     load_customer_by_key,
     load_events_by_user,
     load_orders_by_cust,
-    register_session_cache,
 )
 
 
@@ -284,8 +284,8 @@ FROM current GROUP BY o_custkey ORDER BY o_custkey
 # comparisons per dimension. No corpus-scale window or sort anywhere.
 RFM_QS = (0.2, 0.4, 0.6, 0.8)
 
-_RFM_CACHE: dict = register_session_cache({})
-_RFM_BOUNDS_CACHE: dict = register_session_cache({})
+_RFM_CACHE = SessionCache()
+_RFM_BOUNDS_CACHE = SessionCache()
 
 
 def _rfm_relation(spark, sf):
@@ -293,12 +293,10 @@ def _rfm_relation(spark, sf):
     session-persisted: the exact-quantile engine scans it 2-3 times
     (stats pass + histogram round + bounded selection) before the
     final scoring aggregation reads it once more."""
-    from pyspark import StorageLevel
+    return _RFM_CACHE.get(spark, sf, lambda: _build_rfm_relation(spark, sf))
 
-    key = (spark.sparkContext.applicationId, str(sf))
-    cached = _RFM_CACHE.get(key)
-    if cached is not None:
-        return cached
+
+def _build_rfm_relation(spark, sf):
     # r15: the at-rest o_custkey-bucketed copy — the per-customer
     # combine inherits the scan's HashPartitioning, so the relation
     # builds with ZERO wide exchanges (SCALE.md r14 census: this
@@ -312,15 +310,12 @@ def _rfm_relation(spark, sf):
         F.sum(cents).alias("monetary_cents"),
     )
     gmax = per_cust.agg(F.max("last_order").alias("gmax"))
-    rfm = per_cust.crossJoin(F.broadcast(gmax)).select(
+    return per_cust.crossJoin(F.broadcast(gmax)).select(
         "o_custkey",
         F.datediff("gmax", "last_order").cast("bigint").alias("recency_days"),
         F.col("frequency").cast("bigint").alias("frequency"),
         F.col("monetary_cents").cast("bigint").alias("monetary_cents"),
     )
-    rfm = rfm.persist(StorageLevel.MEMORY_AND_DISK)
-    _RFM_CACHE[key] = rfm
-    return rfm
 
 
 def q_rfm_segments(spark, sf):
@@ -358,17 +353,17 @@ def q_rfm_segments(spark, sf):
     # at-rest refresh — instead of on every execution; eviction via
     # evict_session_caches() on a same-path rewrite drops them with
     # the relation they derive from.
-    key = (spark.sparkContext.applicationId, str(sf))
-    res = _RFM_BOUNDS_CACHE.get(key)
-    if res is None:
-        res = exact_quantiles(
+    res = _RFM_BOUNDS_CACHE.get(
+        spark,
+        sf,
+        lambda: exact_quantiles(
             rfm,
             [
                 QuantileSpec(c, F.col(c), RFM_QS)
                 for c in ("recency_days", "frequency", "monetary_cents")
             ],
-        )
-        _RFM_BOUNDS_CACHE[key] = res
+        ),
+    )
 
     def band(col: str):
         s = F.lit(1)

@@ -403,6 +403,42 @@ def test_compact_line_carries_contended_not_the_full_probe():
     assert "contention" not in parsed
 
 
+def test_compact_line_keeps_query_timings_after_a_contention_retry():
+    """A retried run carries both whole passes (attempt1, retry_pass)
+    in its artifact; they must not ride the compact line, which would
+    blow the budget and leave `"queries": {}`."""
+    import json
+
+    from bench import STDOUT_BUDGET, compact_line
+
+    queries = {f"query_{i:03d}": round(0.5 + i / 100, 3) for i in range(150)}
+    full_pass = {
+        "value": 99.0,
+        "queries": queries,
+        "runs_sec": {k: [v, v] for k, v in queries.items()},
+        "query_start_epoch": {k: 1.7e9 + i for i, k in enumerate(queries)},
+    }
+    out = {
+        "metric": "headline_queries_total",
+        "value": 99.0,
+        "unit": "sec",
+        "queries": queries,
+        "sf": 0.1,
+        "runs_per_query": 2,
+        "prime_pass_sec": 80.0,
+        "attempt1": full_pass,
+        "retry_pass": full_pass,
+        "contended": False,
+        "run_conditions": {"cpus": 4, "sf": 0.1, "git_head": "0" * 40, "tree_dirty": False},
+    }
+    line = compact_line(out, "BENCH_FULL.json")
+    assert len(line) <= STDOUT_BUDGET
+    parsed = json.loads(line)
+    assert parsed["queries"]
+    assert "attempt1" not in parsed and "retry_pass" not in parsed
+    assert parsed["queries_omitted"] + len(parsed["queries"]) == len(queries)
+
+
 def test_contention_probe_force_hook(monkeypatch, tmp_path):
     """The r17 retry path's test hook: SPARK_GRAFT_BENCH_FORCE_CONTENDED
     short-circuits the probe to contended with a named signal, without

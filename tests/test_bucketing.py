@@ -902,7 +902,7 @@ def test_full_wm_drop_evicts_dependent_session_caches(spark, tmp_path):
     import os as _os
 
     from data_validator_spark.operators.bucketing import ensure_bucketed_fact
-    from data_validator_spark.queries import evict_session_caches, register_session_cache
+    from data_validator_spark.queries import SessionCache, evict_session_caches
     from data_validator_spark.queries.tpch_ext import ensure_bucketed_part_ext
 
     p = tmp_path / "orders.parquet"
@@ -910,8 +910,7 @@ def test_full_wm_drop_evicts_dependent_session_caches(spark, tmp_path):
     _mini_part(spark, tmp_path, n=40)
     sf = str(tmp_path)
     evict_session_caches(sf)
-    probe_cache = register_session_cache({})
-    key = (spark.sparkContext.applicationId, sf)
+    probe_cache = SessionCache()
 
     def touch(path):  # move the mtime of every source file, bytes unchanged
         files = [path] if _os.path.isfile(path) else [
@@ -940,18 +939,18 @@ def test_full_wm_drop_evicts_dependent_session_caches(spark, tmp_path):
             t = first()
             if change is not None:
                 change()
-            probe_cache[key] = spark.range(1)
+            probe_cache.put(spark, sf, spark.range(1))
             assert again() == t
             assert not probe_cache, (
                 f"{label}: drop/rebuild left a session cache frozen on dropped files"
             )
             # the copy is current now -> no drop, so a fresh cache
             # entry must SURVIVE
-            probe_cache[key] = spark.range(1)
+            probe_cache.put(spark, sf, spark.range(1))
             assert again() == t
             assert probe_cache, f"{label}: verified-current copy must not evict caches"
-            probe_cache.clear()
+            probe_cache.evict()
     finally:
-        probe_cache.clear()
+        probe_cache.evict()
         _drop_fact_tables(spark, sf)
         _drop_derived_tables(spark, sf)

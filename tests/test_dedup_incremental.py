@@ -738,8 +738,6 @@ def test_wm_cache_insert_unpersists_superseded_entry(spark, tmp_path):
         _BINDEX_OK_BUCKETS_CACHE,
         _bindex_ok_buckets,
         _ensure_bindex,
-        _put_wm_cache,
-        _wm_key,
     )
 
     d = tmp_path / "documents.parquet"
@@ -757,22 +755,24 @@ def test_wm_cache_insert_unpersists_superseded_entry(spark, tmp_path):
         old = spark.range(10).withColumnRenamed("id", "sig64")
         old.persist(StorageLevel.MEMORY_AND_DISK)
         old.count()
-        k_old = (spark.sparkContext.applicationId, str(tmp_path), t, 40, 39)
-        _BINDEX_OK_BUCKETS_CACHE[k_old] = old
+        def cached(wm):
+            return _BINDEX_OK_BUCKETS_CACHE.get(spark, str(tmp_path), None, t, version=wm)
+
+        wm_old = {"n_docs": 40, "max_doc_id": 39}
+        _BINDEX_OK_BUCKETS_CACHE.put(spark, str(tmp_path), old, t, version=wm_old)
         wm2 = {"n_docs": 50, "max_doc_id": 49}
         ok2 = _bindex_ok_buckets(spark, str(tmp_path), t, wm2)
         assert old.storageLevel == StorageLevel.NONE  # superseded, released
         assert ok2.storageLevel != StorageLevel.NONE
-        assert k_old not in _BINDEX_OK_BUCKETS_CACHE
-        assert _wm_key(spark, str(tmp_path), t, wm2) in _BINDEX_OK_BUCKETS_CACHE
+        assert cached(wm_old) is None
+        assert cached(wm2) is ok2
 
         # regime 2 — SAME plan under a moved watermark key: the old key
         # is popped but the shared cache registration survives
         wm3 = {"n_docs": 60, "max_doc_id": 59}
-        k3 = _wm_key(spark, str(tmp_path), t, wm3)
-        _put_wm_cache(_BINDEX_OK_BUCKETS_CACHE, k3, ok2)
-        assert _wm_key(spark, str(tmp_path), t, wm2) not in _BINDEX_OK_BUCKETS_CACHE
-        assert k3 in _BINDEX_OK_BUCKETS_CACHE
+        _BINDEX_OK_BUCKETS_CACHE.put(spark, str(tmp_path), ok2, t, version=wm3)
+        assert cached(wm2) is None
+        assert cached(wm3) is ok2
         assert ok2.storageLevel != StorageLevel.NONE  # still registered
     finally:
         _findex_drop(spark, t)

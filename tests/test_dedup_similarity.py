@@ -284,6 +284,27 @@ def test_ann_bucket_count_scales_with_corpus(spark, tmp_path):
     assert pop_big < 4096 / 4
 
 
+def test_derived_params_follow_same_path_rewrite_after_eviction(spark, tmp_path):
+    """(n_planes, nlist) are sized from a session-cached embeddings
+    count. A same-path rewrite followed by evict_session_caches(sf)
+    must re-derive them from the new count, as the oracle's count(*)
+    does — an unregistered count cache left them stale."""
+    from data_validator_spark.queries import evict_session_caches
+    from data_validator_spark.queries.similarity import _derived_params
+
+    sf = str(tmp_path)
+    evict_session_caches(sf)
+    _write_embeddings(spark, tmp_path, 100)
+    assert _derived_params(spark, sf) == (4, 16)
+    spark.range(1000).selectExpr(
+        "id AS vec_id", "array(CAST(id AS float)) AS embedding", "0 AS label"
+    ).write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
+    evict_session_caches(sf)
+    # 1000 rows: np = ceil(log2(1000/32)) = 5, nlist = ceil(sqrt(1000)) = 32
+    assert _derived_params(spark, sf) == (5, 32)
+    evict_session_caches(sf)
+
+
 def test_embedding_dedup_caps_degenerate_buckets(spark, tmp_path):
     """A bucket with > MAX_EMB_BUCKET members must emit zero pairs
     (the O(n^2) guard): 600 copies of one vector all land in one

@@ -215,9 +215,7 @@ def test_copurchase_basket_build_is_shuffle_free(spark):
     after the count join), never one under the first collect."""
     from data_validator_spark.queries.mining_ops import _BASKET_CACHE, _basket_lines
 
-    for df in _BASKET_CACHE.values():
-        df.unpersist()
-    _BASKET_CACHE.clear()
+    _BASKET_CACHE.evict()
     plan = _basket_lines(spark, SF)._jdf.queryExecution().executedPlan().toString()
     assert "dv_bkt_lineitem_" in plan
     assert plan.count("Exchange hashpartitioning(l_orderkey") <= 1
@@ -277,9 +275,7 @@ def test_r15_custkey_family_rides_bucketed_copies(spark, registry):
     # exchange-free and reads the copy.
     from data_validator_spark.queries.warehouse_ops import _RFM_CACHE, _rfm_relation
 
-    for df in _RFM_CACHE.values():
-        df.unpersist()
-    _RFM_CACHE.clear()
+    _RFM_CACHE.evict()
     plan = _rfm_relation(spark, SF)._jdf.queryExecution().executedPlan().toString()
     assert "dv_bkt_orders_o_custkey_" in plan
     assert "Exchange hashpartitioning(o_custkey" not in plan

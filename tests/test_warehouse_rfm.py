@@ -214,7 +214,7 @@ def test_rfm_cache_registered_and_evictable(spark):
     _rfm_relation(spark, SF).count()
     assert _RFM_CACHE
     evict_session_caches(SF)
-    assert not any(str(SF) in map(str, k) for k in _RFM_CACHE)
+    assert _RFM_CACHE.get(spark, SF) is None
     assert _rfm_relation(spark, SF).count() > 0
     evict_session_caches(SF)
 
