@@ -15,8 +15,6 @@ import logging
 import sys
 from typing import Optional
 
-from pyspark.sql import SparkSession
-
 from data_validator_spark import report as report_mod
 from data_validator_spark.config import load_config
 from data_validator_spark.runner import run_config
@@ -68,18 +66,9 @@ def main(argv: Optional[list[str]] = None) -> int:
         print(f"DATA_VALIDATOR_CONFIG={'INVALID' if errs else 'OK'}")
         return 1 if errs else 0
 
-    from data_validator_spark.session import apply_engine_confs, ensure_engine_confs
+    from data_validator_spark.session import build_session
 
-    spark = (
-        apply_engine_confs(
-            SparkSession.builder.appName("data-validator-spark").config(
-                "spark.sql.adaptive.enabled", "true"
-            )
-        )
-        .getOrCreate()
-    )
-    # getOrCreate ignores builder confs on session reuse; set them live
-    ensure_engine_confs(spark)
+    spark = build_session("data-validator-spark")
     try:
         config = load_config(args.config, spark, parse_vars(args.vars))
         for out in config.outputs:

@@ -21,6 +21,8 @@ import sys
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_validator_spark.session import build_session
+
 LABELS = [
     "zero", "one", "two", "three", "four",
     "five", "six", "seven", "eight", "nine",
@@ -57,7 +59,7 @@ def main(argv: list[str] | None = None) -> int:
     argv = sys.argv[1:] if argv is None else argv
     master = argv[0] if argv else "local"
     out = argv[1] if len(argv) > 1 else "testData.orc"
-    spark = SparkSession.builder.appName("genTestData").master(master).getOrCreate()
+    spark = build_session("genTestData", master)
     spark.sparkContext.setLogLevel("WARN")
     try:
         gen_data(spark).coalesce(1).write.orc(out)

@@ -400,18 +400,11 @@ def main(argv: list[str] | None = None) -> int:
     except PipelineConfigError as e:
         print(f"PIPELINE_CONFIG_ERROR: {e}", file=sys.stderr)
         return 2
-    from data_validator_spark.session import apply_engine_confs, ensure_engine_confs
+    from data_validator_spark.session import build_session
 
-    spark = (
-        apply_engine_confs(
-            SparkSession.builder.master(args.master)
-            .appName("dv-pipeline")
-            .config("spark.sql.session.timeZone", "UTC")
-        )
-        .getOrCreate()
+    spark = build_session(
+        "dv-pipeline", args.master, {"spark.sql.session.timeZone": "UTC"}
     )
-    # getOrCreate ignores builder confs on session reuse; set them live
-    ensure_engine_confs(spark)
     spark.sparkContext.setLogLevel("ERROR")
     try:
         summary = run_pipeline(spark, parsed, args.sfDir)

@@ -1,34 +1,29 @@
-"""Engine-required Spark session configuration, shared by every entry
-point (cli, pipeline runner, bench, plan tools).
+"""The one place a Spark session is built, shared by every entry point
+(cli, pipeline runner, bench, the tools under tools/, the test suite).
 
-The at-rest copy program writes every bucketed table with
-``sortBy(bucket_key)`` and exactly ONE parquet file per bucket (pinned
-by tests/test_bucketing.py::test_bucketed_copies_single_sorted_file_per_bucket).
-Spark only *recognizes* that written order — and drops the per-task
-Sorts from colocated SortMergeJoins — when
-``spark.sql.legacy.bucketedTableScan.outputOrdering`` is true; it has
-defaulted to false since Spark 3.0 because the planning-time
-file-per-bucket check is not free on tables with unknown layouts.
-Every bucketed table this engine reads is its own copy program's, whose
-layout guarantees the check passes, so the conf is an engine invariant,
-not a bench tweak: a session without it silently pays two in-memory
-sorts per bucketed join (q7 plan: 5 Sort nodes -> 7).
-
-r18 homed the conf only in bench.py and the plan tools; production
-sessions built by cli.py / pipeline.py got the Sorts back.  This module
-is the single home (r18 verdict item 1): builders call
-``apply_engine_confs`` and, because ``getOrCreate`` ignores builder
-confs when an existing session is reused, follow up with
-``ensure_engine_confs`` on the live session.  Every conf here is a
+``build_session`` applies ``ENGINE_CONFS`` on the builder and again on
+the live session, because ``getOrCreate`` does not reliably apply
+builder confs to a session that is already running (under spark-submit,
+in tests): static confs never, runtime SQL confs only where the Spark
+version and mode re-apply them.  Every conf in ``ENGINE_CONFS`` is a
 runtime SQL conf, effective at next planning.
 """
 
 from __future__ import annotations
 
+import os
+
 # Conf -> value required by the engine's storage layout or arithmetic.
 # Keep this to invariants the engine relies on at any scale; tuning
-# knobs (shuffle partitions, memory) stay with each entry point.
+# knobs (shuffle partitions, memory) are the caller's ``confs`` or
+# local_session's.
 ENGINE_CONFS: dict[str, str] = {
+    # The at-rest copy program writes every bucketed table with
+    # sortBy(bucket_key) and exactly one parquet file per bucket. Spark
+    # only recognizes that order, and drops the per-task Sorts from
+    # colocated SortMergeJoins, with this conf on (off by default since
+    # Spark 3.0). Without it a bucketed join pays two in-memory sorts
+    # (q7 plan: 5 Sort nodes -> 7).
     "spark.sql.legacy.bucketedTableScan.outputOrdering": "true",
     # Already the Spark 4 default; pinned so a cluster-level override
     # cannot turn an over-range decimal cast (queries.dsum) into a NULL
@@ -45,11 +40,45 @@ def apply_engine_confs(builder):
 
 
 def ensure_engine_confs(spark) -> None:
-    """Set the engine confs on a live session.
-
-    Needed because SparkSession.builder.getOrCreate() silently ignores
-    builder confs when it returns an already-running session (the
-    normal case under spark-submit and in tests).
-    """
+    """Set the engine confs on a live session."""
     for k, v in ENGINE_CONFS.items():
         spark.conf.set(k, v)
+
+
+def build_session(app: str, master: str | None = None, confs: dict | None = None):
+    """getOrCreate a session named ``app`` with ``confs`` plus the
+    engine confs, and make sure the engine confs hold on it even when an
+    already-running session is returned."""
+    from pyspark.sql import SparkSession
+
+    builder = SparkSession.builder.appName(app)
+    if master:
+        builder = builder.master(master)
+    for k, v in (confs or {}).items():
+        builder = builder.config(k, v)
+    spark = apply_engine_confs(builder).getOrCreate()
+    ensure_engine_confs(spark)
+    return spark
+
+
+def local_cpus() -> int:
+    """$SPARK_GRAFT_CPUS, else the cores this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def local_session(app: str):
+    """The session of the measurement and proof tools (bench, probe,
+    plan_audit, dump_plans, oracle_check): local[local_cpus()], at
+    least 8 shuffle partitions, driver memory $SPARK_GRAFT_DRIVER_MEM
+    (default 16g), log level ERROR."""
+    cpus = local_cpus()
+    spark = build_session(
+        app,
+        f"local[{cpus}]",
+        {
+            "spark.sql.shuffle.partitions": str(max(cpus, 8)),
+            "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+        },
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark

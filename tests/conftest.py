@@ -1,5 +1,7 @@
 """Shared fixtures. Session-scoped SparkSession on local[4]
-(SURVEY §5), UTC, small shuffle partitions for speed."""
+(SURVEY §5), UTC, small shuffle partitions for speed, built by
+session.build_session so every test runs with the engine confs the
+entry points ship."""
 
 from __future__ import annotations
 
@@ -10,20 +12,20 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from pyspark.sql import SparkSession  # noqa: E402
-
+from data_validator_spark.session import build_session  # noqa: E402
 from data_validator_spark.sources import TableSource  # noqa: E402
 
 
 @pytest.fixture(scope="session")
 def spark():
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("data-validator-spark-tests")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    s = build_session(
+        "data-validator-spark-tests",
+        "local[4]",
+        {
+            "spark.sql.shuffle.partitions": "8",
+            "spark.sql.session.timeZone": "UTC",
+            "spark.ui.enabled": "false",
+        },
     )
     s.sparkContext.setLogLevel("ERROR")
     yield s

@@ -610,59 +610,6 @@ def test_derived_copy_refuses_foreign_name_collision(spark, tmp_path):
         _drop_fact_tables(spark, sf)
 
 
-def test_legacy_copy_sweep_drops_only_pre_rename_orphans(spark):
-    """ADVICE r15: the r15 key-in-name rename orphaned old-name fact
-    copies (dv_bkt_{name}_{tag}, sidecar without 'key'). The sweep
-    must remove exactly those — never the keyed copies, never the
-    live keyless ext relations, never sidecar-less directories."""
-    import json
-    import os
-    import re
-
-    from data_validator_spark.operators.bucket_sweep import drop_legacy_copies
-    from data_validator_spark.operators.bucketing import BUCKET_SIDECAR
-
-    wh = re.sub(r"^file:/*", "/", spark.conf.get("spark.sql.warehouse.dir"))
-
-    def plant(name, sidecar):
-        p = os.path.join(wh, name)
-        os.makedirs(p, exist_ok=True)
-        if sidecar is not None:
-            with open(os.path.join(p, BUCKET_SIDECAR), "w") as f:
-                json.dump(sidecar, f)
-        return p
-
-    legacy = plant("dv_bkt_orders_tmp_pytest_sweep", {"version": 2, "files": []})
-    keyed = plant(
-        "dv_bkt_orders_o_orderkey_tmp_pytest_sweep",
-        {"version": 3, "key": "o_orderkey", "files": []},
-    )
-    ext = plant("dv_bkt_lineitem_ext_tmp_pytest_sweep", {"version": 1, "files": []})
-    bare = plant("dv_bkt_events_tmp_pytest_sweep_nosidecar", None)
-    # ADVICE r16: a foreign directory whose name is NOT a valid bare
-    # SQL identifier (hyphen) with a keyless sidecar must neither
-    # raise (it aborted the whole sweep pre-fix via ParseException)
-    # nor spare the sweep of the rest
-    weird = plant("dv_bkt_orders_tmp-pytest-hyphen", {"version": 2, "files": []})
-    try:
-        removed = drop_legacy_copies(spark)
-        assert "dv_bkt_orders_tmp_pytest_sweep" in removed
-        assert not os.path.isdir(legacy)
-        assert os.path.isdir(keyed)
-        assert os.path.isdir(ext)
-        assert os.path.isdir(bare)
-        # the hyphen-named orphan is removable under the quoted DROP
-        assert "dv_bkt_orders_tmp-pytest-hyphen" in removed
-        assert not os.path.isdir(weird)
-        # idempotent: a second sweep finds nothing of ours
-        assert "dv_bkt_orders_tmp_pytest_sweep" not in drop_legacy_copies(spark)
-    finally:
-        import shutil
-
-        for p in (legacy, keyed, ext, bare, weird):
-            shutil.rmtree(p, ignore_errors=True)
-
-
 def _swap_interior_custkeys(src, a: int, b: int):
     """Byte-surgery: swap the PLAIN-encoded int64 values a,b (adjacent
     in the o_custkey data page) in place — file size, mtime (restored

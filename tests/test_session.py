@@ -1,10 +1,10 @@
-"""Engine session-conf homing (r18 verdict item 1).
+"""One session builder (data_validator_spark/session.py).
 
 The sorted-bucket-scan recognition conf is an engine invariant (the
-copy program writes one sorted file per bucket at every SF); r18 set it
-only in bench.py/tools, so production cli/pipeline sessions paid the
-per-task SMJ Sorts back. These tests pin the r19 fix: one shared home
-(data_validator_spark/session.py) applied by every entry point.
+copy program writes one sorted file per bucket at every SF); a session
+built without it silently pays the per-task SMJ Sorts back. These tests
+pin one home for session construction, used by every entry point and
+by the test suite's own session.
 """
 
 from __future__ import annotations
@@ -59,23 +59,40 @@ def test_ensure_engine_confs_sets_live_session(spark):
 
 
 def test_every_entry_point_routes_through_the_helper():
-    """Source-level pin: each session-building entry point must call
-    ensure_engine_confs (builder-side apply_engine_confs alone is not
-    enough — getOrCreate ignores builder confs on session reuse)."""
-    entry_points = [
-        "data_validator_spark/cli.py",
-        "data_validator_spark/pipeline.py",
-        "bench.py",
-        "tools/plan_audit.py",
-        "tools/dump_plans.py",
-    ]
-    for rel in entry_points:
+    """Repo-wide pin: no tracked .py outside session.py (and the
+    separately-owned perfbench/) builds a session by hand or inlines an
+    engine conf: build_session is the one builder that both applies the
+    engine confs and re-asserts them on a reused session."""
+    import re
+    import subprocess
+
+    tracked = subprocess.run(
+        ["git", "-C", REPO, "ls-files", "*.py"],
+        capture_output=True, text=True, check=True,
+    ).stdout.split()
+    by_hand = re.compile(r"SparkSession\s*\.\s*builder")
+    inlined = re.compile(
+        r"(?:\.config|conf\.set)\(\s*[\"'](?:"
+        + "|".join(re.escape(k) for k in ENGINE_CONFS)
+        + r")[\"']"
+    )
+    offenders = []
+    for rel in tracked:
+        if rel == "data_validator_spark/session.py" or rel.startswith("perfbench/"):
+            continue
         src = open(os.path.join(REPO, rel)).read()
-        assert "ensure_engine_confs" in src, (
-            f"{rel} builds a Spark session without the engine confs "
-            f"(data_validator_spark/session.py)"
-        )
-        # nobody should re-inline the conf beside the helper
-        assert "bucketedTableScan.outputOrdering" not in src, (
-            f"{rel}: conf inlined instead of homed in session.py"
-        )
+        if by_hand.search(src):
+            offenders.append(f"{rel}: builds its own session")
+        if inlined.search(src):
+            offenders.append(f"{rel}: engine conf inlined")
+    assert not offenders, (
+        "build sessions through data_validator_spark/session.py "
+        f"(build_session / local_session): {offenders}"
+    )
+
+
+def test_spark_fixture_runs_the_engine_confs(spark):
+    """Tier-1 tests run the engine the entry points ship: the session
+    fixture carries every ENGINE_CONFS value."""
+    got = {k: spark.conf.get(k) for k in ENGINE_CONFS}
+    assert got == ENGINE_CONFS

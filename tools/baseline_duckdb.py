@@ -1,4 +1,4 @@
-"""Measure the single-node native baseline: run every headline query's
+"""Measure the single-node native baseline: run every registry query's
 DuckDB oracle SQL on the same parquet at the bench scale factor and
 print one JSON line of best-of-2 per-query seconds.
 
@@ -36,10 +36,8 @@ def main() -> int:
     import duckdb
 
     import __spark_entry__ as entry
-    from bench import HEADLINE
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    oracles = entry.oracle_sql()
 
     con = duckdb.connect()
     con.execute(f"PRAGMA threads={os.cpu_count()}")
@@ -47,13 +45,12 @@ def main() -> int:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
     times: dict[str, float] = {}
-    for name in HEADLINE:
-        if name not in oracles:  # rows-only ops have no SQL twin
-            continue
+    # registry order; rows-only ops have no SQL twin
+    for name, sql in entry.oracle_sql().items():
         best = float("inf")
         for _ in range(2):
             t0 = time.time()
-            con.sql(oracles[name]).fetchall()
+            con.sql(sql).fetchall()
             best = min(best, time.time() - t0)
         times[name] = round(best, 3)
 

@@ -23,23 +23,9 @@ def main() -> int:
     keys = sys.argv[4:]
     os.makedirs(out_dir, exist_ok=True)
 
-    from pyspark.sql import SparkSession
+    from data_validator_spark.session import local_session
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("plan-dump")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    # engine confs (sorted-bucket-scan recognition) so dumped plans
-    # match every engine session — shared home since r19
-    from data_validator_spark.session import ensure_engine_confs
-
-    ensure_engine_confs(spark)
+    spark = local_session("plan-dump")
 
     from data_validator_spark.queries import build_registry
 

@@ -26,23 +26,9 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     out_md = sys.argv[2] if len(sys.argv) > 2 else "PLANS.md"
 
-    from pyspark.sql import SparkSession
+    from data_validator_spark.session import local_session
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("plan-audit")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    # engine confs (sorted-bucket-scan recognition) so audited plans
-    # match every engine session — shared home since r19
-    from data_validator_spark.session import ensure_engine_confs
-
-    ensure_engine_confs(spark)
+    spark = local_session("plan-audit")
 
     from data_validator_spark.plans.audit import (
         execute_to_final_plan,

@@ -4,7 +4,7 @@ attribution from the local UI REST API (guide §1/§7).
 Usage:
     python tools/probe.py <sf_dir> <runs> <query> [<query> ...]
 
-Boots a bench-identical session (local[$SPARK_GRAFT_CPUS], same confs),
+Boots the bench's session (session.local_session),
 optionally primes the queries listed in $SPARK_GRAFT_PROBE_PRIME
 (comma-separated) untimed, then times each named query as best-of-N
 noop writes and prints, for the LAST run of each query, the stages that
@@ -41,25 +41,9 @@ def main() -> int:
     runs = int(sys.argv[2])
     names = sys.argv[3:]
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    from pyspark.sql import SparkSession
+    from data_validator_spark.session import local_session
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("probe")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.python.worker.reuse", "true")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    from data_validator_spark.session import ensure_engine_confs
-
-    ensure_engine_confs(spark)
+    spark = local_session("probe")
 
     from data_validator_spark.queries import build_registry
 
