@@ -8,6 +8,8 @@ order-insensitive value-hash → CORRECTNESS_r{N}.json).
 The real registry lives in ``data_validator_spark.queries`` — one
 entry per SURVEY.md §2 operator, each with a DuckDB oracle unless the
 operator is genuinely non-SQL-expressible (multimodal mapInPandas).
+Registry order carries no meaning: it is the order of the modules in
+``build_registry``.
 """
 
 from __future__ import annotations

@@ -4,15 +4,20 @@
 process may use]).
 
 Each query is materialized with the noop sink (full computation, no
-driver-side collect overhead) and timed as the best of
-$SPARK_GRAFT_BENCH_RUNS runs (default 2), after an untimed warmup and
-an untimed prime pass over the session-cache builders.
+driver-side collect overhead) $SPARK_GRAFT_BENCH_RUNS times (default 3,
+at least 2), right after evicting every session cache built for the
+dataset. The first run is the query's COLD time: it pays whatever
+session-cached relation, persisted copy or index it reads and no
+earlier query left behind for it. The best of the other runs is its
+WARM time. No query runs untimed, and none depends on another having
+run first.
 
 Writes the full per-query record to BENCH_FULL.json and to a copy
 stamped with the core count and scale factor
 (BENCH_FULL_c{cpus}_sf{sf}.json), then prints ONE compact JSON line:
-  {"metric": "headline_queries_total", "value": <sec>, "unit": "sec",
-   "queries": {...slowest per-query sec that fit...}, "n_errors": <n>, ...}
+  {"metric": "headline_queries_total", "value": <warm sec>, "unit": "sec",
+   "cold_total_sec": <sec>, "queries": {...slowest warm sec that fit...},
+   "n_errors": <n>, ...}
 
 Exits 1 when any query errored (its time is the -1.0 sentinel), else 0.
 
@@ -66,6 +71,30 @@ def _run_conditions(cpus: int, sf: float) -> dict:
     return cond
 
 
+def runs_per_query() -> int:
+    """$SPARK_GRAFT_BENCH_RUNS (default 3), at least 2: one cold run
+    plus at least one warm run."""
+    return max(2, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
+
+
+def time_query(run, evict, runs: int) -> tuple[float, float, list[float]]:
+    """Time one query cold and warm: `evict()` once, then `run()`
+    `runs` times. Returns (cold, warm, every run's seconds): cold is
+    the first run, warm the best of the rest."""
+    evict()
+    times = []
+    for _ in range(runs):
+        t0 = time.time()
+        run()
+        times.append(time.time() - t0)
+    return times[0], min(times[1:]), times
+
+
+def _total(results: dict[str, float]) -> float:
+    """Sum of the timings, leaving out the -1.0 error sentinels."""
+    return round(sum(v for v in results.values() if v >= 0), 3)
+
+
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:
@@ -78,7 +107,7 @@ def main() -> int:
     cpus = local_cpus()
     spark = local_session("bench")
 
-    from data_validator_spark.queries import TABLES, build_registry, load, spread
+    from data_validator_spark.queries import build_registry, evict_session_caches
 
     queries, _ = build_registry()
 
@@ -137,11 +166,11 @@ def main() -> int:
     except Exception as e:
         print(f"bench: progress tap unavailable ({e})", file=sys.stderr)
 
-    # tiny fixed mapInPandas probe — run untimed after the prime and
-    # again after the timed loop. If a run shows a slow
-    # multimodal stage while both probes stay ~100ms, the Python worker
-    # pool is warm and the cause is elsewhere; a slow second probe
-    # means the pool went cold mid-run (idle reaping / memory kill).
+    # tiny fixed mapInPandas probe — run untimed before and after the
+    # timed loop. If a run shows a slow multimodal stage while both
+    # probes stay ~100ms, the Python worker pool is warm and the cause
+    # is elsewhere; a slow second probe means the pool went cold
+    # mid-run (idle reaping / memory kill).
     def py_worker_probe() -> float:
         def _ident(it):
             for b in it:
@@ -157,144 +186,29 @@ def main() -> int:
         )
         return round(time.time() - t0, 3)
 
-    # warmup: touch every table so listing/footer IO is out of the
-    # timings (spread() also primes its split-count cache here, so no
-    # timed query pays the cold RDD probe), and spawn the Arrow Python
-    # workers once so the first pandas_udf query doesn't pay startup
-    for t in TABLES:
-        spread(load(spark, sf_dir, t)).count()
-    from pyspark.sql import functions as F
-
-    _warm = F.pandas_udf(lambda s: s, "long")
-    spark.range(1000).select(_warm("id")).write.format("noop").mode("overwrite").save()
-    # untimed agg+join+window pass: JVM JIT + whole-stage-codegen
-    # compilation otherwise lands on the FIRST timed query (observed
-    # as a 1-2s swing on combined_single_pass between runs)
-    _li = load(spark, sf_dir, "lineitem")
-    _or = load(spark, sf_dir, "orders")
-    (
-        _li.join(_or, _li.l_orderkey == _or.o_orderkey)
-        .groupBy("l_returnflag")
-        .agg(F.sum("l_quantity"), F.countDistinct("o_custkey"))
-        .write.format("noop").mode("overwrite").save()
-    )
-
-    # Each query is timed as the best of RUNS executions (default 2):
-    # the first execution pays one-time whole-stage-codegen compilation
-    # (~1-4s per distinct plan shape), a fixed cost that amortizes to
-    # zero over a real 100 TB job, so steady-state is the honest
-    # throughput number. RUNS is recorded in the output line.
-    runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2")))
-
-    # Prime pass (cold-cache accounting): several
-    # queries share session-persisted relations (trigram model, gopher/
-    # entropy signals, derived TPC-H relations, dup-pair candidates —
-    # the queries.SessionCache instances). Without priming, whichever
-    # consumer the bench happens to reach first is charged the one-time
-    # build (observed: 15.1s trigram build landing on ccnet_buckets,
-    # 7.6s Python-worker spin-up landing on multimodal_meta). One untimed execution of each cache-building query
-    # materializes every shared relation; the cost is reported
-    # separately as prime_pass_sec instead of polluting a victim
-    # query's row. (A full-registry prime was measured at ~194s — 3×
-    # the cache cost for no extra warm coverage — so the list is the
-    # declared cache builders plus one mapInPandas query to spin the
-    # Python-worker pool.)
-    PRIME = [
-        # Layout finalization FIRST: the full-content-watermark
-        # validators drop and rebuild a copy whose sidecar lacks the
-        # full-content signature (stat builders never record it), so
-        # they must reach their steady-state layout BEFORE any cache
-        # builder persists a relation over the copy's file listing —
-        # otherwise the first timed unique_check run drops the very
-        # files pagerank/copurchase's primed caches are frozen onto
-        # (observed: both -1 with FAILED_READ_FILE on the pre-rebuild
-        # lineitem parts in a fresh-warehouse bench run).
-        "unique_check",           # lineitem l_orderkey, full-content-watermark
-        "reconciliation_check",   # + orders o_orderkey, full-content-watermark
-        # SessionCache builders, one consumer per cache
-        "trigram_lm_score",       # corpus_ops._TRIGRAM_MODEL_CACHE
-        "dsir_importance",        # corpus_ops._DSIR_CACHE
-        "gopher_quality",         # mining_ops._GOPHER_CACHE
-        "char_entropy",           # mining_ops._ENTROPY_CACHE
-        "copurchase_similarity",  # mining_ops._BASKET_CACHE
-        "pagerank_bipartite",     # graph_ops._GRAPH_CACHE
-        "dedup_minhash_lsh",      # dedup._HS_CACHE
-        "dedup_ngram_jaccard",    # dedup._PAIRS_CACHE
-        "dedup_incremental",      # dedup._INC_INDEX_CACHE
-        # the incremental minhash screen reads the PERSISTED band
-        # index; the refresh builds it (plus the delta append), so the
-        # screen's timed runs measure screening, not table creation
-        # (and fills dedup._BINDEX_MAX_CACHE)
-        "dedup_band_index_refresh",
-        "quality_ensemble",       # quality_ops._ENSEMBLE_DOCS_CACHE
-        "ngram_contamination",    # quality_ops._CONTAM_TRAIN_CACHE
-        "kmeans_embeddings",      # corpus_ops._KMEANS_CENTROIDS_CACHE
-        "similarity_ann_ivf",     # similarity._ASSIGNED_CACHE
-        "ann_recall_eval",        # similarity._ANN_EVAL_CACHE
-        # tpch_ext._EXT_CACHE is keyed per derived relation
-        "q2_min_cost_supplier", "q9_product_profit", "q11_important_stock",
-        "q12_shipmode_priority", "q16_parts_supplier",
-        "q19_discounted_revenue", "q20_potential_promotion",
-        "q21_waiting_orders",
-        # the events user_id-bucketed copy (ensure_bucketed_fact)
-        # serves the behavioral family — build it untimed once
-        "events_sessionized",
-        # the o_custkey/c_custkey at-rest copies serve the
-        # per-customer family — rfm_segments builds the orders copy
-        # (plus warehouse_ops._RFM_CACHE/_RFM_BOUNDS_CACHE),
-        # cdc_upsert the customer copy, token_count the doc_id
-        # documents copy
-        "rfm_segments",
-        "cdc_upsert",
-        "token_count",
-        # …and q17 builds the l_partkey lineitem + p_partkey part
-        # copies (q14/fd_check share them)
-        "q17_small_quantity_revenue",
-        # mapInPandas worker pool (pandas_udf warm-up above uses a
-        # different eval type; spin the mapInPandas path too)
-        "multimodal_meta",
-        # grouped-map (applyInPandas) worker pool — semdedup's
-        # blocked kernel is the only batch consumer of that eval type
-        "semdedup",
-    ]
-    prime_sec = 0.0
-    if os.environ.get("SPARK_GRAFT_BENCH_PRIME", "1") != "0":
-        t0 = time.time()
-        for name in PRIME:
-            fn = queries.get(name)
-            if fn is None:
-                continue
-            try:
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            except Exception as e:
-                print(f"prime error in {name}: {e}", file=sys.stderr)
-        prime_sec = round(time.time() - t0, 3)
-    probe_after_prime = py_worker_probe()
+    runs = runs_per_query()
+    probe_before_timed = py_worker_probe()
 
     results: dict[str, float] = {}
+    results_cold: dict[str, float] = {}
     runs_detail: dict[str, list[float]] = {}
     query_t0: dict[str, float] = {}
     streaming_progress: dict[str, list[dict]] = {}
     stream_windows: list[tuple[float, str]] = []
-    total = 0.0
     for name, fn in queries.items():
+        query_t0[name] = round(time.time(), 3)
+        if name.startswith("streaming_"):
+            stream_windows.append((time.time(), name))
         try:
-            query_t0[name] = round(time.time(), 3)
-            if name.startswith("streaming_"):
-                stream_windows.append((time.time(), name))
-            best = None
-            all_runs: list[float] = []
-            for _ in range(runs):
-                t0 = time.time()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                dt = time.time() - t0
-                all_runs.append(round(dt, 3))
-                best = dt if best is None else min(best, dt)
-            results[name] = round(best, 3)
-            runs_detail[name] = all_runs
-            total += best
+            cold, warm, all_runs = time_query(
+                lambda: fn(spark, sf_dir).write.format("noop").mode("overwrite").save(),
+                lambda: evict_session_caches(sf_dir),
+                runs,
+            )
+            results_cold[name], results[name] = round(cold, 3), round(warm, 3)
+            runs_detail[name] = [round(t, 3) for t in all_runs]
         except Exception as e:  # keep the bench line parseable on partial failure
-            results[name] = -1.0
+            results[name] = results_cold[name] = -1.0
             print(f"bench error in {name}: {e}", file=sys.stderr)
     probe_after_timed = py_worker_probe()
     # attribute the async progress events: only streaming queries
@@ -316,12 +230,13 @@ def main() -> int:
 
     out = {
         "metric": "headline_queries_total",
-        "value": round(total, 3),
+        "value": _total(results),
         "unit": "sec",
         "queries": results,
+        "cold_total_sec": _total(results_cold),
+        "queries_cold": results_cold,
         "sf": sf,
         "runs_per_query": runs,
-        "prime_pass_sec": prime_sec,
         # diagnostics (BENCH_FULL only — compact_line drops them):
         # every run's wall time (codegen-vs-steady-state visible per
         # query), the Python-worker pool probes bracketing the timed
@@ -329,13 +244,13 @@ def main() -> int:
         "runs_sec": runs_detail,
         # per-query start stamps + the loadavg after the loop: a
         # systemic mid-run slowdown (a contiguous window where every
-        # query ran slow while the prime and worker probes were
-        # normal) is attributable from the artifact by correlating
-        # slow entries' wall-clock window, without re-running anything
+        # query ran slow while the worker probes were normal) is
+        # attributable from the artifact by correlating slow entries'
+        # wall-clock window, without re-running anything
         "query_start_epoch": query_t0,
         "load_after": [round(x, 2) for x in os.getloadavg()],
         "py_worker_probe_sec": {
-            "after_prime": probe_after_prime,
+            "before_timed": probe_before_timed,
             "after_timed": probe_after_timed,
         },
         "streaming_progress": streaming_progress,
@@ -379,7 +294,7 @@ COMPACT_KEYS = (
     "unit",
     "sf",
     "runs_per_query",
-    "prime_pass_sec",
+    "cold_total_sec",
     "run_conditions",
     "cc_chain",
 )

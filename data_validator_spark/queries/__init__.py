@@ -397,200 +397,10 @@ def _sql_hash60(expr: str) -> str:
     return f"CAST('0x' || substr(md5({expr}), 1, 15) AS BIGINT)"
 
 
-# Grading-priority order for the registry. The driver grades registry
-# entries in dict-insertion order and has stopped after exactly 50
-# entries in every graded round (the cut is a budget, not a crash).
-# With >50 entries, whatever sits past #50 gets no CORRECTNESS row
-# that round — so entries are emitted in priority tiers, RE-CUT EVERY
-# ROUND: (0) new or changed this round, (1) entries whose last driver
-# row is oldest (r3 as of r5), (2) green exactly once (r4), (3) green
-# in r4 and earlier rounds, or rows-only by design (a driver row adds
-# no hash evidence for those) — safest to rotate out; the FULL
-# registry is still locally re-proven via tools/oracle_check.py each
-# round (ORACLE_LOCAL_r{N}.txt).
-GRADE_PRIORITY = [
-    # === r19 cut. Tier 0 — the entries the function-level tripwire
-    # flags against the r18 snapshot: the r19 bucketed-copy scan class
-    # (q1/q20/col_stats/profile_table/bloom_filter_semijoin ride
-    # their at-rest copies instead of spread(load()) / few-split raw
-    # scans; drift_psi/benford_check measured the same ride under the
-    # driver methodology and REVERTED — trivial-per-row class, their
-    # entry sources still changed), corpus_train_filter onto the
-    # shared _ensemble_docs normalized-text relation, the hll_distinct
-    # deliberate NULL-text semantics (ADVICE r18), and the
-    # full-watermark drop path's cache-eviction guard (flags its two
-    # validator consumers).
-    "benford_check",
-    "bloom_filter_semijoin",
-    "col_stats",
-    "corpus_train_filter",
-    "drift_psi",
-    "hll_distinct",
-    "profile_table",
-    "q1_pricing_summary",
-    "q20_potential_promotion",
-    "reconciliation_check",
-    "unique_check",
-    # Tier 1 — the ENTIRE r15-evidence tier: after this round no
-    # registry entry's driver evidence is older than r16.
-    "fd_check",
-    "gopher_quality",
-    "ivm_agg",
-    "lang_id",
-    "orders_cohort_retention",
-    "pagerank_bipartite",
-    "q10_returned_items",
-    "q13_customer_distribution",
-    "q14_promo_revenue",
-    "q17_small_quantity_revenue",
-    "q18_large_volume",
-    "q22_prospective_customers",
-    "q3_shipping_priority",
-    "q4_order_priority",
-    "q5_local_supplier",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_profit",
-    "rfm_segments",
-    "scd2_intervals",
-    "substring_dedup",
-    "text_quality",
-    "tfidf_topk",
-    "token_count",
-    # Tier 2 — budget fillers: the 15 alphabetically-first
-    # r16-evidence entries not already flagged (the tiers exactly
-    # fill the 50).
-    "bm25_topk",
-    "ccnet_buckets",
-    "cluster_purity",
-    "corr_matrix",
-    "dedup_embedding_cosine",
-    "dedup_exact",
-    "doc_split_sample",
-    "domain_mix_sample",
-    "embedding_norm_quant",
-    "embedding_outliers",
-    "embedding_rp_jl",
-    "events_asof_join",
-    "events_range_join",
-    "events_rolling",
-    "global_shuffle",
-    # --- driver budget cut (50) falls here ---
-    # Below: stalest-first so r20's cut reads off the top; the FULL
-    # registry is still locally re-proven each round via
-    # tools/oracle_check.py (ORACLE_LOCAL_r{N}.txt / SFSWEEP).
-
-    # r16 evidence:
-    "heavy_hitters_cms",
-    "inverted_index",
-    "knn_label_noise",
-    "ngram_contamination",
-    "pareto_skyline",
-    "pii_scrub",
-    "pmi_collocations",
-    "quantile_shard",
-    "repetition_strip",
-    "rrf_fusion",
-    "semdedup",
-    "similarity_ann_ivf",
-    "similarity_ann_lsh",
-    "similarity_topk",
-    "stratified_sample",
-    "streaming_join",
-    "streaming_sessionized",
-    "token_frequencies",
-    "tokenizer_fertility",
-    "trigram_lm_score",
-    "vocab_growth",
-    "weighted_sample",
-    # r17 evidence:
-    "col_stats_histogram",
-    "column_max_check",
-    "column_sum_check",
-    "combined_single_pass",
-    "dedup_incremental",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "detailed_errors",
-    "event_seasonality",
-    "events_pivot",
-    "events_rollup",
-    "events_windowed",
-    "fk_integrity",
-    "k_anonymity",
-    "key_skew_audit",
-    "kmeans_embeddings",
-    "l_diversity",
-    "minhash_containment",
-    "negative_check",
-    "ngram_novelty",
-    "null_check",
-    "q11_important_stock",
-    "q15_top_supplier",
-    "q6_forecast_revenue",
-    "range_check",
-    "row_count",
-    "source_overlap",
-    "streaming_enriched",
-    "streaming_incremental_dedup",
-    "streaming_windowed",
-    "string_length_check",
-    "string_regex_check",
-    "triangle_count",
-    # r18 evidence:
-    "ann_recall_eval",
-    "boilerplate_prefix",
-    "cdc_upsert",
-    "char_entropy",
-    "col_quantiles",
-    "conversion_lag",
-    "copurchase_similarity",
-    "dedup_band_index_refresh",
-    "dedup_clusters",
-    "dedup_incremental_minhash",
-    "dedup_index_refresh",
-    "dedup_keep_best",
-    "doc_chunk",
-    "doc_fingerprint",
-    "domain_diversity",
-    "drift_ks",
-    "dsir_importance",
-    "event_transitions",
-    "events_anomaly",
-    "events_funnel",
-    "events_gap_fill",
-    "events_json_extract",
-    "events_retention",
-    "events_sessionized",
-    "events_time_weighted",
-    "events_user_cap",
-    "lang_id_confusion",
-    "mad_outliers",
-    "multimodal_features",
-    "multimodal_frame_sample",
-    "multimodal_meta",
-    "multimodal_resize",
-    "q12_shipmode_priority",
-    "q16_parts_supplier",
-    "q19_discounted_revenue",
-    "q21_waiting_orders",
-    "q2_min_cost_supplier",
-    "quality_calibration",
-    "quality_ensemble",
-    "salted_aggregation",
-    "sequence_pack",
-    "split_contamination",
-    "streaming_dedup",
-    "streaming_drift",
-    "streaming_seasonality",
-    "streaming_validation",
-    "user_activity_gini",
-]
-
-
-
 def build_registry() -> tuple[dict[str, Callable], dict[str, str]]:
+    """Every registry query and its DuckDB oracle, keyed by name, in
+    the order of the modules below. The order carries no meaning; a
+    name that two modules define is an error, not a silent override."""
     from data_validator_spark.queries import (
         accel_ops,
         analytics,
@@ -630,18 +440,9 @@ def build_registry() -> tuple[dict[str, Callable], dict[str, str]]:
         quality_ops,
         streaming_queries,
     ):
+        dup = sorted(queries.keys() & mod.QUERIES.keys())
+        if dup:
+            raise ValueError(f"{mod.__name__} redefines registry queries: {dup}")
         queries.update(mod.QUERIES)
         oracles.update(mod.ORACLES)
-
-    # Re-emit in grading-priority order; anything not named in
-    # GRADE_PRIORITY (e.g. an operator added mid-round) goes first so a
-    # brand-new entry is always graded.
-    ordered: dict[str, Callable] = {}
-    for key in queries:
-        if key not in GRADE_PRIORITY:
-            ordered[key] = queries[key]
-    for key in GRADE_PRIORITY:
-        if key in queries:
-            ordered[key] = queries[key]
-    ordered_oracles = {k: oracles[k] for k in ordered if k in oracles}
-    return ordered, ordered_oracles
+    return queries, oracles

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from data_validator_spark.queries import DEC, dsum, load, sql_dsum
-from data_validator_spark.validators.column_based import ColumnMaxCheck, ColumnSumCheck
+from data_validator_spark.validators.column_based import ColumnMaxCheck
 from data_validator_spark.validators.row_based import (
     NegativeCheck,
     NullCheck,
@@ -26,11 +26,6 @@ from data_validator_spark.validators.row_based import (
     StringLengthCheck,
     StringRegexCheck,
 )
-
-
-def _err_agg(check, df, alias: str):
-    """sum(when(col_test,1,0)) — the exact RowBased aggregate shape."""
-    return F.sum(F.when(check.col_test(df), F.lit(1)).otherwise(F.lit(0))).alias(alias)
 
 
 # -- 1. row_count ----------------------------------------------------------
@@ -46,7 +41,7 @@ SQL_ROW_COUNT = "SELECT count(*) AS row_cnt FROM lineitem"
 def q_null_check(spark, sf):
     df = load(spark, sf, "events")
     chk = NullCheck("props")
-    return df.agg(_err_agg(chk, df, "null_errors"))
+    return df.agg(*chk.agg_exprs(df, "null"))
 
 
 SQL_NULL_CHECK = (
@@ -59,7 +54,7 @@ SQL_NULL_CHECK = (
 def q_negative_check(spark, sf):
     df = load(spark, sf, "customer")
     chk = NegativeCheck("c_acctbal")
-    return df.agg(_err_agg(chk, df, "negative_errors"))
+    return df.agg(*chk.agg_exprs(df, "negative"))
 
 
 SQL_NEGATIVE_CHECK = (
@@ -73,7 +68,7 @@ def q_range_check(spark, sf):
     df = load(spark, sf, "lineitem")
     # exclusive bounds (reference default): fail when qty <= 1 OR qty >= 50
     chk = RangeCheck("l_quantity", min_value=1.0, max_value=50.0, inclusive=False)
-    return df.agg(_err_agg(chk, df, "range_errors"))
+    return df.agg(*chk.agg_exprs(df, "range"))
 
 
 SQL_RANGE_CHECK = (
@@ -86,7 +81,7 @@ SQL_RANGE_CHECK = (
 def q_string_length_check(spark, sf):
     df = load(spark, sf, "documents")
     chk = StringLengthCheck("text", min_length=50, max_length=520)
-    return df.agg(_err_agg(chk, df, "length_errors"))
+    return df.agg(*chk.agg_exprs(df, "length"))
 
 
 SQL_STRING_LENGTH_CHECK = (
@@ -99,7 +94,7 @@ SQL_STRING_LENGTH_CHECK = (
 def q_string_regex_check(spark, sf):
     df = load(spark, sf, "customer")
     chk = StringRegexCheck("c_name", regex="^Customer#[0-9]{9}$")
-    return df.agg(_err_agg(chk, df, "regex_errors"))
+    return df.agg(*chk.agg_exprs(df, "regex"))
 
 
 SQL_STRING_REGEX_CHECK = (
@@ -122,7 +117,6 @@ SQL_COLUMN_MAX_CHECK = "SELECT max(l_quantity) AS max_val FROM lineitem"
 # -- 8. column_sum_check ---------------------------------------------------
 def q_column_sum_check(spark, sf):
     df = load(spark, sf, "lineitem")
-    ColumnSumCheck("l_extendedprice", min_value=0.0)  # config parity only
     return df.agg(dsum(F.col("l_extendedprice"), "sum_val"))
 
 
@@ -265,9 +259,9 @@ def q_combined_single_pass(spark, sf):
     regex_chk = StringRegexCheck("l_linestatus", regex="^[OF]$")
     return df.agg(
         F.count(F.lit(1)).alias("row_cnt"),
-        _err_agg(null_chk, df, "null_errors"),
-        _err_agg(range_chk, df, "range_errors"),
-        _err_agg(regex_chk, df, "regex_errors"),
+        *null_chk.agg_exprs(df, "null"),
+        *range_chk.agg_exprs(df, "range"),
+        *regex_chk.agg_exprs(df, "regex"),
         F.max(F.col("l_quantity")).alias("max_qty"),
         dsum(F.col("l_extendedprice"), "sum_price"),
     )

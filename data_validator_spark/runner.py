@@ -186,16 +186,6 @@ class ValidatorTableRunner:
                 failed = c.costly_check(df) or failed
         return failed
 
-    # -- orchestration ---------------------------------------------------------
-    def run(self, spark: SparkSession) -> bool:
-        """Full lifecycle; returns True when validation FAILED."""
-        if self.config_check(spark):
-            return True
-        failed = self.quick_checks(spark)
-        failed = self.costly_checks(spark) or failed
-        self.failed = self.failed or failed
-        return failed
-
     def to_dict(self) -> dict[str, Any]:
         return {
             # source-specific identity keys first (reference tableEncoder
