@@ -1,224 +1,45 @@
-"""The driver grades registry entries in dict-insertion order and has
-cut after exactly 50 entries in every graded round — so ordering IS
-grading coverage. These tests pin the r13 rotation contract from
-data_validator_spark/queries/__init__.py:GRADE_PRIORITY and the
-bench.py prime list. Every entry, graded or not, is covered by
-tools/oracle_check.py."""
+"""bench.py's compact stdout line for a result set the size of the
+whole registry. No Spark needed."""
 
 from __future__ import annotations
 
-import importlib.util
-import pathlib
+import json
 
-from data_validator_spark.queries import GRADE_PRIORITY, build_registry
-
-DRIVER_GRADE_BUDGET = 50
-ROOT = pathlib.Path(__file__).resolve().parent.parent
-
-# Tier 0 — r19: every entry the function-level tripwire flags
-# against the r18 snapshot: the r19 bucketed-copy scan class (q1,
-# q20, col_stats, profile_table, drift_psi, benford_check,
-# bloom_filter_semijoin onto their at-rest copies),
-# corpus_train_filter onto the shared _ensemble_docs relation, the
-# hll_distinct deliberate NULL-text semantics, and the full-watermark
-# drop path's session-cache eviction guard (flags unique_check +
-# reconciliation_check).
-R19_CHANGED = {
-    "benford_check",
-    "bloom_filter_semijoin",
-    "col_stats",
-    "corpus_train_filter",
-    "drift_psi",
-    "hll_distinct",
-    "profile_table",
-    "q1_pricing_summary",
-    "q20_potential_promotion",
-    "reconciliation_check",
-    "unique_check",
-}
-
-# Tier 1 — the ENTIRE remaining r15-evidence tier: after this round
-# no registry entry's driver evidence is older than r16.
-R15_STALE = {
-    "fd_check",
-    "gopher_quality",
-    "ivm_agg",
-    "lang_id",
-    "orders_cohort_retention",
-    "pagerank_bipartite",
-    "q10_returned_items",
-    "q13_customer_distribution",
-    "q14_promo_revenue",
-    "q17_small_quantity_revenue",
-    "q18_large_volume",
-    "q22_prospective_customers",
-    "q3_shipping_priority",
-    "q4_order_priority",
-    "q5_local_supplier",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_profit",
-    "rfm_segments",
-    "scd2_intervals",
-    "substring_dedup",
-    "text_quality",
-    "tfidf_topk",
-    "token_count",
-}
-
-# Tier 2 — budget fillers: the 15 alphabetically-first r16-evidence
-# entries not already flagged (the tiers exactly fill the 50 budget).
-R16_FILLERS = {
-    "bm25_topk",
-    "ccnet_buckets",
-    "cluster_purity",
-    "corr_matrix",
-    "dedup_embedding_cosine",
-    "dedup_exact",
-    "doc_split_sample",
-    "domain_mix_sample",
-    "embedding_norm_quant",
-    "embedding_outliers",
-    "embedding_rp_jl",
-    "events_asof_join",
-    "events_range_join",
-    "events_rolling",
-    "global_shuffle",
-}
-
-# EMPTY since r15.
-CHANGED_LOCAL_ONLY: set[str] = set()
-
-# No SQL oracle by design — EMPTY since r5 session 5: every registry
-# entry carries a hash oracle.
-ROWS_ONLY: set[str] = set()
-
-# Entries below the cut with no driver row ever — EMPTY since r12:
-# every entry holds a driver-green row for some round.
-NEW_LOCAL_ONLY: set[str] = set()
-
-
-def test_priority_list_matches_registry():
-    q, _ = build_registry()
-    assert set(GRADE_PRIORITY) == set(q), set(GRADE_PRIORITY) ^ set(q)
-
-
-def test_new_and_stale_entries_fit_grading_budget():
-    q, _ = build_registry()
-    graded = set(list(q)[:DRIVER_GRADE_BUDGET])
-    assert R19_CHANGED <= graded, R19_CHANGED - graded
-    assert R15_STALE <= graded, R15_STALE - graded
-    assert R16_FILLERS <= graded, R16_FILLERS - graded
-    # the tiers exactly fill the budget — no wasted slot
-    assert len(R19_CHANGED | R15_STALE | R16_FILLERS) == DRIVER_GRADE_BUDGET
-    assert not CHANGED_LOCAL_ONLY & graded  # below the cut by design
-
-
-def test_rotated_out_entries_hold_recent_driver_green():
-    """Whatever falls past the grading budget must already hold a
-    driver-green row in CORRECTNESS_r18, r17 or r16 (the freshest
-    evidence tiers; the whole r15 tier is graded this round), or be
-    explicitly declared local-only."""
-    import json
-
-    def green(fname):
-        d = json.loads((ROOT / fname).read_text())
-        return {
-            k for k, v in d.items()
-            if v.get("rows_match") and v.get("schema_match") and v.get("hash_match")
-        }
-
-    green_recent = (
-        green("CORRECTNESS_r18.json")
-        | green("CORRECTNESS_r17.json")
-        | green("CORRECTNESS_r16.json")
-    )
-    q, _ = build_registry()
-    overflow = list(q)[DRIVER_GRADE_BUDGET:]
-    not_proven = [
-        k for k in overflow
-        if k not in green_recent
-        and k not in ROWS_ONLY
-        and k not in NEW_LOCAL_ONLY
-        and k not in CHANGED_LOCAL_ONLY
-    ]
-    assert not not_proven, not_proven
-
-
-def test_bench_prime_keys_exist_in_registry():
-    """The prime-phase list must name real registry entries (typo
-    guard — a misspelled primer would silently skip a cache build)."""
-    import re
-
-    q, _ = build_registry()
-    # PRIME is local to main(); read it from the source text
-    src = (ROOT / "bench.py").read_text()
-    block = re.search(r"PRIME = \[(.*?)\]", src, re.S).group(1)
-    primers = re.findall(r'"(\w+)"', block)
-    assert primers, "PRIME list not found"
-    missing = [k for k in primers if k not in q]
-    assert not missing, f"PRIME keys not in registry: {missing}"
-
-
-def test_bench_prime_finalizes_full_wm_layouts_before_cache_builders():
-    """The full-content-watermark validators drop-and-rebuild a bucketed
-    copy whose sidecar lacks the full-content signature (stat builders
-    never record one), so on a fresh warehouse they MUST run before
-    any prime entry persists a relation over that copy's file listing.
-    r18 regression guard: with unique_check absent from PRIME, its
-    first timed run dropped the lineitem copy out from under the
-    primed pagerank/copurchase caches (FAILED_READ_FILE, both -1)."""
-    import re
-
-    src = (ROOT / "bench.py").read_text()
-    block = re.search(r"PRIME = \[(.*?)\]", src, re.S).group(1)
-    primers = re.findall(r'"(\w+)"', block)
-    full_wm = ["unique_check", "reconciliation_check"]
-    missing = [k for k in full_wm if k not in primers]
-    assert not missing, f"full-watermark validators missing from PRIME: {missing}"
-    first_other = min(i for i, k in enumerate(primers) if k not in full_wm)
-    late = [k for k in full_wm if primers.index(k) > first_other]
-    assert not late, (
-        f"full-watermark validators must precede every cache builder "
-        f"in PRIME (layout finalization before cache priming): {late}"
-    )
+import bench
+from data_validator_spark.queries import build_registry
 
 
 def test_bench_stdout_line_fits_driver_capture_window():
-    """BENCH_r06/r08 both came back `parsed: null` because the full
-    queries dict overflowed the driver's 2000-char stdout tail capture.
-    compact_line must stay under the window for a registry-sized
-    result set with worst-case timing widths."""
-    import json
-
-    spec = importlib.util.spec_from_file_location("bench", ROOT / "bench.py")
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
+    """Callers tail-capture the last 2000 chars of stdout, so the full
+    queries dict must not ride the line. compact_line must stay under
+    STDOUT_BUDGET for a registry-sized result set with worst-case
+    timing widths. An errored query's -1.0 sentinel is counted in
+    n_errors and left out of every sum, so omitted and errored stay
+    distinguishable."""
     results = {name: 123.456 for name in build_registry()[0]}
+    results[next(iter(results))] = -1.0
     out = {
         "metric": "headline_queries_total",
-        "value": round(sum(results.values()), 3),
+        "value": round(sum(v for v in results.values() if v > 0), 3),
         "unit": "sec",
         "queries": results,
         "sf": 0.1,
         "runs_per_query": 2,
-        "prime_pass_sec": 41.51,
+        "cold_total_sec": 12345.678,
+        "queries_cold": results,
         "cc_chain": {
             "propagation_sec": 7.772, "propagation_rounds": 32,
             "star_sec": 7.303, "star_rounds": 6,
         },
+        "run_conditions": {"cpus": 4, "sf": 0.1, "git_head": "0" * 40, "tree_dirty": False},
     }
     line = bench.compact_line(out, "BENCH_FULL.json")
-    assert len(line) <= 2000 - 100  # margin for driver framing
+    assert len(line) <= bench.STDOUT_BUDGET
     parsed = json.loads(line)
     assert parsed["value"] == out["value"]
     assert parsed["queries"]  # at least some per-query detail survives
+    assert "queries_cold" not in parsed
     assert parsed["queries_omitted"] + len(parsed["queries"]) == len(results)
-    assert parsed["n_errors"] == 0
-    # error sentinels are excluded from timing sums but explicitly
-    # counted, so omitted-vs-errored stays distinguishable (ADVICE r9)
-    bad = dict(results)
-    bad[next(iter(bad))] = -1.0
-    parsed_bad = json.loads(bench.compact_line({**out, "queries": bad}, "f"))
-    assert parsed_bad["n_errors"] == 1
-    assert parsed_bad["fast_queries_total_sec"] >= 0
+    assert parsed["n_errors"] == 1
+    assert parsed["cold_total_sec"] == out["cold_total_sec"]
+    assert parsed["fast_queries_total_sec"] >= 0
