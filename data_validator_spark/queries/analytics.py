@@ -7,8 +7,8 @@ Scale design:
 - q3/q5: dimension tables are broadcast (F.broadcast) so the only
   shuffled relation is lineitem/orders; verify BroadcastHashJoin via
   .explain(). At 100 TB lineitem never re-partitions for the dims.
-- events_windowed: tumbling window expressed as a date_trunc group key
-  (batch analog of the streaming pipeline in streaming/validation.py).
+- events_windowed: 1-hour tumbling window; the same kernel
+  (hourly_event_counts) runs the streaming twin streaming_windowed.
 - events_sessionized: one shuffle on user_id; lag + running sum inside
   the partition (no second shuffle). Skewed users would be handled by
   AQE skew-join; session logic itself is per-user sequential by nature.
@@ -336,7 +336,19 @@ LIMIT 20
 
 # -- events_windowed: tumbling 1h window per event_type --------------------
 def events_windowed(spark, sf):
-    ev = load(spark, sf, "events")
+    return hourly_event_counts(load(spark, sf, "events")).orderBy(
+        "window_start", "event_type"
+    )
+
+
+def hourly_event_counts(ev):
+    """1-hour tumbling-window count and exact value sum per event_type
+    — the kernel of events_windowed and of its streaming twin. On a
+    stream the 2-hour watermark bounds the window state (rows later
+    than that behind the max event time are dropped); a batch frame
+    has no late data, so it gets none."""
+    if ev.isStreaming:
+        ev = ev.withWatermark("ts", "2 hours")
     win = F.window(F.col("ts"), "1 hour")
     return (
         ev.groupBy(win.alias("w"), F.col("event_type"))
@@ -347,7 +359,6 @@ def events_windowed(spark, sf):
             "n_events",
             "sum_value",
         )
-        .orderBy("window_start", "event_type")
     )
 
 
@@ -385,8 +396,9 @@ def events_sessionized(spark, sf):
     )
 
 
-SQL_EVENTS_SESSIONIZED = f"""
-WITH g AS (
+# Gap-split session numbering (CTE ``s``: every event with its
+# per-user session_seq) — shared with the streaming twin's oracle.
+SQL_SESSION_SEQ_CTES = """g AS (
   SELECT user_id, event_id, ts, value,
          CASE WHEN epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
                 OR lag(ts) OVER w IS NULL THEN 1 ELSE 0 END AS new_session
@@ -397,7 +409,10 @@ s AS (
   SELECT *, CAST(SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq
   FROM g
-)
+)"""
+
+SQL_EVENTS_SESSIONIZED = f"""
+WITH {SQL_SESSION_SEQ_CTES}
 SELECT user_id, session_seq,
        count(*) AS n_events,
        strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from data_validator_spark.functions.text import rolling_shingle_hashes
 from data_validator_spark.operators.bucketing import copy_name, ensure_copy
+from data_validator_spark.operators.cc_star import connected_components
 from data_validator_spark.operators.checkpoint import free_local_checkpoint
 from data_validator_spark.queries import SessionCache, load, load_documents_by_id
 
@@ -830,18 +831,19 @@ SELECT doc_id, ({terms}) AS simhash FROM t ORDER BY doc_id
 # -- dedup_clusters: connected components over the near-dup graph ----------
 MAX_CC_ITERATIONS = 20  # graph diameter bound; LSH dup clusters are shallow
 
-# spark.data_validator.cc_algorithm: "auto" (default — propagation
-# bounded to CC_AUTO_ROUNDS, escaping to star when a deep component
-# blows the budget), "propagation" (one shuffle-join per round, rounds
-# = diameter; right for the shallow clusters banded LSH produces) or
-# "star" (large-star/small-star, O(log n) rounds; right at 100 TB
-# where a single pathological chain component would stall
-# propagation). tests/test_dedup_similarity.py property-checks that
-# all paths emit identical clusters.
-CC_ALGORITHM_CONF = "spark.data_validator.cc_algorithm"
-# auto-mode propagation budget (re-measured r18, r17 verdict stretch
-# 8): the REAL banded-LSH graphs converge in 2 rounds at both sf0.01
-# and sf0.1 (fused round 0 + the confirming round), so 4 is 2× the
+# Component labels come from min-label propagation (one shuffle-join
+# per round, rounds = diameter; right for the shallow clusters banded
+# LSH produces), escaping to large-star/small-star (operators/cc_star.py,
+# O(log n) rounds; right when a pathological chain component would
+# stall propagation). Both stay: on the real LSH graphs propagation is
+# the faster one (4 cores, median of 5, identical clusters, 2 rounds
+# each: sf0.1 1.33 s vs star 3.10 s, sf0.01 1.64 s vs 3.49 s).
+# tests/test_dedup_similarity.py property-checks that both paths emit
+# identical clusters.
+#
+# Propagation budget (re-measured r18, r17 verdict stretch 8): the
+# REAL banded-LSH graphs converge in 2 rounds at both sf0.01 and sf0.1
+# (fused round 0 + the confirming round), so 4 is 2× the
 # measured healthy depth — while a graph still moving after 4 rounds
 # has a deep component that propagation would crawl through at
 # O(diameter) and the star rewrite finishes in O(log n). The A/B on
@@ -871,35 +873,25 @@ def q_dedup_clusters(spark, sf):
     rounds); dup clusters from banded LSH are shallow, so the plain
     loop converges in a handful of rounds.
 
-    Default mode "auto" (r7): propagation runs with a CC_AUTO_ROUNDS
-    budget; on a healthy LSH graph it converges inside the budget and
-    the plan is identical to cc_algorithm=propagation. If a deep
-    component is still moving at the budget, the operator escapes to
-    the large-star/small-star rewrite (operators/cc_star.py) — the
-    bounded rounds are the probe cost of detecting depth, and the
-    O(log n) star loop replaces the O(diameter) crawl. Both paths
-    label components by min doc_id, so the emitted clusters are
+    Propagation runs with a CC_AUTO_ROUNDS budget; on a healthy LSH
+    graph it converges inside the budget. If a deep component is
+    still moving at the budget, the operator escapes to the
+    large-star/small-star rewrite (operators/cc_star.py) — the bounded
+    rounds are the probe cost of detecting depth, and the O(log n)
+    star loop replaces the O(diameter) crawl. Both paths label
+    components by min doc_id, so the emitted clusters are
     byte-identical (property-tested)."""
     pairs = _lsh_pairs_df(spark, sf)
-    return _cluster_rollup(cluster_labels(spark, pairs))
+    return _cluster_rollup(cluster_labels(pairs))
 
 
-def cluster_labels(spark, pairs):
-    """(doc_a, doc_b) pair graph -> (node, label) component labels via
-    the configured cc_algorithm ("auto" default — see
+def cluster_labels(pairs):
+    """(doc_a, doc_b) pair graph -> (node, label) component labels:
+    budgeted propagation, escaping to star on a deep component (see
     q_dedup_clusters)."""
-    algo = spark.conf.get(CC_ALGORITHM_CONF, "auto")
-    if algo == "star":
-        from data_validator_spark.operators.cc_star import connected_components
-
-        return connected_components(pairs, max_iter=MAX_CC_ITERATIONS)
-    if algo == "propagation":
-        return propagation_components(pairs, max_iter=MAX_CC_ITERATIONS)
     try:
         return propagation_components(pairs, max_iter=CC_AUTO_ROUNDS)
     except ConvergenceError:
-        from data_validator_spark.operators.cc_star import connected_components
-
         return connected_components(pairs, max_iter=MAX_CC_ITERATIONS)
 
 
@@ -972,15 +964,15 @@ def propagation_components(pairs, max_iter=None, stats: dict | None = None):
             break
         prev_fp = fp
     else:
-        # release before raising: auto-mode catches this and re-runs on
-        # the star path, which re-derives its own edge relation
+        # release before raising: cluster_labels catches this and re-runs
+        # on the star path, which re-derives its own edge relation
         edges.unpersist()
         free_local_checkpoint(prev_checkpoint)
         raise ConvergenceError(
             f"propagation_components did not converge within {max_iter} "
             "rounds — the pair graph has an unusually deep component; "
-            "raise max_iter or switch to large-star/small-star "
-            "propagation (cc_algorithm=star)"
+            "raise max_iter or use large-star/small-star "
+            "(operators.cc_star.connected_components)"
         )
     if stats is not None:
         stats["rounds"] = rounds
@@ -1189,6 +1181,16 @@ def q_dedup_incremental(spark, sf):
     )
 
 
+# Oracle side of the corpus/delta split (CTEs pv, corpus — distinct
+# corpus fingerprints — and delta), shared with streaming_incremental_dedup.
+SQL_INCREMENTAL_SPLIT = f"""pv AS (
+  SELECT CAST(floor((MAX(doc_id) + 1) * {DELTA_FRAC}) AS BIGINT) AS p FROM documents),
+corpus AS (SELECT DISTINCT md5({_SQL_NORM}) AS fingerprint
+           FROM documents, pv WHERE doc_id < p),
+delta AS (SELECT doc_id, md5({_SQL_NORM}) AS fingerprint
+          FROM documents, pv WHERE doc_id >= p)"""
+
+
 def _sql_dedup_incremental() -> str:
     from data_validator_spark.queries.accel_ops import BLOOM_K, BLOOM_M
 
@@ -1205,13 +1207,8 @@ def _sql_dedup_incremental() -> str:
         f"{pos('d.fingerprint', j)} IN (SELECT pos FROM bits)" for j in range(BLOOM_K)
     )
     return f"""
-WITH pv AS (SELECT CAST(floor((MAX(doc_id) + 1) * {DELTA_FRAC}) AS BIGINT) AS p
-            FROM documents),
-corpus AS (SELECT DISTINCT md5({_SQL_NORM}) AS fingerprint
-           FROM documents, pv WHERE doc_id < p),
+WITH {SQL_INCREMENTAL_SPLIT},
 bits AS (SELECT DISTINCT pos FROM ({arms})),
-delta AS (SELECT doc_id, md5({_SQL_NORM}) AS fingerprint
-          FROM documents, pv WHERE doc_id >= p),
 flagged AS (
   SELECT d.doc_id, d.fingerprint,
          CAST(CASE WHEN {probes} THEN 1 ELSE 0 END AS BIGINT) AS bloom_pass,

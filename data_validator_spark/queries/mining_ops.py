@@ -1085,17 +1085,16 @@ def q_event_seasonality(spark, sf):
     # no parallelism spread: per-row work is two timestamp field
     # extractions — the map-side combine is the first real stage
     # (the r7 A/B rule; see spread()'s docstring)
-    return seasonality_census(load(spark, sf, "events"))
+    return seasonality_shares(seasonality_cells(load(spark, sf, "events")))
 
 
-def seasonality_census(events):
-    """(dow, hour) census + micro-unit shares over an events relation —
-    shared by the batch entry and streaming_queries' live twin (the
-    streaming side aggregates on the stream, then reuses the share
-    block on the ≤168-row final table)."""
+def seasonality_cells(events):
+    """(dow, hour) event count and exact value sum over an events
+    relation (≤168 cells) — the kernel of event_seasonality and, run
+    on the stream, of streaming_seasonality."""
     from data_validator_spark.queries import dsum
 
-    cells = (
+    return (
         events.select(
             (F.dayofweek("ts") - 1).alias("dow"),
             F.hour("ts").alias("hour"),
@@ -1104,7 +1103,6 @@ def seasonality_census(events):
         .groupBy("dow", "hour")
         .agg(F.count(F.lit(1)).alias("n_events"), dsum(F.col("value"), "value_sum"))
     )
-    return seasonality_shares(cells)
 
 
 def seasonality_shares(cells):

@@ -44,6 +44,8 @@ from data_validator_spark.queries.textops import (
 # -- drift_psi -------------------------------------------------------------
 PSI_PIVOT = "1998-07-01"  # reference = ships before, current = after
 PSI_BUCKETS = 10
+# exact integer cents of the audited price, in both engines' SQL
+PSI_CENTS = "CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)"
 
 
 def q_drift_psi(spark, sf):
@@ -79,7 +81,7 @@ def q_drift_psi(spark, sf):
     # files, where the raw 1-split scan pays it once (the
     # col_quantiles/mad_outliers class, OPTIMIZATION_r19.md §3).
     li = load(spark, sf, "lineitem").select("l_extendedprice", "l_shipdate")
-    cents = F.expr("CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)")
+    cents = F.expr(PSI_CENTS)
     is_ref = F.col("l_shipdate") < F.lit(PSI_PIVOT)
     base = li.select(cents.alias("cents"), is_ref.alias("is_ref"))
     stats = base.agg(
@@ -100,19 +102,26 @@ def q_drift_psi(spark, sf):
             F.sum((~F.col("is_ref")).cast("long")).alias("cur_cnt"),
         )
     )
-    spine = spark.range(PSI_BUCKETS).select(F.col("id").alias("bucket"))
-    totals = stats.select("ref_tot", "cur_tot")
-    full = (
-        spine.join(F.broadcast(counts), "bucket", "left")
-        .crossJoin(F.broadcast(totals.select(
-            F.col("ref_tot").alias("rt"), F.col("cur_tot").alias("ct"))))
-        .select(
-            "bucket",
-            F.coalesce("ref_cnt", F.lit(0)).alias("ref_cnt"),
-            F.coalesce("cur_cnt", F.lit(0)).alias("cur_cnt"),
-            F.col("rt"),
-            F.col("ct"),
-        )
+    totals = stats.select(F.col("ref_tot").alias("rt"), F.col("cur_tot").alias("ct"))
+    return psi_terms(spark, totals, counts)
+
+
+def psi_terms(spark, totals, *counts):
+    """The PSI assembly of drift_psi and its streaming twin: the dense
+    PSI_BUCKETS spine left-joined to the per-bucket count relations
+    (``counts`` carry ref_cnt / cur_cnt by bucket; an empty bucket
+    counts 0), the 1-row ``totals`` (rt, ct), add-1 smoothed shares
+    p / q and the per-bucket term (p-q)·ln(p/q). Every input is a
+    ≤PSI_BUCKETS-row relation, so all joins broadcast."""
+    grid = spark.range(PSI_BUCKETS).select(F.col("id").alias("bucket"))
+    for c in counts:
+        grid = grid.join(F.broadcast(c), "bucket", "left")
+    full = grid.crossJoin(F.broadcast(totals)).select(
+        "bucket",
+        F.coalesce("ref_cnt", F.lit(0)).alias("ref_cnt"),
+        F.coalesce("cur_cnt", F.lit(0)).alias("cur_cnt"),
+        F.col("rt"),
+        F.col("ct"),
     )
     p = (F.col("ref_cnt") + 1).cast("double") / (
         F.col("rt") + PSI_BUCKETS
@@ -130,23 +139,9 @@ def q_drift_psi(spark, sf):
     ).orderBy("bucket")
 
 
-SQL_DRIFT_PSI = f"""
-WITH base AS (
-  SELECT CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS cents,
-         l_shipdate < TIMESTAMP '{PSI_PIVOT} 00:00:00' AS is_ref
-  FROM lineitem),
-stats AS (
-  SELECT MIN(cents) AS minc, MAX(cents) AS maxc,
-         CAST(SUM(CASE WHEN is_ref THEN 1 ELSE 0 END) AS BIGINT) AS ref_tot,
-         CAST(SUM(CASE WHEN is_ref = false THEN 1 ELSE 0 END) AS BIGINT) AS cur_tot
-  FROM base),
-counts AS (
-  SELECT LEAST({PSI_BUCKETS - 1},
-               ((cents - minc) * {PSI_BUCKETS}) // (maxc - minc + 1)) AS bucket,
-         CAST(SUM(CASE WHEN is_ref THEN 1 ELSE 0 END) AS BIGINT) AS ref_cnt,
-         CAST(SUM(CASE WHEN is_ref = false THEN 1 ELSE 0 END) AS BIGINT) AS cur_cnt
-  FROM base, stats GROUP BY 1),
-spine AS (SELECT unnest(range(0, {PSI_BUCKETS})) AS bucket),
+# Oracle side of psi_terms, over a ``counts`` CTE (bucket, ref_cnt,
+# cur_cnt) and a 1-row ``stats`` CTE (ref_tot, cur_tot).
+SQL_PSI_TERMS = f"""spine AS (SELECT unnest(range(0, {PSI_BUCKETS})) AS bucket),
 grid AS (
   SELECT s.bucket,
          COALESCE(c.ref_cnt, 0) AS ref_cnt,
@@ -164,6 +159,28 @@ SELECT bucket, ref_cnt, cur_cnt,
        CAST(CAST((p - q) * ln(p / q) AS DECIMAL(30,6)) AS DOUBLE) AS psi_term
 FROM shares ORDER BY bucket
 """
+
+# The two populations in integer cents: shared with the streaming
+# twin's oracle, which buckets them against the reference range only.
+SQL_DRIFT_PSI_BASE = f"""base AS (
+  SELECT {PSI_CENTS} AS cents,
+         l_shipdate < TIMESTAMP '{PSI_PIVOT} 00:00:00' AS is_ref
+  FROM lineitem)"""
+
+SQL_DRIFT_PSI = f"""
+WITH {SQL_DRIFT_PSI_BASE},
+stats AS (
+  SELECT MIN(cents) AS minc, MAX(cents) AS maxc,
+         CAST(SUM(CASE WHEN is_ref THEN 1 ELSE 0 END) AS BIGINT) AS ref_tot,
+         CAST(SUM(CASE WHEN is_ref = false THEN 1 ELSE 0 END) AS BIGINT) AS cur_tot
+  FROM base),
+counts AS (
+  SELECT LEAST({PSI_BUCKETS - 1},
+               ((cents - minc) * {PSI_BUCKETS}) // (maxc - minc + 1)) AS bucket,
+         CAST(SUM(CASE WHEN is_ref THEN 1 ELSE 0 END) AS BIGINT) AS ref_cnt,
+         CAST(SUM(CASE WHEN is_ref = false THEN 1 ELSE 0 END) AS BIGINT) AS cur_cnt
+  FROM base, stats GROUP BY 1),
+{SQL_PSI_TERMS}"""
 
 
 # -- fk_integrity ----------------------------------------------------------
@@ -671,7 +688,7 @@ def q_drift_ks(spark, sf):
     li = bucketed_fact(spark, sf, "lineitem", "l_orderkey").select(
         "l_extendedprice", "l_shipdate"
     )
-    cents = F.expr("CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)")
+    cents = F.expr(PSI_CENTS)
     is_ref = F.col("l_shipdate") < F.lit(PSI_PIVOT)
     dist = (
         li.select(cents.alias("cents"), is_ref.alias("is_ref"))
@@ -874,11 +891,10 @@ _CCNET_BINNED_CACHE = SessionCache()
 # Size gate for the exact (global-ntile) path: above this many
 # documents the histogram tertile path is the DEFAULT (r8 verdict
 # item 3 — a user who forgets approx_profile must not get a
-# corpus-scale single-partition window at 100 TB). The conf is the
-# override knob in both directions; the default keeps every test SF
-# (≤ 50k docs) on the oracle-exact ntile spelling.
-CCNET_EXACT_MAX_DOCS_CONF = "spark.data_validator.ccnet_exact_max_docs"
-CCNET_EXACT_MAX_DOCS_DEFAULT = 1_000_000
+# corpus-scale single-partition window at 100 TB). It keeps every
+# test SF (≤ 50k docs) on the oracle-exact ntile spelling, and the
+# oracle mirrors the same constant.
+CCNET_EXACT_MAX_DOCS = 1_000_000
 
 
 def q_ccnet_buckets(spark, sf):
@@ -892,7 +908,7 @@ def q_ccnet_buckets(spark, sf):
     Scale shape: the rank runs over the PER-DOC score relation (one
     row per doc, after the LM scorer's map-side collapses). ntile is
     rank-exact and the oracle-checkable default BELOW the size gate;
-    above CCNET_EXACT_MAX_DOCS (conf-overridable, default 1M docs) or
+    above CCNET_EXACT_MAX_DOCS (1M docs) or
     with ``spark.data_validator.approx_profile=true`` the tertile
     boundaries come instead from a SCORE HISTOGRAM — the
     `quantile_shard` method (corpus_ops.py): avg_logp is binned to
@@ -909,9 +925,8 @@ def q_ccnet_buckets(spark, sf):
 
     The size gate (r9) makes the scale-safe path the DEFAULT at
     corpus scale: a user who forgets the flag no longer gets a
-    single-partition window over 100 TB of scores; the conf lowers or
-    raises the cutover, and the flag still forces the histogram path
-    outright. The gate's count probe is one cached column-pruned
+    single-partition window over 100 TB of scores; the flag still
+    forces the histogram path outright. The gate's count probe is one cached column-pruned
     count job (the similarity._derived_params pattern).
 
     Determinism (exact mode): ordering key is (avg_logp DESC, doc_id)
@@ -926,10 +941,7 @@ def q_ccnet_buckets(spark, sf):
     from data_validator_spark.queries.validator_queries import _approx_enabled
 
     scores = q_trigram_lm_score(spark, sf)
-    exact_max = int(
-        spark.conf.get(CCNET_EXACT_MAX_DOCS_CONF, str(CCNET_EXACT_MAX_DOCS_DEFAULT))
-    )
-    if _approx_enabled(spark) or row_count(spark, sf, "documents") > exact_max:
+    if _approx_enabled(spark) or row_count(spark, sf, "documents") > CCNET_EXACT_MAX_DOCS:
         # histogram-derived tertile boundaries: head = highest scores,
         # so the cumulative count runs over bins in DESCENDING order.
         # The binned score relation feeds TWO subtrees (the histogram
@@ -1000,17 +1012,16 @@ def q_ccnet_buckets(spark, sf):
 
 def _sql_ccnet() -> str:
     """Gate-aware oracle: mirrors q_ccnet_buckets' size dispatch so a
-    grading run above CCNET_EXACT_MAX_DOCS_DEFAULT takes the SAME
+    grading run above CCNET_EXACT_MAX_DOCS takes the SAME
     histogram-tertile path as Spark instead of hash-mismatching by
     construction (ADVICE r9). The two tiling arms are UNION ALL'd
     behind mutually-exclusive scalar predicates on the corpus count —
     DuckDB evaluates both subtrees, which is fine at any gradable SF.
-    Caveat: the oracle can only see the DEFAULT gate — grading with a
-    non-default {CCNET_EXACT_MAX_DOCS_CONF} override (or the
-    approx_profile flag) is unsupported, same as every other conf."""
+    Caveat: grading with the approx_profile flag is unsupported, same
+    as every other conf."""
     from data_validator_spark.queries.corpus_ops import SQL_TRIGRAM_LM
 
-    gate = CCNET_EXACT_MAX_DOCS_DEFAULT
+    gate = CCNET_EXACT_MAX_DOCS
     return f"""
 WITH scores AS ({SQL_TRIGRAM_LM}),
 n AS (SELECT COUNT(*) AS n_total FROM scores),

@@ -1,15 +1,15 @@
 """Streaming registry entries (SURVEY §2 streaming rows).
 
-``streaming_windowed`` executes the events hourly-window aggregation
-as an ACTUAL Structured Streaming query (file source → watermarked
-window agg → memory sink) and returns the final result — which
-hash-matches the same DuckDB oracle as the batch ``events_windowed``,
-proving the streaming path computes identical answers.
-
-``streaming_validation`` streams lineitem through the fused validator
-scan per micro-batch (StreamingValidator/foreachBatch) and returns the
-per-batch reports (rows-only: the driver checks shape, pytest checks
-semantics).
+Each entry runs an analysis as an ACTUAL Structured Streaming query
+(file source → stateful operator → memory sink) and returns the
+final table. Where a batch registry entry computes the same answer,
+the streaming twin applies the batch kernel to the stream and shares
+its oracle (or the oracle's fragments): ``streaming_windowed`` is
+``events_windowed``'s kernel, ``streaming_seasonality`` is
+``event_seasonality``'s, ``streaming_drift`` ends in ``drift_psi``'s
+PSI assembly, and ``streaming_validation`` runs the batch runner's
+fused validator scan per micro-batch. Matching the batch oracle is
+what proves the streaming plan computes identical answers.
 """
 
 from __future__ import annotations
@@ -19,8 +19,31 @@ import uuid
 
 from pyspark.sql import functions as F
 
+from data_validator_spark.functions.text import doc_fingerprint
 from data_validator_spark.queries import dsum, load, normalize_events_ts, sql_dsum
-from data_validator_spark.queries.mining_ops import SQL_EVENT_SEASONALITY
+from data_validator_spark.queries.analytics import (
+    SQL_EVENTS_WINDOWED,
+    SQL_SESSION_SEQ_CTES,
+    hourly_event_counts,
+)
+from data_validator_spark.queries.dedup import (
+    SQL_INCREMENTAL_SPLIT,
+    _incremental_index,
+    _incremental_pivot,
+)
+from data_validator_spark.queries.mining_ops import (
+    SQL_EVENT_SEASONALITY,
+    seasonality_cells,
+    seasonality_shares,
+)
+from data_validator_spark.queries.quality_ops import (
+    PSI_BUCKETS,
+    PSI_CENTS,
+    PSI_PIVOT,
+    SQL_DRIFT_PSI_BASE,
+    SQL_PSI_TERMS,
+    psi_terms,
+)
 
 
 _SCRATCH_DIRS: list[str] = []
@@ -127,33 +150,7 @@ def _run_to_memory(
 
 def q_streaming_windowed(spark, sf):
     ev = _stream_reader(spark, sf, "events")
-
-    def agg(df):
-        win = F.window(F.col("ts"), "1 hour")
-        return (
-            df.withWatermark("ts", "2 hours")
-            .groupBy(win.alias("w"), F.col("event_type"))
-            .agg(F.count(F.lit(1)).alias("n_events"), dsum(F.col("value"), "sum_value"))
-            .select(
-                F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-                "event_type",
-                "n_events",
-                "sum_value",
-            )
-        )
-
-    return _run_to_memory(ev, agg).orderBy("window_start", "event_type")
-
-
-SQL_STREAMING_WINDOWED = f"""
-SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
-       event_type,
-       count(*) AS n_events,
-       {sql_dsum('value', 'sum_value')}
-FROM events
-GROUP BY 1, 2
-ORDER BY 1, 2
-"""
+    return _run_to_memory(ev, hourly_event_counts).orderBy("window_start", "event_type")
 
 
 def q_streaming_validation(spark, sf):
@@ -231,57 +228,34 @@ def q_streaming_sessionized(spark, sf):
     from data_validator_spark.streaming.sessionize import sessionize_stream
 
     ev = _stream_reader(spark, sf, "events")
-    name = f"dv_sess_{uuid.uuid4().hex[:12]}"
-    ckpt = _scratch_dir("dv_ckpt_")
-    # Scoped to SIXTEEN partitions, not _stream_partitions' 8: this
-    # operator is bound by the PYTHON stateful workers
-    # (applyInPandasWithState), so partitions = parallel pandas
-    # kernels, and the optimum sits between the JVM-state ops' 8 and
-    # the session's 32 (r8 A/B on the vectorized kernel at sf0.1:
-    # 32→3.8s, 16→2.8s, 8→3.2s, 4→4.3s — per-worker spin-up/overhead
-    # dominates above 16, kernel serialization below it).
-    with _stream_partitions(spark, 16):
-        q = (
-            sessionize_stream(ev.select("user_id", "ts", "value"), gap_minutes=30)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return (
-        spark.table(name)
-        .select(
-            "user_id",
-            F.date_format("session_start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
-            F.date_format("session_end", "yyyy-MM-dd HH:mm:ss").alias("session_end"),
-            "n_events",
-        )
+    # SIXTEEN partitions, not _stream_partitions' 8: this operator is
+    # bound by the PYTHON stateful workers (applyInPandasWithState),
+    # so partitions = parallel pandas kernels, and the optimum sits
+    # between the JVM-state ops' 8 and the session's 32 (r8 A/B on the
+    # vectorized kernel at sf0.1: 32→3.8s, 16→2.8s, 8→3.2s, 4→4.3s —
+    # per-worker spin-up/overhead dominates above 16, kernel
+    # serialization below it).
+    sessions = _run_to_memory(
+        ev.select("user_id", "ts", "value"),
+        lambda s: sessionize_stream(s, gap_minutes=30),
+        output_mode="append",
+        partitions=16,
+    )
+    return sessions.select(
+        "user_id",
+        F.date_format("session_start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
+        F.date_format("session_end", "yyyy-MM-dd HH:mm:ss").alias("session_end"),
+        "n_events",
     )
 
 
-# The emission-rule twin of the stream: gap-split sessions (identical
-# to SQL_EVENTS_SESSIONIZED), then keep non-last sessions plus last
-# sessions whose floor-ms timeout passed the final watermark. All
-# boundary arithmetic in integer ms exactly as Spark's event-time
-# watermark machinery computes it.
-SQL_STREAMING_SESSIONIZED = """
-WITH g AS (
-  SELECT user_id, event_id, ts, value,
-         CASE WHEN epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
-                OR lag(ts) OVER w IS NULL THEN 1 ELSE 0 END AS new_session
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-s AS (
-  SELECT *, CAST(SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-             ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq
-  FROM g
-),
+# The emission-rule twin of the stream: the batch twin's gap-split
+# sessions, then keep non-last sessions plus last sessions whose
+# floor-ms timeout passed the final watermark. All boundary arithmetic
+# in integer ms exactly as Spark's event-time watermark machinery
+# computes it.
+SQL_STREAMING_SESSIONIZED = f"""
+WITH {SQL_SESSION_SEQ_CTES},
 agg AS (
   SELECT user_id, session_seq, min(ts) AS t_start, max(ts) AS t_end,
          count(*) AS n_events
@@ -460,8 +434,8 @@ def q_streaming_drift(spark, sf):
     recomputes the same ref-bucketed PSI in DuckDB.
     """
     li = load(spark, sf, "lineitem")
-    cents = F.expr("CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)")
-    ref = li.where(F.col("l_shipdate") < F.lit(DRIFT_PIVOT)).select(
+    cents = F.expr(PSI_CENTS)
+    ref = li.where(F.col("l_shipdate") < F.lit(PSI_PIVOT)).select(
         cents.alias("cents")
     )
     # the static side of a stream-static join is re-evaluated per
@@ -474,8 +448,8 @@ def q_streaming_drift(spark, sf):
         F.count(F.lit(1)).alias("ref_tot"),
     ).localCheckpoint()
     clamped = F.expr(
-        f"least({DRIFT_BUCKETS - 1}, "
-        f"((least(maxc, greatest(minc, cents)) - minc) * {DRIFT_BUCKETS}) "
+        f"least({PSI_BUCKETS - 1}, "
+        f"((least(maxc, greatest(minc, cents)) - minc) * {PSI_BUCKETS}) "
         f"div (maxc - minc + 1))"
     )
     ref_counts = (
@@ -488,7 +462,7 @@ def q_streaming_drift(spark, sf):
 
     stream = _stream_reader(spark, sf, "lineitem")
     cur_stream = (
-        stream.where(F.col("l_shipdate") >= F.lit(DRIFT_PIVOT))
+        stream.where(F.col("l_shipdate") >= F.lit(PSI_PIVOT))
         .select(cents.alias("cents"), F.lit(1).alias("one"))
     )
 
@@ -500,89 +474,30 @@ def q_streaming_drift(spark, sf):
         )
 
     cur = _run_to_memory(cur_stream, agg)
-    cur_tot = cur.agg(F.sum("cur_cnt").alias("ct"))
-    spine = spark.range(DRIFT_BUCKETS).select(F.col("id").alias("bucket"))
-    grid = (
-        spine.join(F.broadcast(ref_counts), "bucket", "left")
-        .join(F.broadcast(cur), "bucket", "left")
-        .crossJoin(F.broadcast(stats.select("ref_tot")))
-        .crossJoin(F.broadcast(cur_tot))
-        .select(
-            "bucket",
-            F.coalesce("ref_cnt", F.lit(0)).alias("ref_cnt"),
-            F.coalesce("cur_cnt", F.lit(0)).alias("cur_cnt"),
-            F.col("ref_tot").alias("rt"),
-            F.coalesce("ct", F.lit(0)).alias("ct"),
-        )
+    totals = stats.select(F.col("ref_tot").alias("rt")).crossJoin(
+        cur.agg(F.coalesce(F.sum("cur_cnt"), F.lit(0)).alias("ct"))
     )
-    p = (F.col("ref_cnt") + 1).cast("double") / (
-        F.col("rt") + DRIFT_BUCKETS
-    ).cast("double")
-    q = (F.col("cur_cnt") + 1).cast("double") / (
-        F.col("ct") + DRIFT_BUCKETS
-    ).cast("double")
-    return grid.select(
-        "bucket",
-        "ref_cnt",
-        "cur_cnt",
-        p.cast("decimal(30,6)").cast("double").alias("ref_share"),
-        q.cast("decimal(30,6)").cast("double").alias("cur_share"),
-        ((p - q) * F.log(p / q))
-        .cast("decimal(30,6)")
-        .cast("double")
-        .alias("psi_term"),
-    ).orderBy("bucket")
+    return psi_terms(spark, totals, ref_counts, cur)
 
 
-# THE shared drift policy: the streaming monitor and the batch
-# drift_psi audit the same pivot/bucket grid by construction
-from data_validator_spark.queries.quality_ops import (  # noqa: E402
-    PSI_BUCKETS as DRIFT_BUCKETS,
-    PSI_PIVOT as DRIFT_PIVOT,
-)
-
+# drift_psi's oracle with the stream's bucketing: bounds from the
+# reference rows only, every value clamped into them.
 SQL_STREAMING_DRIFT = f"""
-WITH ref AS (
-  SELECT CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS cents
-  FROM lineitem WHERE l_shipdate < TIMESTAMP '{DRIFT_PIVOT} 00:00:00'),
+WITH {SQL_DRIFT_PSI_BASE},
 stats AS (
-  SELECT MIN(cents) AS minc, MAX(cents) AS maxc, COUNT(*) AS ref_tot FROM ref),
-ref_counts AS (
-  SELECT LEAST({DRIFT_BUCKETS - 1},
-               ((LEAST(maxc, GREATEST(minc, cents)) - minc) * {DRIFT_BUCKETS})
+  SELECT MIN(cents) FILTER (WHERE is_ref) AS minc,
+         MAX(cents) FILTER (WHERE is_ref) AS maxc,
+         CAST(SUM(CASE WHEN is_ref THEN 1 ELSE 0 END) AS BIGINT) AS ref_tot,
+         CAST(SUM(CASE WHEN is_ref = false THEN 1 ELSE 0 END) AS BIGINT) AS cur_tot
+  FROM base),
+counts AS (
+  SELECT LEAST({PSI_BUCKETS - 1},
+               ((LEAST(maxc, GREATEST(minc, cents)) - minc) * {PSI_BUCKETS})
                // (maxc - minc + 1)) AS bucket,
-         COUNT(*) AS ref_cnt
-  FROM ref, stats GROUP BY 1),
-cur AS (
-  SELECT CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS cents
-  FROM lineitem WHERE l_shipdate >= TIMESTAMP '{DRIFT_PIVOT} 00:00:00'),
-cur_counts AS (
-  SELECT LEAST({DRIFT_BUCKETS - 1},
-               ((LEAST(maxc, GREATEST(minc, cents)) - minc) * {DRIFT_BUCKETS})
-               // (maxc - minc + 1)) AS bucket,
-         COUNT(*) AS cur_cnt
-  FROM cur, stats GROUP BY 1),
-ct AS (SELECT COUNT(*) AS ct FROM cur),
-spine AS (SELECT unnest(range(0, {DRIFT_BUCKETS})) AS bucket),
-grid AS (
-  SELECT s.bucket,
-         COALESCE(r.ref_cnt, 0) AS ref_cnt,
-         COALESCE(c.cur_cnt, 0) AS cur_cnt,
-         stats.ref_tot AS rt, ct.ct AS ct
-  FROM spine s
-  LEFT JOIN ref_counts r ON s.bucket = r.bucket
-  LEFT JOIN cur_counts c ON s.bucket = c.bucket, stats, ct),
-shares AS (
-  SELECT bucket, ref_cnt, cur_cnt,
-         CAST(ref_cnt + 1 AS DOUBLE) / (rt + {DRIFT_BUCKETS}) AS p,
-         CAST(cur_cnt + 1 AS DOUBLE) / (ct + {DRIFT_BUCKETS}) AS q
-  FROM grid)
-SELECT bucket, ref_cnt, cur_cnt,
-       CAST(CAST(p AS DECIMAL(30,6)) AS DOUBLE) AS ref_share,
-       CAST(CAST(q AS DECIMAL(30,6)) AS DOUBLE) AS cur_share,
-       CAST(CAST((p - q) * ln(p / q) AS DECIMAL(30,6)) AS DOUBLE) AS psi_term
-FROM shares ORDER BY bucket
-"""
+         CAST(SUM(CASE WHEN is_ref THEN 1 ELSE 0 END) AS BIGINT) AS ref_cnt,
+         CAST(SUM(CASE WHEN is_ref = false THEN 1 ELSE 0 END) AS BIGINT) AS cur_cnt
+  FROM base, stats GROUP BY 1),
+{SQL_PSI_TERMS}"""
 
 
 # -- streaming_seasonality ----------------------------------------------------
@@ -599,24 +514,7 @@ def q_streaming_seasonality(spark, sf):
     shares), proving the streaming plan computes the identical
     census; micro-batch structure itself is pinned in pytest."""
     ev = _stream_reader(spark, sf, "events")
-
-    def agg(df):
-        return (
-            df.select(
-                (F.dayofweek("ts") - 1).alias("dow"),
-                F.hour("ts").alias("hour"),
-                "value",
-            )
-            .groupBy("dow", "hour")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                dsum(F.col("value"), "value_sum"),
-            )
-        )
-
-    from data_validator_spark.queries.mining_ops import seasonality_shares
-
-    return seasonality_shares(_run_to_memory(ev, agg, output_mode="complete"))
+    return seasonality_shares(_run_to_memory(ev, seasonality_cells))
 
 
 # -- streaming_incremental_dedup ---------------------------------------------
@@ -642,14 +540,6 @@ def q_streaming_incremental_dedup(spark, sf):
     Determinism: pure integer counts over exact md5-equality — the
     lowest-drift-risk class in the registry; micro-batch boundaries
     can't move a count because the census is batch-additive."""
-    import os
-
-    from data_validator_spark.queries.dedup import (
-        _incremental_index,
-        _incremental_pivot,
-    )
-    from data_validator_spark.functions.text import doc_fingerprint
-
     index, _bits = _incremental_index(spark, sf)
     pivot = _incremental_pivot(spark, sf)
     marked = index.withColumn("in_corpus", F.lit(1))
@@ -671,16 +561,8 @@ def q_streaming_incremental_dedup(spark, sf):
     return _run_to_memory(stream, agg, output_mode="complete")
 
 
-def _sql_streaming_incremental() -> str:
-    from data_validator_spark.queries.dedup import DELTA_FRAC, _SQL_NORM
-
-    return f"""
-WITH pv AS (SELECT CAST(floor((MAX(doc_id) + 1) * {DELTA_FRAC}) AS BIGINT) AS p
-            FROM documents),
-corpus AS (SELECT DISTINCT md5({_SQL_NORM}) AS fingerprint
-           FROM documents, pv WHERE doc_id < p),
-delta AS (SELECT doc_id, md5({_SQL_NORM}) AS fingerprint
-          FROM documents, pv WHERE doc_id >= p)
+SQL_STREAMING_INCREMENTAL = f"""
+WITH {SQL_INCREMENTAL_SPLIT}
 SELECT count(*) AS n_delta,
        CAST(COALESCE(SUM(CASE WHEN c.fingerprint IS NOT NULL THEN 1 END), 0)
             AS BIGINT) AS n_dup_corpus,
@@ -705,12 +587,11 @@ QUERIES = {
 ORACLES = {
     "streaming_validation": SQL_STREAMING_VALIDATION,
     "streaming_drift": SQL_STREAMING_DRIFT,
-    "streaming_windowed": SQL_STREAMING_WINDOWED,
+    "streaming_windowed": SQL_EVENTS_WINDOWED,
     "streaming_sessionized": SQL_STREAMING_SESSIONIZED,
     "streaming_dedup": SQL_STREAMING_DEDUP,
     "streaming_enriched": SQL_STREAMING_ENRICHED,
     "streaming_join": SQL_STREAMING_JOIN,
-    # same census as the batch twin — identical oracle
     "streaming_seasonality": SQL_EVENT_SEASONALITY,
-    "streaming_incremental_dedup": _sql_streaming_incremental(),
+    "streaming_incremental_dedup": SQL_STREAMING_INCREMENTAL,
 }

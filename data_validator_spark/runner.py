@@ -23,7 +23,6 @@ from __future__ import annotations
 from typing import Any, Optional
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from data_validator_spark.events import (
     QuickCheckError,
@@ -40,6 +39,7 @@ from data_validator_spark.validators.base import (
     CostlyCheck,
     RowBasedCheck,
     calc_error_count_threshold,
+    run_cheap_checks,
 )
 from data_validator_spark.validators.colstats import ColStats
 
@@ -104,21 +104,11 @@ class ValidatorTableRunner:
         if not cheap:
             return False
 
-        aggs = [F.count(F.lit(1)).alias("dv_count")]
-        for i, chk in enumerate(cheap):
-            aggs.extend(chk.agg_exprs(df, f"qc{i}"))
-
         timer = ValidatorTimer(f"{self.source.label}: quickCheck timer")
         with timer:
-            row = df.agg(*aggs).collect()[0].asDict()
+            count, failed = run_cheap_checks(df, cheap)
         self.add_event(timer)
-
-        count = int(row["dv_count"])
         self.add_event(ValidatorCounter(f"RowCount for {self.source.label}", count))
-
-        failed = False
-        for chk in cheap:
-            failed = chk.evaluate(row, count) or failed
 
         # colstats histogram second pass — all colstats checks share ONE scan
         second = [c for c in cheap if isinstance(c, ColStats) and c.needs_second_pass()]

@@ -1,16 +1,14 @@
-"""Structured Streaming validation + windowed aggregation.
+"""Structured Streaming validation.
 
 Parity intent (SURVEY §2 streaming rows): the reference is batch-only;
 this extends the same check semantics to streams the Spark-first way —
-``readStream`` → ``foreachBatch`` running the SAME fused single-pass
-aggregate per micro-batch (check expressions are reused verbatim from
-the batch validators), and an event-time tumbling-window aggregation
-with a watermark for late data.
+``readStream`` → ``foreachBatch`` running the batch runner's fused
+single-pass aggregate (``validators.base.run_cheap_checks``) per
+micro-batch.
 
 Scale notes: foreachBatch validation inherits the batch design's
-one-scan-per-table property per micro-batch; the windowed aggregation
-is a standard streaming state-store aggregation whose watermark bounds
-state size — both are the shapes that survive a 1000-executor cluster.
+one-scan-per-table property per micro-batch — the shape that survives
+a 1000-executor cluster.
 """
 
 from __future__ import annotations
@@ -18,9 +16,8 @@ from __future__ import annotations
 from typing import Any, Callable, Optional, Sequence
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from data_validator_spark.validators.base import CheapCheck, Check
+from data_validator_spark.validators.base import CheapCheck, Check, run_cheap_checks
 
 
 class StreamingValidator:
@@ -43,15 +40,7 @@ class StreamingValidator:
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> dict[str, Any]:
         checks = [c for c in self.check_factory() if isinstance(c, CheapCheck)]
-        aggs = [F.count(F.lit(1)).alias("dv_count")]
-        for i, chk in enumerate(checks):
-            aggs.extend(chk.agg_exprs(batch_df, f"qc{i}"))
-        row = batch_df.agg(*aggs).collect()[0].asDict()
-        count = int(row["dv_count"])
-
-        failed = False
-        for chk in checks:
-            failed = chk.evaluate(row, count) or failed
+        count, failed = run_cheap_checks(batch_df, checks)
         report = {
             "batchId": batch_id,
             "rowCount": count,
@@ -69,23 +58,3 @@ class StreamingValidator:
         if options:
             writer = writer.options(**options)
         return writer.start()
-
-
-def windowed_event_counts(
-    df: DataFrame,
-    ts_col: str = "ts",
-    window_duration: str = "1 minute",
-    watermark: str = "2 minutes",
-    group_cols: Sequence[str] = ("event_type",),
-) -> DataFrame:
-    """Tumbling-window event aggregation with late-data handling.
-
-    Works on both batch and streaming frames; on a stream the watermark
-    bounds state (rows later than `watermark` behind the max event time
-    are dropped) and lets append-mode sinks finalize windows.
-    """
-    src = df.withWatermark(ts_col, watermark) if df.isStreaming else df
-    return src.groupBy(F.window(ts_col, window_duration).alias("win"), *group_cols).agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum("value").alias("sum_value"),
-    )

@@ -154,6 +154,25 @@ class CheapCheck(Check):
         """Returns True when the check FAILED."""
 
 
+def run_cheap_checks(df: DataFrame, checks: Sequence[CheapCheck]) -> tuple[int, bool]:
+    """ONE scan for every cheap check: ``count(1)`` plus each check's
+    ``agg_exprs`` fused into a single aggregate, one collected row,
+    then each check's ``evaluate``. Returns (row count, any failed).
+
+    Parity: ValidatorTable.quickChecks (ValidatorTable.scala:100);
+    the batch runner and the per-micro-batch streaming validator both
+    run it."""
+    aggs = [F.count(F.lit(1)).alias("dv_count")]
+    for i, chk in enumerate(checks):
+        aggs.extend(chk.agg_exprs(df, f"qc{i}"))
+    row = df.agg(*aggs).collect()[0].asDict()
+    count = int(row["dv_count"])
+    failed = False
+    for chk in checks:
+        failed = chk.evaluate(row, count) or failed
+    return count, failed
+
+
 class RowBasedCheck(CheapCheck):
     """Checks counting failing rows, with threshold tolerance.
 

@@ -116,36 +116,30 @@ def test_profile_approx_counts_within_tolerance(approx):
         assert rel <= 0.05, (c, ap[c]["n_distinct"], ex[c]["n_distinct"])
 
 
-def test_ccnet_size_gate_defaults_to_histogram_above_threshold(spark):
+def test_ccnet_size_gate_defaults_to_histogram_above_threshold(spark, monkeypatch):
     """r9: WITHOUT the approx flag, a corpus above the size gate must
     take the histogram tertile path by default (no corpus-scale
     single-partition ntile window at 100 TB); below the gate the
     exact ntile spelling stays the oracle default."""
-    from data_validator_spark.queries.quality_ops import (
-        CCNET_EXACT_MAX_DOCS_CONF,
-        q_ccnet_buckets,
-    )
+    from data_validator_spark.queries import quality_ops
 
     spark.conf.unset(APPROX_PROFILE_CONF)
-    # gate below the test corpus size -> histogram path without the flag
-    spark.conf.set(CCNET_EXACT_MAX_DOCS_CONF, "10")
-    try:
-        gated = q_ccnet_buckets(spark, SF)
-        assert "ntile" not in _plan(gated)
-        ap = {r["bucket"]: r for r in gated.collect()}
-    finally:
-        spark.conf.unset(CCNET_EXACT_MAX_DOCS_CONF)
     # default gate (1M docs) -> exact ntile at every test SF
-    exact = q_ccnet_buckets(spark, SF)
+    exact = quality_ops.q_ccnet_buckets(spark, SF)
     assert "ntile" in _plan(exact)
     ex = {r["bucket"]: r for r in exact.collect()}
+    # gate below the test corpus size -> histogram path without the flag
+    monkeypatch.setattr(quality_ops, "CCNET_EXACT_MAX_DOCS", 10)
+    gated = quality_ops.q_ccnet_buckets(spark, SF)
+    assert "ntile" not in _plan(gated)
+    ap = {r["bucket"]: r for r in gated.collect()}
     assert set(ap) == set(ex) == {"head", "middle", "tail"}
     assert sum(r["n_docs"] for r in ap.values()) == sum(
         r["n_docs"] for r in ex.values()
     )
 
 
-def test_ccnet_histogram_arm_matches_gated_oracle(spark):
+def test_ccnet_histogram_arm_matches_gated_oracle(spark, monkeypatch):
     """r10 (ADVICE r9): the oracle SQL now mirrors the size gate — a
     corpus above CCNET_EXACT_MAX_DOCS must take the histogram-tertile
     arm on BOTH engines. Force the gate below the test corpus on both
@@ -155,15 +149,13 @@ def test_ccnet_histogram_arm_matches_gated_oracle(spark):
     from data_validator_spark.queries import quality_ops
 
     spark.conf.unset(APPROX_PROFILE_CONF)
-    spark.conf.set(quality_ops.CCNET_EXACT_MAX_DOCS_CONF, "10")
-    saved = quality_ops.CCNET_EXACT_MAX_DOCS_DEFAULT
-    quality_ops.CCNET_EXACT_MAX_DOCS_DEFAULT = 10
-    try:
-        sql = quality_ops._sql_ccnet()
-        got = [tuple(r) for r in quality_ops.q_ccnet_buckets(spark, SF).collect()]
-    finally:
-        quality_ops.CCNET_EXACT_MAX_DOCS_DEFAULT = saved
-        spark.conf.unset(quality_ops.CCNET_EXACT_MAX_DOCS_CONF)
+    default = quality_ops.CCNET_EXACT_MAX_DOCS
+    # the default-gate SQL keeps the exact arm live below the gate
+    default_sql = quality_ops._sql_ccnet()
+    assert f"<= {default}" in default_sql and f"> {default}" in default_sql
+    monkeypatch.setattr(quality_ops, "CCNET_EXACT_MAX_DOCS", 10)
+    sql = quality_ops._sql_ccnet()
+    got = [tuple(r) for r in quality_ops.q_ccnet_buckets(spark, SF).collect()]
     con = duckdb.connect()
     con.execute(
         "CREATE VIEW documents AS SELECT * "
@@ -172,9 +164,6 @@ def test_ccnet_histogram_arm_matches_gated_oracle(spark):
     want = [tuple(r) for r in con.execute(sql).fetchall()]
     con.close()
     assert got == want
-    # and the default-gate SQL keeps the exact arm live below the gate
-    default_sql = quality_ops._sql_ccnet()
-    assert f"<= {saved}" in default_sql and f"> {saved}" in default_sql
 
 
 def test_ccnet_buckets_approx_plan_and_values(approx):

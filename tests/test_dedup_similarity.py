@@ -152,11 +152,13 @@ def test_dedup_clusters_match_union_find(spark):
 
 
 def test_cc_star_matches_propagation_on_lsh_graph(spark):
-    """The large-star/small-star path (cc_algorithm=star) must emit
-    byte-identical clusters to the default propagation loop on the
-    real LSH candidate graph."""
+    """The large-star/small-star path must emit byte-identical
+    clusters to the registry operator (propagation on this shallow
+    graph) on the real LSH candidate graph."""
+    from data_validator_spark.operators.cc_star import connected_components
     from data_validator_spark.queries.dedup import (
-        CC_ALGORITHM_CONF,
+        _cluster_rollup,
+        _lsh_pairs_df,
         q_dedup_clusters,
     )
 
@@ -164,11 +166,8 @@ def test_cc_star_matches_propagation_on_lsh_graph(spark):
     # sorted(): the output carries no orderBy (cluster-count-sized
     # relation; the driver hash is order-insensitive)
     base = sorted(tuple(r) for r in q_dedup_clusters(spark, sf).collect())
-    spark.conf.set(CC_ALGORITHM_CONF, "star")
-    try:
-        star = sorted(tuple(r) for r in q_dedup_clusters(spark, sf).collect())
-    finally:
-        spark.conf.unset(CC_ALGORITHM_CONF)
+    labels = connected_components(_lsh_pairs_df(spark, sf))
+    star = sorted(tuple(r) for r in _cluster_rollup(labels).collect())
     assert star == base
 
 
@@ -351,10 +350,9 @@ def test_star_converges_in_log_rounds_on_deep_chain(spark):
 
 
 def test_cc_auto_escapes_to_star_on_deep_graph(spark, monkeypatch):
-    """r7: cc_algorithm=auto (the new default) on the REGISTRY operator
-    — a deep-diameter pair graph must blow the bounded propagation
-    budget, escape to the star rewrite, and still emit exactly the
-    clusters unbounded propagation computes."""
+    """On the REGISTRY operator, a deep-diameter pair graph must blow
+    the bounded propagation budget, escape to the star rewrite, and
+    still emit exactly the clusters unbounded propagation computes."""
     from data_validator_spark.queries import dedup as D
 
     # 80-node permuted chain: diameter 79 >> CC_AUTO_ROUNDS
@@ -367,7 +365,6 @@ def test_cc_auto_escapes_to_star_on_deep_graph(spark, monkeypatch):
     deep = spark.createDataFrame(chain, "doc_a long, doc_b long")
     monkeypatch.setattr(D, "_lsh_pairs_df", lambda *_: deep)
 
-    assert spark.conf.get(D.CC_ALGORITHM_CONF, "auto") == "auto"
     got = [tuple(r) for r in D.q_dedup_clusters(spark, "unused").collect()]
 
     # oracle: unbounded propagation on the same graph
@@ -379,18 +376,19 @@ def test_cc_auto_escapes_to_star_on_deep_graph(spark, monkeypatch):
 
 
 def test_cc_auto_matches_propagation_on_real_graph(spark):
-    """auto on the healthy LSH graph stays inside the propagation
-    budget and emits the same clusters as forced propagation."""
+    """The registry operator on the healthy LSH graph stays inside the
+    propagation budget and emits the same clusters as unbudgeted
+    propagation."""
     from data_validator_spark.queries.dedup import (
-        CC_ALGORITHM_CONF,
+        MAX_CC_ITERATIONS,
+        _cluster_rollup,
+        _lsh_pairs_df,
+        propagation_components,
         q_dedup_clusters,
     )
 
     sf = "/root/testdata/sf0.001"
-    auto = [tuple(r) for r in q_dedup_clusters(spark, sf).collect()]
-    spark.conf.set(CC_ALGORITHM_CONF, "propagation")
-    try:
-        prop = [tuple(r) for r in q_dedup_clusters(spark, sf).collect()]
-    finally:
-        spark.conf.unset(CC_ALGORITHM_CONF)
+    auto = sorted(tuple(r) for r in q_dedup_clusters(spark, sf).collect())
+    labels = propagation_components(_lsh_pairs_df(spark, sf), max_iter=MAX_CC_ITERATIONS)
+    prop = sorted(tuple(r) for r in _cluster_rollup(labels).collect())
     assert auto == prop

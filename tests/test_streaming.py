@@ -9,7 +9,8 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from data_validator_spark.streaming import StreamingValidator, windowed_event_counts
+from data_validator_spark.queries.analytics import hourly_event_counts
+from data_validator_spark.streaming import StreamingValidator
 from data_validator_spark.validators.row_based import NegativeCheck, NullCheck
 
 SCHEMA = "id int, v double, s string"
@@ -52,22 +53,27 @@ def test_streaming_validation_per_micro_batch(spark, tmp_path):
 
 
 def test_streaming_windowed_counts_with_watermark(spark, tmp_path):
+    """The events_windowed kernel on a stream: 1-hour windows under a
+    watermark. The same kernel on a batch frame adds no watermark and
+    gives the same rows."""
     src = str(tmp_path / "ev_src")
     ckpt = str(tmp_path / "ev_ckpt")
     rows = [
         ("2024-01-01 00:00:10", "click", 1.0),
-        ("2024-01-01 00:00:50", "click", 2.0),
-        ("2024-01-01 00:01:10", "view", 3.0),
+        ("2024-01-01 00:59:50", "click", 2.0),
+        ("2024-01-01 01:00:10", "view", 3.0),
     ]
     df = spark.createDataFrame(rows, "ts_s string, event_type string, value double").select(
         F.col("ts_s").cast("timestamp").alias("ts"), "event_type", "value"
     )
     df.coalesce(1).write.parquet(src)
 
+    def has_watermark(frame):
+        return "EventTimeWatermark" in frame._jdf.queryExecution().analyzed().toString()
+
     stream = spark.readStream.schema("ts timestamp, event_type string, value double").parquet(src)
-    agg = windowed_event_counts(stream, window_duration="1 minute", watermark="2 minutes")
-    # the watermark must be present in the streaming plan
-    assert "eventTime" in agg._jdf.queryExecution().analyzed().toString() or True
+    agg = hourly_event_counts(stream)
+    assert has_watermark(agg)
     q = (
         agg.writeStream.format("memory")
         .queryName("win_test")
@@ -78,25 +84,21 @@ def test_streaming_windowed_counts_with_watermark(spark, tmp_path):
     try:
         q.processAllAvailable()
         out = {
-            (r["win"]["start"].isoformat(), r["event_type"]): (r["n_events"], r["sum_value"])
+            (r["window_start"], r["event_type"]): (r["n_events"], float(r["sum_value"]))
             for r in spark.table("win_test").collect()
         }
-        assert out[("2024-01-01T00:00:00", "click")] == (2, 3.0)
-        assert out[("2024-01-01T00:01:00", "view")] == (1, 3.0)
     finally:
         q.stop()
-
-
-def test_windowed_event_counts_batch_analog(spark):
-    rows = [
-        ("2024-01-01 00:00:10", "click", 1.0),
-        ("2024-01-01 00:00:20", "click", 1.5),
-    ]
-    df = spark.createDataFrame(rows, "ts_s string, event_type string, value double").select(
-        F.col("ts_s").cast("timestamp").alias("ts"), "event_type", "value"
-    )
-    out = windowed_event_counts(df).collect()
-    assert len(out) == 1 and out[0]["n_events"] == 2
+    assert out == {
+        ("2024-01-01 00:00:00", "click"): (2, 3.0),
+        ("2024-01-01 01:00:00", "view"): (1, 3.0),
+    }
+    batch = hourly_event_counts(df)
+    assert not has_watermark(batch)
+    assert {
+        (r["window_start"], r["event_type"]): (r["n_events"], float(r["sum_value"]))
+        for r in batch.collect()
+    } == out
 
 
 def test_multimodal_decode_plumbing(spark, monkeypatch, tmp_path):
@@ -291,19 +293,16 @@ def test_streaming_drift_matches_batch_psi_accounting(spark):
     exactly once in the reference-derived buckets, and its ref side
     must equal the batch-computed reference histogram."""
     from data_validator_spark.queries import load
-    from data_validator_spark.queries.streaming_queries import (
-        DRIFT_BUCKETS,
-        DRIFT_PIVOT,
-        q_streaming_drift,
-    )
+    from data_validator_spark.queries.quality_ops import PSI_BUCKETS, PSI_PIVOT
+    from data_validator_spark.queries.streaming_queries import q_streaming_drift
     from pyspark.sql import functions as F
 
     sf = "/root/testdata/sf0.001"
     rows = q_streaming_drift(spark, sf).collect()
-    assert len(rows) == DRIFT_BUCKETS
+    assert len(rows) == PSI_BUCKETS
     li = load(spark, sf, "lineitem")
-    n_ref = li.where(F.col("l_shipdate") < F.lit(DRIFT_PIVOT)).count()
-    n_cur = li.where(F.col("l_shipdate") >= F.lit(DRIFT_PIVOT)).count()
+    n_ref = li.where(F.col("l_shipdate") < F.lit(PSI_PIVOT)).count()
+    n_cur = li.where(F.col("l_shipdate") >= F.lit(PSI_PIVOT)).count()
     assert sum(r["ref_cnt"] for r in rows) == n_ref
     assert sum(r["cur_cnt"] for r in rows) == n_cur
     # smoothed shares each sum to 1; PSI terms are non-negative
@@ -323,3 +322,40 @@ def test_streaming_seasonality_matches_batch_twin(spark):
     batch = q_event_seasonality(spark, sf).collect()
     stream = q_streaming_seasonality(spark, sf).collect()
     assert [tuple(r) for r in stream] == [tuple(r) for r in batch]
+
+
+def test_streaming_sessionized_leaves_no_sink_table(spark):
+    """A bounded streaming run releases its memory sink: two runs add
+    no dv_-prefixed table to the catalog."""
+    from data_validator_spark.queries.streaming_queries import q_streaming_sessionized
+
+    def dv_tables():
+        return {t.name for t in spark.catalog.listTables() if t.name.startswith("dv_")}
+
+    sf = "/root/testdata/sf0.001"
+    before = dv_tables()
+    for _ in range(2):
+        q_streaming_sessionized(spark, sf).collect()
+    assert dv_tables() - before == set()
+
+
+def test_streaming_oracles_are_their_batch_twins():
+    """Each streaming twin checks against its batch twin's oracle, or
+    composes its oracle from the batch oracle's fragments."""
+    from data_validator_spark.queries import analytics, dedup, mining_ops, quality_ops
+    from data_validator_spark.queries.streaming_queries import ORACLES
+
+    assert ORACLES["streaming_windowed"] is analytics.SQL_EVENTS_WINDOWED
+    assert ORACLES["streaming_seasonality"] is mining_ops.SQL_EVENT_SEASONALITY
+    pairs = [
+        ("streaming_sessionized", analytics.SQL_EVENTS_SESSIONIZED, analytics.SQL_SESSION_SEQ_CTES),
+        ("streaming_drift", quality_ops.SQL_DRIFT_PSI, quality_ops.SQL_PSI_TERMS),
+        ("streaming_drift", quality_ops.SQL_DRIFT_PSI, quality_ops.SQL_DRIFT_PSI_BASE),
+        (
+            "streaming_incremental_dedup",
+            dedup._sql_dedup_incremental(),
+            dedup.SQL_INCREMENTAL_SPLIT,
+        ),
+    ]
+    for name, batch_sql, fragment in pairs:
+        assert fragment in batch_sql and fragment in ORACLES[name], name
