@@ -261,11 +261,6 @@ def main() -> int:
     # the canonical name can be overwritten freely without losing any
     # run's record.
     out["run_conditions"] = _run_conditions(cpus, sf)
-    if os.environ.get("SPARK_GRAFT_CC_BENCH", "1") != "0":
-        try:
-            out["cc_chain"] = bench_cc_chain(spark)
-        except Exception as e:
-            print(f"bench error in cc_chain: {e}", file=sys.stderr)
 
     # the full per-query detail goes to a file; the stdout line stays
     # under a 2000-char tail-capture window (compact_line)
@@ -296,7 +291,6 @@ COMPACT_KEYS = (
     "runs_per_query",
     "cold_total_sec",
     "run_conditions",
-    "cc_chain",
 )
 
 
@@ -337,58 +331,6 @@ def compact_line(out: dict, detail_file: str) -> str:
     if not line:  # degenerate: even one entry overflows — totals only
         line = json.dumps({**base, "queries": {}, "queries_omitted": len(results)})
     return line
-
-
-CC_CHAIN_N = 32
-
-
-def bench_cc_chain(spark) -> dict:
-    """Deep-chain connected-components micro-benchmark backing
-    SCALE.md's O(log n) star claim with measured numbers: a permuted
-    32-node chain (diameter 31) forces min-label propagation to its
-    O(diameter) worst case — 31 label rounds — while the alternating
-    large-star/small-star rewrite converges in O(log n) rounds. The
-    LSH dup graphs in the headline bench are shallow, so only an
-    adversarial fixture exposes this; at 100 TB a single deep
-    component would put the propagation loop hundreds of rounds deep.
-
-    Labels from both algorithms are asserted equal before reporting.
-    """
-    import time as _time
-
-    from data_validator_spark.operators.cc_star import connected_components
-    from data_validator_spark.queries.dedup import propagation_components
-
-    n = CC_CHAIN_N
-    # decreasing ids put the component min at the FAR end of the chain:
-    # min-label propagation must carry it across all n-1 hops — the
-    # true O(diameter) worst case
-    perm = [(n - i) * 1000003 for i in range(n)]
-    pairs = spark.createDataFrame(
-        [(perm[i], perm[i + 1]) for i in range(n - 1)], "doc_a long, doc_b long"
-    ).coalesce(4)
-    out: dict[str, float | int] = {}
-    results = {}
-    # 31 edges across 32 shuffle partitions is per-round scheduling
-    # noise, not measurement — size partitions to the data (restored
-    # after), the same rate-sizing rule as the streaming state stores
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        for name, fn in (
-            ("propagation", propagation_components),
-            ("star", connected_components),
-        ):
-            stats: dict = {}
-            t0 = _time.time()
-            labels = fn(pairs, max_iter=4 * n, stats=stats)
-            results[name] = {(r["node"], r["label"]) for r in labels.collect()}
-            out[f"{name}_sec"] = round(_time.time() - t0, 3)
-            out[f"{name}_rounds"] = stats["rounds"]
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    assert results["propagation"] == results["star"], "CC algorithms disagree"
-    return out
 
 
 if __name__ == "__main__":

@@ -1343,20 +1343,14 @@ def q_conversion_lag(spark, sf):
     Scale shape: signups collapse to one min-timestamp row per user
     (map-side combine); that per-user relation joins the purchase
     stream key-to-key and the lag distribution collapses in a single
-    fused aggregate. Exact percentiles (the col_quantiles parity
-    rule) are the oracle-checkable default; with
-    ``spark.data_validator.approx_profile=true`` the same aggregate
-    runs percentile_approx — bounded memory instead of a full sort
-    buffer of every lag value (tests/test_approx_profile.py asserts
-    the swap reaches the physical plan).
+    fused aggregate. Exact `percentile` (the col_quantiles parity
+    rule) buffers every lag value in its final merge: one value per
+    converted user, not per event.
 
-    Determinism (exact mode): lags are exact integer microsecond
+    Determinism: lags are exact integer microsecond
     differences converted to whole seconds with integer div;
     percentile interpolation is identical in both engines.
     """
-    from data_validator_spark.queries.validator_queries import _approx_enabled
-
-    pctl = "percentile_approx" if _approx_enabled(spark) else "percentile"
     ev = load_events_by_user(spark, sf)
     signups = (
         ev.where(F.col("event_type") == "signup")
@@ -1381,8 +1375,8 @@ def q_conversion_lag(spark, sf):
     lags = first_purchase.select(lag_s.alias("lag_s"))
     stats = lags.agg(
         F.count(F.lit(1)).alias("n_converted"),
-        F.expr(f"{pctl}(lag_s, 0.5D)").alias("p50"),
-        F.expr(f"{pctl}(lag_s, 0.9D)").alias("p90"),
+        F.expr("percentile(lag_s, 0.5D)").alias("p50"),
+        F.expr("percentile(lag_s, 0.9D)").alias("p90"),
     )
     n_signup = signups.agg(F.count(F.lit(1)).alias("n_signup_users"))
     return (

@@ -160,7 +160,7 @@ def _build_graph(spark, sf):
         .repartition(nparts, F.col("dst"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    edges_deg.count()  # materialize once, at cache-build (prime) time
+    edges_deg.count()  # materialize once, when the cache entry is built
     n = deg.count()  # node count — ONE scalar, served from the persisted deg
     deg.unpersist()
     pairs.unpersist()

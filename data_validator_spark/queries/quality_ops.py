@@ -31,7 +31,6 @@ from data_validator_spark.queries import (
     load,
     load_documents_by_id,
     row_count,
-    spread,
 )
 from data_validator_spark.queries.pipeline_ops import _hash60, _sql_hash60
 from data_validator_spark.queries.textops import (
@@ -886,14 +885,13 @@ ORDER BY g.doc_id
 
 # -- ccnet_buckets ---------------------------------------------------------
 CCNET_TILES = 3  # head / middle / tail
-# approx-path binned score relation, shared across repeat executions
+# histogram-path binned score relation, shared across repeat executions
 _CCNET_BINNED_CACHE = SessionCache()
 # Size gate for the exact (global-ntile) path: above this many
-# documents the histogram tertile path is the DEFAULT (r8 verdict
-# item 3 — a user who forgets approx_profile must not get a
-# corpus-scale single-partition window at 100 TB). It keeps every
-# test SF (≤ 50k docs) on the oracle-exact ntile spelling, and the
-# oracle mirrors the same constant.
+# documents the histogram tertile path runs instead (r8 verdict item
+# 3 — no corpus-scale single-partition window at 100 TB). It keeps
+# every test SF (≤ 50k docs) on the oracle-exact ntile spelling, and
+# the oracle mirrors the same constant.
 CCNET_EXACT_MAX_DOCS = 1_000_000
 
 
@@ -907,10 +905,9 @@ def q_ccnet_buckets(spark, sf):
 
     Scale shape: the rank runs over the PER-DOC score relation (one
     row per doc, after the LM scorer's map-side collapses). ntile is
-    rank-exact and the oracle-checkable default BELOW the size gate;
-    above CCNET_EXACT_MAX_DOCS (1M docs) or
-    with ``spark.data_validator.approx_profile=true`` the tertile
-    boundaries come instead from a SCORE HISTOGRAM — the
+    rank-exact and runs BELOW the size gate; above
+    CCNET_EXACT_MAX_DOCS (1M docs) the tertile boundaries come
+    instead from a SCORE HISTOGRAM — the
     `quantile_shard` method (corpus_ops.py): avg_logp is binned to
     1e-4 resolution (distinct bins bounded by the trigram-logp DOMAIN,
     ≤ ~|range|·10^4 rows, corpus-size-independent), the cumulative
@@ -918,16 +915,15 @@ def q_ccnet_buckets(spark, sf):
     (3·cum_before) div n_total + 1 is integer-exact, and assignment
     joins back by broadcast. No corpus-scale single-partition window
     anywhere on the histogram path (tests/test_approx_profile.py
-    asserts ntile leaves the plan — both via the flag and via the
-    size gate). Output contract identical; docs sharing a 1e-4 bin
-    land in one tile, so bucket sizes can differ from exact ntile by
-    at most one bin's population.
+    lowers the gate and asserts ntile leaves the plan). Output
+    contract identical; docs sharing a 1e-4 bin land in one tile, so
+    bucket sizes can differ from exact ntile by at most one bin's
+    population.
 
-    The size gate (r9) makes the scale-safe path the DEFAULT at
-    corpus scale: a user who forgets the flag no longer gets a
-    single-partition window over 100 TB of scores; the flag still
-    forces the histogram path outright. The gate's count probe is one cached column-pruned
-    count job (the similarity._derived_params pattern).
+    The size gate (r9) picks the path from the input size alone, so
+    no corpus-scale run gets a single-partition window over 100 TB of
+    scores. The gate's count probe is one cached column-pruned count
+    job (the similarity._derived_params pattern).
 
     Determinism (exact mode): ordering key is (avg_logp DESC, doc_id)
     — avg_logp is the same exact double in both engines (decimal sum /
@@ -938,10 +934,9 @@ def q_ccnet_buckets(spark, sf):
     from pyspark.sql import Window
 
     from data_validator_spark.queries.corpus_ops import q_trigram_lm_score
-    from data_validator_spark.queries.validator_queries import _approx_enabled
 
     scores = q_trigram_lm_score(spark, sf)
-    if _approx_enabled(spark) or row_count(spark, sf, "documents") > CCNET_EXACT_MAX_DOCS:
+    if row_count(spark, sf, "documents") > CCNET_EXACT_MAX_DOCS:
         # histogram-derived tertile boundaries: head = highest scores,
         # so the cumulative count runs over bins in DESCENDING order.
         # The binned score relation feeds TWO subtrees (the histogram
@@ -1016,9 +1011,7 @@ def _sql_ccnet() -> str:
     histogram-tertile path as Spark instead of hash-mismatching by
     construction (ADVICE r9). The two tiling arms are UNION ALL'd
     behind mutually-exclusive scalar predicates on the corpus count —
-    DuckDB evaluates both subtrees, which is fine at any gradable SF.
-    Caveat: grading with the approx_profile flag is unsupported, same
-    as every other conf."""
+    DuckDB evaluates both subtrees, which is fine at any gradable SF."""
     from data_validator_spark.queries.corpus_ops import SQL_TRIGRAM_LM
 
     gate = CCNET_EXACT_MAX_DOCS
@@ -1191,69 +1184,28 @@ def q_mad_outliers(spark, sf):
     masked by the outliers themselves. Reports the exact median, the
     MAD, and outlier counts at 1/2/3 MAD thresholds.
 
-    Scale shape: three sequential scan+aggregate passes (median →
-    MAD → threshold counts), each a single fused aggregate with the
-    prior scalar broadcast in — the col_quantiles pattern chained.
-    Exact `percentile` matches DuckDB `quantile_cont` bit-for-bit
-    (sorted linear interpolation) and is the oracle-checkable
-    default; setting ``spark.data_validator.approx_profile=true``
-    swaps BOTH percentile aggregates for percentile_approx (bounded-
-    memory KLL-style sketch, same plan shape/schema) — exact
-    percentile buffers and sorts the full column per pass, which a
-    10^12-row column cannot afford (tests/test_approx_profile.py
-    asserts the sketch lands in the physical plan).
+    Scale shape: three chained stages (median → MAD → threshold
+    counts) — the col_quantiles pattern chained. Both medians run the
+    bounded-memory exact selection of operators/exact_quantile.py:
+    bit-identical to DuckDB `quantile_cont` (sorted linear
+    interpolation) and never buffering the column. The deviation pass
+    reuses the median pass's count/min/max: |x - med| is bounded by
+    [0, max(mx - med, med - mn)], so only the histogram and selection
+    scans run for it. The final threshold counts are one plain
+    aggregate with the med/mad scalars inlined as literals — no
+    crossJoin broadcasts anywhere.
 
-    Determinism (exact mode): median/MAD are the identical doubles in
-    both engines; thresholds are products of exact doubles, so the
-    strict > comparisons agree bit-for-bit; emitted stats round
-    through decimal(30,6).
+    Determinism: median/MAD are the identical doubles in both
+    engines; thresholds are products of exact doubles, so the strict
+    > comparisons agree bit-for-bit; emitted stats round through
+    decimal(30,6).
     """
-    from data_validator_spark.queries.validator_queries import _approx_enabled
-
-    x = F.col(MAD_COLUMN)
-    if _approx_enabled(spark):
-        # one-pass-per-stage sketch chain: percentile_approx scalars
-        # broadcast into the following scan
-        li = spread(load(spark, sf, "lineitem"))
-        med = li.agg(F.expr(f"percentile_approx({MAD_COLUMN}, 0.5D)").alias("med"))
-        dev = li.crossJoin(F.broadcast(med)).select(
-            F.abs(x - F.col("med")).alias("ad"), F.col("med")
-        )
-        mad = dev.agg(
-            F.max("med").alias("med"), F.expr("percentile_approx(ad, 0.5D)").alias("mad")
-        )
-        counts = dev.select("ad").crossJoin(F.broadcast(mad.select("mad")))
-        aggs = [F.count(F.lit(1)).alias("n_rows")]
-        for k in MAD_KS:
-            aggs.append(
-                F.sum((F.col("ad") > k * F.col("mad")).cast("long")).alias(
-                    f"n_out_{int(k)}mad"
-                )
-            )
-        return (
-            counts.agg(*aggs)
-            .crossJoin(F.broadcast(mad))
-            .select(
-                F.lit(MAD_COLUMN).alias("column_name"),
-                "n_rows",
-                F.col("med").cast(DEC).cast("double").alias("median"),
-                F.col("mad").cast(DEC).cast("double").alias("mad"),
-                *[F.col(f"n_out_{int(k)}mad") for k in MAD_KS],
-            )
-        )
-    # exact mode: chained bounded-memory exact medians
-    # (operators/exact_quantile.py — bit-identical to quantile_cont,
-    # never buffers the column; see q_col_quantiles). The deviation
-    # pass reuses the median pass's count/min/max: |x - med| is
-    # bounded by [0, max(mx - med, med - mn)], so only the histogram
-    # and selection scans run for it. The final threshold counts are
-    # one plain aggregate with the med/mad scalars inlined as
-    # literals — no crossJoin broadcasts anywhere.
     from data_validator_spark.operators.exact_quantile import (
         QuantileSpec,
         exact_quantiles,
     )
 
+    x = F.col(MAD_COLUMN)
     li = load(spark, sf, "lineitem")
     r_med = exact_quantiles(li, [QuantileSpec("x", x, (0.5,))])["x"]
     med = r_med.values[0]

@@ -307,13 +307,13 @@ def q_corpus_train_filter(spark, sf):
     row-identical; at 100 TB the win is one regex-normalization pass
     per session instead of one per call. Same session-cache honesty
     contract as boilerplate_prefix (r18): keyed on applicationId,
-    built during the declared prime pass (quality_ensemble),
-    recomputed from parquet in every fresh invocation. A fused Arrow
-    kernel for quality+tokens was also built, proven bit-identical
-    and A/B'd (0.90s — the Python boundary round-trip offsets the
-    expression saving at this SF); the JVM expressions stay
-    (tests/test_text_functions.py pins their semantics against the
-    vectorized reference implementation)."""
+    built by whichever query first reads it in a session (its cold
+    run pays the build), recomputed from parquet in every fresh
+    invocation. A fused Arrow kernel for quality+tokens was also
+    built, proven bit-identical and A/B'd (0.90s — the Python
+    boundary round-trip offsets the expression saving at this SF);
+    the JVM expressions stay (tests/test_text_functions.py pins their
+    semantics against the vectorized reference implementation)."""
     from pyspark.sql import Window
 
     from data_validator_spark.queries.quality_ops import _ensemble_docs

@@ -1,10 +1,16 @@
 """SURVEY §2 validator rows 1-12 as oracle-checkable queries.
 
-Each query routes through the real check classes (col_test /
-agg_exprs) so CORRECTNESS exercises library code, not parallel
-reimplementations. Reference parity documented per check in
-data_validator_spark/validators/* (NullCheck.scala, RangeCheck.scala,
-ColumnBased.scala, UniqueCheck.scala, ColStats via stats/*.scala).
+null_check, negative_check, range_check, string_length_check,
+string_regex_check, column_max_check, combined_single_pass and
+detailed_errors route through the real check classes (col_test /
+agg_exprs), so the oracle exercises library code, not parallel
+reimplementations. row_count, column_sum_check, unique_check,
+col_stats and col_stats_histogram spell their aggregate directly,
+and col_quantiles and profile_table extend the reference's profiling
+surface with no check class behind them. Reference parity is
+documented per check in data_validator_spark/validators/*
+(NullCheck.scala, RangeCheck.scala, ColumnBased.scala,
+UniqueCheck.scala, ColStats via stats/*.scala).
 
 Scale notes: every aggregate here is a single fused scan (map-side
 partials, no groupBy shuffle) except unique_check (one shuffle on the
@@ -305,35 +311,20 @@ SQL_DETAILED_ERRORS = (
 QUANTILES = (0.25, 0.5, 0.75, 0.95)
 _QCOLS = ("l_quantity", "l_extendedprice", "l_discount")
 
-# Spark conf flag selecting the 100 TB scale path for the profiling
-# queries: percentile_approx / approx_count_distinct sketches instead
-# of exact sort / distinct-shuffle. Exact stays the default because it
-# is the oracle-checkable mode; flip this at scale where a bounded-
-# memory sketch is the only thing that survives a 10^12-row column.
-APPROX_PROFILE_CONF = "spark.data_validator.approx_profile"
-
-
-def _approx_enabled(spark) -> bool:
-    return spark.conf.get(APPROX_PROFILE_CONF, "false").lower() == "true"
-
 
 def q_col_quantiles(spark, sf):
     """Exact p25/p50/p75/p95 of three lineitem measures, one row per
     column.
 
-    Exact mode (the oracle default) runs the bounded multi-pass
-    histogram-refinement selection of operators/exact_quantile.py:
-    one fused count/min/max scan, one fused per-bucket histogram scan
-    (<= 3x2048 aggregated rows ever leave the executors), and one
-    bounded-window selection — bit-identical to DuckDB's
-    `quantile_cont` (same sorted-linear-interpolation definition,
-    verified in tests/test_exact_quantile.py) while holding only
-    bounded state at ANY scale, unlike Spark's `percentile` aggregate
-    which buffers the whole column into one final merge task (and is
-    ~3x slower here). Setting
-    ``spark.data_validator.approx_profile=true`` swaps in a single
-    `percentile_approx` scan (KLL-style bounded-memory sketch, same
-    output schema) when a one-pass answer is worth the approximation.
+    Runs the bounded multi-pass histogram-refinement selection of
+    operators/exact_quantile.py: one fused count/min/max scan, one
+    fused per-bucket histogram scan (<= 3x2048 aggregated rows ever
+    leave the executors), and one bounded-window selection —
+    bit-identical to DuckDB's `quantile_cont` (same
+    sorted-linear-interpolation definition, verified in
+    tests/test_exact_quantile.py) while holding only bounded state at
+    ANY scale, unlike Spark's `percentile` aggregate which buffers the
+    whole column into one final merge task (and is ~3x slower here).
 
     Quantile definition: Spark `percentile` / DuckDB `quantile_cont`
     (the reference's stats second pass —
@@ -341,41 +332,14 @@ def q_col_quantiles(spark, sf):
     plus a 10-bin histogram and has no quantile statistic; this
     operator extends that profiling surface, per ADVICE r8). The
     physical strategy is ours."""
-    df = load(spark, sf, "lineitem")
-    if _approx_enabled(spark):
-        qarr = "array(" + ", ".join(f"{q}D" for q in QUANTILES) + ")"
-        agg = df.agg(
-            *[
-                F.expr(f"CAST(percentile_approx({c}, {qarr}) AS array<double>)").alias(
-                    c
-                )
-                for c in _QCOLS
-            ]
-        )
-        per_col = F.array(
-            *[
-                F.struct(
-                    F.lit(c).alias("column_name"),
-                    F.col(c)[0].alias("p25"),
-                    F.col(c)[1].alias("p50"),
-                    F.col(c)[2].alias("p75"),
-                    F.col(c)[3].alias("p95"),
-                )
-                for c in _QCOLS
-            ]
-        )
-        return (
-            agg.select(F.explode(per_col).alias("s"))
-            .select("s.*")
-            .orderBy("column_name")
-        )
+    from pyspark.sql.types import DoubleType, StringType, StructField, StructType
+
     from data_validator_spark.operators.exact_quantile import (
         QuantileSpec,
         exact_quantiles,
     )
 
-    from pyspark.sql.types import DoubleType, StringType, StructField, StructType
-
+    df = load(spark, sf, "lineitem")
     res = exact_quantiles(
         df, [QuantileSpec(c, F.col(c), QUANTILES) for c in _QCOLS]
     )
@@ -383,7 +347,7 @@ def q_col_quantiles(spark, sf):
         (c, *res[c].values)
         for c in sorted(_QCOLS)
     ]
-    # column_name non-nullable to match the approx path's lit() field
+    # every row names its column, so column_name is non-nullable
     schema = StructType(
         [StructField("column_name", StringType(), False)]
         + [StructField(p, DoubleType(), True) for p in ("p25", "p50", "p75", "p95")]
@@ -413,22 +377,18 @@ def q_profile_table(spark, sf):
     The profiling shape data teams run before writing checks: the
     numbers here become the thresholds in the validation config.
 
-    Exact mode (the oracle default) fans the four columns out in-row
-    to ``(column_id, value)`` pairs and aggregates TWICE: the pair
-    relation collapses map-side to one row per distinct value
-    (carrying its multiplicity), and every census statistic — row
-    count as sum-of-multiplicities, null count from the NULL group's
+    The census fans the four columns out in-row to ``(column_id,
+    value)`` pairs and aggregates TWICE: the pair relation collapses
+    map-side to one row per distinct value (carrying its
+    multiplicity), and every census statistic — row count as
+    sum-of-multiplicities, null count from the NULL group's
     multiplicity, exact distinct as the collapsed group count, min and
     max — falls out of the collapsed relation. This replaces the
     countDistinct Expand rewrite (~5x row multiplication through a
     partial agg keyed on ALL distinct columns jointly) with a pair
     stream that collapses per column independently — measured
     1.06→0.77 s at sf0.1, and at any scale the shuffle carries one row
-    per distinct value per partition, never a row per input row.
-
-    At 100 TB set ``spark.data_validator.approx_profile=true`` to swap
-    in `approx_count_distinct` (HLL++ sketch): one true scan, a fixed
-    few-KB sketch per column, same output schema
+    per distinct value per partition, never a row per input row
     (tests/test_approx_profile.py asserts the Expand-free plan).
 
     r19: the scan rides the l_orderkey-bucketed copy (32-way parallel
@@ -439,37 +399,6 @@ def q_profile_table(spark, sf):
     from data_validator_spark.operators.bucketing import bucketed_fact
 
     df = bucketed_fact(spark, sf, "lineitem", "l_orderkey", verify="footer")
-    if _approx_enabled(spark):
-        aggs = []
-        for c in _PROFILE_COLS:
-            col = F.col(c)
-            aggs += [
-                F.count(F.lit(1)).alias(f"{c}__rows"),
-                F.sum(F.when(col.isNull(), 1).otherwise(0)).alias(f"{c}__nulls"),
-                # rsd=0.02: ~2% expected error, fixed few-KB HLL sketch
-                F.approx_count_distinct(col, 0.02).alias(f"{c}__distinct"),
-                F.min(col).alias(f"{c}__min"),
-                F.max(col).alias(f"{c}__max"),
-            ]
-        wide = df.agg(*aggs)
-        per_col = F.array(
-            *[
-                F.struct(
-                    F.lit(c).alias("column_name"),
-                    F.col(f"{c}__rows").alias("n_rows"),
-                    F.col(f"{c}__nulls").alias("n_nulls"),
-                    F.col(f"{c}__distinct").alias("n_distinct"),
-                    F.col(f"{c}__min").alias("min_val"),
-                    F.col(f"{c}__max").alias("max_val"),
-                )
-                for c in _PROFILE_COLS
-            ]
-        )
-        return (
-            wide.select(F.explode(per_col).alias("s"))
-            .select("s.*")
-            .orderBy("column_name")
-        )
     arms = [
         F.struct(F.lit(c).alias("column_name"), F.col(c).alias("v"))
         for c in _PROFILE_COLS

@@ -321,8 +321,9 @@ def test_embedding_dedup_caps_degenerate_buckets(spark, tmp_path):
 
 def test_star_converges_in_log_rounds_on_deep_chain(spark):
     """Pins the O(log n) star claim vs O(diameter) propagation with
-    measured round counts (the bench fixture in bench.py scales this
-    to n=32 and records wall-clock per algorithm)."""
+    measured round counts on a 12-node chain whose component min sits
+    at the far end; test_cc_auto_escapes_to_star_on_deep_graph runs
+    the registry operator on a diameter-79 permuted chain."""
     from data_validator_spark.operators.cc_star import connected_components
     from data_validator_spark.queries.dedup import propagation_components
 

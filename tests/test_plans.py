@@ -517,7 +517,7 @@ def test_r19_corpus_train_filter_rides_ensemble_docs(spark, registry):
     work left per call)."""
     from data_validator_spark.queries.quality_ops import _ensemble_docs
 
-    _ensemble_docs(spark, SF).count()  # prime, as the bench prime pass does
+    _ensemble_docs(spark, SF).count()  # build the session cache first
     plan = plan_of(spark, registry, "corpus_train_filter")
     assert "InMemoryTableScan" in plan
     head = plan.split("InMemoryTableScan", 1)[0]

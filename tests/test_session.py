@@ -96,3 +96,22 @@ def test_spark_fixture_runs_the_engine_confs(spark):
     fixture carries every ENGINE_CONFS value."""
     got = {k: spark.conf.get(k) for k in ENGINE_CONFS}
     assert got == ENGINE_CONFS
+
+
+def test_no_engine_switches():
+    """Repo-wide pin: no tracked .py under data_validator_spark/ names
+    a `spark.data_validator.*` conf. Each operator has one code path,
+    or picks its path from its input (the ccnet size gate), never from
+    a user-set switch."""
+    import subprocess
+
+    tracked = subprocess.run(
+        ["git", "-C", REPO, "ls-files", "data_validator_spark/*.py"],
+        capture_output=True, text=True, check=True,
+    ).stdout.split()
+    offenders = [
+        rel
+        for rel in tracked
+        if "spark.data_validator." in open(os.path.join(REPO, rel)).read()
+    ]
+    assert not offenders, f"engine switch conf read in: {offenders}"

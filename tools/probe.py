@@ -4,11 +4,10 @@ attribution from the local UI REST API (guide §1/§7).
 Usage:
     python tools/probe.py <sf_dir> <runs> <query> [<query> ...]
 
-Boots the bench's session (session.local_session),
-optionally primes the queries listed in $SPARK_GRAFT_PROBE_PRIME
-(comma-separated) untimed, then times each named query as best-of-N
-noop writes and prints, for the LAST run of each query, the stages that
-executed with their executorRunTime / shuffle bytes / task counts.
+Boots the bench's session (session.local_session), then times each
+named query as best-of-N noop writes and prints, for the LAST run of
+each query, the stages that executed with their executorRunTime /
+shuffle bytes / task counts.
 Pure measurement tooling — never touches query results.
 """
 
@@ -48,11 +47,6 @@ def main() -> int:
     from data_validator_spark.queries import build_registry
 
     queries, _ = build_registry()
-
-    prime = [p for p in os.environ.get("SPARK_GRAFT_PROBE_PRIME", "").split(",") if p]
-    for p in prime:
-        spark.sparkContext.setJobDescription(f"prime: {p}")
-        queries[p](spark, sf_dir).write.format("noop").mode("overwrite").save()
 
     for name in names:
         fn = queries[name]
