@@ -16,7 +16,7 @@ import sys
 from typing import Optional
 
 from data_validator_spark import report as report_mod
-from data_validator_spark.config import load_config
+from data_validator_spark.config import load_config, main as config_main
 from data_validator_spark.runner import run_config
 
 
@@ -58,13 +58,7 @@ def main(argv: Optional[list[str]] = None) -> int:
     logging.basicConfig(level=logging.DEBUG if args.verbose else logging.INFO)
 
     if args.checkConfig:
-        from data_validator_spark.config import check_config_file
-
-        errs = check_config_file(args.config)
-        for e in errs:
-            print(f"CONFIG ERROR: {e}", file=sys.stderr)
-        print(f"DATA_VALIDATOR_CONFIG={'INVALID' if errs else 'OK'}")
-        return 1 if errs else 0
+        return config_main([args.config])
 
     from data_validator_spark.session import build_session
 

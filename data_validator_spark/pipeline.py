@@ -51,11 +51,10 @@ from data_validator_spark.functions.text import (
     quality_score,
     token_count,
 )
-from data_validator_spark.queries import load
+from data_validator_spark.queries import _hash60, load
 from data_validator_spark.queries.pipeline_ops import (
     SAMPLE_BUCKETS,
     SAMPLE_SALT,
-    _hash60,
     scrub_expr,
 )
 from data_validator_spark.queries.textops import (

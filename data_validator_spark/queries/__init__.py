@@ -385,8 +385,7 @@ def sql_dsum(expr: str, alias: str) -> str:
 
 # The package-wide 60-bit hash convention (module docstring above):
 # first 15 md5 hex digits as a BIGINT. Defined here — the import root —
-# so any query module can use it without ordering constraints
-# (pipeline_ops re-exports both names for its existing importers).
+# so any query module can use it without ordering constraints.
 def _hash60(col):
     return F.conv(F.substring(F.md5(F.encode(col, "utf-8")), 1, 15), 16, 10).cast(
         "long"

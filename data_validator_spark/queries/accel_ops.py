@@ -21,8 +21,13 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from data_validator_spark.queries import DEC, load, load_documents_by_id
-from data_validator_spark.queries.pipeline_ops import _hash60, _sql_hash60
+from data_validator_spark.queries import (
+    DEC,
+    _hash60,
+    _sql_hash60,
+    load,
+    load_documents_by_id,
+)
 
 # -- bloom_filter_semijoin -------------------------------------------------
 BLOOM_M = 16384  # bits

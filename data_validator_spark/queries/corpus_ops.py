@@ -23,13 +23,14 @@ from pyspark.sql import functions as F
 from data_validator_spark.queries import (
     DEC,
     SessionCache,
+    _hash60,
+    _sql_hash60,
     load,
     load_documents_by_id,
     load_embeddings_by_id,
 )
-from data_validator_spark.queries.pipeline_ops import _hash60, _sql_hash60
 from data_validator_spark.functions.text import normalized_text, token_count
-from data_validator_spark.queries.textops import SQL_NORM
+from data_validator_spark.queries.textops import SQL_NORM, SQL_TOKENS
 
 
 # -- bm25_topk -------------------------------------------------------------
@@ -37,8 +38,6 @@ BM25_TERMS = ["spark", "query", "window", "stream"]
 BM25_K1 = 1.2
 BM25_B = 0.75
 BM25_TOPK = 20
-
-SQL_TOKENS = r"string_split_regex(trim(text), '[ \t\n\x0B\f\r]+')"
 
 
 def q_bm25_topk(spark, sf):
@@ -811,7 +810,6 @@ def _dsir_tagged(spark, sf):
 
 def _build_dsir_tagged(spark, sf):
     from data_validator_spark.queries.mining_ops import q_gopher_quality
-    from data_validator_spark.queries.pipeline_ops import _hash60
 
     df = load_documents_by_id(spark, sf)
     toks = df.select(
@@ -903,7 +901,6 @@ def q_dsir_importance(spark, sf):
 
 def _sql_dsir() -> str:
     from data_validator_spark.queries.mining_ops import SQL_GOPHER
-    from data_validator_spark.queries.pipeline_ops import _sql_hash60
 
     return f"""
 WITH t AS (

@@ -22,17 +22,16 @@ from pyspark.sql import functions as F
 from data_validator_spark.queries import (
     DEC,
     SessionCache,
+    _hash60,
+    _sql_hash60,
     load,
     load_documents_by_id,
     load_events_by_user,
     spread,
     sql_dsum,
 )
-from data_validator_spark.queries.pipeline_ops import _hash60, _sql_hash60
-from data_validator_spark.queries.textops import SQL_NORM
+from data_validator_spark.queries.textops import SQL_NORM, SQL_TOKENS
 from data_validator_spark.functions.text import normalized_text
-
-SQL_TOKENS = r"string_split_regex(trim(text), '[ \t\n\x0B\f\r]+')"
 
 
 # -- hll_distinct ----------------------------------------------------------

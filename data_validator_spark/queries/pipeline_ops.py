@@ -22,6 +22,8 @@ from pyspark.sql import functions as F
 from data_validator_spark.functions.text import token_count
 from data_validator_spark.queries import (
     DEC,
+    _hash60,
+    _sql_hash60,
     load,
     load_documents_by_id,
     load_embeddings_by_id,
@@ -33,13 +35,6 @@ from data_validator_spark.queries.textops import (
     TRAIN_CUT,
     VAL_CUT,
 )
-
-# 60-bit md5-prefix hash (engine-independent; see dedup.py for why not
-# xxhash64): Spark conv(substr(md5, 1, 15), 16, 10), DuckDB
-# CAST('0x' || substr(md5, 1, 15) AS BIGINT).
-# Re-exported for this module's existing importers; canonical
-# definitions live at the package root (queries/__init__).
-from data_validator_spark.queries import _hash60, _sql_hash60  # noqa: E402,F401
 
 
 # -- pii_scrub -------------------------------------------------------------

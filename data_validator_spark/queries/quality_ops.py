@@ -28,11 +28,12 @@ from pyspark.sql import functions as F
 from data_validator_spark.queries import (
     DEC,
     SessionCache,
+    _hash60,
+    _sql_hash60,
     load,
     load_documents_by_id,
     row_count,
 )
-from data_validator_spark.queries.pipeline_ops import _hash60, _sql_hash60
 from data_validator_spark.queries.textops import (
     SQL_SPLIT_BUCKET,
     TRAIN_CUT,

@@ -158,6 +158,9 @@ SQL_NORM = (
     "trim(regexp_replace(regexp_replace(lower(text), "
     "'[^a-z0-9_ \\t\\n]', '', 'g'), '[ \\t\\n]+', ' ', 'g'))"
 )
+# Tokens of `text`: split on runs of ASCII whitespace, the same class the
+# Spark side passes to F.split.
+SQL_TOKENS = r"string_split_regex(trim(text), '[ \t\n\x0B\f\r]+')"
 
 SQL_DOC_FINGERPRINT = f"""
 SELECT doc_id,

@@ -1,7 +1,8 @@
 """Table runner: executes all checks of a table with minimal scans.
 
 Parity: reference ValidatorTable.scala —
-  1. configCheck (schema-only, no data),
+  1. configCheck: opens the table once (a schema read, plus the
+     `condition` WHERE); every later phase reuses that DataFrame,
   2. quickChecks: ONE aggregation job fusing count(1) plus every
      cheap check's aggregate expressions (ValidatorTable.quickChecks),
   3. optional colstats second pass (histogram bins need pass-1
@@ -38,7 +39,6 @@ from data_validator_spark.validators.base import (
     Check,
     CostlyCheck,
     RowBasedCheck,
-    calc_error_count_threshold,
     run_cheap_checks,
 )
 from data_validator_spark.validators.colstats import ColStats
@@ -59,18 +59,27 @@ class ValidatorTableRunner:
         self.num_errors_to_report = num_errors_to_report
         self.detailed_errors = detailed_errors
         self.events: list[ValidatorEvent] = []
-        self.failed = False
+        self._df: Optional[DataFrame] = None
+
+    @property
+    def failed(self) -> bool:
+        return any(e.failed for e in self.events) or any(c.failed for c in self.checks)
 
     def add_event(self, ev: ValidatorEvent) -> None:
         self.events.append(ev)
-        self.failed = self.failed or ev.failed
+
+    def _open(self, spark: SparkSession) -> DataFrame:
+        """The table, opened on first use and shared by every phase."""
+        if self._df is None:
+            self._df = self.source.open(spark)
+        return self._df
 
     # -- phase 1: config ----------------------------------------------------
     def config_check(self, spark: SparkSession) -> bool:
         timer = ValidatorTimer(f"configCheck for {self.source.label}")
         with timer:
             try:
-                df = self.source.open(spark)
+                df = self._open(spark)
             except Exception as e:  # table missing / unreadable
                 self.add_event(ValidatorError(f"Failed to open table '{self.source.label}': {e}"))
                 return True
@@ -99,7 +108,7 @@ class ValidatorTableRunner:
 
     # -- phase 2+3: fused quick checks ---------------------------------------
     def quick_checks(self, spark: SparkSession) -> bool:
-        df = self.source.open(spark)
+        df = self._open(spark)
         cheap = [c for c in self.checks if isinstance(c, CheapCheck)]
         if not cheap:
             return False
@@ -169,7 +178,7 @@ class ValidatorTableRunner:
 
     # -- phase 5: costly checks ----------------------------------------------
     def costly_checks(self, spark: SparkSession) -> bool:
-        df = self.source.open(spark)
+        df = self._open(spark)
         failed = False
         for c in self.checks:
             if isinstance(c, CostlyCheck):
@@ -182,10 +191,10 @@ class ValidatorTableRunner:
             # emits parquetFile/orcFile/db+table/format, not a label)
             **self.source.json_identity(),
             "table": self.source.label,  # additive: readable label
-            "failed": self.failed or any(c.failed for c in self.checks),
+            "failed": self.failed,
             "keyColumns": self.source.key_columns,
             "condition": self.source.condition,
-            "checks": [c.to_result().to_dict() for c in self.checks],
+            "checks": [c.to_dict() for c in self.checks],
             "events": [e.to_dict() for e in self.events],
         }
 
@@ -205,15 +214,12 @@ def run_config(spark: SparkSession, config: "ValidatorConfig") -> dict[str, Any]
     for r in runners:
         config_failed = r.config_check(spark) or config_failed
 
-    failed = config_failed
     if not config_failed:
         for r in runners:
-            r.failed = r.quick_checks(spark) or r.failed
-            failed = r.failed or failed
+            r.quick_checks(spark)
         for r in runners:
-            r.failed = r.costly_checks(spark) or r.failed
-            failed = r.failed or failed
-    return report_mod.build_report(config, runners, failed, spark)
+            r.costly_checks(spark)
+    return report_mod.build_report(config, runners, any(r.failed for r in runners), spark)
 
 
 from data_validator_spark.config import ValidatorConfig  # noqa: E402  (cycle: config builds runners)

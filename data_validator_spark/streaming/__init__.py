@@ -13,10 +13,11 @@ a 1000-executor cluster.
 
 from __future__ import annotations
 
-from typing import Any, Callable, Optional, Sequence
+from typing import Any, Callable, Sequence
 
 from pyspark.sql import DataFrame
 
+from data_validator_spark.events import ValidatorError
 from data_validator_spark.validators.base import CheapCheck, Check, run_cheap_checks
 
 
@@ -25,17 +26,11 @@ class StreamingValidator:
 
     ``check_factory`` builds a FRESH list of checks per batch (checks
     accumulate events, so instances must not be shared across batches).
-    Per-batch reports accumulate in ``batches`` and are forwarded to
-    ``on_batch`` when given.
+    Per-batch reports accumulate in ``batches``.
     """
 
-    def __init__(
-        self,
-        check_factory: Callable[[], Sequence[Check]],
-        on_batch: Optional[Callable[[dict[str, Any]], None]] = None,
-    ):
+    def __init__(self, check_factory: Callable[[], Sequence[Check]]):
         self.check_factory = check_factory
-        self.on_batch = on_batch
         self.batches: list[dict[str, Any]] = []
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> dict[str, Any]:
@@ -45,15 +40,23 @@ class StreamingValidator:
             "batchId": batch_id,
             "rowCount": count,
             "failed": failed,
-            "checks": [c.to_result().to_dict() for c in checks],
+            "checks": [c.to_dict() for c in checks],
         }
         self.batches.append(report)
-        if self.on_batch:
-            self.on_batch(report)
         return report
 
     def start(self, stream_df: DataFrame, **options: Any):
-        """Attach to a streaming DataFrame and start the query."""
+        """Attach to a streaming DataFrame and start the query.
+
+        Every check's configCheck runs first, against the stream's
+        schema (no data is read), so a bad config raises ``ValueError``
+        here rather than inside the first micro-batch."""
+        checks = self.check_factory()
+        for c in checks:
+            c.config_check(stream_df)
+        errors = [e.message for c in checks for e in c.events if isinstance(e, ValidatorError)]
+        if errors:
+            raise ValueError("configCheck failed: " + "; ".join(errors))
         writer = stream_df.writeStream.foreachBatch(self.process_batch)
         if options:
             writer = writer.options(**options)

@@ -1,7 +1,6 @@
 from data_validator_spark.validators.base import (
     CheapCheck,
     Check,
-    CheckResult,
     CostlyCheck,
     RowBasedCheck,
     calc_error_count_threshold,
@@ -55,7 +54,6 @@ __all__ = [
     "CHECK_TYPES",
     "CheapCheck",
     "Check",
-    "CheckResult",
     "ColStats",
     "ColumnMaxCheck",
     "ColumnSumCheck",

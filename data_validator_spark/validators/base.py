@@ -88,22 +88,6 @@ def value_expr(value: Any) -> Column:
     return F.lit(value)
 
 
-class CheckResult:
-    """Outcome of one check on one table."""
-
-    def __init__(self, name: str, failed: bool, events: list[ValidatorEvent], extra: Optional[dict] = None):
-        self.name = name
-        self.failed = failed
-        self.events = events
-        self.extra = extra or {}
-
-    def to_dict(self) -> dict[str, Any]:
-        d: dict[str, Any] = {"type": self.name, "failed": self.failed}
-        d.update(self.extra)
-        d["events"] = [e.to_dict() for e in self.events]
-        return d
-
-
 class Check(ABC):
     """Base for every validator."""
 
@@ -129,8 +113,14 @@ class Check(ABC):
         return False
 
     # -- reporting ---------------------------------------------------------
-    def to_result(self) -> CheckResult:
-        return CheckResult(self.check_type, self.failed, self.events, self.report_fields())
+    def to_dict(self) -> dict[str, Any]:
+        """Report entry: type, failed, the report_fields(), then events."""
+        return {
+            "type": self.check_type,
+            "failed": self.failed,
+            **self.report_fields(),
+            "events": [e.to_dict() for e in self.events],
+        }
 
     def report_fields(self) -> dict[str, Any]:
         return {}

@@ -166,3 +166,43 @@ def test_condition_filters_rows(spark, tdf):
     src = DFSource(tdf, condition="v > 0")
     runner = ValidatorTableRunner(src, [NegativeCheck("v")])
     assert runner.quick_checks(spark) is False  # negatives filtered out
+
+
+class CountingSource(DFSource):
+    """DFSource that counts how often the runner opens it."""
+
+    def __init__(self, df, **kw):
+        super().__init__(df, **kw)
+        self.loads = 0
+
+    def load_df(self, spark):
+        self.loads += 1
+        return super().load_df(spark)
+
+
+def test_each_table_opens_once_per_run(spark, tdf):
+    """configCheck, quick checks (fused pass, colstats second pass,
+    detailed errors) and costly checks share ONE open of the table; the
+    table's failure follows its checks' events, whichever phase failed."""
+    src = CountingSource(tdf, key_columns=["k1", "k2"])
+    runner = ValidatorTableRunner(
+        src, [NegativeCheck("v"), ColStats("v"), UniqueCheck(["k1", "k2"])]
+    )
+    assert runner.config_check(spark) is False
+    assert runner.quick_checks(spark) is True
+    assert runner.costly_checks(spark) is True
+    assert any(isinstance(e, QuickCheckError) for e in runner.checks[0].events)
+    assert "histogram" in runner.checks[1].stats
+    assert src.loads == 1
+
+    # only the costly check fails: the runner reports it with no
+    # reassignment by the caller
+    src = CountingSource(tdf, key_columns=["k1", "k2"])
+    runner = ValidatorTableRunner(src, [NullCheck("k1"), UniqueCheck(["k1", "k2"])])
+    assert runner.config_check(spark) is False
+    assert runner.quick_checks(spark) is False
+    assert runner.failed is False
+    assert runner.costly_checks(spark) is True
+    assert runner.failed is True
+    assert runner.to_dict()["failed"] is True
+    assert src.loads == 1

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from data_validator_spark.queries.analytics import hourly_event_counts
 from data_validator_spark.streaming import StreamingValidator
-from data_validator_spark.validators.row_based import NegativeCheck, NullCheck
+from data_validator_spark.validators.row_based import NegativeCheck, NullCheck, RangeCheck
 
 SCHEMA = "id int, v double, s string"
 
@@ -50,6 +50,26 @@ def test_streaming_validation_per_micro_batch(spark, tmp_path):
         assert sv.batches[-1]["rowCount"] == 1
     finally:
         q.stop()
+
+
+def test_streaming_validator_config_checks_before_start(spark, tmp_path):
+    """A bad check config (a range with no bounds, a missing column)
+    fails start() from the stream's schema, before any query runs: no
+    micro-batch ever sees it."""
+    src = str(tmp_path / "stream_src")
+    _write_batch(spark, src, [(1, 1.0, "a")])
+    stream = spark.readStream.schema(SCHEMA).parquet(src)
+    active = len(spark.streams.active)
+
+    for bad, message in [
+        (lambda: RangeCheck("v"), "Must defined minValue or maxValue or both"),
+        (lambda: NullCheck("missing"), "Column: 'missing' not found in schema"),
+    ]:
+        sv = StreamingValidator(lambda: [NegativeCheck("v"), bad()])
+        with pytest.raises(ValueError, match=message):
+            sv.start(stream, checkpointLocation=str(tmp_path / "ckpt")).stop()
+        assert len(spark.streams.active) == active
+        assert sv.batches == []
 
 
 def has_watermark(frame):
