@@ -9,7 +9,9 @@ Parity: reference ValidatorTable.scala —
      min/max; SecondPassStatsAggregator parity),
   4. detailed-errors pass sampling failing rows projected onto key
      columns (ValidatorTable.quickErrorDetails),
-  5. costly checks (uniqueCheck) as standalone jobs.
+  5. costly checks: every uniqueCheck of the table in ONE job (one
+     scan, one GROUP BY GROUPING SETS shuffle; validators/unique.py),
+     where the reference runs one job per check.
 
 Scale notes (100 TB): the fused pass is a single scan → one global
 aggregate with map-side partials and no groupBy shuffle; `condition`
@@ -42,6 +44,7 @@ from data_validator_spark.validators.base import (
     run_cheap_checks,
 )
 from data_validator_spark.validators.colstats import ColStats
+from data_validator_spark.validators.unique import UniqueCheck, share_duplicate_counts
 
 
 class ValidatorTableRunner:
@@ -179,6 +182,7 @@ class ValidatorTableRunner:
     # -- phase 5: costly checks ----------------------------------------------
     def costly_checks(self, spark: SparkSession) -> bool:
         df = self._open(spark)
+        share_duplicate_counts([c for c in self.checks if isinstance(c, UniqueCheck)])
         failed = False
         for c in self.checks:
             if isinstance(c, CostlyCheck):

@@ -4,7 +4,8 @@ Parity: reference ValidatorBase.scala — CheapCheck / CostlyCheck
 split. Cheap checks contribute native Column aggregate expressions
 that the runner fuses into ONE scan per table (see
 ValidatorTable.quickChecks, reference ValidatorTable.scala:100).
-Costly checks get their own Spark job.
+Costly checks run after it, in jobs of their own (all uniqueChecks
+of a table share one, see validators/unique.py).
 
 Spark-first: expressions are built with pyspark.sql.functions only —
 no Python UDFs anywhere in the check hot path, so the fused

@@ -17,6 +17,11 @@ from data_validator_spark.events import ColumnBasedCheckEvent, ValidatorCounter,
 from data_validator_spark.validators.base import CheapCheck, is_numeric
 
 
+def _is_number(v: Any) -> bool:
+    """int or float, but not bool (a YAML `true` is an int in Python)."""
+    return isinstance(v, (int, float)) and not isinstance(v, bool)
+
+
 def pct_error(expected: float, actual: float) -> str:
     """Parity: ColumnBased.calculatePctError."""
     if expected == actual:
@@ -37,7 +42,8 @@ class MinNumRowsCheck(CheapCheck):
         self.min_num_rows = min_num_rows
 
     def config_check(self, df: DataFrame) -> bool:
-        if not isinstance(self.min_num_rows, int) or self.min_num_rows <= 0:
+        n = self.min_num_rows
+        if isinstance(n, bool) or not isinstance(n, int) or n <= 0:
             self.add_event(ValidatorError("minNumRows must be a natural number"))
         return self.failed
 
@@ -143,11 +149,11 @@ class ColumnSumCheck(CheapCheck):
         if self.min_value is None and self.max_value is None:
             self.add_event(ValidatorError("'minValue' or 'maxValue' or both must be defined"))
         for nm, v in (("minValue", self.min_value), ("maxValue", self.max_value)):
-            if v is not None and not isinstance(v, (int, float)):
+            if v is not None and not _is_number(v):
                 self.add_event(ValidatorError(f"'{nm}' defined but type is not a Number"))
         if (
-            isinstance(self.min_value, (int, float))
-            and isinstance(self.max_value, (int, float))
+            _is_number(self.min_value)
+            and _is_number(self.max_value)
             and self.min_value >= self.max_value
         ):
             self.add_event(

@@ -118,6 +118,27 @@ def test_column_sum_bad_config(spark, nums):
     assert ColumnSumCheck("id2", 1).config_check(nums) is True  # missing col
 
 
+def test_yaml_booleans_are_not_numbers(spark, nums):
+    """`true`/`false` in YAML are Python bools, and bool is an int:
+    each numeric field must still reject them as config errors."""
+    import yaml
+
+    from data_validator_spark.validators import check_from_dict
+
+    def errors(text):
+        chk = check_from_dict(yaml.safe_load(text))
+        assert chk.config_check(nums) is True
+        return [e.message for e in chk.events if isinstance(e, ValidatorError)]
+
+    assert errors("{type: rowCount, minNumRows: true}") == ["minNumRows must be a natural number"]
+    assert errors("{type: columnSumCheck, column: v, minValue: false}") == [
+        "'minValue' defined but type is not a Number"
+    ]
+    assert errors("{type: columnSumCheck, column: v, minValue: 1, maxValue: true}") == [
+        "'maxValue' defined but type is not a Number"
+    ]
+
+
 # -- pct_error helper ------------------------------------------------------
 def test_pct_error():
     assert pct_error(100.0, 100.0) == "0.00%"

@@ -5,9 +5,10 @@ reference ValidatorTableSpec / Main fatal handling."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from data_validator_spark.config import TableConfig, ValidatorConfig
-from data_validator_spark.events import QuickCheckError
+from data_validator_spark.events import QuickCheckError, ValidatorError, ValidatorGood
 from data_validator_spark.runner import ValidatorTableRunner, run_config
 from data_validator_spark.validators.colstats import ColStats
 from data_validator_spark.validators.row_based import NegativeCheck, NullCheck, RangeCheck
@@ -115,6 +116,69 @@ def test_unique_check_passes_on_unique_keys(spark, tdf):
     chk = UniqueCheck(["k1", "k2", "v"])
     runner = ValidatorTableRunner(DFSource(tdf), [chk])
     assert runner.costly_checks(spark) is False
+
+
+@pytest.fixture(scope="module")
+def keys_df(spark):
+    """A unique `id` and 70 int columns with NULLs; rows with id < 100
+    come in identical pairs, the last 20 rows are unique."""
+    base = F.when(F.col("id") < 100, F.col("id") % 50).otherwise(F.col("id"))
+    cols = [
+        F.when((base + i) % 7 == 0, None).otherwise((base * (i + 1)) % (5 + i)).alias(f"c{i}")
+        for i in range(70)
+    ]
+    return spark.range(120).select("id", *cols)
+
+
+WIDE = [f"c{i}" for i in range(70)]
+
+
+@pytest.mark.parametrize(
+    "column_sets",
+    [
+        pytest.param([["c0"], ["c6", "c1"]], id="null_keys"),
+        pytest.param([["c0"], ["c0", "c1"], ["c1", "c2", "c3"], ["id", "c0"]], id="nested_overlapping"),
+        pytest.param([["c1", "c1"], ["c1", "c2"]], id="repeated_column"),
+        pytest.param([["c3", "c4"]], id="single_check"),
+        pytest.param([["c1", "c2"], ["c2", "c1"], ["c2"]], id="same_columns_reordered"),
+        pytest.param([WIDE[:40], WIDE[30:], ["c5"]], id="union_over_64_columns"),
+        pytest.param([WIDE, ["id"]], id="one_set_over_64_columns"),
+    ],
+)
+def test_fused_unique_counts_equal_per_check_form(spark, keys_df, column_sets):
+    """All uniqueChecks of a table run as one GROUPING SETS job; each
+    check reports the count of the reference's per-check job."""
+    checks = [UniqueCheck(cols) for cols in column_sets]
+    ValidatorTableRunner(DFSource(keys_df), checks).costly_checks(spark)
+    for chk, cols in zip(checks, column_sets):
+        expected = (
+            keys_df.select(*cols).groupBy(*cols).count().where(F.col("count") > 1).count()
+        )
+        [ev] = [e for e in chk.events if isinstance(e, (ValidatorError, ValidatorGood))]
+        if expected:
+            assert ev.message == f"{expected} duplicates found!", cols
+        else:
+            assert ev.message == "no duplicates found.", cols
+
+
+def test_unique_checks_of_a_table_share_one_job(spark, tdf):
+    """Two uniqueChecks start no more Spark jobs than one."""
+    counts = []
+    for n in (1, 2):
+        checks = [UniqueCheck(["k1", "k2"]), UniqueCheck(["k2", "s"])][:n]
+        runner = ValidatorTableRunner(DFSource(tdf), checks)
+        with count_jobs(spark, f"unique-jobs-{n}") as cj:
+            assert runner.costly_checks(spark) is True
+        counts.append(cj.n)
+    assert counts[0] == counts[1], f"jobs for 1 vs 2 uniqueChecks: {counts}"
+
+
+@pytest.mark.parametrize("columns", [[], "k1", None, ["k1", 2], [["k1"]]])
+def test_unique_check_columns_must_be_a_list_of_names(spark, tdf, columns):
+    chk = UniqueCheck(columns)
+    assert chk.config_check(tdf) is True
+    [ev] = chk.events
+    assert ev.message.startswith("columns must be a non-empty list of column names")
 
 
 def test_config_check_catches_missing_key_column(spark, tdf):
