@@ -65,6 +65,12 @@ def main(argv: Optional[list[str]] = None) -> int:
     spark = build_session("data-validator-spark")
     try:
         config = load_config(args.config, spark, parse_vars(args.vars))
+        try:
+            for t in config.tables:
+                t.build()  # constructs the source and checks; opens nothing
+        except ValueError as e:
+            print(f"CONFIG ERROR: {e}", file=sys.stderr)
+            return 1
         for out in config.outputs:
             report_mod.check_output_target(out, spark)
 

@@ -27,17 +27,30 @@ def write_bucketed(
     keys: list[str],
     num_buckets: int,
     path: str | None = None,
-    sort: bool = True,
+    mode: str = "overwrite",
 ) -> None:
-    """Persist ``df`` bucketed (and by default sorted) on ``keys``.
+    """Write ``df`` as ``table``, bucketed and sorted on ``keys``: the
+    only bucketed writer in the package (a repo-wide test pins it).
 
-    Bucket count must match across tables that will join; sorting
-    inside buckets lets SortMergeJoin skip its per-task sort too.
-    ``path`` makes the table external (data at ``path``, metadata in
-    the session catalog)."""
-    w = df.write.format("parquet").mode("overwrite").bucketBy(num_buckets, *keys)
-    if sort:
-        w = w.sortBy(*keys)
+    Every write lays out ONE sorted file per bucket, from any source:
+    the rows are repartitioned on ``keys`` into ``num_buckets``
+    partitions first, and Spark's repartition hash is the bucket-id
+    hash (``pmod(murmur3(keys), num_buckets)``), so each write task
+    holds exactly one bucket. Without it every input task writes a
+    file into every bucket, and a bucket of several files turns off
+    the sorted-bucket-scan recognition (``session.ENGINE_CONFS``), so
+    colocated SortMergeJoins sort again per task. Bucket count must
+    match across tables that will join. ``path`` makes the table
+    external (data at ``path``, metadata in the session catalog);
+    ``mode="append"`` adds one file per non-empty bucket to an
+    existing table."""
+    w = (
+        df.repartition(num_buckets, *keys)
+        .write.format("parquet")
+        .mode(mode)
+        .bucketBy(num_buckets, *keys)
+        .sortBy(*keys)
+    )
     if path is not None:
         w = w.option("path", path)
     w.saveAsTable(table)
@@ -81,7 +94,9 @@ def assert_colocated(df: DataFrame) -> None:
 # trusted (same-path rewrites, cross-session appends). One lifecycle,
 # ensure_copy, serves every at-rest copy: the raw facts here, the
 # derived TPC-H relations (queries/tpch_ext.py) and the dedup indexes
-# (queries/dedup.py), which differ only in name, watermark and build.
+# (queries/dedup.py), which differ only in name, watermark and build;
+# each stamps its watermark in BUCKET_SIDECAR and is laid out by
+# write_bucketed.
 BUCKET_SIDECAR = "_dv_bucket_watermark.json"
 FACT_BUCKETS = 32
 
@@ -94,7 +109,25 @@ FACT_BUCKETS = 32
 # copy to the graded q3/q4/q7/q9/q18. Any rewrite that touches bytes
 # on disk changes a size or mtime_ns here, and the probe is pure
 # filesystem metadata — no Spark job, no session cache to invalidate.
-FACT_WM_VERSION = 3  # bump to force a rebuild of every at-rest copy
+FACT_WM_VERSION = 4  # bump to rebuild every raw-fact copy (4: one file per bucket from any source)
+
+
+def _walk_signature(path: str, sign: Callable[[str], list], suffix: str = "") -> list:
+    """Sorted [relname, *sign(file)] for every regular file under
+    ``path`` whose name ends with ``suffix`` (or for ``path`` itself
+    when it is a file): the one source-tree walk behind every
+    watermark signature."""
+    import os
+
+    if os.path.isfile(path):
+        return [[os.path.basename(path), *sign(path)]]
+    out = []
+    for dirpath, _dirs, fnames in os.walk(path):
+        for f in fnames:
+            if f.endswith(suffix):
+                p = os.path.join(dirpath, f)
+                out.append([os.path.relpath(p, path), *sign(p)])
+    return sorted(out)
 
 
 def _source_signature(path: str) -> list:
@@ -109,16 +142,11 @@ def _source_signature(path: str) -> list:
     local-path one."""
     import os
 
-    if os.path.isfile(path):
-        st = os.stat(path)
-        return [[os.path.basename(path), st.st_size, st.st_mtime_ns]]
-    out = []
-    for dirpath, _dirs, fnames in os.walk(path):
-        for f in fnames:
-            p = os.path.join(dirpath, f)
-            st = os.stat(p)
-            out.append([os.path.relpath(p, path), st.st_size, st.st_mtime_ns])
-    out.sort()
+    def stat(p):
+        st = os.stat(p)
+        return [st.st_size, st.st_mtime_ns]
+
+    out = _walk_signature(path, stat)
     if not out:
         raise FileNotFoundError(
             f"cannot compute source-file signature for {path!r}: no local "
@@ -171,19 +199,7 @@ def _footer_digest(path: str) -> str:
 def _footer_signature(path: str) -> list:
     """Sorted [relname, footer_md5] for every parquet data file under
     ``path`` (non-parquet sidecars/_SUCCESS files are skipped)."""
-    import os
-
-    if os.path.isfile(path):
-        return [[os.path.basename(path), _footer_digest(path)]]
-    out = []
-    for dirpath, _dirs, fnames in os.walk(path):
-        for f in fnames:
-            if not f.endswith(".parquet"):
-                continue
-            p = os.path.join(dirpath, f)
-            out.append([os.path.relpath(p, path), _footer_digest(p)])
-    out.sort()
-    return out
+    return _walk_signature(path, lambda p: [_footer_digest(p)], ".parquet")
 
 
 # verify="full" reads every source byte per verification, so it is
@@ -208,26 +224,15 @@ def _content_signature(path: str) -> list:
     Deliberately uncached, like _footer_digest and for the same
     reason."""
     import hashlib
-    import os
 
-    def h(p):
+    def sha256(p):
         m = hashlib.sha256()
         with open(p, "rb") as f:
             for chunk in iter(lambda: f.read(1 << 20), b""):
                 m.update(chunk)
-        return m.hexdigest()
+        return [m.hexdigest()]
 
-    if os.path.isfile(path):
-        return [[os.path.basename(path), h(path)]]
-    out = []
-    for dirpath, _dirs, fnames in os.walk(path):
-        for f in fnames:
-            p = os.path.join(dirpath, f)
-            out.append([os.path.relpath(p, path), h(p)])
-    out.sort()
-    return out
-
-
+    return _walk_signature(path, sha256)
 
 
 def copy_name(sf: str, *parts: str) -> str:
@@ -257,12 +262,12 @@ def copy_path(spark: SparkSession, table: str) -> str:
     return os.path.join(warehouse_dir(spark), table)
 
 
-def _read_sidecar(path: str, sidecar: str) -> dict | None:
+def _read_sidecar(path: str) -> dict | None:
     import json
     import os
 
     try:
-        with open(os.path.join(path, sidecar)) as f:
+        with open(os.path.join(path, BUCKET_SIDECAR)) as f:
             return json.load(f)
     except (OSError, ValueError):
         return None
@@ -297,7 +302,6 @@ def ensure_copy(
     watermark: dict,
     build: Callable[[], DataFrame],
     on_drop: Callable[[], object] | None = None,
-    sidecar: str = BUCKET_SIDECAR,
     record: Callable[[], dict] | None = None,
 ) -> str:
     """Idempotently materialize + register the at-rest bucketed copy
@@ -318,15 +322,15 @@ def ensure_copy(
     - otherwise → drop the catalog entry and files, call ``on_drop`` if
       a copy existed (so caches persisted over its files can be
       evicted before they fail to read them), write ``build()``
-      bucketed and sorted on ``keys``, and write the sidecar:
-      ``watermark`` plus ``record()`` (data recorded for other
-      consumers but not verified by this one)."""
+      through write_bucketed, and write the sidecar
+      (``BUCKET_SIDECAR``): ``watermark`` plus ``record()`` (data
+      recorded for other consumers but not verified by this one)."""
     import json
     import os
     import shutil
 
     path = copy_path(spark, table)
-    disk = _read_sidecar(path, sidecar)
+    disk = _read_sidecar(path)
     current = disk is not None and all(disk.get(k) == v for k, v in watermark.items())
     in_catalog = spark.catalog.tableExists(table)
     if current and in_catalog:
@@ -353,7 +357,7 @@ def ensure_copy(
             on_drop()
     stamp = {**watermark, **(record() if record else {})}
     write_bucketed(build(), table, keys, num_buckets, path=path)
-    with open(os.path.join(path, sidecar), "w") as f:
+    with open(os.path.join(path, BUCKET_SIDECAR), "w") as f:
         json.dump(stamp, f)
     return table
 

@@ -42,7 +42,7 @@ from __future__ import annotations
 from typing import Any, Callable
 
 import yaml
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_validator_spark.functions.text import (
@@ -362,18 +362,15 @@ def run_pipeline(
     df = build_pipeline(spark, p, sf_dir)
     sink = p.get("sink")
     if sink:
+        # the write counts its own rows: no second read of the sink
+        written = Observation()
         write_partitioned(
-            df,
+            df.observe(written, F.count(F.lit(1)).alias("rows")),
             sink["path"],
             list(sink.get("partitionBy", [])),
             fmt=sink.get("format", "parquet"),
         )
-        out_rows = (
-            spark.read.format(sink.get("format", "parquet"))
-            .load(sink["path"])
-            .count()
-        )
-        return {"written": True, "path": sink["path"], "rows": out_rows}
+        return {"written": True, "path": sink["path"], "rows": written.get["rows"]}
     return {"written": False, "rows": df.count()}
 
 

@@ -17,7 +17,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from data_validator_spark.functions.text import rolling_shingle_hashes
-from data_validator_spark.operators.bucketing import copy_name, ensure_copy
+from data_validator_spark.operators.bucketing import copy_name, ensure_copy, write_bucketed
 from data_validator_spark.operators.cc_star import connected_components
 from data_validator_spark.operators.checkpoint import free_local_checkpoint
 from data_validator_spark.queries import SessionCache, load, load_documents_by_id
@@ -1243,7 +1243,6 @@ FINDEX_MOD = 1_000_003
 # dataset rewrite that calls evict_session_caches() also invalidates
 # the probe and forces a fresh disk-watermark comparison.
 _FINDEX_STATS_CACHE = SessionCache()
-_FINDEX_WATERMARK_FILE = "_dv_findex_watermark.json"
 
 
 def _corpus_watermark(spark, sf) -> dict:
@@ -1294,10 +1293,7 @@ def _ensure_index(spark, sf, table, kind: str, key: str, buckets: int, rows) -> 
         _invalidate_index_caches(t)
         return rows(_incremental_pivot(spark, sf))
 
-    return ensure_copy(
-        spark, t, [key], buckets, _corpus_watermark(spark, sf), build,
-        sidecar=_FINDEX_WATERMARK_FILE,
-    )
+    return ensure_copy(spark, t, [key], buckets, _corpus_watermark(spark, sf), build)
 
 
 def _ensure_findex(spark, sf, table: str | None = None) -> str:
@@ -1355,13 +1351,7 @@ def q_dedup_index_refresh(spark, sf, table: str | None = None):
             .distinct()
         )
         new = delta.join(spark.table(t), "fp60", "left_anti")
-        (
-            new.write.format("parquet")
-            .mode("append")
-            .bucketBy(FINDEX_BUCKETS, "fp60")
-            .sortBy("fp60")
-            .saveAsTable(t)
-        )
+        write_bucketed(new, t, ["fp60"], FINDEX_BUCKETS, mode="append")
         # after a refresh under this watermark the table holds exactly
         # the distinct fingerprints of the full corpus — a repeated run
         # would anti-join to nothing, so skip the delta scan + append
@@ -1424,7 +1414,7 @@ def _sig64_col():
 #   _BINDEX_MAX_CACHE: the refresh's max-doc_id idempotency probe —
 #   one scalar job per (session, watermark) instead of per run, and a
 #   probe that proves the table complete also skips the empty-delta
-#   append job (a 32-bucket-file write of zero rows is NOT free).
+#   append job (a zero-row write of BINDEX_BUCKETS tasks is NOT free).
 #   _BINDEX_OK_BUCKETS_CACHE: the minhash screen's eligible-bucket
 #   census (groupBy sig64 over the full corpus index) — persisted once
 #   per (session, watermark); its content is a pure function of the
@@ -1515,8 +1505,8 @@ def q_dedup_band_index_refresh(spark, sf, table: str | None = None):
     # (r16, r15 verdict item 5): the probe's answer is a pure function
     # of the table content, which the watermark pins — and once the
     # table provably covers the corpus (start > corpus max), the
-    # delta is empty BY CONSTRUCTION, so the append job (a 32-bucket
-    # zero-row write, ~0.5s of task scheduling) is skipped outright.
+    # delta is empty BY CONSTRUCTION, so the append job (a zero-row
+    # write of BINDEX_BUCKETS tasks) is skipped outright.
     table_max = _BINDEX_MAX_CACHE.get(spark, sf, None, t, version=wm)
     if table_max is None:
         table_max = _table_max_doc_id(spark, t)
@@ -1528,13 +1518,7 @@ def q_dedup_band_index_refresh(spark, sf, table: str | None = None):
             .select(_sig64_col().alias("sig64"), "doc_id")
             .distinct()
         )
-        (
-            delta.write.format("parquet")
-            .mode("append")
-            .bucketBy(BINDEX_BUCKETS, "sig64")
-            .sortBy("sig64")
-            .saveAsTable(t)
-        )
+        write_bucketed(delta, t, ["sig64"], BINDEX_BUCKETS, mode="append")
     # after a refresh the table holds every posting with doc_id up to
     # the corpus max (the delta slice is [start, corpus max] and the
     # corpus side below `start` was already present)

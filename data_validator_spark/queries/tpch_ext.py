@@ -226,16 +226,8 @@ def _ensure_bucketed_derived(
     """The at-rest copy of a DERIVED relation bucketed on ``key`` under
     ``dv_bkt_{relname}_{key}_{tag}`` (``dv_bkt_{relname}_{tag}`` when
     not ``keyed``); returns the catalog table name. The watermark is the
-    RAW source's file signature plus the derivation version.
-
-    r18 (guide §6): the build repartitions by the bucket key first —
-    the repartition hash IS the bucket-id hash (both
-    pmod(Murmur3, FACT_BUCKETS)), so each task holds exactly one bucket
-    and writes exactly ONE sorted file (unrepartitioned, every spread()
-    partition wrote a file per bucket — 1024 files at sf0.1 — which
-    multiplied per-file open/listing cost and silently disabled the
-    sorted-bucket-scan recognition; see tests/test_bucketing.py
-    single-file pins)."""
+    RAW source's file signature plus the derivation version. The
+    layout (one sorted file per bucket) is write_bucketed's."""
     import os
 
     wm = {"version": version, "key": key} if keyed else {"version": version}
@@ -246,7 +238,7 @@ def _ensure_bucketed_derived(
         [key],
         FACT_BUCKETS,
         wm,
-        lambda: build_df(spark, sf).repartition(FACT_BUCKETS, F.col(key)),
+        lambda: build_df(spark, sf),
         on_drop=lambda: evict_session_caches(sf),
     )
 

@@ -18,9 +18,9 @@ import os
 # knobs (shuffle partitions, memory) are the caller's ``confs`` or
 # local_session's.
 ENGINE_CONFS: dict[str, str] = {
-    # The at-rest copy program writes every bucketed table with
-    # sortBy(bucket_key) and exactly one parquet file per bucket. Spark
-    # only recognizes that order, and drops the per-task Sorts from
+    # Every bucketed table is written sorted on its bucket key, one file
+    # per bucket (operators/bucketing.write_bucketed). Spark only
+    # recognizes that order, and drops the per-task Sorts from
     # colocated SortMergeJoins, with this conf on (off by default since
     # Spark 3.0). Without it a bucketed join pays two in-memory sorts
     # (q7 plan: 5 Sort nodes -> 7).

@@ -47,7 +47,10 @@ def check_from_dict(d: dict) -> Check:
     t = d.get("type")
     if t not in CHECK_TYPES:
         raise ValueError(f"Unknown check type: {t!r}")
-    return CHECK_TYPES[t](d)
+    try:
+        return CHECK_TYPES[t](d)
+    except KeyError as e:
+        raise ValueError(f"{t} check is missing required field {e.args[0]!r}") from None
 
 
 __all__ = [

@@ -74,6 +74,12 @@ def calc_error_count_threshold(threshold: Optional[str], row_count: int) -> int:
     return int(num)
 
 
+def is_number(value: Any) -> bool:
+    """int or float, but not bool: a YAML ``true`` is an int in Python,
+    and no numeric field of a check takes one."""
+    return isinstance(value, (int, float)) and not isinstance(value, bool)
+
+
 def is_column_ref(value: Any) -> bool:
     """Backtick-prefixed string = reference to another column.
 

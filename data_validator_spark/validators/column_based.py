@@ -14,12 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from data_validator_spark.events import ColumnBasedCheckEvent, ValidatorCounter, ValidatorError
-from data_validator_spark.validators.base import CheapCheck, is_numeric
-
-
-def _is_number(v: Any) -> bool:
-    """int or float, but not bool (a YAML `true` is an int in Python)."""
-    return isinstance(v, (int, float)) and not isinstance(v, bool)
+from data_validator_spark.validators.base import CheapCheck, is_number, is_numeric
 
 
 def pct_error(expected: float, actual: float) -> str:
@@ -77,7 +72,7 @@ class ColumnMaxCheck(CheapCheck):
     def config_check(self, df: DataFrame) -> bool:
         if self.column_in_df(df, self.column):
             dt = df.schema[self.column].dataType
-            if is_numeric(dt) and isinstance(self.value, str):
+            if is_numeric(dt) and not is_number(self.value):
                 self.add_event(
                     ValidatorError(
                         f"checkTypes failed for columnMaxCheck column[{dt.simpleString()}]: "
@@ -98,7 +93,7 @@ class ColumnMaxCheck(CheapCheck):
             failed = actual != self.value
             data = {"expected": self.value, "actual": str(actual)}
             msg = f"ColumnMaxCheck {self.column}[StringType]: Expected: {self.value} Actual: {actual}"
-        elif isinstance(self.value, (int, float)) and (
+        elif is_number(self.value) and (
             actual is None or isinstance(actual, (int, float, decimal.Decimal))
         ):
             failed = actual is None or float(actual) != float(self.value)
@@ -149,11 +144,11 @@ class ColumnSumCheck(CheapCheck):
         if self.min_value is None and self.max_value is None:
             self.add_event(ValidatorError("'minValue' or 'maxValue' or both must be defined"))
         for nm, v in (("minValue", self.min_value), ("maxValue", self.max_value)):
-            if v is not None and not _is_number(v):
+            if v is not None and not is_number(v):
                 self.add_event(ValidatorError(f"'{nm}' defined but type is not a Number"))
         if (
-            _is_number(self.min_value)
-            and _is_number(self.max_value)
+            is_number(self.min_value)
+            and is_number(self.max_value)
             and self.min_value >= self.max_value
         ):
             self.add_event(

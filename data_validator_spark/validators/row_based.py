@@ -18,6 +18,7 @@ from data_validator_spark.events import ValidatorError
 from data_validator_spark.validators.base import (
     RowBasedCheck,
     is_column_ref,
+    is_number,
     is_numeric,
     value_expr,
 )
@@ -98,7 +99,7 @@ class RangeCheck(RowBasedCheck):
                         self.add_event(
                             ValidatorError(f"value: {b} cannot be equal to column: {self.column}")
                         )
-                elif is_numeric(dt) and isinstance(b, str):
+                elif isinstance(b, bool) or (is_numeric(dt) and not is_number(b)):
                     self.add_event(
                         ValidatorError(
                             f"Range constraint types not compatible with column[{dt.simpleString()}]:'{self.column}'"

@@ -752,50 +752,214 @@ def test_content_signature_detects_single_bit_flip(tmp_path):
     assert [r for r, _ in sig1] == [r for r, _ in sig2]  # same file set
 
 
-def test_bucketed_copies_single_sorted_file_per_bucket(spark):
-    """The at-rest copy program lays out at most ONE (sorted) parquet
-    file per bucket — the invariant that lets
-    spark.sql.legacy.bucketedTableScan.outputOrdering=true (bench.py,
-    r18) recognize the written sort order and drop per-task sorts
-    from colocated SMJs. A multi-file bucket would silently disable
-    that recognition (perf-only, never correctness). The base fact
-    writes hold it because the single-parquet sources scan to one
-    split; the DERIVED ext copies (spread() build → one file per
-    bucket PER PARTITION, 1024 files at sf0.1 before r18) hold it via
-    the explicit bucket-key repartition at their write sites, whose
-    hash is the bucket-id hash."""
+SF = "/root/testdata/sf0.001"
+MULTI_FILE_TABLES = ("lineitem", "orders", "part", "documents")
+
+
+@pytest.fixture(scope="module")
+def multi_file_sf(tmp_path_factory):
+    """A copy of sf0.001 in which every copy source (lineitem, orders,
+    part, documents) is a directory of 4 parquet files, so its scan has
+    4 input tasks. The other tables are copied as they are."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    sf = tmp_path_factory.mktemp("multi_file_sf")
+    for f in os.listdir(SF):
+        name = f.removesuffix(".parquet")
+        if name not in MULTI_FILE_TABLES:
+            shutil.copy(os.path.join(SF, f), sf / f)
+            continue
+        t = pq.read_table(os.path.join(SF, f))
+        os.makedirs(sf / f)
+        step = -(-t.num_rows // 4)
+        for i in range(4):
+            pq.write_table(t.slice(i * step, step), sf / f / f"part-{i}.parquet")
+    return str(sf)
+
+
+def _files_per_bucket(path: str) -> dict:
+    """{bucket id: parquet file count} of a bucketed table directory."""
+    import collections
     import os
     import re
 
-    from data_validator_spark.operators.bucketing import ensure_bucketed_fact
+    counts = collections.Counter()
+    for f in os.listdir(path):
+        if f.endswith(".parquet"):
+            m = re.search(r"_(\d{5})\.c\d+", f)
+            assert m, f"unrecognized bucketed file name {f} in {path}"
+            counts[m.group(1)] += 1
+    return counts
+
+
+def test_bucketed_copies_single_sorted_file_per_bucket(spark, multi_file_sf):
+    """The at-rest copy program lays out exactly ONE (sorted) parquet
+    file per bucket — the invariant that lets
+    spark.sql.legacy.bucketedTableScan.outputOrdering=true (session
+    ENGINE_CONFS) recognize the written sort order and drop per-task
+    sorts from colocated SMJs. A multi-file bucket would silently
+    disable that recognition (perf-only, never correctness). It must
+    hold for single-file sources and for sources of several files
+    (several input tasks), for raw-fact copies, derived copies and the
+    dedup indexes alike: write_bucketed repartitions on the bucket key,
+    whose hash is the bucket-id hash."""
+    from data_validator_spark.operators.bucketing import (
+        FACT_BUCKETS,
+        copy_path,
+        ensure_bucketed_fact,
+    )
+    from data_validator_spark.queries.dedup import (
+        BINDEX_BUCKETS,
+        FINDEX_BUCKETS,
+        _ensure_bindex,
+        _ensure_findex,
+    )
     from data_validator_spark.queries.tpch_ext import (
         ensure_bucketed_lineitem_ext,
         ensure_bucketed_lineitem_ext_by_part,
         ensure_bucketed_part_ext,
     )
 
-    sf = "/root/testdata/sf0.001"
-    tables = [
-        ensure_bucketed_fact(spark, sf, "lineitem", "l_orderkey"),
-        ensure_bucketed_fact(spark, sf, "orders", "o_orderkey"),
-        ensure_bucketed_lineitem_ext(spark, sf),
-        ensure_bucketed_lineitem_ext_by_part(spark, sf),
-        ensure_bucketed_part_ext(spark, sf),
-    ]
-    wh = re.sub(r"^file:/*", "/", spark.conf.get("spark.sql.warehouse.dir"))
-    for t in tables:
-        d = os.path.join(wh, t)
-        files = [f for f in os.listdir(d) if f.endswith(".parquet")]
-        assert files, d
-        buckets = []
-        for f in files:
-            m = re.search(r"_(\d{5})\.c\d+", f)
-            assert m, f"unrecognized bucketed file name {f} in {t}"
-            buckets.append(m.group(1))
-        assert len(buckets) == len(set(buckets)), (
-            f"{t}: bucket with >1 file — sorted-scan recognition "
-            f"silently off ({sorted(files)[:4]}...)"
-        )
+    for sf in (SF, multi_file_sf):
+        tables = [
+            (ensure_bucketed_fact(spark, sf, "lineitem", "l_orderkey"), FACT_BUCKETS),
+            (ensure_bucketed_fact(spark, sf, "orders", "o_orderkey"), FACT_BUCKETS),
+            (ensure_bucketed_lineitem_ext(spark, sf), FACT_BUCKETS),
+            (ensure_bucketed_lineitem_ext_by_part(spark, sf), FACT_BUCKETS),
+            (ensure_bucketed_part_ext(spark, sf), FACT_BUCKETS),
+        ]
+        if sf == multi_file_sf:
+            tables += [
+                (_ensure_findex(spark, sf), FINDEX_BUCKETS),
+                (_ensure_bindex(spark, sf), BINDEX_BUCKETS),
+            ]
+        for t, n in tables:
+            counts = _files_per_bucket(copy_path(spark, t))
+            assert len(counts) == n and set(counts.values()) == {1}, (
+                f"{t}: want one file in each of {n} buckets, got {dict(counts)} "
+                "— sorted-scan recognition silently off"
+            )
+
+
+def _sort_nodes(df) -> int:
+    import re
+
+    return len(re.findall(r"\bSort \[", df._jdf.queryExecution().executedPlan().toString()))
+
+
+def test_multi_file_sources_keep_sort_free_colocated_joins(spark, multi_file_sf):
+    """From a source of several files, a merge join of the lineitem and
+    orders copies still plans no Exchange and no Sort, and q7 and q12
+    plan as many Sort nodes as they do from single-file sources (a
+    bucket of several files would add a Sort per joined side)."""
+    from data_validator_spark.operators.bucketing import ensure_bucketed_fact
+    from data_validator_spark.queries.analytics import q7_volume_shipping
+    from data_validator_spark.queries.tpch_ext import q12_shipmode_priority
+
+    li = spark.table(ensure_bucketed_fact(spark, multi_file_sf, "lineitem", "l_orderkey"))
+    orders = spark.table(ensure_bucketed_fact(spark, multi_file_sf, "orders", "o_orderkey"))
+    joined = li.hint("merge").join(orders, li.l_orderkey == orders.o_orderkey)
+    assert_colocated(joined)
+    assert _sort_nodes(joined) == 0
+    for q in (q7_volume_shipping, q12_shipmode_priority):
+        single = _sort_nodes(q(spark, SF))
+        assert _sort_nodes(q(spark, multi_file_sf)) == single, q.__name__
+
+
+def test_index_refresh_appends_one_file_per_bucket(spark, multi_file_sf):
+    """A dedup index refresh appends at most one file to each bucket
+    (the delta is read from a 4-file documents source), and the
+    refreshed index still holds exactly the full-corpus content. AQE
+    is off, as at a scale where it would not coalesce the delta's
+    shuffle into one partition."""
+    import shutil
+
+    from data_validator_spark.functions.text import fingerprint60
+    from data_validator_spark.operators.bucketing import copy_name, copy_path
+    from data_validator_spark.queries import evict_session_caches
+    from data_validator_spark.queries.dedup import (
+        FINDEX_DIGEST_BUCKETS,
+        FINDEX_MOD,
+        _band_df,
+        _ensure_bindex,
+        _ensure_findex,
+        _sig64_col,
+        q_dedup_band_index_refresh,
+        q_dedup_index_refresh,
+    )
+
+    sf = multi_file_sf
+    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    # kind: (build, refresh, refresh digest column, full-corpus index keys)
+    cases = {
+        "findex": (
+            _ensure_findex, q_dedup_index_refresh, "digest",
+            docs.select(fingerprint60(F.col("text")).alias("k")).distinct(),
+        ),
+        "bindex": (
+            _ensure_bindex, q_dedup_band_index_refresh, "digest_sig",
+            _band_df(spark, sf).select(_sig64_col().alias("k"), "doc_id").distinct(),
+        ),
+    }
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        for kind, (ensure, refresh, digest, keys) in cases.items():
+            path = copy_path(spark, ensure(spark, sf))
+            before = _files_per_bucket(path)
+            got = {(r["bucket"], r[1], r[digest]) for r in refresh(spark, sf).collect()}
+            after = _files_per_bucket(path)
+            added = {b: after[b] - before.get(b, 0) for b in after}
+            assert sum(added.values()) > 0, f"{kind}: the refresh appended nothing"
+            assert max(added.values()) <= 1, f"{kind}: append added {added}"
+            want = {
+                tuple(r)
+                for r in keys.groupBy(
+                    F.pmod(F.col("k"), F.lit(FINDEX_DIGEST_BUCKETS)).cast("int")
+                )
+                .agg(F.count(F.lit(1)), F.sum(F.pmod(F.col("k"), F.lit(FINDEX_MOD))))
+                .collect()
+            }
+            assert got == want, kind
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        for kind in cases:
+            t = copy_name(sf, "dv_dedup", kind)
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+            shutil.rmtree(copy_path(spark, t), ignore_errors=True)
+        evict_session_caches(sf)
+
+
+def test_only_write_bucketed_writes_buckets():
+    """Repo-wide pin: no tracked .py under data_validator_spark/ calls
+    `.bucketBy(` outside operators/bucketing.write_bucketed, so every
+    bucketed table gets that writer's one-file-per-bucket layout."""
+    import ast
+    import os
+    import subprocess
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    tracked = subprocess.run(
+        ["git", "-C", repo, "ls-files", "data_validator_spark/*.py"],
+        capture_output=True, text=True, check=True,
+    ).stdout.split()
+    offenders = []
+    for rel in tracked:
+        tree = ast.parse(open(os.path.join(repo, rel)).read())
+        allowed = set()
+        if rel == "data_validator_spark/operators/bucketing.py":
+            for node in tree.body:
+                if isinstance(node, ast.FunctionDef) and node.name == "write_bucketed":
+                    allowed = {id(n) for n in ast.walk(node)}
+        offenders += [
+            f"{rel}:{n.lineno}"
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Attribute) and n.attr == "bucketBy" and id(n) not in allowed
+        ]
+    assert not offenders, f"bucketBy outside write_bucketed: {offenders}"
 
 
 def test_sorted_bucket_scan_drops_smj_sorts(spark, tmp_path):

@@ -148,3 +148,20 @@ def test_config_module_main_good_and_bad(tmp_path):
     assert r.returncode == 1 and "no value/env/shell/sql source" in r.stderr
     r = run_config_main()
     assert r.returncode == 2
+
+
+def test_cli_check_without_required_field_is_config_error(tmp_path):
+    """A check that lacks a required field ends the run as a config
+    error naming the check type and the field, before any table is
+    opened (the source path does not exist) and without a report."""
+    p = tmp_path / "t.yaml"
+    p.write_text(
+        f"tables:\n  - parquetFile: {tmp_path}/missing.parquet\n    checks:\n"
+        "      - type: nullCheck\n"
+    )
+    jr = tmp_path / "report.json"
+    r = run_cli("--config", str(p), "--jsonReport", str(jr))
+    assert r.returncode == 1, r.stderr
+    assert "CONFIG ERROR: nullCheck check is missing required field 'column'" in r.stderr
+    assert "Traceback" not in r.stderr
+    assert not jr.exists()

@@ -137,6 +137,12 @@ def test_yaml_booleans_are_not_numbers(spark, nums):
     assert errors("{type: columnSumCheck, column: v, minValue: 1, maxValue: true}") == [
         "'maxValue' defined but type is not a Number"
     ]
+    assert errors("{type: rangeCheck, column: v, minValue: true, maxValue: 3}") == [
+        "Range constraint types not compatible with column[double]:'v'"
+    ]
+    assert errors("{type: columnMaxCheck, column: id, value: true}") == [
+        "checkTypes failed for columnMaxCheck column[int]: id value: True"
+    ]
 
 
 # -- pct_error helper ------------------------------------------------------

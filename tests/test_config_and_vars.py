@@ -364,7 +364,7 @@ def test_check_config_placeholder_suppression_is_per_entry():
         "        minValue: $lo\n"
         "      - type: nullCheck\n"
     )
-    assert errs == ["tables[0].checks[1]: 'column'"]
+    assert errs == ["tables[0].checks[1]: nullCheck check is missing required field 'column'"]
 
 
 def test_check_config_braced_placeholder_detected():

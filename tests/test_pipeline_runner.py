@@ -320,3 +320,22 @@ def test_dedup_incremental_step(spark, tmp_path):
     assert sorted(r["doc_id"] for r in out2.collect()) == [11, 12, 13]
     with pytest.raises(PipelineConfigError):
         STEPS["dedupIncremental"](delta, {})
+
+
+def test_written_rows_come_from_the_write(spark, tmp_path):
+    """`rows` of a written pipeline is counted by the write itself (an
+    Observation on the written DataFrame): it equals a re-read count of
+    the sink, and the run starts fewer Spark jobs than the write plus a
+    re-read count."""
+    from data_validator_spark.sources.sinks import write_partitioned
+    from tests.test_runner import count_jobs
+
+    out = str(tmp_path / "observed")
+    with count_jobs(spark, "pipeline-observed") as run:
+        res = run_pipeline(spark, CFG % out, SF)
+    assert res["rows"] == spark.read.parquet(out).count()
+    out2 = str(tmp_path / "recounted")
+    with count_jobs(spark, "pipeline-recounted") as recount:
+        write_partitioned(build_pipeline(spark, CFG % out2, SF), out2, ["lang", "split"])
+        spark.read.parquet(out2).count()
+    assert run.n < recount.n, f"jobs: run {run.n}, write + re-read {recount.n}"
