@@ -60,11 +60,16 @@ def main(argv: Optional[list[str]] = None) -> int:
     if args.checkConfig:
         return config_main([args.config])
 
+    try:
+        cli_vars = parse_vars(args.vars)
+    except ValueError as e:
+        p.error(str(e))  # exit 2, before the JVM starts
+
     from data_validator_spark.session import build_session
 
     spark = build_session("data-validator-spark")
     try:
-        config = load_config(args.config, spark, parse_vars(args.vars))
+        config = load_config(args.config, spark, cli_vars)
         try:
             for t in config.tables:
                 t.build()  # constructs the source and checks; opens nothing

@@ -13,6 +13,16 @@ Parity: reference ValidatorTable.scala —
      scan, one GROUP BY GROUPING SETS shuffle; validators/unique.py),
      where the reference runs one job per check.
 
+What runs at the same time (``run_config``): every table's configCheck
+at once; then, once all of them have finished and passed, every
+table's two chains at once — the quick chain (phases 2, 3 and 4, in
+that order) and the costly chain (phase 5). No data is read before
+every configCheck is done, and within a chain each phase waits for the
+one before it. The jobs are submitted from a bounded pool of driver
+threads that inherit the caller's Spark local properties, into Spark's
+default FIFO scheduler: a later job's tasks take the slots an earlier
+job leaves free. The report does not depend on which chain ends first.
+
 Scale notes (100 TB): the fused pass is a single scan → one global
 aggregate with map-side partials and no groupBy shuffle; `condition`
 is applied pre-agg so parquet gets PushedFilters; only referenced
@@ -23,9 +33,12 @@ detailed-error pass filters on the OR of failing tests and uses
 
 from __future__ import annotations
 
-from typing import Any, Optional
+from concurrent.futures import ThreadPoolExecutor, wait
+from functools import partial
+from typing import Any, Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
 from data_validator_spark.events import (
     QuickCheckError,
@@ -134,7 +147,9 @@ class ValidatorTableRunner:
                 c.sink_histogram(hrow)
 
         if failed:
-            bad = ", ".join(c.describe() for c in self.checks if c.failed)
+            # cheap checks only: the costly chain may have failed a
+            # uniqueCheck already, and this message does not depend on it
+            bad = ", ".join(c.describe() for c in cheap if c.failed)
             self.add_event(ValidatorError(f"QuickChecks on {self.source.label} failed for {bad}"))
             if self.detailed_errors:
                 self._quick_error_details(df)
@@ -203,26 +218,47 @@ class ValidatorTableRunner:
         }
 
 
+# Driver threads per run_config: two per table (its quick chain and its
+# costly chain), at most 8. A thread only submits Spark jobs and waits
+# for them, and the quick-check phase keeps the executors busy only ~6%
+# of its wall time, so overlapping chains fills idle task slots. 8 runs
+# a 4-table config fully overlapped; past that, jobs of a few-core
+# session queue for the same task slots, and each thread is one more
+# Py4J connection and JVM thread.
+MAX_THREADS = 8
+
+
+def _run_at_once(
+    spark: SparkSession, pool: ThreadPoolExecutor, calls: list[Callable[[], Any]]
+) -> list[Any]:
+    """Run every call on ``pool`` at the same time, each with the
+    caller's Spark local properties (job group, description) and tags.
+    Waits for all of them, then returns their results in call order, or
+    re-raises the exception of the first call (in call order) that
+    raised. No job a call started outlives this function."""
+    futures = [pool.submit(inheritable_thread_target(spark)(call)) for call in calls]
+    wait(futures)
+    return [f.result() for f in futures]
+
+
 def run_config(spark: SparkSession, config: "ValidatorConfig") -> dict[str, Any]:
     """Run every table in a parsed config; returns the report dict.
 
     Parity: reference Main.scala phase ordering — configCheck for ALL
     tables first, and a failure in ANY table is fatal (skips the data
-    phases entirely, still emitting the report); then quickChecks for
-    all tables before any costlyChecks.
+    phases entirely, still emitting the report). Then every table's
+    quick chain and costly chain run at the same time (module
+    docstring); each check's and each runner's events come out in the
+    order of the reference's sequential run.
     """
     from data_validator_spark import report as report_mod
 
     runners = config.build_runners()
-    config_failed = False
-    for r in runners:
-        config_failed = r.config_check(spark) or config_failed
-
-    if not config_failed:
-        for r in runners:
-            r.quick_checks(spark)
-        for r in runners:
-            r.costly_checks(spark)
+    with ThreadPoolExecutor(max_workers=max(1, min(2 * len(runners), MAX_THREADS))) as pool:
+        checks = [partial(r.config_check, spark) for r in runners]
+        if not any(_run_at_once(spark, pool, checks)):
+            chains = [partial(f, spark) for r in runners for f in (r.quick_checks, r.costly_checks)]
+            _run_at_once(spark, pool, chains)
     return report_mod.build_report(config, runners, any(r.failed for r in runners), spark)
 
 

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from typing import Any, Optional
 
+from pyspark.errors import IllegalArgumentException
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -212,6 +213,14 @@ class StringRegexCheck(RowBasedCheck):
     def config_check(self, df: DataFrame) -> bool:
         if not self.regex:
             self.add_event(ValidatorError("Must define a regex."))
+        elif isinstance(self.regex, str):
+            # rlike compiles the pattern with java.util.regex on the
+            # executors; one that does not compile is a config error
+            try:
+                df.sparkSession._jvm.java.util.regex.Pattern.compile(self.regex)
+            except IllegalArgumentException as e:  # PatternSyntaxException
+                msg = str(e).splitlines()[0]
+                self.add_event(ValidatorError(f"Invalid regex {self.regex!r}: {msg}"))
         if self.column_in_df(df, self.column):
             dt = df.schema[self.column].dataType
             if not isinstance(dt, T.StringType):

@@ -165,3 +165,20 @@ def test_cli_check_without_required_field_is_config_error(tmp_path):
     assert "CONFIG ERROR: nullCheck check is missing required field 'column'" in r.stderr
     assert "Traceback" not in r.stderr
     assert not jr.exists()
+
+
+def test_cli_malformed_vars_is_usage_error_before_session(tmp_path, monkeypatch, capsys):
+    """`--vars foo` (no `=`) exits 2 with a usage message, and no Spark
+    session is built."""
+    from data_validator_spark import cli, session
+
+    def no_session(*args, **kwargs):
+        raise AssertionError("build_session called")
+
+    monkeypatch.setattr(session, "build_session", no_session)
+    p = tmp_path / "t.yaml"
+    p.write_text("tables: []\n")
+    with pytest.raises(SystemExit) as exit_info:
+        cli.main(["--config", str(p), "--vars", "foo"])
+    assert exit_info.value.code == 2
+    assert "Bad --vars entry: 'foo'" in capsys.readouterr().err

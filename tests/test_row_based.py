@@ -170,6 +170,33 @@ def test_string_regex_check_counts_mismatches(spark, people):
     assert counters["errorCount"] == 2  # dave, x
 
 
+def test_string_regex_check_invalid_regex_is_config_error(spark, people, tmp_path):
+    """A pattern Java cannot compile fails configCheck: the run ends as
+    a config error, with no exception and no data read for any table."""
+    from data_validator_spark.config import TableConfig, ValidatorConfig
+    from data_validator_spark.runner import run_config
+
+    path = str(tmp_path / "people.parquet")
+    people.write.parquet(path)
+    cfg = ValidatorConfig(
+        tables=[
+            TableConfig({"parquetFile": path}, [{"type": "nullCheck", "column": "id"}]),
+            TableConfig(
+                {"parquetFile": path},
+                [{"type": "stringRegexCheck", "column": "name", "regex": "("}],
+            ),
+        ]
+    )
+    report = run_config(spark, cfg)
+    assert report["failed"] is True
+    [null_check] = report["tables"][0]["checks"]
+    assert null_check["events"] == []
+    [regex_check] = report["tables"][1]["checks"]
+    assert [e["msg"] for e in regex_check["events"]] == [
+        "Invalid regex '(': Unclosed group near index 1"
+    ]
+
+
 def test_string_regex_check_empty_regex_is_config_error(spark, people):
     chk = StringRegexCheck("name", regex="")
     assert chk.config_check(people) is True

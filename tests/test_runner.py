@@ -1,15 +1,23 @@
 """Runner orchestration: single-pass fusion, the one-scan detailed
-errors pass, uniqueCheck, and run_config fatal semantics. Mirrors
-reference ValidatorTableSpec / Main fatal handling."""
+errors pass, uniqueCheck, run_config fatal semantics, and the overlap
+of independent phases. Mirrors reference ValidatorTableSpec / Main
+fatal handling."""
 
 from __future__ import annotations
+
+import json
+import threading
+import time
 
 import pytest
 from pyspark.sql import functions as F
 
+from data_validator_spark import runner as runner_mod
 from data_validator_spark.config import TableConfig, ValidatorConfig
 from data_validator_spark.events import QuickCheckError, ValidatorError, ValidatorGood
+from data_validator_spark.report import build_report, report_json
 from data_validator_spark.runner import ValidatorTableRunner, run_config
+from data_validator_spark.validators import unique as unique_mod
 from data_validator_spark.validators.colstats import ColStats
 from data_validator_spark.validators.row_based import NegativeCheck, NullCheck, RangeCheck
 from data_validator_spark.validators.unique import UniqueCheck
@@ -270,3 +278,179 @@ def test_each_table_opens_once_per_run(spark, tdf):
     assert runner.failed is True
     assert runner.to_dict()["failed"] is True
     assert src.loads == 1
+
+
+# -- run_config runs independent phases at the same time ----------------
+
+
+@pytest.fixture(scope="module")
+def tdf_path(tdf, tmp_path_factory):
+    p = str(tmp_path_factory.mktemp("overlap") / "t.parquet")
+    tdf.write.parquet(p)
+    return p
+
+
+def meet_at(barrier, real):
+    """``real``, entered only once another thread reaches ``barrier``."""
+
+    def wrapped(*args):
+        barrier.wait()
+        return real(*args)
+
+    return wrapped
+
+
+def test_tables_quick_passes_overlap(spark, tdf_path, monkeypatch):
+    """Two tables' fused passes run at the same time: each waits at a
+    2-party barrier that only the other one can release."""
+    barrier = threading.Barrier(2, timeout=20)
+    monkeypatch.setattr(runner_mod, "run_cheap_checks", meet_at(barrier, runner_mod.run_cheap_checks))
+    cfg = ValidatorConfig(
+        tables=[
+            TableConfig({"parquetFile": tdf_path}, [{"type": "nullCheck", "column": "k1"}]),
+            TableConfig({"parquetFile": tdf_path}, [{"type": "negativeCheck", "column": "k2"}]),
+        ]
+    )
+    assert run_config(spark, cfg)["failed"] is False
+
+
+def test_quick_pass_and_unique_job_of_a_table_overlap(spark, tdf_path, monkeypatch):
+    """A table's fused pass and its uniqueCheck job run at the same time."""
+    barrier = threading.Barrier(2, timeout=20)
+    monkeypatch.setattr(runner_mod, "run_cheap_checks", meet_at(barrier, runner_mod.run_cheap_checks))
+    monkeypatch.setattr(
+        unique_mod, "duplicate_key_counts", meet_at(barrier, unique_mod.duplicate_key_counts)
+    )
+    cfg = ValidatorConfig(
+        tables=[
+            TableConfig(
+                {"parquetFile": tdf_path},
+                [{"type": "nullCheck", "column": "k1"}, {"type": "uniqueCheck", "columns": ["k1", "k2"]}],
+            )
+        ]
+    )
+    report = run_config(spark, cfg)
+    assert [c["failed"] for c in report["tables"][0]["checks"]] == [False, True]
+
+
+def masked(report: dict) -> str:
+    """The JSON report with timer durations, ``timestamp`` and
+    ``runtimeInfo`` zeroed; timer labels and event order stay."""
+
+    def walk(v):
+        if isinstance(v, dict):
+            return {k: 0 if k == "ns" and v.get("type") == "timer" else walk(x) for k, x in v.items()}
+        if isinstance(v, list):
+            return [walk(x) for x in v]
+        return v
+
+    return report_json(walk({**report, "timestamp": 0, "runtimeInfo": {}}))
+
+
+def test_report_is_deterministic_and_matches_sequential_run(spark, tdf_path):
+    """Three runs of a 3-table config give one report, equal to the
+    one composed by running each phase of each table in turn."""
+    cfg = ValidatorConfig(
+        num_errors_to_report=3,
+        tables=[
+            TableConfig(
+                {"parquetFile": tdf_path, "keyColumns": ["k1", "k2"]},
+                [
+                    {"type": "nullCheck", "column": "s"},
+                    {"type": "negativeCheck", "column": "v"},
+                    {"type": "colstats", "column": "v"},
+                    {"type": "uniqueCheck", "columns": ["k1", "k2"]},
+                    {"type": "uniqueCheck", "columns": ["k2"]},
+                ],
+            ),
+            TableConfig(
+                {"parquetFile": tdf_path, "condition": "v > 0"},
+                [
+                    {"type": "rangeCheck", "column": "v", "minValue": 5.0, "maxValue": 50.0},
+                    {"type": "colstats", "column": "k1"},
+                    {"type": "uniqueCheck", "columns": ["k1"]},
+                ],
+            ),
+            TableConfig(
+                {"parquetFile": tdf_path},
+                [{"type": "nullCheck", "column": "k1"}, {"type": "rowCount", "minNumRows": 1}],
+            ),
+        ],
+    )
+    concurrent = [masked(run_config(spark, cfg)) for _ in range(3)]
+
+    runners = cfg.build_runners()
+    config_failed = any([r.config_check(spark) for r in runners])
+    assert not config_failed
+    for r in runners:
+        r.quick_checks(spark)
+    for r in runners:
+        r.costly_checks(spark)
+    sequential = masked(build_report(cfg, runners, any(r.failed for r in runners), spark))
+
+    assert concurrent == [sequential] * 3
+    events = [e for t in json.loads(sequential)["tables"] for e in t["events"]]
+    assert any(e["type"] == "error" and "QuickChecks on" in e["msg"] for e in events)
+    assert json.loads(sequential)["failed"] is True
+
+
+def test_run_jobs_keep_the_callers_job_group(spark, tdf_path):
+    """Every job of a run lands in the job group set around it: the
+    chains' threads inherit the caller's local properties."""
+    tracker = spark.sparkContext.statusTracker()
+    cfg = ValidatorConfig(
+        tables=[
+            TableConfig(
+                {"parquetFile": tdf_path, "keyColumns": ["k1", "k2"]},
+                [
+                    {"type": "nullCheck", "column": "s"},
+                    {"type": "colstats", "column": "v"},
+                    {"type": "uniqueCheck", "columns": ["k1", "k2"]},
+                ],
+            ),
+            TableConfig({"parquetFile": tdf_path}, [{"type": "uniqueCheck", "columns": ["k2"]}]),
+        ]
+    )
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    with count_jobs(spark, "run-config-group") as cj:
+        run_config(spark, cfg)
+    assert cj.n >= 5  # 2 fused passes, colstats, detailed errors, 2 unique jobs
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+
+
+def test_chain_error_reaches_caller_after_other_chains(spark, tdf_path, monkeypatch):
+    """A chain that raises does not cut the others short: run_config
+    waits for every chain, then re-raises the first error in table
+    order, with no Spark job left running."""
+    finished = []
+    real_cheap, real_dup = runner_mod.run_cheap_checks, unique_mod.duplicate_key_counts
+
+    def cheap(df, checks):
+        if checks[0].check_type == "nullCheck":  # table 0: fails last
+            time.sleep(1.0)
+            raise RuntimeError("table 0 quick chain")
+        if checks[0].check_type == "negativeCheck":  # table 1: fails first
+            raise RuntimeError("table 1 quick chain")
+        return real_cheap(df, checks)
+
+    def dup(df, column_sets):
+        time.sleep(1.0)
+        out = real_dup(df, column_sets)
+        finished.append("unique")
+        return out
+
+    monkeypatch.setattr(runner_mod, "run_cheap_checks", cheap)
+    monkeypatch.setattr(unique_mod, "duplicate_key_counts", dup)
+    cfg = ValidatorConfig(
+        tables=[
+            TableConfig({"parquetFile": tdf_path}, [{"type": "nullCheck", "column": "k1"}]),
+            TableConfig(
+                {"parquetFile": tdf_path},
+                [{"type": "negativeCheck", "column": "v"}, {"type": "uniqueCheck", "columns": ["k1"]}],
+            ),
+        ]
+    )
+    with pytest.raises(RuntimeError, match="table 0 quick chain"):
+        run_config(spark, cfg)
+    assert finished == ["unique"]
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []

@@ -11,7 +11,12 @@ from pyspark.sql import functions as F
 
 from data_validator_spark.queries.analytics import hourly_event_counts
 from data_validator_spark.streaming import StreamingValidator
-from data_validator_spark.validators.row_based import NegativeCheck, NullCheck, RangeCheck
+from data_validator_spark.validators.row_based import (
+    NegativeCheck,
+    NullCheck,
+    RangeCheck,
+    StringRegexCheck,
+)
 
 SCHEMA = "id int, v double, s string"
 
@@ -53,9 +58,9 @@ def test_streaming_validation_per_micro_batch(spark, tmp_path):
 
 
 def test_streaming_validator_config_checks_before_start(spark, tmp_path):
-    """A bad check config (a range with no bounds, a missing column)
-    fails start() from the stream's schema, before any query runs: no
-    micro-batch ever sees it."""
+    """A bad check config (a range with no bounds, a missing column, a
+    regex Java cannot compile) fails start() from the stream's schema,
+    before any query runs: no micro-batch ever sees it."""
     src = str(tmp_path / "stream_src")
     _write_batch(spark, src, [(1, 1.0, "a")])
     stream = spark.readStream.schema(SCHEMA).parquet(src)
@@ -64,6 +69,7 @@ def test_streaming_validator_config_checks_before_start(spark, tmp_path):
     for bad, message in [
         (lambda: RangeCheck("v"), "Must defined minValue or maxValue or both"),
         (lambda: NullCheck("missing"), "Column: 'missing' not found in schema"),
+        (lambda: StringRegexCheck("s", "[a-"), r"Invalid regex '\[a-': Illegal character range"),
     ]:
         sv = StreamingValidator(lambda: [NegativeCheck("v"), bad()])
         with pytest.raises(ValueError, match=message):
