@@ -112,24 +112,6 @@ FACT_BUCKETS = 32
 FACT_WM_VERSION = 4  # bump to rebuild every raw-fact copy (4: one file per bucket from any source)
 
 
-def _walk_signature(path: str, sign: Callable[[str], list], suffix: str = "") -> list:
-    """Sorted [relname, *sign(file)] for every regular file under
-    ``path`` whose name ends with ``suffix`` (or for ``path`` itself
-    when it is a file): the one source-tree walk behind every
-    watermark signature."""
-    import os
-
-    if os.path.isfile(path):
-        return [[os.path.basename(path), *sign(path)]]
-    out = []
-    for dirpath, _dirs, fnames in os.walk(path):
-        for f in fnames:
-            if f.endswith(suffix):
-                p = os.path.join(dirpath, f)
-                out.append([os.path.relpath(p, path), *sign(p)])
-    return sorted(out)
-
-
 def _source_signature(path: str) -> list:
     """Sorted [relname, size, mtime_ns] of every regular file under
     ``path`` (or of the file itself) — a cheap rewrite detector.
@@ -146,7 +128,14 @@ def _source_signature(path: str) -> list:
         st = os.stat(p)
         return [st.st_size, st.st_mtime_ns]
 
-    out = _walk_signature(path, stat)
+    if os.path.isfile(path):
+        out = [[os.path.basename(path), *stat(path)]]
+    else:
+        out = sorted(
+            [os.path.relpath(os.path.join(d, f), path), *stat(os.path.join(d, f))]
+            for d, _dirs, fnames in os.walk(path)
+            for f in fnames
+        )
     if not out:
         raise FileNotFoundError(
             f"cannot compute source-file signature for {path!r}: no local "
@@ -155,84 +144,6 @@ def _source_signature(path: str) -> list:
             "a source rewrite."
         )
     return out
-
-
-def _footer_digest(path: str) -> str:
-    """md5 of the parquet footer byte range (metadata + page-index
-    tail) — a content signal that catches most of the rewrite class
-    the (size, mtime_ns) signature cannot: a same-size, mtime-
-    preserving rewrite (`cp -p` of altered same-size files, restore
-    tools). The footer carries row counts and per-row-group min/max
-    stats, so a value-visible rewrite USUALLY perturbs it.
-
-    Residual gap (ADVICE r15 — documented, not closed): a same-size
-    mtime-preserving rewrite that changes only INTERIOR values while
-    leaving every footer statistic intact (possible for fixed-width
-    uncompressed columns whose per-row-group min/max, row counts and
-    page sizes all survive the edit) produces a byte-identical footer
-    and is NOT detected. Closing it would mean hashing full file
-    contents — a full-corpus read per verification, unjustifiable at
-    100 TB for an adversarial-rewrite scenario no normal data tool
-    produces (writers rewrite files wholesale, changing sizes or
-    mtimes, which the base signature already catches). verify="footer"
-    consumers inherit this bound; see ensure_bucketed_fact.
-
-    Deliberately NOT cached by (size, mtime_ns): the whole point is to
-    see through rewrites those fields miss, so a stat-keyed cache
-    would serve the stale digest in exactly the scenario this guards.
-    Content consumers pay one footer tail-read per file per call."""
-    import hashlib
-    import os
-    import struct
-
-    st = os.stat(path)
-    with open(path, "rb") as f:
-        f.seek(-8, os.SEEK_END)
-        flen, magic = struct.unpack("<I4s", f.read(8))
-        if magic != b"PAR1":
-            raise ValueError(f"{path!r} is not a parquet file (no PAR1 magic)")
-        span = min(st.st_size, flen + 8)
-        f.seek(-span, os.SEEK_END)
-        return hashlib.md5(f.read(span)).hexdigest()
-
-
-def _footer_signature(path: str) -> list:
-    """Sorted [relname, footer_md5] for every parquet data file under
-    ``path`` (non-parquet sidecars/_SUCCESS files are skipped)."""
-    return _walk_signature(path, lambda p: [_footer_digest(p)], ".parquet")
-
-
-# verify="full" reads every source byte per verification, so it is
-# gated to sources whose total size stays under this bound (default
-# 256 MiB — the full read costs ~0.1s there; at the 100 TB fact scale
-# the mode degrades to footer verification with a warning, because a
-# full-corpus read per validator call is never the right trade).
-FULL_WM_MAX_BYTES = 256 << 20
-
-
-def _content_signature(path: str) -> list:
-    """Sorted [relname, sha256(all file bytes)] for every regular file
-    under ``path`` — the full-content watermark behind
-    verify="full" (ADVICE r15 residual: a same-size, mtime- and
-    footer-statistic-preserving interior rewrite evades both the stat
-    signature and the footer digest; hashing every byte is the only
-    signal that closes it). sha256, not md5 (ADVICE r17): this
-    watermark's contract is defending against ADVERSARIAL source
-    rewrites, and md5 is collision-broken — an adversary who
-    influenced the original bytes could substitute a chosen-prefix
-    collision that passes verification. Same streaming read cost.
-    Deliberately uncached, like _footer_digest and for the same
-    reason."""
-    import hashlib
-
-    def sha256(p):
-        m = hashlib.sha256()
-        with open(p, "rb") as f:
-            for chunk in iter(lambda: f.read(1 << 20), b""):
-                m.update(chunk)
-        return [m.hexdigest()]
-
-    return _walk_signature(path, sha256)
 
 
 def copy_name(sf: str, *parts: str) -> str:
@@ -302,17 +213,17 @@ def ensure_copy(
     watermark: dict,
     build: Callable[[], DataFrame],
     on_drop: Callable[[], object] | None = None,
-    record: Callable[[], dict] | None = None,
 ) -> str:
     """Idempotently materialize + register the at-rest bucketed copy
     ``table`` (data under copy_path, external to the catalog); returns
     the catalog table name. Every at-rest copy goes through here.
 
     The copy is current when its sidecar agrees with ``watermark`` on
-    every key of ``watermark`` (extra sidecar keys — another consumer's
-    verification data — are ignored, so consumers that verify
-    differently never thrash each other's copy). Verified on every
-    call, never memoized: a same-path source rewrite must be seen.
+    every key of ``watermark``; extra sidecar keys are ignored, so a
+    copy whose sidecar also carries older verification data (parquet
+    footer digests, content hashes) is served, not rebuilt. Verified on
+    every call, never memoized: a same-path source rewrite must be
+    seen.
 
     - catalog entry + current → return it (after _refuse_foreign);
     - files on disk + current → metadata-only CREATE TABLE … LOCATION
@@ -322,9 +233,8 @@ def ensure_copy(
     - otherwise → drop the catalog entry and files, call ``on_drop`` if
       a copy existed (so caches persisted over its files can be
       evicted before they fail to read them), write ``build()``
-      through write_bucketed, and write the sidecar
-      (``BUCKET_SIDECAR``): ``watermark`` plus ``record()`` (data
-      recorded for other consumers but not verified by this one)."""
+      through write_bucketed, and write ``watermark`` as the sidecar
+      (``BUCKET_SIDECAR``)."""
     import json
     import os
     import shutil
@@ -355,10 +265,9 @@ def ensure_copy(
         shutil.rmtree(path, ignore_errors=True)
         if on_drop is not None:
             on_drop()
-    stamp = {**watermark, **(record() if record else {})}
     write_bucketed(build(), table, keys, num_buckets, path=path)
     with open(os.path.join(path, BUCKET_SIDECAR), "w") as f:
-        json.dump(stamp, f)
+        json.dump(watermark, f)
     return table
 
 
@@ -368,7 +277,6 @@ def ensure_bucketed_fact(
     name: str,
     key: str,
     num_buckets: int = FACT_BUCKETS,
-    verify: str = "stat",
 ) -> str:
     """The at-rest copy of source table ``name`` bucketed on ``key``;
     returns the catalog table name. The build cost amortizes like any
@@ -381,55 +289,19 @@ def ensure_bucketed_fact(
     fact⨝fact meets AND on o_custkey for the per-customer family) —
     and they must not thrash each other's watermark.
 
-    ``verify`` picks how hard the copy is checked against its source
-    on every call:
-
-    - ``"stat"``: the source-file signature (_source_signature) —
-      catches every rewrite that touches a size or mtime_ns;
-    - ``"footer"``: additionally the parquet footer digests
-      (_footer_digest, one tail read per source file per call) — for
-      validator-class consumers that must not trust an mtime/size-
-      preserving rewrite either, up to the stats-preserving residual
-      documented there;
-    - ``"full"``: additionally sha256 of every source byte
-      (_content_signature), closing that residual for sources under
-      FULL_WM_MAX_BYTES; above the bound it degrades to ``"footer"``
-      with a warning (a full-corpus read per validator call is never
-      the right trade at 100 TB).
-
-    Builds always record footer digests, so a later footer consumer
-    verifies a stat-built copy without a rebuild; a full consumer
-    rebuilds a copy without a content signature once and records it.
-    The content signature is taken BEFORE the rebuild: a source
-    rewritten during the rebuild window mismatches on the next call
-    and rebuilds again, where a post-rebuild hash would bless a copy
-    built from other bytes. Dropping a stale copy evicts the session
-    caches of ``sf`` (ADVICE r18/r19): a cached relation persisted over
-    the dropped files would otherwise fail with FAILED_READ_FILE."""
+    The copy is checked against its source on every call by the
+    source-file signature (_source_signature): any rewrite that
+    touches a size or mtime_ns rebuilds it. Checks that must see
+    every source byte read the source itself, not a copy. Dropping a
+    stale copy evicts the session caches of ``sf`` (ADVICE r18/r19): a
+    cached relation persisted over the dropped files would otherwise
+    fail with FAILED_READ_FILE."""
     import os
 
     from data_validator_spark.queries import evict_session_caches, load
 
-    if verify not in ("stat", "footer", "full"):
-        raise ValueError(f"verify must be 'stat', 'footer' or 'full', not {verify!r}")
     src = os.path.join(str(sf), f"{name}.parquet")
     wm = {"version": FACT_WM_VERSION, "key": key, "files": _source_signature(src)}
-    if verify == "full" and sum(size for _rel, size, _mt in wm["files"]) > FULL_WM_MAX_BYTES:
-        import warnings
-
-        warnings.warn(
-            f"verify='full' on {name!r} under {sf!r} exceeds "
-            f"FULL_WM_MAX_BYTES ({FULL_WM_MAX_BYTES}); degrading to the "
-            "footer-digest check (its stats-preserving-rewrite residual "
-            "applies — see _footer_digest)",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-        verify = "footer"
-    if verify != "stat":
-        wm["footers"] = _footer_signature(src)
-    if verify == "full":
-        wm["content_sha256"] = _content_signature(src)
     return ensure_copy(
         spark,
         copy_name(sf, "dv_bkt", name, key),
@@ -438,7 +310,6 @@ def ensure_bucketed_fact(
         wm,
         lambda: load(spark, sf, name),
         on_drop=lambda: evict_session_caches(sf),
-        record=(lambda: {"footers": _footer_signature(src)}) if verify == "stat" else None,
     )
 
 
@@ -448,7 +319,6 @@ def bucketed_fact(
     name: str,
     key: str,
     num_buckets: int = FACT_BUCKETS,
-    verify: str = "stat",
 ) -> DataFrame:
     """The DataFrame-returning front door every query consumer uses:
     serve the at-rest bucketed copy (ensure_bucketed_fact) when one can
@@ -459,7 +329,7 @@ def bucketed_fact(
     warning makes the degrade visible instead of silent."""
     try:
         return spark.table(
-            ensure_bucketed_fact(spark, sf, name, key, num_buckets, verify)
+            ensure_bucketed_fact(spark, sf, name, key, num_buckets)
         )
     except FileNotFoundError as e:
         import warnings

@@ -445,6 +445,9 @@ def q_reconciliation_check(spark, sf):
     audit reports 100% mismatch — exactly what it is built to
     surface.)
 
+    Both tables are read through load(): a check reads its sources as
+    they are on disk, never an at-rest copy that could be stale.
+
     Scale shape: lineitem collapses to per-order totals with ONE
     map-side-combined groupBy keyed on l_orderkey; the comparison
     join is then key-to-key on two same-keyed relations (AQE plans
@@ -462,21 +465,7 @@ def q_reconciliation_check(spark, sf):
     widens (decimal there, since a global sum has no bounded-group
     argument).
     """
-    # r14: both facts read their at-rest orderkey-bucketed copies
-    # (SCALE.md r14 at-scale census): the per-order groupBy inherits
-    # the scan's HashPartitioning(l_orderkey) — no exchange — and the
-    # header-vs-lines comparison join is key-to-key on two relations
-    # ALREADY partitioned on k, so at 100 TB the whole reconciliation
-    # moves zero fact rows across the network. verify="full"
-    # (r17, r16 verdict item 5): a reconciliation CHECK must not
-    # trust any source rewrite — under FULL_WM_MAX_BYTES the copies
-    # verify sha256s of EVERY source byte per call (closing the r15
-    # footer-statistic-preserving residual); above the bound the mode
-    # degrades to the footer digest with a warning — see
-    # ensure_bucketed_fact.
-    from data_validator_spark.operators.bucketing import bucketed_fact
-
-    li = bucketed_fact(spark, sf, "lineitem", "l_orderkey", verify="full").select(
+    li = load(spark, sf, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_discount", "l_tax"
     )
     line_units = F.floor(
@@ -486,7 +475,7 @@ def q_reconciliation_check(spark, sf):
     computed = li.groupBy(F.col("l_orderkey").alias("k")).agg(
         F.sum(line_units).alias("line_total")
     )
-    orders = bucketed_fact(spark, sf, "orders", "o_orderkey", verify="full").select(
+    orders = load(spark, sf, "orders").select(
         F.col("o_orderkey").alias("k"),
         F.floor(F.col("o_totalprice") * F.lit(1000000.0) + F.lit(0.5))
         .cast("long")

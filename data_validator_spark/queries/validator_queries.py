@@ -3,27 +3,36 @@
 null_check, negative_check, range_check, string_length_check,
 string_regex_check, column_max_check, combined_single_pass and
 detailed_errors route through the real check classes (col_test /
-agg_exprs), so the oracle exercises library code, not parallel
-reimplementations. row_count, column_sum_check, unique_check,
-col_stats and col_stats_histogram spell their aggregate directly,
-and col_quantiles and profile_table extend the reference's profiling
-surface with no check class behind them. Reference parity is
-documented per check in data_validator_spark/validators/*
-(NullCheck.scala, RangeCheck.scala, ColumnBased.scala,
-UniqueCheck.scala, ColStats via stats/*.scala).
+agg_exprs). row_count, unique_check, col_stats and
+col_stats_histogram run the validator's own passes on the source
+table (run_cheap_checks, ColStats, duplicate_key_counts), so the
+oracle checks the code a validator run executes, not a parallel
+reimplementation. column_sum_check spells an exact decimal sum (see
+its docstring), and col_quantiles and profile_table extend the
+reference's profiling surface with no check class behind them.
+Reference parity is documented per check in
+data_validator_spark/validators/* (NullCheck.scala, RangeCheck.scala,
+ColumnBased.scala, UniqueCheck.scala, ColStats via stats/*.scala).
+
+Every query reads its source through load(): a check validates the
+table as it is on disk, so there is no at-rest copy to verify.
 
 Scale notes: every aggregate here is a single fused scan (map-side
 partials, no groupBy shuffle) except unique_check (one shuffle on the
-key hash — unavoidable) and the histogram (grouped on a 10-value bin
-key). detailed_errors is filter+project+sort+limit: the filter reaches
-parquet as PushedFilters, TakeOrderedAndProject bounds memory.
+key hash — unavoidable) and profile_table (one shuffle of collapsed
+(column, value) pairs); the histogram is a second fused scan of ten
+conditional sums. detailed_errors is filter+project+sort+limit: the
+filter reaches parquet as PushedFilters, TakeOrderedAndProject bounds
+memory.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from data_validator_spark.queries import DEC, dsum, load, sql_dsum
+from data_validator_spark.queries import dsum, load, sql_dsum
+from data_validator_spark.validators.base import run_cheap_checks
+from data_validator_spark.validators.colstats import ColStats
 from data_validator_spark.validators.column_based import ColumnMaxCheck
 from data_validator_spark.validators.row_based import (
     NegativeCheck,
@@ -32,12 +41,14 @@ from data_validator_spark.validators.row_based import (
     StringLengthCheck,
     StringRegexCheck,
 )
+from data_validator_spark.validators.unique import duplicate_key_counts
 
 
 # -- 1. row_count ----------------------------------------------------------
 def q_row_count(spark, sf):
-    df = load(spark, sf, "lineitem")
-    return df.agg(F.count(F.lit(1)).alias("row_cnt"))
+    """The row count of the validator's fused quick-check pass."""
+    count, _failed = run_cheap_checks(load(spark, sf, "lineitem"), [])
+    return spark.createDataFrame([(count,)], "row_cnt bigint")
 
 
 SQL_ROW_COUNT = "SELECT count(*) AS row_cnt FROM lineitem"
@@ -122,6 +133,10 @@ SQL_COLUMN_MAX_CHECK = "SELECT max(l_quantity) AS max_val FROM lineitem"
 
 # -- 8. column_sum_check ---------------------------------------------------
 def q_column_sum_check(spark, sf):
+    """Exact decimal sum of l_extendedprice. Not ColumnSumCheck: that
+    check sums doubles, so its result depends on the summation order.
+    At sf0.01 it gave 3183256271.62998 against the oracle's exact
+    3183256271.63, and a different value under 1, 4 and 64 partitions."""
     df = load(spark, sf, "lineitem")
     return df.agg(dsum(F.col("l_extendedprice"), "sum_val"))
 
@@ -131,31 +146,11 @@ SQL_COLUMN_SUM_CHECK = f"SELECT {sql_dsum('l_extendedprice', 'sum_val')} FROM li
 
 # -- 9. unique_check -------------------------------------------------------
 def q_unique_check(spark, sf):
-    # UniqueCheck.scala: groupBy(keys).count.where(count>1).count
-    # r14: scan the at-rest orderkey-bucketed copy — the composite-key
-    # census needs ClusteredDistribution(l_orderkey, l_linenumber),
-    # which the scan's HashPartitioning(l_orderkey) (a subset of the
-    # grouping keys) already satisfies, so the check's ONLY wide
-    # exchange disappears (SCALE.md r14 at-scale census). The copy is
-    # served only while its sidecar matches the CURRENT source's
-    # (relname, size, mtime_ns) set — and, because this is a
-    # data-QUALITY check, verify="full" (r17, r16 verdict item 5)
-    # verifies the source bytes end-to-end where the size bound allows
-    # (sha256 of every byte, catching even the footer-statistic-
-    # preserving interior rewrite that evaded the r15 footer digest);
-    # above FULL_WM_MAX_BYTES it degrades to the footer check with a
-    # warning — see ensure_bucketed_fact. The config-driven validator
-    # path (validators/row_based.py) still reads whatever table the
-    # user configured.
-    from data_validator_spark.operators.bucketing import bucketed_fact
-
-    df = bucketed_fact(spark, sf, "lineitem", "l_orderkey", verify="full")
-    dups = (
-        df.groupBy("l_orderkey", "l_linenumber")
-        .count()
-        .where(F.col("count") > 1)
-    )
-    return dups.agg(F.count(F.lit(1)).alias("duplicate_keys"))
+    """Key tuples occurring more than once, from the uniqueCheck job
+    (UniqueCheck.scala: groupBy(keys).count.where(count>1).count)."""
+    keys = ["l_orderkey", "l_linenumber"]
+    counts = duplicate_key_counts(load(spark, sf, "lineitem"), [keys])
+    return spark.createDataFrame([(counts[frozenset(keys)],)], "duplicate_keys bigint")
 
 
 SQL_UNIQUE_CHECK = (
@@ -166,45 +161,29 @@ SQL_UNIQUE_CHECK = (
 
 
 # -- 10. col_stats ---------------------------------------------------------
+def _col_stats(spark, sf):
+    """The source and a ColStats of l_extendedprice after the
+    validator's first pass."""
+    df = load(spark, sf, "lineitem")
+    chk = ColStats("l_extendedprice")
+    run_cheap_checks(df, [chk])
+    return df, chk
+
+
 def q_col_stats(spark, sf):
-    """count/mean/min/max/stdDev of l_extendedprice.
-
-    mean/stddev derive from exact decimal sums so the result is
-    independent of aggregation order; stddev uses the sample formula
-    (n-1) like the reference's FirstPassStats.
-
-    r19: the scan rides the l_orderkey-bucketed copy — 32 bucket files
-    feed the decimal partial sums directly, replacing the spread()
-    round-robin exchange (and its local sort) the ~3-split raw scan
-    needed for parallelism. A/B at sf0.1: 0.67s → 0.21s best-of-5,
-    identical output; at real scale the raw scan already has thousands
-    of splits and both shapes are the plain scan + partial agg.
-    Copy-trusting validator policy (r15): opts in through the
-    per-call footer-digest verification (verify="footer"), like
-    unique_check/reconciliation_check.
-    """
-    from data_validator_spark.operators.bucketing import bucketed_fact
-
-    df = bucketed_fact(spark, sf, "lineitem", "l_orderkey", verify="footer").select(
-        "l_extendedprice"
-    )
-    c = F.col("l_extendedprice")
-    agg = df.agg(
-        F.count(c).alias("cnt"),
-        F.sum(c.cast(DEC)).alias("s"),
-        F.sum((c * c).cast(DEC)).alias("s2"),
-        F.min(c).alias("min_val"),
-        F.max(c).alias("max_val"),
-    )
-    n = F.col("cnt").cast("double")
-    s = F.col("s").cast("double")
-    s2 = F.col("s2").cast("double")
-    return agg.select(
-        F.col("cnt"),
-        F.round(s / n, 4).alias("mean_val"),
-        F.col("min_val"),
-        F.col("max_val"),
-        F.round(F.sqrt((s2 - s * s / n) / (n - F.lit(1.0))), 4).alias("stddev_val"),
+    """count/mean/min/max/stdDev of l_extendedprice from ColStats (the
+    sample stddev, n-1, like the reference's FirstPassStats). Mean and
+    stdDev are rounded to 4 places, as the oracle rounds them."""
+    st = _col_stats(spark, sf)[1].stats
+    row = (st["count"], st["mean"], st["min"], st["max"], st["stdDev"])
+    return spark.createDataFrame(
+        [row], "cnt bigint, mean_val double, min_val double, max_val double, stddev_val double"
+    ).select(
+        "cnt",
+        F.round("mean_val", 4).alias("mean_val"),
+        "min_val",
+        "max_val",
+        F.round("stddev_val", 4).alias("stddev_val"),
     )
 
 
@@ -227,21 +206,16 @@ FROM a
 
 # -- 10b. col_stats histogram (10 equi-width bins) -------------------------
 def q_col_stats_histogram(spark, sf):
-    """Second-pass equi-width histogram (stats/SecondPassStats parity):
-    bin = clamp(floor((x-min)/width), 0, 9) over pass-1 min/max."""
-    df = load(spark, sf, "lineitem")
-    c = F.col("l_extendedprice")
-    mm = df.agg(F.min(c).alias("mn"), F.max(c).alias("mx"))
-    j = df.crossJoin(F.broadcast(mm))
-    width = (F.col("mx") - F.col("mn")) / F.lit(10.0)
-    bin_ = F.least(
-        F.floor((c - F.col("mn")) / width), F.lit(9)
-    ).cast("bigint")
-    return (
-        j.select(bin_.alias("bin"))
-        .groupBy("bin")
-        .agg(F.count(F.lit(1)).alias("bin_count"))
-    )
+    """The non-empty bins of the ColStats second pass (stats/
+    SecondPassStats parity): bin = clamp(floor((x-min)/width), 0, 9)
+    over pass-1 min/max."""
+    df, chk = _col_stats(spark, sf)
+    rows = []
+    if chk.needs_second_pass():
+        chk.sink_histogram(df.agg(*chk.histogram_exprs()).collect()[0].asDict())
+        bins = chk.stats["histogram"]["bins"]
+        rows = [(i, b["count"]) for i, b in enumerate(bins) if b["count"]]
+    return spark.createDataFrame(rows, "bin bigint, bin_count bigint")
 
 
 SQL_COL_STATS_HISTOGRAM = """
@@ -389,16 +363,8 @@ def q_profile_table(spark, sf):
     stream that collapses per column independently — measured
     1.06→0.77 s at sf0.1, and at any scale the shuffle carries one row
     per distinct value per partition, never a row per input row
-    (tests/test_approx_profile.py asserts the Expand-free plan).
-
-    r19: the scan rides the l_orderkey-bucketed copy (32-way parallel
-    pair fan-out + partial collapse instead of the raw file's ~3
-    splits; A/B at sf0.1 1.01s → 0.67s best-of-5, identical output),
-    opting into the copy-trusting validator policy via the per-call
-    footer-digest verification (verify="footer")."""
-    from data_validator_spark.operators.bucketing import bucketed_fact
-
-    df = bucketed_fact(spark, sf, "lineitem", "l_orderkey", verify="footer")
+    (tests/test_approx_profile.py asserts the Expand-free plan)."""
+    df = load(spark, sf, "lineitem")
     arms = [
         F.struct(F.lit(c).alias("column_name"), F.col(c).alias("v"))
         for c in _PROFILE_COLS

@@ -370,38 +370,153 @@ def _plain_parquet(path, offset: int, n: int = 400):
     pq.write_table(t, path, use_dictionary=False, compression="NONE")
 
 
-def test_content_watermark_catches_mtime_preserving_rewrite(spark, tmp_path):
-    """ADVICE r14: the stat signature (relname, size, mtime_ns) is
-    blind to a same-size rewrite that restores mtime (cp -p, restore
-    tools). A verify="footer" consumer must verify parquet footer
-    digests and rebuild; the stat-only path serves the copy (that is
-    its documented guarantee, asserted here so the gap stays visible)."""
+def test_copy_with_retired_sidecar_keys_is_served(spark, tmp_path):
+    """A sidecar may carry keys beyond the watermark's: copies built
+    when copies were also footer- and content-verified recorded
+    "footers" and "content_sha256". Only the watermark's own keys are
+    compared, so such a copy is served as it is, from the catalog and
+    re-registered from disk, never rebuilt."""
+    import json as _json
     import os as _os
 
-    from data_validator_spark.operators.bucketing import ensure_bucketed_fact
-    from data_validator_spark.queries import evict_session_caches
+    from data_validator_spark.operators.bucketing import (
+        BUCKET_SIDECAR,
+        copy_path,
+        ensure_bucketed_fact,
+    )
 
-    src = tmp_path / "orders.parquet"
-    _plain_parquet(str(src), offset=0)
+    _mini_facts(spark, tmp_path, n=90)
     sf = str(tmp_path)
     try:
-        t = ensure_bucketed_fact(spark, sf, "orders", "o_orderkey", verify="footer")
-        assert spark.table(t).agg({"o_custkey": "max"}).collect()[0][0] == 399
-        st = _os.stat(src)
-        _plain_parquet(str(src), offset=1000)  # value-visible rewrite...
-        assert _os.stat(src).st_size == st.st_size  # ...at the same size
-        _os.utime(src, ns=(st.st_atime_ns, st.st_mtime_ns))  # ...and mtime
-        evict_session_caches(sf)
-        # stat-only consumers cannot see this rewrite — documented gap
-        assert (
-            ensure_bucketed_fact(spark, sf, "orders", "o_orderkey") == t
-        )
-        # the content-verified path must catch it and rebuild
-        ensure_bucketed_fact(spark, sf, "orders", "o_orderkey", verify="footer")
-        evict_session_caches(sf)
-        assert spark.table(t).agg({"o_custkey": "max"}).collect()[0][0] == 1399
+        t = ensure_bucketed_fact(spark, sf, "orders", "o_orderkey")
+        before = spark.table(t).collect()
+        sc = _os.path.join(copy_path(spark, t), BUCKET_SIDECAR)
+        with open(sc) as f:
+            stamp = _json.load(f)
+        stamp["footers"] = [[rel, "0" * 32] for rel, _size, _mt in stamp["files"]]
+        stamp["content_sha256"] = [[rel, "0" * 64] for rel, _size, _mt in stamp["files"]]
+        with open(sc, "w") as f:
+            _json.dump(stamp, f)
+        mtime = _os.stat(sc).st_mtime_ns
+        assert ensure_bucketed_fact(spark, sf, "orders", "o_orderkey") == t
+        spark.sql(f"DROP TABLE {t}")  # a later session: files on disk only
+        assert ensure_bucketed_fact(spark, sf, "orders", "o_orderkey") == t
+        assert _os.stat(sc).st_mtime_ns == mtime
+        assert sorted(spark.table(t).collect()) == sorted(before)
     finally:
         _drop_fact_tables(spark, sf)
+
+
+def _plain_lineitem_orders(sf, n: int = 400):
+    """Mini lineitem and orders for the validator queries, PLAIN-encoded
+    and uncompressed like _plain_parquet: every l_extendedprice is a
+    distinct double stored as its 8 raw bytes. The last line of the
+    last order reuses line number 1, so unique_check finds one
+    duplicate key."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    lines = {
+        "l_orderkey": pa.array([i // 4 for i in range(n)], pa.int64()),
+        "l_linenumber": pa.array([i % 4 + 1 for i in range(n - 1)] + [1], pa.int32()),
+        "l_quantity": pa.array([float(i % 50 + 1) for i in range(n)]),
+        "l_extendedprice": pa.array([1000.0 + 2.5 * i for i in range(n)]),
+        "l_discount": pa.array([(i % 10) / 100 for i in range(n)]),
+        "l_tax": pa.array([(i % 8) / 100 for i in range(n)]),
+    }
+    orders = {
+        "o_orderkey": pa.array(range(n // 4), pa.int64()),
+        "o_totalprice": pa.array([4200.0 + 10.0 * k for k in range(n // 4)]),
+    }
+    for name, cols in (("lineitem", lines), ("orders", orders)):
+        pq.write_table(
+            pa.table(cols), f"{sf}/{name}.parquet", use_dictionary=False, compression="NONE"
+        )
+
+
+def _footer_bytes(path) -> bytes:
+    """The parquet footer: metadata, its length and the PAR1 magic."""
+    import struct
+
+    blob = path.read_bytes()
+    (flen,) = struct.unpack("<I", blob[-8:-4])
+    return blob[-(flen + 8):]
+
+
+def test_validator_queries_see_footer_preserving_source_rewrite(spark, tmp_path):
+    """A same-size, mtime-restoring rewrite of one interior value leaves
+    every footer statistic unchanged. Every validator-class query must
+    still answer for the rewritten source, as its DuckDB oracle does."""
+    import os as _os
+    import struct
+
+    import duckdb
+
+    from data_validator_spark.queries import build_registry
+
+    queries, oracles = build_registry()
+    names = ("col_stats", "profile_table", "unique_check", "reconciliation_check")
+    sf = str(tmp_path)
+    _plain_lineitem_orders(sf)
+
+    def norm(rows):
+        return sorted(
+            tuple(round(v, 9) if isinstance(v, float) else v for v in r) for r in rows
+        )
+
+    for name in names:
+        queries[name](spark, sf).collect()
+    src = tmp_path / "lineitem.parquet"
+    st, footer = _os.stat(src), _footer_bytes(src)
+    blob = src.read_bytes()
+    old, new = struct.pack("<d", 1250.0), struct.pack("<d", 1750.0)  # rows 100 and 300
+    assert blob.count(old) == 1
+    src.write_bytes(blob.replace(old, new))
+    _os.utime(src, ns=(st.st_atime_ns, st.st_mtime_ns))
+    assert _os.stat(src).st_size == st.st_size
+    assert _os.stat(src).st_mtime_ns == st.st_mtime_ns
+    assert _footer_bytes(src) == footer
+
+    con = duckdb.connect()
+    for t in ("lineitem", "orders"):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
+    try:
+        for name in names:
+            got = norm(queries[name](spark, sf).collect())
+            assert got == norm(con.execute(oracles[name]).fetchall()), name
+    finally:
+        con.close()
+
+
+def test_validator_queries_run_validator_code_on_their_source():
+    """The validator-class registry entries read their source, never an
+    at-rest copy, and the check entries run the validator's own code,
+    directly or through a helper of their module."""
+    import ast
+    from pathlib import Path
+
+    qdir = Path(__file__).resolve().parent.parent / "data_validator_spark" / "queries"
+
+    def functions(module):
+        tree = ast.parse((qdir / module).read_text())
+        return {n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)}
+
+    def names(fn):
+        return {n.id for n in ast.walk(fn) if isinstance(n, ast.Name)} | {
+            n.attr for n in ast.walk(fn) if isinstance(n, ast.Attribute)
+        }
+
+    copy_readers = {"bucketed_fact", "ensure_bucketed_fact"}
+    vq = functions("validator_queries.py")
+    checked = {**vq, "q_reconciliation_check": functions("quality_ops.py")["q_reconciliation_check"]}
+    offenders = [f for f, node in checked.items() if names(node) & copy_readers]
+    assert not offenders, f"validator-class queries reading a copy: {offenders}"
+
+    validator_code = {"run_cheap_checks", "ColStats", "duplicate_key_counts"}
+    for q in ("q_row_count", "q_unique_check", "q_col_stats", "q_col_stats_histogram"):
+        seen = names(vq[q])
+        seen |= {n for h in seen & vq.keys() for n in names(vq[h])}
+        assert seen & validator_code, f"{q} does not run the validator's code"
 
 
 def test_bucketed_fact_degrades_to_raw_reader_when_unsignable(
@@ -439,35 +554,6 @@ def test_events_user_copy_serves_identical_relation(spark):
     ]
     assert bkt.count() == raw.count()
     assert bkt.exceptAll(raw).count() == 0 and raw.exceptAll(bkt).count() == 0
-
-
-def test_content_consumer_accepts_stat_only_build_without_thrash(spark, tmp_path):
-    """Builds always RECORD footer digests, so a stat-only build
-    followed by a verify="footer" consumer must serve the same copy
-    without a rebuild (the alternating-consumer thrash this design
-    exists to prevent), and vice versa."""
-    import os as _os
-
-    from data_validator_spark.operators.bucketing import (
-        BUCKET_SIDECAR,
-        ensure_bucketed_fact,
-    )
-
-    _mini_facts(spark, tmp_path, n=90)
-    sf = str(tmp_path)
-    try:
-        t = ensure_bucketed_fact(spark, sf, "orders", "o_orderkey")  # stat-only build
-        sc = _os.path.join(_re_wh(spark), t, BUCKET_SIDECAR)
-        before = _os.stat(sc).st_mtime_ns
-        # content consumer: must verify via recorded footers, not rebuild
-        assert ensure_bucketed_fact(
-            spark, sf, "orders", "o_orderkey", verify="footer"
-        ) == t
-        # stat-only consumer again: also no rebuild
-        assert ensure_bucketed_fact(spark, sf, "orders", "o_orderkey") == t
-        assert _os.stat(sc).st_mtime_ns == before
-    finally:
-        _drop_fact_tables(spark, sf)
 
 
 def test_query_stays_correct_in_degrade_mode(spark, monkeypatch):
@@ -608,148 +694,6 @@ def test_derived_copy_refuses_foreign_name_collision(spark, tmp_path):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
         _drop_derived_tables(spark, sf)
         _drop_fact_tables(spark, sf)
-
-
-def _swap_interior_custkeys(src, a: int, b: int):
-    """Byte-surgery: swap the PLAIN-encoded int64 values a,b (adjacent
-    in the o_custkey data page) in place — file size, mtime (restored
-    by the caller), row count, and every per-row-group min/max stat
-    survive, so the parquet FOOTER is byte-identical."""
-    import struct
-
-    blob = open(src, "rb").read()
-    pat = struct.pack("<q", a) + struct.pack("<q", b)
-    i = blob.find(pat)
-    assert i != -1, "plain-encoded pair not found"
-    assert blob.find(pat, i + 1) == -1, "pair must be unique in the file"
-    new = blob[:i] + struct.pack("<q", b) + struct.pack("<q", a) + blob[i + 16:]
-    assert len(new) == len(blob)
-    open(src, "wb").write(new)
-
-
-def test_full_content_wm_catches_footer_identical_rewrite(spark, tmp_path):
-    """r17 (r16 verdict item 5): an interior rewrite that preserves
-    size, mtime AND every footer statistic — the documented residual
-    of the r15 footer digest — must be caught by verify="full"
-    (per-call sha256 over every source byte) and must remain invisible
-    to verify="footer" (that gap is footer mode's documented bound)."""
-    import os as _os
-
-    from data_validator_spark.operators.bucketing import (
-        _footer_signature,
-        ensure_bucketed_fact,
-    )
-    from data_validator_spark.queries import evict_session_caches
-
-    src = tmp_path / "orders.parquet"
-    _plain_parquet(str(src), offset=1000)
-    sf = str(tmp_path)
-
-    def custkey_of(t, orderkey):
-        return (
-            spark.table(t)
-            .where(F.col("o_orderkey") == orderkey)
-            .collect()[0]["o_custkey"]
-        )
-
-    try:
-        t = ensure_bucketed_fact(spark, sf, "orders", "o_orderkey", verify="full")
-        assert custkey_of(t, 100) == 1100
-        st = _os.stat(src)
-        footers_before = _footer_signature(str(src))
-        _swap_interior_custkeys(str(src), 1100, 1101)
-        _os.utime(src, ns=(st.st_atime_ns, st.st_mtime_ns))
-        assert _os.stat(src).st_size == st.st_size
-        # the construction really is footer-identical (the gap exists)
-        assert _footer_signature(str(src)) == footers_before
-        evict_session_caches(sf)
-        # footer mode serves the stale copy — its documented residual
-        assert (
-            ensure_bucketed_fact(spark, sf, "orders", "o_orderkey", verify="footer")
-            == t
-        )
-        assert custkey_of(t, 100) == 1100
-        # full mode catches the rewrite and rebuilds
-        ensure_bucketed_fact(spark, sf, "orders", "o_orderkey", verify="full")
-        evict_session_caches(sf)
-        assert custkey_of(t, 100) == 1101
-    finally:
-        _drop_fact_tables(spark, sf)
-
-
-def test_full_content_wm_degrades_to_footer_above_size_bound(
-    spark, tmp_path, monkeypatch
-):
-    """verify="full" on a source above FULL_WM_MAX_BYTES warns and
-    degrades to the footer check (a full-corpus read per call is the
-    wrong trade at scale) — the copy is still served, not rebuilt."""
-    import data_validator_spark.operators.bucketing as bk
-
-    _plain_parquet(str(tmp_path / "orders.parquet"), offset=0)
-    sf = str(tmp_path)
-    try:
-        t = bk.ensure_bucketed_fact(spark, sf, "orders", "o_orderkey")
-        monkeypatch.setattr(bk, "FULL_WM_MAX_BYTES", 10)
-        with pytest.warns(RuntimeWarning, match="degrading to the footer"):
-            assert (
-                bk.ensure_bucketed_fact(spark, sf, "orders", "o_orderkey", verify="full")
-                == t
-            )
-    finally:
-        _drop_fact_tables(spark, sf)
-
-
-def test_full_content_wm_backfills_after_stat_only_rebuild(spark, tmp_path):
-    """A stat-only source change (mtime touch, identical bytes) makes a
-    full-verify call rebuild; it must record the content signature in
-    the same call instead of dropping the fresh copy and rebuilding a
-    second time on the next call."""
-    import json as _json
-    import os as _os
-
-    from data_validator_spark.operators.bucketing import (
-        BUCKET_SIDECAR,
-        copy_path,
-        ensure_bucketed_fact,
-    )
-
-    src = tmp_path / "orders.parquet"
-    _plain_parquet(str(src), offset=0)
-    sf = str(tmp_path)
-    try:
-        t = ensure_bucketed_fact(spark, sf, "orders", "o_orderkey", verify="full")
-        path = copy_path(spark, t)
-        _os.utime(src)  # mtime moves, bytes identical
-        from data_validator_spark.queries import evict_session_caches
-
-        evict_session_caches(sf)
-        assert ensure_bucketed_fact(spark, sf, "orders", "o_orderkey", verify="full") == t
-        with open(_os.path.join(path, BUCKET_SIDECAR)) as f:
-            sc = _json.load(f)
-        assert "content_sha256" in sc  # backfilled in the SAME call
-        before = _os.stat(_os.path.join(path, BUCKET_SIDECAR)).st_mtime_ns
-        # next full call: verified, no rebuild, sidecar untouched
-        assert ensure_bucketed_fact(spark, sf, "orders", "o_orderkey", verify="full") == t
-        assert _os.stat(_os.path.join(path, BUCKET_SIDECAR)).st_mtime_ns == before
-    finally:
-        _drop_fact_tables(spark, sf)
-
-
-def test_content_signature_detects_single_bit_flip(tmp_path):
-    """The full-content watermark's whole-point property: ANY byte
-    change in the source flips the signature, even one that no stat,
-    footer, or row-group statistic could see."""
-    from data_validator_spark.operators.bucketing import _content_signature
-
-    p = tmp_path / "orders.parquet"
-    _plain_parquet(str(p), offset=0)
-    sig1 = _content_signature(str(p))
-    blob = bytearray(open(p, "rb").read())
-    blob[len(blob) // 3] ^= 0x01  # one bit, interior
-    open(p, "wb").write(bytes(blob))
-    sig2 = _content_signature(str(p))
-    assert sig1 != sig2
-    assert [r for r, _ in sig1] == [r for r, _ in sig2]  # same file set
 
 
 SF = "/root/testdata/sf0.001"
@@ -1002,11 +946,10 @@ def test_sorted_bucket_scan_drops_smj_sorts(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS bk_sorted_r")
 
 
-def test_full_wm_drop_evicts_dependent_session_caches(spark, tmp_path):
+def test_copy_drop_evicts_dependent_session_caches(spark, tmp_path):
     """ADVICE r18/r19 library guard: whenever the lifecycle drops a copy
-    that existed — a stat-only copy a verify="full" consumer cannot
-    trust, a stat copy whose source moved, a derived copy whose RAW
-    source moved — session caches persisted over the old file listing
+    that existed — a fact copy whose source moved, a derived copy whose
+    RAW source moved — session caches persisted over the old file listing
     must be evicted; otherwise any consumer whose cached relation froze
     the dropped files dies with FAILED_READ_FILE. A verified-current
     copy must leave those caches alone."""
@@ -1031,14 +974,12 @@ def test_full_wm_drop_evicts_dependent_session_caches(spark, tmp_path):
             st = _os.stat(f)
             _os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
 
-    def orders(verify):
-        return ensure_bucketed_fact(spark, sf, "orders", "o_orderkey", 4, verify=verify)
+    def orders():
+        return ensure_bucketed_fact(spark, sf, "orders", "o_orderkey", 4)
 
-    # (first call, source change in between or None, second call)
+    # (first call, source change in between, second call)
     cases = {
-        # stat-only build: records footers but no content_sha256
-        "full": (lambda: orders("stat"), None, lambda: orders("full")),
-        "stat": (lambda: orders("stat"), lambda: touch(p), lambda: orders("stat")),
+        "stat": (orders, lambda: touch(p), orders),
         "derived": (
             lambda: ensure_bucketed_part_ext(spark, sf),
             lambda: touch(tmp_path / "part.parquet"),
@@ -1048,8 +989,7 @@ def test_full_wm_drop_evicts_dependent_session_caches(spark, tmp_path):
     try:
         for label, (first, change, again) in cases.items():
             t = first()
-            if change is not None:
-                change()
+            change()
             probe_cache.put(spark, sf, spark.range(1))
             assert again() == t
             assert not probe_cache, (

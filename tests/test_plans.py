@@ -186,17 +186,11 @@ def test_q8_fact_join_rides_bucketed_copies(spark, registry):
 
 def test_r14_orderkey_census_queries_ride_bucketed_copies(spark, registry):
     """SCALE.md r14 at-scale census closures: q5/q10 (fact⨝fact on
-    the order key), reconciliation_check (per-order totals vs
-    header), and unique_check (composite-key census) all read the
-    at-rest orderkey-bucketed copies, and NONE may hash-partition on
-    an order key — the bucketed scan's partitioning carries through
-    the groupBy/join (subset clustering)."""
-    for name in (
-        "q5_local_supplier",
-        "q10_returned_items",
-        "reconciliation_check",
-        "unique_check",
-    ):
+    the order key) read the at-rest orderkey-bucketed copies, and
+    NEITHER may hash-partition on an order key — the bucketed scan's
+    partitioning carries through the groupBy/join (subset
+    clustering)."""
+    for name in ("q5_local_supplier", "q10_returned_items"):
         plan = plan_of(spark, registry, name)
         assert "dv_bkt_lineitem_" in plan, name
         assert "Exchange hashpartitioning(l_orderkey" not in plan, name
@@ -443,9 +437,8 @@ def test_r18_final_doc_sites_ride_doc_bucketed_documents(spark, registry):
     only raw documents reads left are deliberate: watermark/pivot
     scalar probes (which must observe the SOURCE to guard copy
     freshness), incremental delta scans (which read source appends by
-    design), and string_length_check (a validator validates the
-    SOURCE table; the copy-trusting validators opted in through the
-    verify="full" sha256 watermark instead)."""
+    design), and the validator-class checks (a validator validates
+    the SOURCE table)."""
     for name in (
         "domain_diversity",
         "sequence_pack",
@@ -482,9 +475,9 @@ def test_r18_dsir_scores_with_per_bucket_term(spark, registry):
 
 def test_r19_lineitem_scan_rides_ride_copies(spark, registry):
     """r19 bucketed-copy scan class: the remaining timed spread(load())
-    sites (q1, q20, col_stats, bloom_filter_semijoin) plus
-    profile_table switch to their at-rest bucketed copies —
-    bucket-file parallelism with no round-robin exchange.
+    sites (q1, q20, bloom_filter_semijoin) switch to their at-rest
+    bucketed copies — bucket-file parallelism with no round-robin
+    exchange.
     Row-identical by construction (same rows, different at-rest
     layout); the A/B seconds live in OPTIMIZATION_r19.md.
     drift_psi/benford_check were measured on the same ride and
@@ -492,8 +485,6 @@ def test_r19_lineitem_scan_rides_ride_copies(spark, registry):
     under the driver methodology — same doc)."""
     expect = {
         "q1_pricing_summary": "dv_bkt_lineitem_l_orderkey_",
-        "col_stats": "dv_bkt_lineitem_l_orderkey_",
-        "profile_table": "dv_bkt_lineitem_l_orderkey_",
         "q20_potential_promotion": "dv_bkt_lineitem_l_partkey_",
         "bloom_filter_semijoin": "dv_bkt_orders_o_orderkey_",
     }
