@@ -212,7 +212,6 @@ def ensure_copy(
     num_buckets: int,
     watermark: dict,
     build: Callable[[], DataFrame],
-    on_drop: Callable[[], object] | None = None,
 ) -> str:
     """Idempotently materialize + register the at-rest bucketed copy
     ``table`` (data under copy_path, external to the catalog); returns
@@ -230,11 +229,13 @@ def ensure_copy(
       with the column list read from the copy's own parquet footers
       (cross-session reuse — Spark refuses a bucketed CREATE without
       one);
-    - otherwise → drop the catalog entry and files, call ``on_drop`` if
-      a copy existed (so caches persisted over its files can be
-      evicted before they fail to read them), write ``build()``
+    - otherwise → drop the catalog entry and files, write ``build()``
       through write_bucketed, and write ``watermark`` as the sidecar
-      (``BUCKET_SIDECAR``)."""
+      (``BUCKET_SIDECAR``). The DROP TABLE empties Spark's
+      CacheManager of every plan cached over the copy, and a session
+      cache entry built over it is rebuilt on its next access: the
+      session tier (queries.SessionCache) checks the same source-file
+      signature."""
     import json
     import os
     import shutil
@@ -263,8 +264,6 @@ def ensure_copy(
         spark.sql(f"DROP TABLE IF EXISTS {table}")
     if in_catalog or os.path.isdir(path):
         shutil.rmtree(path, ignore_errors=True)
-        if on_drop is not None:
-            on_drop()
     write_bucketed(build(), table, keys, num_buckets, path=path)
     with open(os.path.join(path, BUCKET_SIDECAR), "w") as f:
         json.dump(watermark, f)
@@ -292,13 +291,13 @@ def ensure_bucketed_fact(
     The copy is checked against its source on every call by the
     source-file signature (_source_signature): any rewrite that
     touches a size or mtime_ns rebuilds it. Checks that must see
-    every source byte read the source itself, not a copy. Dropping a
-    stale copy evicts the session caches of ``sf`` (ADVICE r18/r19): a
-    cached relation persisted over the dropped files would otherwise
-    fail with FAILED_READ_FILE."""
+    every source byte read the source itself, not a copy. Session
+    caches of ``sf`` follow the same signature, so a relation cached
+    over a dropped copy is rebuilt, not read from the dropped files
+    (ADVICE r18/r19: FAILED_READ_FILE)."""
     import os
 
-    from data_validator_spark.queries import evict_session_caches, load
+    from data_validator_spark.queries import load
 
     src = os.path.join(str(sf), f"{name}.parquet")
     wm = {"version": FACT_WM_VERSION, "key": key, "files": _source_signature(src)}
@@ -309,7 +308,6 @@ def ensure_bucketed_fact(
         num_buckets,
         wm,
         lambda: load(spark, sf, name),
-        on_drop=lambda: evict_session_caches(sf),
     )
 
 
@@ -326,7 +324,12 @@ def bucketed_fact(
     r14: a source on storage os.walk cannot list — s3://, hdfs:// —
     must keep WORKING through load(), just without the colocated
     layout; only the optimization is lost, never the query). The
-    warning makes the degrade visible instead of silent."""
+    warning makes the degrade visible instead of silent.
+
+    Pins the session tz to UTC, as load() does: a copy served from the
+    catalog never runs load(), and timestamp formatting must stay
+    engine-deterministic on that path (ADVICE r14)."""
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
     try:
         return spark.table(
             ensure_bucketed_fact(spark, sf, name, key, num_buckets)

@@ -42,7 +42,7 @@ from __future__ import annotations
 from typing import Any, Callable
 
 import yaml
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_validator_spark.functions.text import (
@@ -363,14 +363,13 @@ def run_pipeline(
     sink = p.get("sink")
     if sink:
         # the write counts its own rows: no second read of the sink
-        written = Observation()
-        write_partitioned(
-            df.observe(written, F.count(F.lit(1)).alias("rows")),
+        rows = write_partitioned(
+            df,
             sink["path"],
             list(sink.get("partitionBy", [])),
             fmt=sink.get("format", "parquet"),
         )
-        return {"written": True, "path": sink["path"], "rows": written.get["rows"]}
+        return {"written": True, "path": sink["path"], "rows": rows}
     return {"written": False, "rows": df.count()}
 
 

@@ -64,13 +64,12 @@ def load_events_by_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan's HashPartitioning(user_id) satisfies every per-user window,
     groupBy and self-join downstream). The copy is built FROM load(),
     so the TIMESTAMP(NANOS) normalization is baked in at build time
-    and the served schema is identical to load()'s. The session tz is
-    pinned to UTC here too (ADVICE r14): an external caller hitting a
-    pre-built copy skips load()'s conf side effect, and date_trunc /
-    timestamp formatting must stay engine-deterministic on that path."""
+    and the served schema is identical to load()'s. bucketed_fact pins
+    the session tz to UTC like load() (ADVICE r14): a pre-built copy
+    skips load(), and date_trunc / timestamp formatting must stay
+    engine-deterministic on that path."""
     from data_validator_spark.operators.bucketing import bucketed_fact
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return bucketed_fact(spark, sf_dir, "events", "user_id")
 
 
@@ -82,7 +81,6 @@ def load_orders_by_cust(spark: SparkSession, sf_dir: str) -> DataFrame:
     trade; the o_orderkey copy keeps serving the fact⨝fact meets)."""
     from data_validator_spark.operators.bucketing import bucketed_fact
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return bucketed_fact(spark, sf_dir, "orders", "o_custkey")
 
 
@@ -93,7 +91,6 @@ def load_customer_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer side."""
     from data_validator_spark.operators.bucketing import bucketed_fact
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return bucketed_fact(spark, sf_dir, "customer", "c_custkey")
 
 
@@ -106,7 +103,6 @@ def load_lineitem_by_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold) inherit the scan partitioning."""
     from data_validator_spark.operators.bucketing import bucketed_fact
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return bucketed_fact(spark, sf_dir, "lineitem", "l_partkey")
 
 
@@ -117,7 +113,6 @@ def load_part_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     what removes its shuffle."""
     from data_validator_spark.operators.bucketing import bucketed_fact
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return bucketed_fact(spark, sf_dir, "part", "p_partkey")
 
 
@@ -133,7 +128,6 @@ def load_documents_by_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     at real scale the scan has thousands of splits anyway)."""
     from data_validator_spark.operators.bucketing import bucketed_fact
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return bucketed_fact(spark, sf_dir, "documents", "doc_id")
 
 
@@ -148,7 +142,6 @@ def load_embeddings_by_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     HashPartitioning(vec_id) that the join-backs reuse)."""
     from data_validator_spark.operators.bucketing import bucketed_fact
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return bucketed_fact(spark, sf_dir, "embeddings", "vec_id")
 
 
@@ -169,6 +162,9 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
 
 
 _SESSION_CACHES: list[SessionCache] = []
+# (applicationId, str(sf)) -> the source-file signature the entries of
+# that dataset were built under
+_SIGNATURES: dict[tuple, list] = {}
 
 
 class SessionCache:
@@ -188,50 +184,46 @@ class SessionCache:
     miss it calls ``build()``, persists a DataFrame result
     MEMORY_AND_DISK and stores tuples and scalars as built (a tuple
     build persists its own members, because it reads them while
-    building). Scalars belong here too: a dataset rewritten at the
-    same path in one session must drop its cached counts alongside
-    the relations (ADVICE r9). ``put`` stores a value as given.
+    building). ``put`` stores a value as given.
 
-    Supersession: an entry may carry a ``version`` (a corpus
-    watermark). A hit needs an equal version; storing a new version
-    drops the superseded entry for the same key at insert time
-    (ADVICE r16) — in the incremental-append workload every watermark
-    move would otherwise strand the previous MEMORY_AND_DISK relation
-    until an explicit eviction.
+    Staleness: the at-rest copies' rule (operators/bucketing.
+    ensure_copy). Every ``get`` and ``put`` first compares the
+    source-file signature of what ``sf`` names with the one recorded
+    for (application, dataset); when it moved, every entry of that
+    dataset is evicted before anything is looked up or rebuilt.
+    Release comes before the rebuild because Spark's CacheManager
+    matches cached data by logical plan: a rebuilt relation whose plan
+    equals a still-persisted stale one would be served the stale
+    rows. Scalars (probed counts, index watermarks) follow the same
+    rule. A dataset with no local signature (remote storage) is never
+    checked.
 
     Eviction: ``evict(sf, *sub)`` unpersists the DataFrame members of
     every matching entry and drops it."""
 
     def __init__(self) -> None:
-        self._entries: dict[tuple, tuple] = {}  # key -> (version, value)
+        self._entries: dict[tuple, object] = {}
         _SESSION_CACHES.append(self)
 
     def __len__(self) -> int:
         return len(self._entries)
 
-    def get(self, spark, sf, build=None, *sub, version=None):
+    def get(self, spark, sf, build=None, *sub):
         """The cached value; on a miss, ``build()``'s (None when no
         build is given)."""
-        key = (spark.sparkContext.applicationId, str(sf), *sub)
-        hit = self._entries.get(key)
-        if hit is not None and hit[0] == version:
-            return hit[1]
+        key = _current_key(spark, sf, sub)
+        if key in self._entries:
+            return self._entries[key]
         if build is None:
             return None
         value = build()
         if isinstance(value, DataFrame):
             value = value.persist(StorageLevel.MEMORY_AND_DISK)
-        self._store(key, version, value)
+        self._entries[key] = value
         return value
 
-    def put(self, spark, sf, value, *sub, version=None) -> None:
-        self._store((spark.sparkContext.applicationId, str(sf), *sub), version, value)
-
-    def _store(self, key: tuple, version, value) -> None:
-        old = self._entries.get(key)
-        self._entries[key] = (version, value)
-        if old is not None and old[0] != version:
-            _release_superseded(old[1], value)
+    def put(self, spark, sf, value, *sub) -> None:
+        self._entries[_current_key(spark, sf, sub)] = value
 
     def evict(self, sf=None, *sub) -> int:
         """Unpersist and drop every entry built for `sf` (all datasets
@@ -243,7 +235,7 @@ class SessionCache:
                 continue
             if key[2 : 2 + len(sub)] != sub:
                 continue
-            _, val = self._entries.pop(key)
+            val = self._entries.pop(key)
             for df in val if isinstance(val, tuple) else (val,):
                 if isinstance(df, DataFrame):
                     try:
@@ -254,50 +246,45 @@ class SessionCache:
         return evicted
 
 
-def _release_superseded(old, new) -> None:
-    """Unpersist a superseded relation unless it shares its cache
-    registration with the new one.
+def _source_signature_of(sf) -> list | None:
+    """operators/bucketing._source_signature of what a cache's ``sf``
+    slot names: a dataset directory, or a tuple of input files
+    (spread's split-count probe) signed file by file. None when there
+    is no local signature."""
+    import re
 
-    Plan-identity guard: Spark's CacheManager keys cached data by
-    LOGICAL PLAN, not by DataFrame object — if the superseded and the
-    new relation are semantically the same plan (possible when only
-    the watermark moved), unpersisting the old one would silently
-    drop the NEW registration too, so such entries are dropped
-    without an unpersist (nothing is stranded: the cache entry is
-    shared). Scalar values are recognized by their missing _jdf
-    (AttributeError, distinguished from comparison failures per
-    ADVICE r17)."""
-    if old is new:
-        return
+    from data_validator_spark.operators.bucketing import _source_signature
+
     try:
-        jdfs = (old._jdf, new._jdf)
-    except AttributeError:
-        # scalar entry (probed count, watermark flag): nothing
-        # persisted, nothing to unpersist
-        return
-    try:
-        same = jdfs[0].queryExecution().analyzed().sameResult(
-            jdfs[1].queryExecution().analyzed()
-        )
-    except Exception:
-        # comparison itself failed (transient py4j/JVM error): we
-        # cannot PROVE the plans differ, and unpersisting a same-plan
-        # entry would drop the new registration's shared cache too.
-        # Skip the unpersist — leak-safe: worst case one relation
-        # stays pinned until evict_session_caches (ADVICE r17).
-        return
-    if same:
-        return
-    try:
-        old.unpersist()
-    except Exception:
-        pass
+        return [
+            _source_signature(re.sub(r"^file:/*", "/", str(p)))
+            for p in (sf if isinstance(sf, tuple) else (sf,))
+        ]
+    except FileNotFoundError:
+        return None
+
+
+def _current_key(spark, sf, sub: tuple) -> tuple:
+    """The entry key of ``(sf, *sub)``, after evicting every entry of
+    ``sf`` if its source-file signature moved since the last call."""
+    key = (spark.sparkContext.applicationId, str(sf))
+    sig = _source_signature_of(sf)
+    if sig is not None:
+        if _SIGNATURES.get(key, sig) != sig:
+            evict_session_caches(sf)
+        _SIGNATURES[key] = sig
+    return (*key, *sub)
 
 
 def evict_session_caches(sf_dir: str | None = None) -> int:
     """Unpersist and drop every registered cached relation (or only
     those built for `sf_dir`). Returns the number of evicted entries.
-    Safe to call at any point — consumers re-materialize on demand."""
+    Safe to call at any point — consumers re-materialize on demand.
+
+    A source rewrite needs no call: every cache access checks its
+    dataset's source-file signature and evicts through here when it
+    moved. Calls are for releasing memory (a long-lived session done
+    with a dataset) and for timing a cold run."""
     return sum(cache.evict(sf_dir) for cache in _SESSION_CACHES)
 
 

@@ -406,11 +406,9 @@ def q_dedup_incremental_minhash(spark, sf):
     # screen pays zero minhash recomputation AND the candidate join
     # runs index⨝index colocated on the sig64 bucketing. The probe is
     # the refresh's own cached max-doc_id scalar (one column-pruned
-    # job per (session, watermark)); a fresh index without the delta
+    # job per (session, corpus)); a fresh index without the delta
     # falls back to deriving the bands in-session.
-    table_max = _BINDEX_MAX_CACHE.get(
-        spark, sf, lambda: _table_max_doc_id(spark, t), t, version=wm
-    )
+    table_max = _BINDEX_MAX_CACHE.get(spark, sf, lambda: _table_max_doc_id(spark, t), t)
     if int(table_max) >= wm["max_doc_id"]:
         db = (
             spark.table(t)
@@ -424,9 +422,9 @@ def q_dedup_incremental_minhash(spark, sf):
             .select("doc_id", _sig64_col().alias("sig64"))
         )
     # eligible (non-degenerate) corpus buckets: persisted once per
-    # (session, watermark) — repeated screens skip the full-index
+    # (session, corpus) — repeated screens skip the full-index
     # census (r16, see _bindex_ok_buckets)
-    ok = _bindex_ok_buckets(spark, sf, t, wm)
+    ok = _bindex_ok_buckets(spark, sf, t)
     # one delta-scale shuffle on doc_id serves BOTH the pair-dedup and
     # the confirm join (r17): HashPartitioning(doc_id) satisfies the
     # distinct's ClusteredDistribution(doc_id, cand_id) — same-key rows
@@ -1240,8 +1238,8 @@ FINDEX_MOD = 1_000_003
 
 
 # Corpus-snapshot stats backing the findex watermark; a same-path
-# dataset rewrite that calls evict_session_caches() also invalidates
-# the probe and forces a fresh disk-watermark comparison.
+# dataset rewrite moves the source-file signature, which evicts the
+# probe (SessionCache) and forces a fresh disk-watermark comparison.
 _FINDEX_STATS_CACHE = SessionCache()
 
 
@@ -1277,7 +1275,7 @@ def _ensure_index(spark, sf, table, kind: str, key: str, buckets: int, rows) -> 
     on-disk or registered table whose watermark disagrees with the
     CURRENT corpus is dropped and rebuilt instead of trusted. That
     closes both divergence paths: (a) a dataset rewritten at the same
-    path (after evict_session_caches clears the stats probe) no longer
+    path (whose new source-file signature evicts the stats probe) no longer
     leaves stale rows in a live table, and (b) a cross-session append
     rebuilds from the new pivot, so no doc_id range between the old
     and new pivots goes unindexed. ``rows(pivot)`` is the corpus-side
@@ -1343,7 +1341,7 @@ def q_dedup_index_refresh(spark, sf, table: str | None = None):
     t = _ensure_findex(spark, sf, table)
     pivot = _incremental_pivot(spark, sf)
     wm = _corpus_watermark(spark, sf)
-    if _FINDEX_DONE_CACHE.get(spark, sf, None, t, version=wm) is None:
+    if _FINDEX_DONE_CACHE.get(spark, sf, None, t) is None:
         delta = (
             load(spark, sf, "documents")
             .where(F.col("doc_id") >= F.lit(pivot))
@@ -1356,7 +1354,7 @@ def q_dedup_index_refresh(spark, sf, table: str | None = None):
         # the distinct fingerprints of the full corpus — a repeated run
         # would anti-join to nothing, so skip the delta scan + append
         # job (r16, same steady-state rule as the band-index probe)
-        _FINDEX_DONE_CACHE.put(spark, sf, True, t, version=wm)
+        _FINDEX_DONE_CACHE.put(spark, sf, True, t)
     idx = spark.table(t)
     return (
         idx.groupBy(
@@ -1407,21 +1405,21 @@ def _sig64_col():
 
 # Steady-state caches for the persisted-index maintenance ops (r16,
 # r15 verdict item 5 — the RFM boundary-cache pattern): each entry is
-# keyed on (application, dataset, table) and versioned by the CORPUS
-# WATERMARK, so a dataset rewrite/append invalidates by version
-# mismatch (and drops the superseded entry), and evict_session_caches
-# drops them by dataset like every other session cache.
+# keyed on (application, dataset, table). A dataset rewrite/append
+# moves the source-file signature of the documents files the corpus
+# watermark derives from, so SessionCache evicts them like every
+# other session cache of the dataset before anything is rebuilt.
 #   _BINDEX_MAX_CACHE: the refresh's max-doc_id idempotency probe —
-#   one scalar job per (session, watermark) instead of per run, and a
+#   one scalar job per (session, corpus) instead of per run, and a
 #   probe that proves the table complete also skips the empty-delta
 #   append job (a zero-row write of BINDEX_BUCKETS tasks is NOT free).
 #   _BINDEX_OK_BUCKETS_CACHE: the minhash screen's eligible-bucket
 #   census (groupBy sig64 over the full corpus index) — persisted once
-#   per (session, watermark); its content is a pure function of the
-#   index, which the watermark pins.
+#   per (session, corpus); its content is a pure function of the
+#   index, which the corpus pins.
 _BINDEX_MAX_CACHE = SessionCache()
 _BINDEX_OK_BUCKETS_CACHE = SessionCache()
-# fingerprint-index refreshes completed this session, by watermark —
+# fingerprint-index refreshes completed this session, per corpus —
 # a repeated run's delta anti-joins to nothing, so the whole
 # delta-scan + append job is skipped (same steady-state rule).
 _FINDEX_DONE_CACHE = SessionCache()
@@ -1440,15 +1438,15 @@ def _invalidate_index_caches(table: str) -> None:
     build of _ensure_index: a rebuild under an UNCHANGED corpus
     watermark (manually dropped table/dir) restarts the table at
     corpus-side-only content, so a cached probe/census keyed by that
-    same watermark would be stale-high and make the next refresh skip
+    same corpus would be stale-high and make the next refresh skip
     a delta the rebuilt table genuinely lacks."""
     for cache in (_BINDEX_MAX_CACHE, _BINDEX_OK_BUCKETS_CACHE, _FINDEX_DONE_CACHE):
         cache.evict(None, table)
 
 
-def _bindex_ok_buckets(spark, sf, t: str, wm: dict):
+def _bindex_ok_buckets(spark, sf, t: str):
     """sig64 values of non-degenerate corpus buckets (≤ MAX_BUCKET
-    members), persisted per (session, watermark) — see cache note."""
+    members), persisted per (session, corpus) — see cache note."""
 
     def build():
         pivot = _incremental_pivot(spark, sf)
@@ -1461,7 +1459,7 @@ def _bindex_ok_buckets(spark, sf, t: str, wm: dict):
             .select("sig64")
         )
 
-    return _BINDEX_OK_BUCKETS_CACHE.get(spark, sf, build, t, version=wm)
+    return _BINDEX_OK_BUCKETS_CACHE.get(spark, sf, build, t)
 
 
 def _ensure_bindex(spark, sf, table: str | None = None) -> str:
@@ -1501,13 +1499,13 @@ def q_dedup_band_index_refresh(spark, sf, table: str | None = None):
     t = _ensure_bindex(spark, sf, table)
     pivot = _incremental_pivot(spark, sf)
     wm = _corpus_watermark(spark, sf)
-    # max-doc_id idempotency probe, cached per (session, watermark)
+    # max-doc_id idempotency probe, cached per (session, corpus)
     # (r16, r15 verdict item 5): the probe's answer is a pure function
-    # of the table content, which the watermark pins — and once the
+    # of the table content, which the corpus pins — and once the
     # table provably covers the corpus (start > corpus max), the
     # delta is empty BY CONSTRUCTION, so the append job (a zero-row
     # write of BINDEX_BUCKETS tasks) is skipped outright.
-    table_max = _BINDEX_MAX_CACHE.get(spark, sf, None, t, version=wm)
+    table_max = _BINDEX_MAX_CACHE.get(spark, sf, None, t)
     if table_max is None:
         table_max = _table_max_doc_id(spark, t)
     start = max(pivot, int(table_max) + 1)
@@ -1522,7 +1520,7 @@ def q_dedup_band_index_refresh(spark, sf, table: str | None = None):
     # after a refresh the table holds every posting with doc_id up to
     # the corpus max (the delta slice is [start, corpus max] and the
     # corpus side below `start` was already present)
-    _BINDEX_MAX_CACHE.put(spark, sf, wm["max_doc_id"], t, version=wm)
+    _BINDEX_MAX_CACHE.put(spark, sf, wm["max_doc_id"], t)
     idx = spark.table(t)
     return (
         idx.groupBy(

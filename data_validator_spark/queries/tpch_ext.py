@@ -38,7 +38,6 @@ from data_validator_spark.queries import (
     DEC,
     SessionCache,
     dsum,
-    evict_session_caches,
     load,
     load_lineitem_by_part,
     spread,
@@ -239,7 +238,6 @@ def _ensure_bucketed_derived(
         FACT_BUCKETS,
         wm,
         lambda: build_df(spark, sf),
-        on_drop=lambda: evict_session_caches(sf),
     )
 
 

@@ -350,9 +350,10 @@ def q_rfm_segments(spark, sf):
     # they join the session-cache tier like the trigram model and the
     # IVF centroids (r15): the engine's sequential refinement jobs run
     # once per (application, dataset) — in production, once per
-    # at-rest refresh — instead of on every execution; eviction via
-    # evict_session_caches() on a same-path rewrite drops them with
-    # the relation they derive from.
+    # at-rest refresh — instead of on every execution. A same-path
+    # rewrite of the source moves its file signature, and the next
+    # cache access evicts them with the relation they derive from
+    # before either is rebuilt (SessionCache).
     res = _RFM_BOUNDS_CACHE.get(
         spark,
         sf,

@@ -16,7 +16,7 @@ surface, like the bucketed-join writers in operators/bucketing.py.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -26,22 +26,27 @@ def write_partitioned(
     partition_cols: list[str],
     fmt: str = "parquet",
     mode: str = "overwrite",
-    coalesce_per_partition: bool = True,
-) -> None:
-    """Hive-style partitioned write.
+) -> int:
+    """Hive-style partitioned write; returns the number of rows written.
 
-    ``coalesce_per_partition`` shuffles rows onto their partition keys
-    first, so each output directory receives a bounded number of
-    files. Without it every upstream task writes a fragment into every
-    partition directory: at 1000 tasks x 365 daily partitions that is
-    365k files per day of output — unmanageable namenode pressure and
-    slow listings. The shuffle costs one exchange; at scale, pair with
-    AQE coalescing so near-empty partitions share tasks.
+    Rows are shuffled onto their partition keys first, so each output
+    directory receives a bounded number of files. Without it every
+    upstream task writes a fragment into every partition directory: at
+    1000 tasks x 365 daily partitions that is 365k files per day of
+    output — unmanageable namenode pressure and slow listings. The
+    shuffle costs one exchange; at scale, pair with AQE coalescing so
+    near-empty partitions share tasks.
+
+    The count is observed after that shuffle, in the write's own
+    stage. Observed below it, in the shuffle-map stage, a map task
+    that Spark re-runs (a speculative copy, a stage retry after a
+    lost shuffle output) would add its rows to the count again.
     """
-    out = df
-    if coalesce_per_partition and partition_cols:
-        out = df.repartition(*partition_cols)
+    written = Observation()
+    out = df.repartition(*partition_cols) if partition_cols else df
+    out = out.observe(written, F.count(F.lit(1)).alias("rows"))
     out.write.format(fmt).mode(mode).partitionBy(*partition_cols).save(path)
+    return written.get["rows"]
 
 
 def read_partitioned(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:

@@ -947,12 +947,12 @@ def test_sorted_bucket_scan_drops_smj_sorts(spark, tmp_path):
 
 
 def test_copy_drop_evicts_dependent_session_caches(spark, tmp_path):
-    """ADVICE r18/r19 library guard: whenever the lifecycle drops a copy
-    that existed — a fact copy whose source moved, a derived copy whose
-    RAW source moved — session caches persisted over the old file listing
-    must be evicted; otherwise any consumer whose cached relation froze
-    the dropped files dies with FAILED_READ_FILE. A verified-current
-    copy must leave those caches alone."""
+    """ADVICE r18/r19 hazard: when the lifecycle drops a copy that
+    existed — a fact copy whose source moved, a derived copy whose RAW
+    source moved — a session-cache relation persisted over the old
+    copy must not be read from the dropped files (FAILED_READ_FILE):
+    its next access rebuilds it from the new copy. A verified-current
+    copy must leave a fresh entry alone."""
     import os as _os
 
     from data_validator_spark.operators.bucketing import ensure_bucketed_fact
@@ -964,7 +964,7 @@ def test_copy_drop_evicts_dependent_session_caches(spark, tmp_path):
     _mini_part(spark, tmp_path, n=40)
     sf = str(tmp_path)
     evict_session_caches(sf)
-    probe_cache = SessionCache()
+    cache = SessionCache()
 
     def touch(path):  # move the mtime of every source file, bytes unchanged
         files = [path] if _os.path.isfile(path) else [
@@ -977,31 +977,35 @@ def test_copy_drop_evicts_dependent_session_caches(spark, tmp_path):
     def orders():
         return ensure_bucketed_fact(spark, sf, "orders", "o_orderkey", 4)
 
-    # (first call, source change in between, second call)
+    # (copy, source change, row count)
     cases = {
-        "stat": (orders, lambda: touch(p), orders),
+        "stat": (orders, lambda: touch(p), 400),
         "derived": (
             lambda: ensure_bucketed_part_ext(spark, sf),
             lambda: touch(tmp_path / "part.parquet"),
-            lambda: ensure_bucketed_part_ext(spark, sf),
+            40,
         ),
     }
     try:
-        for label, (first, change, again) in cases.items():
-            t = first()
+        for label, (copy, change, n) in cases.items():
+            def cached():
+                return cache.get(spark, sf, lambda: spark.table(copy()))
+
+            old = cached()
+            assert old.count() == n
+            old_files = set(old.inputFiles())
             change()
-            probe_cache.put(spark, sf, spark.range(1))
-            assert again() == t
-            assert not probe_cache, (
-                f"{label}: drop/rebuild left a session cache frozen on dropped files"
-            )
-            # the copy is current now -> no drop, so a fresh cache
-            # entry must SURVIVE
-            probe_cache.put(spark, sf, spark.range(1))
-            assert again() == t
-            assert probe_cache, f"{label}: verified-current copy must not evict caches"
-            probe_cache.evict()
+            t = copy()  # the stale copy is dropped and rebuilt
+            assert not any(_os.path.exists(f.replace("file:", "", 1)) for f in old_files)
+            new = cached()
+            assert new is not old, f"{label}: entry over the dropped copy was served"
+            assert new.count() == n
+            assert set(new.inputFiles()) == set(spark.table(t).inputFiles())
+            # the copy is current now -> no drop, so the entry survives
+            assert copy() == t
+            assert cached() is new, f"{label}: verified-current copy must not evict caches"
+            cache.evict()
     finally:
-        probe_cache.evict()
+        cache.evict()
         _drop_fact_tables(spark, sf)
         _drop_derived_tables(spark, sf)

@@ -723,57 +723,3 @@ def test_band_refresh_steady_state_skips_probe_and_append(spark, tmp_path):
     finally:
         _findex_drop(spark, t)
         evict_session_caches(str(tmp_path))
-
-def test_wm_cache_insert_unpersists_superseded_entry(spark, tmp_path):
-    """ADVICE r16: inserting a watermark-keyed steady-state entry pops
-    the superseded entry for the same (application, dataset, table)
-    prefix and unpersists it — EXCEPT when the two relations are the
-    same logical plan, where Spark's CacheManager entry is shared and
-    an unpersist of the old handle would silently drop the new
-    registration too (then the key is popped without an unpersist)."""
-    from pyspark import StorageLevel
-
-    from data_validator_spark.queries import evict_session_caches
-    from data_validator_spark.queries.dedup import (
-        _BINDEX_OK_BUCKETS_CACHE,
-        _bindex_ok_buckets,
-        _ensure_bindex,
-    )
-
-    d = tmp_path / "documents.parquet"
-    rows = [(i, f"supersession text {i % 7}") for i in range(40)]
-    spark.createDataFrame(rows, "doc_id long, text string").coalesce(1).write.parquet(
-        str(d)
-    )
-    t = "dv_bindex_pytest_supersede"
-    _findex_drop(spark, t)
-    try:
-        t = _ensure_bindex(spark, str(tmp_path), table=t)
-
-        # regime 1 — DIFFERENT plans under the same prefix: the
-        # superseded relation must be unpersisted on insert
-        old = spark.range(10).withColumnRenamed("id", "sig64")
-        old.persist(StorageLevel.MEMORY_AND_DISK)
-        old.count()
-        def cached(wm):
-            return _BINDEX_OK_BUCKETS_CACHE.get(spark, str(tmp_path), None, t, version=wm)
-
-        wm_old = {"n_docs": 40, "max_doc_id": 39}
-        _BINDEX_OK_BUCKETS_CACHE.put(spark, str(tmp_path), old, t, version=wm_old)
-        wm2 = {"n_docs": 50, "max_doc_id": 49}
-        ok2 = _bindex_ok_buckets(spark, str(tmp_path), t, wm2)
-        assert old.storageLevel == StorageLevel.NONE  # superseded, released
-        assert ok2.storageLevel != StorageLevel.NONE
-        assert cached(wm_old) is None
-        assert cached(wm2) is ok2
-
-        # regime 2 — SAME plan under a moved watermark key: the old key
-        # is popped but the shared cache registration survives
-        wm3 = {"n_docs": 60, "max_doc_id": 59}
-        _BINDEX_OK_BUCKETS_CACHE.put(spark, str(tmp_path), ok2, t, version=wm3)
-        assert cached(wm2) is None
-        assert cached(wm3) is ok2
-        assert ok2.storageLevel != StorageLevel.NONE  # still registered
-    finally:
-        _findex_drop(spark, t)
-        evict_session_caches(str(tmp_path))

@@ -339,3 +339,34 @@ def test_written_rows_come_from_the_write(spark, tmp_path):
         write_partitioned(build_pipeline(spark, CFG % out2, SF), out2, ["lang", "split"])
         spark.read.parquet(out2).count()
     assert run.n < recount.n, f"jobs: run {run.n}, write + re-read {recount.n}"
+
+
+def test_pipeline_rows_are_counted_in_the_write_stage(spark, tmp_path, monkeypatch):
+    """The write's row count (CollectMetrics) sits above the partition
+    repartition, in the write's own stage: no Exchange is its ancestor.
+    Below the Exchange it would run in the shuffle-map stage, where a
+    re-run map task adds its rows to the count again."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    plans = []
+    save = DataFrameWriter.save
+
+    def spy(self, *args, **kwargs):
+        plans.append(self._df._jdf.queryExecution().executedPlan().toString())
+        return save(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "save", spy)
+    res = run_pipeline(spark, CFG % str(tmp_path / "out"), SF)
+    assert res["rows"] > 0 and len(plans) == 1
+
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-|"))
+
+    lines = plans[0].splitlines()
+    i = next(k for k, line in enumerate(lines) if "CollectMetrics" in line)
+    ancestors, d = [], depth(lines[i])
+    for line in reversed(lines[:i]):
+        if depth(line) < d:
+            ancestors.append(line.strip())
+            d = depth(line)
+    assert not [a for a in ancestors if "Exchange" in a], plans[0]

@@ -2,16 +2,19 @@
 token that is not a comment, a docstring, or whitespace.
 
 Usage:
-    python tools/code_lines.py FILE [FILE ...]
-    python tools/code_lines.py --rev REV FILE [FILE ...]   # files as of a git revision
+    python tools/code_lines.py PATH [PATH ...]
+    python tools/code_lines.py --rev REV PATH [PATH ...]   # as of a git revision
 
-Prints one line per file and a total.
+A PATH is a file or a directory; a directory stands for every
+git-tracked .py file under it (tracked at REV with --rev). Run from the
+repository root. Prints one line per file and a total.
 """
 
 from __future__ import annotations
 
 import ast
 import io
+import os
 import subprocess
 import sys
 import tokenize
@@ -38,19 +41,35 @@ def code_lines(src: str) -> int:
     return len(lines)
 
 
+def git(*args: str) -> str:
+    return subprocess.run(["git", *args], capture_output=True, text=True, check=True).stdout
+
+
+def expand(path: str, rev: str | None) -> list[str]:
+    """``path`` itself when it is a file, else the tracked .py files
+    under it."""
+    if rev is None:
+        if not os.path.isdir(path):
+            return [path]
+        files = git("ls-files", "--", path).splitlines()
+    else:
+        files = git("ls-tree", "-r", "--name-only", rev, "--", path).splitlines()
+        if files == [os.path.normpath(path)]:
+            return files
+    return [f for f in files if f.endswith(".py")]
+
+
 def main(argv: list[str]) -> int:
     rev = None
     if argv[:1] == ["--rev"]:
         rev, argv = argv[1], argv[2:]
     total = 0
-    for path in argv:
+    for path in [f for p in argv for f in expand(p, rev)]:
         if rev is None:
             with open(path) as f:
                 src = f.read()
         else:
-            src = subprocess.run(
-                ["git", "show", f"{rev}:{path}"], capture_output=True, text=True, check=True
-            ).stdout
+            src = git("show", f"{rev}:{path}")
         n = code_lines(src)
         total += n
         print(f"{n:6d}  {path}")
