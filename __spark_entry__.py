@@ -3,7 +3,7 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs
 each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+order-insensitive value-hash; past results are history/CORRECTNESS_r*.json).
 
 The real registry lives in ``data_validator_spark.queries`` — one
 entry per SURVEY.md §2 operator, each with a DuckDB oracle unless the

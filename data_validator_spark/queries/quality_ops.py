@@ -79,7 +79,7 @@ def q_drift_psi(spark, sf):
     # runs in two sessions — two sequential trivial-per-row passes
     # each pay the ~0.1s/task shuffle-free stage floor on 32 bucket
     # files, where the raw 1-split scan pays it once (the
-    # col_quantiles/mad_outliers class, OPTIMIZATION_r19.md §3).
+    # col_quantiles/mad_outliers class, history/OPTIMIZATION_r19.md §3).
     li = load(spark, sf, "lineitem").select("l_extendedprice", "l_shipdate")
     cents = F.expr(PSI_CENTS)
     is_ref = F.col("l_shipdate") < F.lit(PSI_PIVOT)
@@ -373,7 +373,7 @@ def q_benford_check(spark, sf):
     # r19 measured and REJECTED the bucketed-copy ride here too:
     # driver-methodology runs went 0.415→0.44s (single trivial
     # per-row pass pays the 32-task stage floor once; the raw 1-split
-    # scan is cheaper — drift_psi's class, see OPTIMIZATION_r19.md §3).
+    # scan is cheaper — drift_psi's class, see history/OPTIMIZATION_r19.md §3).
     li = load(spark, sf, "lineitem").select("l_extendedprice")
     cents = F.expr("CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)")
     digits = (

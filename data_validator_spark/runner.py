@@ -10,8 +10,11 @@ Parity: reference ValidatorTable.scala —
   4. detailed-errors pass sampling failing rows projected onto key
      columns (ValidatorTable.quickErrorDetails),
   5. costly checks: every uniqueCheck of the table in ONE job (one
-     scan, one GROUP BY GROUPING SETS shuffle; validators/unique.py),
-     where the reference runs one job per check.
+     scan emitting each row once per column set; a small table's rows
+     go through one single-partition exchange with no map-side partial
+     count, a larger one's through Spark's own partial count and
+     exchange; validators/unique.py), where the reference runs one job
+     per check.
 
 What runs at the same time (``run_config``): every table's configCheck
 at once; then, once all of them have finished and passed, every

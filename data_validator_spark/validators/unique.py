@@ -4,19 +4,32 @@ Parity: reference UniqueCheck.scala costlyCheck —
 df.select(cols).groupBy(cols).count().where("count > 1").count(),
 one job per check.
 
-Here all uniqueChecks of a table share ONE job: a scan, then
-``GROUP BY GROUPING SETS ((cols₁), (cols₂), …)`` with ``grouping_id()``
-and ``count(1)``, then one global aggregate that counts, per grouping
-id, the groups with count > 1. That is one scan and one hash shuffle
-per table instead of one of each per check. The Expand emits each row
-once per distinct column set, so the shuffle carries the union of the
-key columns. The runner links a table's checks to one
+Here all uniqueChecks of a table share ONE job, whatever the width of
+their column union. Each row is emitted once per distinct column set
+``g``, as ``(gid = g, k₁ … kₙ)`` over the union of the key columns,
+with NULL in the keys the set does not have. The rows are grouped on
+``(gid, k₁ … kₙ)``, and one global aggregate counts, per ``gid``, the
+groups with count > 1. The runner links a table's checks to one
 ``DuplicateKeyCounts`` (``share_duplicate_counts``): the first
 ``costly_check`` runs the job, the others read its result. A check on
-its own is a table with one grouping set.
+its own is a table with one column set.
 
-Scale: partial (map-side) counting collapses duplicates before the
-shuffle, and AQE coalesces or splits skewed partitions at runtime.
+A small table's job has one exchange. When the key columns' estimated
+bytes, times the number of column sets, fit in one advisory partition
+(``spark.sql.adaptive.advisoryPartitionSizeInBytes``,
+``_fits_one_partition``), the rows go through ``repartition(1, …)``:
+each map task writes one shuffle file, not one per
+``spark.sql.shuffle.partitions``, and the group count and the global
+count both run in that one partition. The trade: there is no map-side
+partial count, so every emitted row crosses the exchange. On unique
+keys a partial count collapses nothing; on a key with many duplicate
+rows more rows are shuffled, and one task counts them all.
+
+A larger table, or a source without size statistics (jdbc, an
+in-memory frame), keeps Spark's own plan: a partial count, an exchange
+that AQE coalesces from the actual map output, and a second exchange
+for the global count. No session conf is set for any of this:
+``run_config`` runs many jobs on one session at once.
 """
 
 from __future__ import annotations
@@ -29,42 +42,17 @@ from pyspark.sql import functions as F
 from data_validator_spark.events import ValidatorError, ValidatorGood, ValidatorTimer
 from data_validator_spark.validators.base import CostlyCheck
 
-# grouping_id() is a 64-bit mask, so Spark allows at most 64 grouping columns.
-MAX_GROUPING_COLUMNS = 64
 
-
-def _packs(column_sets: list[list[str]]) -> list[list[list[str]]]:
-    """Consecutive sets share a job while their union of columns fits
-    in grouping_id(); a set wider than that gets a job of its own."""
-    packs: list[list[list[str]]] = []
-    union: set[str] = set()
-    for s in column_sets:
-        if packs and len(union.union(s)) <= MAX_GROUPING_COLUMNS:
-            packs[-1].append(s)
-            union.update(s)
-        else:
-            packs.append([s])
-            union = set(s)
-    return packs
-
-
-def _pack_counts(df: DataFrame, pack: list[list[str]]) -> list[int]:
-    """Duplicate-key count of each set in ``pack``, in one Spark job."""
-    names = list(dict.fromkeys(c for s in pack for c in s))
-    if len(names) > MAX_GROUPING_COLUMNS:  # one set, too wide for grouping_id()
-        keys, members = [F.struct(*names)], [[0]]
-    else:
-        keys, members = [F.col(c) for c in names], [[names.index(c) for c in s] for s in pack]
-    ks = [f"k{i}" for i in range(len(keys))]
-    grouped = (
-        df.select(*[k.alias(a) for k, a in zip(keys, ks)])
-        .groupingSets([[ks[i] for i in m] for m in members], *ks)
-        .agg(F.grouping_id().alias("gid"), F.count(F.lit(1)).alias("n"))
+def _fits_one_partition(df: DataFrame, copies: int) -> bool:
+    """Whether ``copies`` times the estimated bytes of ``df`` fit in one
+    advisory partition. A source without size statistics does not: its
+    estimate is ``spark.sql.defaultSizeInBytes``, Long.MaxValue."""
+    jvm, conf = df.sparkSession._jvm, df.sparkSession.conf
+    advisory = jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
     )
-    # grouping_id() sets bit (len(ks) - 1 - i) when key i is not in the set
-    gids = [sum(1 << (len(ks) - 1 - i) for i in range(len(ks)) if i not in m) for m in members]
-    row = grouped.agg(*[F.count_if((F.col("gid") == g) & (F.col("n") > 1)) for g in gids]).collect()[0]
-    return [int(v) for v in row]
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    return size * copies <= advisory
 
 
 def duplicate_key_counts(
@@ -73,17 +61,29 @@ def duplicate_key_counts(
     """Number of key-tuples occurring more than once, per column set.
 
     Sets are keyed, and deduplicated, by their columns: order and
-    repeats within a set do not change its groups, and Spark would
-    count a repeated grouping set twice. One job per pack of at most
-    64 distinct columns.
+    repeats within a set do not change its groups. One query for all sets.
     """
-    distinct: dict[frozenset[str], list[str]] = {}
-    for cols in column_sets:
-        distinct.setdefault(frozenset(cols), list(dict.fromkeys(cols)))
-    counts: dict[frozenset[str], int] = {}
-    for pack in _packs(list(distinct.values())):
-        counts.update(zip((frozenset(s) for s in pack), _pack_counts(df, pack)))
-    return counts
+    sets = list(dict.fromkeys(frozenset(cols) for cols in column_sets))
+    names = list(dict.fromkeys(c for cols in column_sets for c in cols))
+    ks = [f"k{i}" for i in range(len(names))]
+    arms = [
+        F.struct(
+            F.lit(g).alias("gid"),
+            # a key the set lacks is a NULL of the column's type
+            *[F.when(F.lit(c in s), F.col(c)).alias(k) for c, k in zip(names, ks)],
+        )
+        for g, s in enumerate(sets)
+    ]
+    rows, by = df.select(F.inline(F.array(*arms))), ["gid", *ks]
+    # sized from the key columns: Spark's estimate for the inline frame
+    # is not multiplied by the rows each input row emits
+    if _fits_one_partition(df.select(*names), len(sets)):
+        rows = rows.repartition(1, *by)
+    groups = rows.groupBy(*by).count()
+    row = groups.agg(
+        *[F.count_if((F.col("gid") == g) & (F.col("count") > 1)) for g in range(len(sets))]
+    ).collect()[0]
+    return {s: int(v) for s, v in zip(sets, row)}
 
 
 class DuplicateKeyCounts:

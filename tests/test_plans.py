@@ -479,7 +479,7 @@ def test_r19_lineitem_scan_rides_ride_copies(spark, registry):
     bucketed copies — bucket-file parallelism with no round-robin
     exchange.
     Row-identical by construction (same rows, different at-rest
-    layout); the A/B seconds live in OPTIMIZATION_r19.md.
+    layout); the A/B seconds live in history/OPTIMIZATION_r19.md.
     drift_psi/benford_check were measured on the same ride and
     REVERTED (trivial-per-row passes lose to the 32-task stage floor
     under the driver methodology — same doc)."""

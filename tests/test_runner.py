@@ -5,9 +5,12 @@ fatal handling."""
 
 from __future__ import annotations
 
+import ast
 import json
+import re
 import threading
 import time
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -154,8 +157,8 @@ WIDE = [f"c{i}" for i in range(70)]
     ],
 )
 def test_fused_unique_counts_equal_per_check_form(spark, keys_df, column_sets):
-    """All uniqueChecks of a table run as one GROUPING SETS job; each
-    check reports the count of the reference's per-check job."""
+    """All uniqueChecks of a table run as one job; each check reports
+    the count of the reference's per-check job."""
     checks = [UniqueCheck(cols) for cols in column_sets]
     ValidatorTableRunner(DFSource(keys_df), checks).costly_checks(spark)
     for chk, cols in zip(checks, column_sets):
@@ -179,6 +182,126 @@ def test_unique_checks_of_a_table_share_one_job(spark, tdf):
             assert runner.costly_checks(spark) is True
         counts.append(cj.n)
     assert counts[0] == counts[1], f"jobs for 1 vs 2 uniqueChecks: {counts}"
+
+
+def test_unique_sets_over_64_columns_share_one_job(spark, keys_df):
+    """Column sets whose union spans more than 64 columns start no more
+    Spark jobs than one set."""
+    counts = []
+    for sets in ([["c5"]], [WIDE[:40], WIDE[30:], ["c5"]]):
+        with count_jobs(spark, f"unique-wide-{len(sets)}") as cj:
+            unique_mod.duplicate_key_counts(keys_df, sets)
+        counts.append(cj.n)
+    assert counts[0] == counts[1], f"jobs for 1 set vs a 70-column union: {counts}"
+
+
+def _unique_plan(df, column_sets, monkeypatch):
+    """Run duplicate_key_counts; return the final physical plan of its
+    one query."""
+    frames, real_collect = [], type(df).collect
+    monkeypatch.setattr(type(df), "collect", lambda self: frames.append(self) or real_collect(self))
+    unique_mod.duplicate_key_counts(df, column_sets)
+    monkeypatch.undo()
+    [frame] = frames
+    return frame._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+
+
+def test_unique_job_on_a_small_table_has_one_exchange(spark, tdf, tmp_path, monkeypatch):
+    """No Expand, and one exchange: the one-partition repartition,
+    which the global count rides."""
+    path = str(tmp_path / "small.parquet")
+    tdf.write.parquet(path)
+    plan = _unique_plan(spark.read.parquet(path), [["k1", "k2"], ["k2", "s"]], monkeypatch)
+    assert "Expand" not in plan
+    assert plan.count("Exchange ") == 1, plan
+    assert "Exchange SinglePartition, REPARTITION_BY_NUM" in plan, plan
+
+
+@pytest.fixture
+def advisory_size(spark):
+    """Set spark.sql.adaptive.advisoryPartitionSizeInBytes for a test."""
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key)
+    yield lambda v: spark.conf.set(key, v)
+    spark.conf.set(key, old)
+
+
+def _keeps_spark_plan(plan):
+    """A partial count below Spark's own hash exchange, and no
+    repartition of the job's making."""
+    assert "REPARTITION_BY" not in plan, plan
+    exchange = re.search(r"Exchange hashpartitioning\(gid#\d+, .*ENSURE_REQUIREMENTS", plan)
+    assert exchange, plan
+    assert re.search(r"HashAggregate\(keys=\[gid#\d+", plan[exchange.end():]), plan
+
+
+@pytest.mark.parametrize("source", ["large", "no_statistics"])
+def test_unique_job_past_one_partition_keeps_spark_plan(
+    spark, tdf, advisory_size, monkeypatch, source
+):
+    """A table past one advisory partition, or an in-memory frame with
+    no size estimate, keeps the partial count and Spark's exchange."""
+    if source == "large":
+        advisory_size("1000b")  # 1000 longs: 8000 bytes
+        df = spark.range(1000)
+    else:
+        df = tdf
+    _keeps_spark_plan(_unique_plan(df, [[df.columns[0]]], monkeypatch))
+
+
+def test_unique_job_sizes_for_every_column_set(spark, advisory_size, monkeypatch):
+    """Each row is emitted once per column set, so two sets whose key
+    columns fit one partition once do not fit it twice."""
+    df = spark.range(1000).selectExpr("id", "id % 7 AS m")  # 12000 bytes
+    advisory_size("20000b")
+    _keeps_spark_plan(_unique_plan(df, [["id"], ["m"]], monkeypatch))
+
+
+def test_fits_one_partition_bounds(spark, advisory_size):
+    longs = spark.range(1000)  # an 8000-byte estimate
+    assert unique_mod._fits_one_partition(spark.range(0), 3)
+    advisory_size("16000b")
+    assert unique_mod._fits_one_partition(longs, 2)
+    assert not unique_mod._fits_one_partition(longs, 3)
+    advisory_size("7999b")
+    assert not unique_mod._fits_one_partition(longs, 1)
+
+
+@pytest.mark.parametrize("fit", [True, False])
+def test_null_nan_and_signed_zero_keys_count_as_the_reference(spark, fit, monkeypatch):
+    """NULL, NaN and -0.0/0.0 keys group as in the reference's per-check
+    groupBy(cols).count().where(count > 1).count(), in both plans."""
+    monkeypatch.setattr(unique_mod, "_fits_one_partition", lambda d, n: fit)
+    d = "CASE id % 5 WHEN 0 THEN 0.0D WHEN 1 THEN -0.0D WHEN 2 THEN double('NaN') WHEN 3 THEN NULL ELSE id END"
+    df = spark.range(23).selectExpr(
+        "id",
+        f"{d} AS d",
+        f"CAST(({d}) * -1 AS FLOAT) AS f",
+        "IF(id % 4 = 0, NULL, id % 3) AS i",
+    )
+    column_sets = [["d"], ["f"], ["d", "f"], ["d", "i"], ["f", "i"], ["i"], ["id", "d"]]
+    counts = unique_mod.duplicate_key_counts(df, column_sets)
+    for cols in column_sets:
+        expected = df.select(*cols).groupBy(*cols).count().where(F.col("count") > 1).count()
+        assert counts[frozenset(cols)] == expected, cols
+
+
+def test_no_session_conf_is_set_by_validators_or_runner():
+    """run_config's threads share one session, so a conf set for one job
+    would reach every job running beside it; the unique job sizes its
+    exchange in the plan instead."""
+    pkg = Path(runner_mod.__file__).parent
+    files = [pkg / "runner.py", *sorted((pkg / "validators").glob("*.py"))]
+    found = []
+    for path in files:
+        for node in ast.walk(ast.parse(path.read_text())):
+            f = getattr(node, "func", None)
+            if isinstance(f, ast.Attribute) and f.attr in ("set", "setConf"):
+                owner = f.value
+                name = owner.attr if isinstance(owner, ast.Attribute) else getattr(owner, "id", "")
+                if f.attr == "setConf" or name == "conf":
+                    found.append(f"{path.name}:{node.lineno}")
+    assert not found, found
 
 
 @pytest.mark.parametrize("columns", [[], "k1", None, ["k1", 2], [["k1"]]])

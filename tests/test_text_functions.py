@@ -116,7 +116,7 @@ def test_quality_and_token_count_match_vectorized_reference(spark):
     kernel experiment: built for corpus_train_filter per the r18
     verdict, proven bit-identical here and on all sf0.1 docs, then NOT
     shipped — the same-boot A/B showed the Python boundary round-trip
-    offsets the expression saving at bench SF; OPTIMIZATION_r19.md has
+    offsets the expression saving at bench SF; history/OPTIMIZATION_r19.md has
     the numbers). Doubles compare by bit pattern: any engine change
     that moves quality_score by one ulp — or token_count by one token
     on trim/split edge cases — fails here before it can drift the

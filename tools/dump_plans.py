@@ -1,13 +1,13 @@
 """Dump `.explain("formatted")` for named registry queries to text files.
 
-Produces the per-query plan evidence committed under plans/r<N>/:
+Produces the per-query plan evidence kept under history/plans/r<N>/:
 for each key, the INITIAL formatted plan and (because several
 optimizations change the steady-state shape of session-persisted
 relations) the plan re-captured after one full execution with the
 noop sink, when caches/indexes are materialized.
 
 Usage: python tools/dump_plans.py <sf_dir> <out_dir> <suffix> <key> [<key> ...]
-  e.g. python tools/dump_plans.py /root/testdata/sf0.01 plans/r18 after dsir_importance
+  e.g. python tools/dump_plans.py /root/testdata/sf0.01 history/plans/r18 after dsir_importance
 """
 
 from __future__ import annotations
