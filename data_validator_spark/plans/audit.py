@@ -65,27 +65,8 @@ def prune_cached_subtrees(plan: str) -> str:
     return "\n".join(out)
 
 
-def scan_count(df: DataFrame) -> int:
-    return plan_string(df).count("FileScan")
-
-
 def exchange_count(df: DataFrame) -> int:
     return plan_string(df).count("Exchange")
-
-
-def broadcast_join_count(df: DataFrame) -> int:
-    return plan_string(df).count("BroadcastHashJoin")
-
-
-def has_pushed_filter(df: DataFrame, fragment: str) -> bool:
-    """True when `fragment` appears inside a PushedFilters list."""
-    plan = plan_string(df)
-    return any(fragment in seg[:500] for seg in plan.split("PushedFilters: [")[1:])
-
-
-def has_cartesian(df: DataFrame) -> bool:
-    plan = plan_string(df)
-    return "CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan
 
 
 def audit(df: DataFrame) -> dict[str, object]:

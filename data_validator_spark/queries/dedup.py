@@ -13,11 +13,21 @@ not, because its hash seeds are private).
 
 from __future__ import annotations
 
+import math
+
 import pandas as pd
 from pyspark.sql import functions as F
 
 from data_validator_spark.functions.text import rolling_shingle_hashes
-from data_validator_spark.operators.bucketing import copy_name, ensure_copy, write_bucketed
+from data_validator_spark.operators.bucketing import (
+    BUCKET_SIDECAR,
+    _read_sidecar,
+    _source_signature,
+    copy_name,
+    copy_path,
+    ensure_copy,
+    write_bucketed,
+)
 from data_validator_spark.operators.cc_star import connected_components
 from data_validator_spark.operators.checkpoint import free_local_checkpoint
 from data_validator_spark.queries import SessionCache, load, load_documents_by_id
@@ -391,7 +401,6 @@ def q_dedup_incremental_minhash(spark, sf):
     confirmed candidates (NULL when none — both engines)."""
     pivot = _incremental_pivot(spark, sf)
     t = _ensure_bindex(spark, sf)
-    wm = _corpus_watermark(spark, sf)
     cb = (
         spark.table(t)
         .where(F.col("doc_id") < F.lit(pivot))
@@ -404,12 +413,11 @@ def q_dedup_incremental_minhash(spark, sf):
     # are byte-identical to the in-session derivation: distinct per
     # (doc, band) because the band id is hashed into sig64), so the
     # screen pays zero minhash recomputation AND the candidate join
-    # runs index⨝index colocated on the sig64 bucketing. The probe is
-    # the refresh's own cached max-doc_id scalar (one column-pruned
-    # job per (session, corpus)); a fresh index without the delta
-    # falls back to deriving the bands in-session.
-    table_max = _BINDEX_MAX_CACHE.get(spark, sf, lambda: _table_max_doc_id(spark, t), t)
-    if int(table_max) >= wm["max_doc_id"]:
+    # runs index⨝index colocated on the sig64 bucketing. The test is
+    # the refresh's own sidecar stamp (_refresh_index), a file read
+    # with no Spark job; an index without it (fresh, or an append that
+    # died part-way) falls back to deriving the bands in-session.
+    if _read_sidecar(copy_path(spark, t)).get("refreshed"):
         db = (
             spark.table(t)
             .where(F.col("doc_id") >= F.lit(pivot))
@@ -1034,28 +1042,45 @@ DELTA_FRAC = 0.9
 # (warehouse_ops.py), composing doc_fingerprint + the
 # bloom_filter_semijoin pre-screen (accel_ops.py).
 _INC_INDEX_CACHE = SessionCache()
-_INC_PIVOT_CACHE = SessionCache()
+# the corpus probe behind the pivot and the dedup indexes' watermark
+_CORPUS_WM_CACHE = SessionCache()
+
+
+def _corpus_watermark(spark, sf) -> dict:
+    """Snapshot of the documents table the dedup indexes derive from:
+    row count, max doc_id and ``files``, the source-file signature of
+    documents.parquet (operators/bucketing._source_signature). The
+    signature catches every rewrite that touches bytes on disk, a
+    text-only one included; a source that cannot be signed (remote
+    storage) records None and keeps count + max doc_id as its only
+    guard. One cached column-pruned agg per (application, dataset)."""
+    import os
+
+    def build():
+        try:
+            files = _source_signature(os.path.join(str(sf), "documents.parquet"))
+        except FileNotFoundError:
+            files = None
+        row = (
+            load(spark, sf, "documents")
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.coalesce(F.max("doc_id"), F.lit(-1)).alias("m"),
+            )
+            .first()
+        )
+        return {"n_docs": int(row["n"]), "max_doc_id": int(row["m"]), "files": files}
+
+    return _CORPUS_WM_CACHE.get(spark, sf, build)
 
 
 def _incremental_pivot(spark, sf) -> int:
-    """Append-batch boundary: floor((max(doc_id)+1) * DELTA_FRAC).
-    A bounded 1-row scalar fetch (column-pruned doc_id scan), cached
-    per (application, dataset); as a LITERAL it pushes into the delta
-    parquet scan as GreaterThanOrEqual — row-group pruning on the
-    append files, which is the whole point of incremental dedup."""
-    return _INC_PIVOT_CACHE.get(
-        spark,
-        sf,
-        lambda: int(
-            load(spark, sf, "documents")
-            .agg(
-                F.floor((F.max("doc_id") + F.lit(1)) * F.lit(DELTA_FRAC))
-                .cast("long")
-                .alias("p")
-            )
-            .first()["p"]
-        ),
-    )
+    """Append-batch boundary: floor((max(doc_id)+1) * DELTA_FRAC), from
+    the corpus probe (the same double arithmetic as Spark's floor over
+    a long times a double literal). As a LITERAL it pushes into the
+    delta parquet scan as GreaterThanOrEqual — row-group pruning on
+    the append files, which is the whole point of incremental dedup."""
+    return math.floor((_corpus_watermark(spark, sf)["max_doc_id"] + 1) * DELTA_FRAC)
 
 
 def _incremental_index(spark, sf):
@@ -1237,61 +1262,59 @@ FINDEX_DIGEST_BUCKETS = 16
 FINDEX_MOD = 1_000_003
 
 
-# Corpus-snapshot stats backing the findex watermark; a same-path
-# dataset rewrite moves the source-file signature, which evicts the
-# probe (SessionCache) and forces a fresh disk-watermark comparison.
-_FINDEX_STATS_CACHE = SessionCache()
-
-
-def _corpus_watermark(spark, sf) -> dict:
-    """Snapshot stats of the documents table the index derives from:
-    row count + max doc_id (the fidelity ADVICE r10 asks for — it
-    catches appends and row-set rewrites; a rewrite that keeps every
-    doc_id but changes text is invisible to any doc_id-level probe
-    and needs an explicit rebuild). One cached column-pruned agg per
-    (application, dataset)."""
-
-    def build():
-        row = (
-            load(spark, sf, "documents")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.coalesce(F.max("doc_id"), F.lit(-1)).alias("m"),
-            )
-            .first()
-        )
-        return {"n_docs": int(row["n"]), "max_doc_id": int(row["m"])}
-
-    return _FINDEX_STATS_CACHE.get(spark, sf, build)
-
-
 def _ensure_index(spark, sf, table, kind: str, key: str, buckets: int, rows) -> str:
     """Idempotently materialize + register one dedup index table
     (``dv_dedup_{kind}_{tag}`` unless ``table`` names it) over the
     EXISTING corpus (doc_id < pivot) through the shared copy lifecycle
     (operators/bucketing.ensure_copy), guarded by the corpus watermark
-    (ADVICE r10): the sidecar records the documents snapshot (row
-    count + max doc_id) the table contents derive from, and any
-    on-disk or registered table whose watermark disagrees with the
-    CURRENT corpus is dropped and rebuilt instead of trusted. That
-    closes both divergence paths: (a) a dataset rewritten at the same
-    path (whose new source-file signature evicts the stats probe) no longer
-    leaves stale rows in a live table, and (b) a cross-session append
-    rebuilds from the new pivot, so no doc_id range between the old
-    and new pivots goes unindexed. ``rows(pivot)`` is the corpus-side
-    content, bucketed on ``key``.
+    (_corpus_watermark): the sidecar records the documents snapshot
+    (row count, max doc_id, source-file signature) the table contents
+    derive from, and any on-disk or registered table whose watermark
+    disagrees with the CURRENT corpus is dropped and rebuilt instead
+    of trusted. That closes every divergence path: a dataset
+    rewritten at the same path, text-only rewrites included, no
+    longer leaves stale rows in a live table, and a cross-session
+    append rebuilds from the new pivot, so no doc_id range between
+    the old and new pivots goes unindexed. ``rows(pivot)`` is the
+    corpus-side content, bucketed on ``key``.
 
-    Every build resets the table's steady-state caches
-    (_invalidate_index_caches) — also a build where nothing was
-    dropped (table and files removed by hand), which the lifecycle's
-    drop hook cannot see."""
+    Every build writes a fresh sidecar without the refresh stamp
+    (_refresh_index), and evicts the screen's eligible-bucket census
+    of the table — also a build where nothing was dropped (table and
+    files removed by hand), which the lifecycle's drop cannot see."""
     t = table or copy_name(sf, "dv_dedup", kind)
 
     def build():
-        _invalidate_index_caches(t)
+        _BINDEX_OK_BUCKETS_CACHE.evict(None, t)
         return rows(_incremental_pivot(spark, sf))
 
     return ensure_copy(spark, t, [key], buckets, _corpus_watermark(spark, sf), build)
+
+
+def _refresh_index(spark, t: str, key: str, buckets: int, delta) -> None:
+    """Insert-if-absent refresh of index table ``t``: append the rows of
+    ``delta()`` the table lacks (a left-anti join on all of the
+    delta's columns), then stamp the sidecar ``"refreshed": true``.
+    A stamped index returns at once, before ``delta`` is built.
+
+    The stamp lives on disk beside the watermark, so it holds across
+    processes, and it is sound by construction: ensure_copy ignores
+    sidecar keys outside the watermark, every build writes a fresh
+    sidecar without the stamp, and an append that dies part-way
+    leaves none — the next call adds only the rows still missing."""
+    import json
+    import os
+
+    path = copy_path(spark, t)
+    sidecar = _read_sidecar(path)
+    if sidecar.get("refreshed"):
+        return
+    d = delta()
+    write_bucketed(
+        d.join(spark.table(t), d.columns, "left_anti"), t, [key], buckets, mode="append"
+    )
+    with open(os.path.join(path, BUCKET_SIDECAR), "w") as f:
+        json.dump({**sidecar, "refreshed": True}, f)
 
 
 def _ensure_findex(spark, sf, table: str | None = None) -> str:
@@ -1320,17 +1343,16 @@ def q_dedup_index_refresh(spark, sf, table: str | None = None):
     is the bucketed table, whose scan exposes the bucketing as the
     join's hash partitioning — no corpus shuffle. The digest is a
     map-side-combined 16-row aggregate over fingerprint-width rows.
-    Repeated runs are no-ops (the anti-join finds nothing new), so
-    the graded output is a pure function of the dataset: after any
-    refresh the table holds EXACTLY the distinct fingerprints of the
-    full corpus, which is what the oracle recomputes from scratch.
-    The invariant holds across sessions and dataset changes because
-    _ensure_findex is watermark-guarded (ADVICE r10): a table whose
-    recorded corpus snapshot (row count + max doc_id) disagrees with
-    the current documents table is rebuilt, never trusted. The one
-    blind spot is a rewrite that keeps every doc_id but changes text
-    — invisible at doc_id fidelity; drop the table to force a
-    rebuild in that case.
+    The refresh is insert-if-absent (_refresh_index), so the graded
+    output is a pure function of the dataset: after any refresh the
+    table holds EXACTLY the distinct fingerprints of the full corpus,
+    which is what the oracle recomputes from scratch, and a repeated
+    refresh is skipped by the sidecar stamp. The invariant holds
+    across sessions and dataset changes because _ensure_findex is
+    watermark-guarded: a table whose recorded corpus snapshot (row
+    count, max doc_id, source-file signature) disagrees with the
+    current documents table is rebuilt, never trusted — a rewrite
+    that keeps every doc_id but changes text moves the signature too.
 
     Determinism: fp60 is the 60-bit md5 fingerprint (engine-exact);
     count and SUM(fp60 % 1e6-ish) per fp60-mod-16 bucket are
@@ -1339,22 +1361,13 @@ def q_dedup_index_refresh(spark, sf, table: str | None = None):
     from data_validator_spark.functions.text import fingerprint60
 
     t = _ensure_findex(spark, sf, table)
-    pivot = _incremental_pivot(spark, sf)
-    wm = _corpus_watermark(spark, sf)
-    if _FINDEX_DONE_CACHE.get(spark, sf, None, t) is None:
-        delta = (
-            load(spark, sf, "documents")
-            .where(F.col("doc_id") >= F.lit(pivot))
-            .select(fingerprint60(F.col("text")).alias("fp60"))
-            .distinct()
-        )
-        new = delta.join(spark.table(t), "fp60", "left_anti")
-        write_bucketed(new, t, ["fp60"], FINDEX_BUCKETS, mode="append")
-        # after a refresh under this watermark the table holds exactly
-        # the distinct fingerprints of the full corpus — a repeated run
-        # would anti-join to nothing, so skip the delta scan + append
-        # job (r16, same steady-state rule as the band-index probe)
-        _FINDEX_DONE_CACHE.put(spark, sf, True, t)
+    _refresh_index(
+        spark, t, "fp60", FINDEX_BUCKETS,
+        lambda: load(spark, sf, "documents")
+        .where(F.col("doc_id") >= F.lit(_incremental_pivot(spark, sf)))
+        .select(fingerprint60(F.col("text")).alias("fp60"))
+        .distinct(),
+    )
     idx = spark.table(t)
     return (
         idx.groupBy(
@@ -1403,45 +1416,12 @@ def _sig64_col():
     )
 
 
-# Steady-state caches for the persisted-index maintenance ops (r16,
-# r15 verdict item 5 — the RFM boundary-cache pattern): each entry is
-# keyed on (application, dataset, table). A dataset rewrite/append
-# moves the source-file signature of the documents files the corpus
-# watermark derives from, so SessionCache evicts them like every
-# other session cache of the dataset before anything is rebuilt.
-#   _BINDEX_MAX_CACHE: the refresh's max-doc_id idempotency probe —
-#   one scalar job per (session, corpus) instead of per run, and a
-#   probe that proves the table complete also skips the empty-delta
-#   append job (a zero-row write of BINDEX_BUCKETS tasks is NOT free).
-#   _BINDEX_OK_BUCKETS_CACHE: the minhash screen's eligible-bucket
-#   census (groupBy sig64 over the full corpus index) — persisted once
-#   per (session, corpus); its content is a pure function of the
-#   index, which the corpus pins.
-_BINDEX_MAX_CACHE = SessionCache()
+# The minhash screen's eligible-bucket census (groupBy sig64 over the
+# full corpus index), persisted once per (application, dataset,
+# table): its content is a pure function of the index, which the
+# corpus pins. A build of the index evicts it (_ensure_index), since
+# the census reads files a rebuild replaces.
 _BINDEX_OK_BUCKETS_CACHE = SessionCache()
-# fingerprint-index refreshes completed this session, per corpus —
-# a repeated run's delta anti-joins to nothing, so the whole
-# delta-scan + append job is skipped (same steady-state rule).
-_FINDEX_DONE_CACHE = SessionCache()
-
-
-def _table_max_doc_id(spark, table: str) -> int:
-    return int(
-        spark.table(table)
-        .agg(F.coalesce(F.max("doc_id"), F.lit(-1)).alias("m"))
-        .first()["m"]
-    )
-
-
-def _invalidate_index_caches(table: str) -> None:
-    """Drop steady-state entries for one index table. Called on every
-    build of _ensure_index: a rebuild under an UNCHANGED corpus
-    watermark (manually dropped table/dir) restarts the table at
-    corpus-side-only content, so a cached probe/census keyed by that
-    same corpus would be stale-high and make the next refresh skip
-    a delta the rebuilt table genuinely lacks."""
-    for cache in (_BINDEX_MAX_CACHE, _BINDEX_OK_BUCKETS_CACHE, _FINDEX_DONE_CACHE):
-        cache.evict(None, table)
 
 
 def _bindex_ok_buckets(spark, sf, t: str):
@@ -1482,45 +1462,27 @@ def q_dedup_band_index_refresh(spark, sf, table: str | None = None):
     Scale shape: the band relation rides the session-persisted
     minhash pipeline (shingles → Arrow kernel → band structs), and
     the delta slice carries the pivot literal into the documents
-    scan; idempotency costs ONE scalar probe (max doc_id over the
-    bucketed table, column-pruned) instead of a corpus-side anti-join
-    — delta rows start strictly above it, so repeated refreshes
-    append nothing. The digest is a map-side-combined 16-row
-    aggregate. After any refresh the table holds EXACTLY the distinct
-    (sig64, doc_id) band postings of the full corpus — what the
-    oracle recomputes from scratch — and the watermark guard
+    scan. The refresh is insert-if-absent on (sig64, doc_id)
+    (_refresh_index), so an append that died part-way is completed,
+    not skipped, and a stamped index skips the delta and the append
+    outright. The digest is a map-side-combined 16-row aggregate.
+    After any refresh the table holds EXACTLY the distinct (sig64,
+    doc_id) band postings of the full corpus — what the oracle
+    recomputes from scratch — and the watermark guard
     (_ensure_bindex) extends that invariant across sessions and
-    dataset changes, with the same doc_id-fidelity blind spot as the
-    fingerprint index.
+    dataset changes, as for the fingerprint index.
 
     Determinism: sig64 is a 60-bit md5 prefix (engine-exact, same
     hex-string equivalence as the whole dedup family); the digest is
     integer counts and mod-sums — order-independent."""
     t = _ensure_bindex(spark, sf, table)
-    pivot = _incremental_pivot(spark, sf)
-    wm = _corpus_watermark(spark, sf)
-    # max-doc_id idempotency probe, cached per (session, corpus)
-    # (r16, r15 verdict item 5): the probe's answer is a pure function
-    # of the table content, which the corpus pins — and once the
-    # table provably covers the corpus (start > corpus max), the
-    # delta is empty BY CONSTRUCTION, so the append job (a zero-row
-    # write of BINDEX_BUCKETS tasks) is skipped outright.
-    table_max = _BINDEX_MAX_CACHE.get(spark, sf, None, t)
-    if table_max is None:
-        table_max = _table_max_doc_id(spark, t)
-    start = max(pivot, int(table_max) + 1)
-    if start <= wm["max_doc_id"]:
-        delta = (
-            _band_df(spark, sf)
-            .where(F.col("doc_id") >= F.lit(start))
-            .select(_sig64_col().alias("sig64"), "doc_id")
-            .distinct()
-        )
-        write_bucketed(delta, t, ["sig64"], BINDEX_BUCKETS, mode="append")
-    # after a refresh the table holds every posting with doc_id up to
-    # the corpus max (the delta slice is [start, corpus max] and the
-    # corpus side below `start` was already present)
-    _BINDEX_MAX_CACHE.put(spark, sf, wm["max_doc_id"], t)
+    _refresh_index(
+        spark, t, "sig64", BINDEX_BUCKETS,
+        lambda: _band_df(spark, sf)
+        .where(F.col("doc_id") >= F.lit(_incremental_pivot(spark, sf)))
+        .select(_sig64_col().alias("sig64"), "doc_id")
+        .distinct(),
+    )
     idx = spark.table(t)
     return (
         idx.groupBy(

@@ -119,6 +119,16 @@ class Check(ABC):
         self.add_event(ValidatorError(f"Column: '{column}' not found in schema."))
         return False
 
+    def column_of_kind(self, df: DataFrame, column: str, kind: str, ok) -> None:
+        """Config error unless ``column`` exists and ``ok(its type)``;
+        ``kind`` names the wanted type in the message."""
+        if self.column_in_df(df, column):
+            dt = df.schema[column].dataType
+            if not ok(dt):
+                self.add_event(
+                    ValidatorError(f"Column: {column} found, but not of {kind}: {dt.simpleString()}")
+                )
+
     # -- reporting ---------------------------------------------------------
     def to_dict(self) -> dict[str, Any]:
         """Report entry: type, failed, the report_fields(), then events."""

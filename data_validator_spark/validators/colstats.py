@@ -20,7 +20,6 @@ from typing import Any, Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from data_validator_spark.events import ValidatorError
 from data_validator_spark.validators.base import CheapCheck, is_numeric
 
 NUM_BINS = 10
@@ -38,14 +37,7 @@ class ColStats(CheapCheck):
         self.stats: dict[str, Any] = {}
 
     def config_check(self, df: DataFrame) -> bool:
-        if self.column_in_df(df, self.column):
-            dt = df.schema[self.column].dataType
-            if not is_numeric(dt):
-                self.add_event(
-                    ValidatorError(
-                        f"Column: {self.column} found, but not of numericType type: {dt.simpleString()}"
-                    )
-                )
+        self.column_of_kind(df, self.column, "numericType type", is_numeric)
         return self.failed
 
     def agg_exprs(self, df: DataFrame, prefix: str) -> list[Column]:

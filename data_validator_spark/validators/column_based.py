@@ -11,7 +11,6 @@ from typing import Any, Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from data_validator_spark.events import ColumnBasedCheckEvent, ValidatorCounter, ValidatorError
 from data_validator_spark.validators.base import CheapCheck, is_number, is_numeric
@@ -109,7 +108,6 @@ class ColumnMaxCheck(CheapCheck):
         # Always record the observed max — a passing check still reports
         # the actual value (reference records it either way).
         self.add_event(ColumnBasedCheckEvent(failed, data, msg))
-        self.failed = self.failed or failed
         return self.failed
 
     def report_fields(self) -> dict[str, Any]:
@@ -156,14 +154,7 @@ class ColumnSumCheck(CheapCheck):
                     f"'minValue': {float(self.min_value)} must be less than 'maxValue': {float(self.max_value)}"
                 )
             )
-        if self.column_in_df(df, self.column):
-            dt = df.schema[self.column].dataType
-            if not is_numeric(dt):
-                self.add_event(
-                    ValidatorError(
-                        f"Column: {self.column} found, but not of numericType type: {dt.simpleString()}"
-                    )
-                )
+        self.column_of_kind(df, self.column, "numericType type", is_numeric)
         return self.failed
 
     def agg_exprs(self, df: DataFrame, prefix: str) -> list[Column]:
@@ -206,7 +197,6 @@ class ColumnSumCheck(CheapCheck):
             f"{self.max_value}{b[1]} Actual: {actual} Relative Error: {err}"
         )
         self.add_event(ColumnBasedCheckEvent(failed, data, msg))
-        self.failed = self.failed or failed
         return self.failed
 
     def report_fields(self) -> dict[str, Any]:

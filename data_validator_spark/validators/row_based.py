@@ -40,14 +40,7 @@ class NegativeCheck(RowBasedCheck):
     check_type = "negativeCheck"
 
     def config_check_column(self, df: DataFrame) -> None:
-        if self.column_in_df(df, self.column):
-            dt = df.schema[self.column].dataType
-            if not is_numeric(dt):
-                self.add_event(
-                    ValidatorError(
-                        f"Column: {self.column} found, but not of numericType type: {dt.simpleString()}"
-                    )
-                )
+        self.column_of_kind(df, self.column, "numericType type", is_numeric)
 
     def col_test(self, df: DataFrame) -> Column:
         return F.col(self.column) < F.lit(0)
@@ -165,14 +158,7 @@ class StringLengthCheck(RowBasedCheck):
                     f"minLength: {self.min_length} must be less than or equal to maxLength: {self.max_length}"
                 )
             )
-        if self.column_in_df(df, self.column):
-            dt = df.schema[self.column].dataType
-            if not isinstance(dt, T.StringType):
-                self.add_event(
-                    ValidatorError(
-                        f"Column: {self.column} found, but not of StringType: {dt.simpleString()}"
-                    )
-                )
+        self.column_of_kind(df, self.column, "StringType", lambda dt: isinstance(dt, T.StringType))
         self.config_check_threshold()
         return self.failed
 
@@ -221,14 +207,7 @@ class StringRegexCheck(RowBasedCheck):
             except IllegalArgumentException as e:  # PatternSyntaxException
                 msg = str(e).splitlines()[0]
                 self.add_event(ValidatorError(f"Invalid regex {self.regex!r}: {msg}"))
-        if self.column_in_df(df, self.column):
-            dt = df.schema[self.column].dataType
-            if not isinstance(dt, T.StringType):
-                self.add_event(
-                    ValidatorError(
-                        f"Column: {self.column} found, but not of StringType: {dt.simpleString()}"
-                    )
-                )
+        self.column_of_kind(df, self.column, "StringType", lambda dt: isinstance(dt, T.StringType))
         self.config_check_threshold()
         return self.failed
 

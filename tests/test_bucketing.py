@@ -880,7 +880,10 @@ def test_index_refresh_appends_one_file_per_bucket(spark, multi_file_sf):
 def test_only_write_bucketed_writes_buckets():
     """Repo-wide pin: no tracked .py under data_validator_spark/ calls
     `.bucketBy(` outside operators/bucketing.write_bucketed, so every
-    bucketed table gets that writer's one-file-per-bucket layout."""
+    bucketed table gets that writer's one-file-per-bucket layout; and
+    every `write_bucketed(..., mode="append")` sits inside
+    queries/dedup._refresh_index, so every index append follows its
+    one insert-if-absent rule."""
     import ast
     import os
     import subprocess
@@ -890,20 +893,48 @@ def test_only_write_bucketed_writes_buckets():
         ["git", "-C", repo, "ls-files", "data_validator_spark/*.py"],
         capture_output=True, text=True, check=True,
     ).stdout.split()
-    offenders = []
+
+    def inside(tree, rel, module, func):
+        if rel != module:
+            return set()
+        return {
+            id(n)
+            for node in tree.body
+            if isinstance(node, ast.FunctionDef) and node.name == func
+            for n in ast.walk(node)
+        }
+
+    def appends(n):
+        return (
+            isinstance(n, ast.Call)
+            and getattr(n.func, "id", getattr(n.func, "attr", None)) == "write_bucketed"
+            and (
+                len(n.args) >= 6  # mode passed by position
+                or any(
+                    k.arg == "mode" and getattr(k.value, "value", None) == "append"
+                    for k in n.keywords
+                )
+            )
+        )
+
+    offenders, stray_appends, n_appends = [], [], 0
     for rel in tracked:
         tree = ast.parse(open(os.path.join(repo, rel)).read())
-        allowed = set()
-        if rel == "data_validator_spark/operators/bucketing.py":
-            for node in tree.body:
-                if isinstance(node, ast.FunctionDef) and node.name == "write_bucketed":
-                    allowed = {id(n) for n in ast.walk(node)}
+        allowed = inside(tree, rel, "data_validator_spark/operators/bucketing.py", "write_bucketed")
+        refresh = inside(tree, rel, "data_validator_spark/queries/dedup.py", "_refresh_index")
         offenders += [
             f"{rel}:{n.lineno}"
             for n in ast.walk(tree)
             if isinstance(n, ast.Attribute) and n.attr == "bucketBy" and id(n) not in allowed
         ]
+        for n in ast.walk(tree):
+            if appends(n):
+                n_appends += 1
+                if id(n) not in refresh:
+                    stray_appends.append(f"{rel}:{n.lineno}")
     assert not offenders, f"bucketBy outside write_bucketed: {offenders}"
+    assert not stray_appends, f"write_bucketed append outside _refresh_index: {stray_appends}"
+    assert n_appends == 1  # the guard sees the one append it protects
 
 
 def test_sorted_bucket_scan_drops_smj_sorts(spark, tmp_path):

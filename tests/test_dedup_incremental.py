@@ -672,8 +672,8 @@ def test_band_refresh_steady_state_skips_probe_and_append(spark, tmp_path):
     unchanged corpus watermark must not touch the table — no empty-
     delta append job (observable: the table directory's file set is
     byte-identical) — and must still emit the same digest. A manual
-    table drop (no corpus change) must invalidate the cached probe so
-    the rebuilt table is refreshed, not trusted."""
+    table drop (no corpus change) must clear the refresh stamp so the
+    rebuilt table is refreshed, not trusted."""
     import os
 
     from data_validator_spark.queries import evict_session_caches
@@ -708,9 +708,9 @@ def test_band_refresh_steady_state_skips_probe_and_append(spark, tmp_path):
         assert second == first
         assert snap(path) == files_after_first  # no empty append happened
 
-        # manual drop without a corpus change: the rebuild path must
-        # invalidate the cached probe, so the refresh appends the delta
-        # again instead of trusting a stale-high table max
+        # manual drop without a corpus change: the rebuild writes a
+        # fresh sidecar without the refresh stamp, so the refresh
+        # appends the delta again instead of trusting the old stamp
         spark.sql(f"DROP TABLE {t}")
         import shutil
 
@@ -722,4 +722,175 @@ def test_band_refresh_steady_state_skips_probe_and_append(spark, tmp_path):
         assert third == first
     finally:
         _findex_drop(spark, t)
+        evict_session_caches(str(tmp_path))
+
+
+def _bindex_digest_of(spark, sf):
+    """Ground-truth band-index digest recomputed from scratch over the
+    current corpus (every (sig64, doc_id) posting, no index)."""
+    from data_validator_spark.queries.dedup import (
+        FINDEX_DIGEST_BUCKETS,
+        FINDEX_MOD,
+        _band_df,
+        _sig64_col,
+    )
+
+    full = (
+        _band_df(spark, sf)
+        .select(_sig64_col().alias("sig64"), "doc_id")
+        .distinct()
+        .groupBy(
+            F.pmod(F.col("sig64"), F.lit(FINDEX_DIGEST_BUCKETS)).cast("int").alias("bucket")
+        )
+        .agg(
+            F.count(F.lit(1)).alias("n_postings"),
+            F.countDistinct("doc_id").alias("n_docs"),
+            F.sum(F.pmod(F.col("sig64"), F.lit(FINDEX_MOD))).alias("digest_sig"),
+            F.sum(F.pmod(F.col("doc_id"), F.lit(FINDEX_MOD))).alias("digest_doc"),
+        )
+    )
+    return sorted(tuple(r) for r in full.collect())
+
+
+def _parquet_files(path):
+    import os
+
+    return sorted(
+        (f, os.path.getsize(os.path.join(path, f)))
+        for f in os.listdir(path)
+        if f.endswith(".parquet")
+    )
+
+
+def test_band_refresh_completes_half_committed_append(spark, tmp_path):
+    """A job commit killed part-way leaves some of an append's bucket
+    files in the index directory and no record that the append ran.
+    The next refresh (a new process: catalog entry and session caches
+    gone, files in place) must add exactly the postings still missing,
+    so its digest equals a rebuild's — not skip the delta because the
+    landed files already reach the corpus max doc_id."""
+    import shutil
+
+    from data_validator_spark.operators.bucketing import copy_path, write_bucketed
+    from data_validator_spark.queries import evict_session_caches
+    from data_validator_spark.queries.dedup import (
+        BINDEX_BUCKETS,
+        _band_df,
+        _ensure_bindex,
+        _sig64_col,
+        q_dedup_band_index_refresh,
+    )
+
+    rows = [(i, f"half committed corpus text number {i % 37} padded") for i in range(100)]
+    spark.createDataFrame(rows, "doc_id long, text string").coalesce(1).write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    sf = str(tmp_path)
+    t, partial = "dv_bindex_pytest_partial", "dv_bindex_pytest_partial_delta"
+    _bindex_drop(spark, t)
+    try:
+        _ensure_bindex(spark, sf, table=t)  # built at the pivot
+        pivot = _incremental_pivot(spark, sf)
+        delta = (
+            _band_df(spark, sf)
+            .where(F.col("doc_id") >= F.lit(pivot))
+            .select(_sig64_col().alias("sig64"), "doc_id")
+            .distinct()
+        )
+        write_bucketed(delta, partial, ["sig64"], BINDEX_BUCKETS, path=str(tmp_path / "delta"))
+        landed = [f for f, _ in _parquet_files(str(tmp_path / "delta"))]
+        assert len(landed) == BINDEX_BUCKETS
+        for f in landed[: BINDEX_BUCKETS // 2]:
+            shutil.copy(tmp_path / "delta" / f, copy_path(spark, t))
+        spark.sql(f"DROP TABLE {partial}")
+        spark.sql(f"DROP TABLE {t}")
+        evict_session_caches(sf)
+
+        got = sorted(
+            tuple(r) for r in q_dedup_band_index_refresh(spark, sf, table=t).collect()
+        )
+        assert sum(r[1] for r in got) == 100 * 16
+        assert got == _bindex_digest_of(spark, sf)
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {partial}")
+        _bindex_drop(spark, t)
+        evict_session_caches(str(tmp_path))
+
+
+def test_text_only_rewrite_refreshes_both_indexes(spark, tmp_path):
+    """A rewrite of documents that keeps every doc_id and the row count
+    but changes text leaves count and max doc_id as they were; the
+    source-file signature in the corpus watermark still moves, so both
+    persisted indexes are rebuilt and refreshed to the new corpus. No
+    evict_session_caches call: the session caches follow the same
+    signature."""
+    from data_validator_spark.queries import evict_session_caches
+    from data_validator_spark.queries.dedup import (
+        q_dedup_band_index_refresh,
+        q_dedup_index_refresh,
+    )
+
+    d = tmp_path / "documents.parquet"
+    sf = str(tmp_path)
+    tf, tb = "dv_findex_pytest_textonly", "dv_bindex_pytest_textonly"
+    _findex_drop(spark, tf)
+    _bindex_drop(spark, tb)
+
+    def refresh_both():
+        f = sorted(tuple(r) for r in q_dedup_index_refresh(spark, sf, table=tf).collect())
+        b = sorted(tuple(r) for r in q_dedup_band_index_refresh(spark, sf, table=tb).collect())
+        return f, b
+
+    try:
+        rows1 = [(i, f"text only corpus v1 number {i % 17} padded") for i in range(50)]
+        spark.createDataFrame(rows1, "doc_id long, text string").coalesce(1).write.parquet(
+            str(d)
+        )
+        assert refresh_both() == (_findex_digest_of(spark, d), _bindex_digest_of(spark, sf))
+
+        rows2 = [(i, f"text only corpus v2 number {i % 23} padded") for i in range(50)]
+        spark.createDataFrame(rows2, "doc_id long, text string").coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(str(d))
+        f, b = refresh_both()
+        assert f == _findex_digest_of(spark, d)
+        assert sum(r[1] for r in f) == 23
+        assert b == _bindex_digest_of(spark, sf)
+    finally:
+        _findex_drop(spark, tf)
+        _bindex_drop(spark, tb)
+        evict_session_caches(str(tmp_path))
+
+
+@pytest.mark.parametrize("kind", ["findex", "bindex"])
+def test_index_refresh_steady_state_across_sessions(spark, tmp_path, kind):
+    """A refreshed index stays refreshed in a new process: after the
+    catalog entry and every session cache are gone (files in place), a
+    second refresh appends nothing — the file set is unchanged — and
+    gives the same digest."""
+    from data_validator_spark.operators.bucketing import copy_path
+    from data_validator_spark.queries import evict_session_caches
+    from data_validator_spark.queries.dedup import (
+        q_dedup_band_index_refresh,
+        q_dedup_index_refresh,
+    )
+
+    refresh = {"findex": q_dedup_index_refresh, "bindex": q_dedup_band_index_refresh}[kind]
+    rows = [(i, f"steady across sessions text {i % 19}") for i in range(80)]
+    spark.createDataFrame(rows, "doc_id long, text string").coalesce(1).write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    sf = str(tmp_path)
+    t = f"dv_{kind}_pytest_across"
+    _bindex_drop(spark, t)
+    try:
+        first = sorted(tuple(r) for r in refresh(spark, sf, table=t).collect())
+        files = _parquet_files(copy_path(spark, t))
+        spark.sql(f"DROP TABLE {t}")
+        evict_session_caches(sf)
+        second = sorted(tuple(r) for r in refresh(spark, sf, table=t).collect())
+        assert second == first
+        assert _parquet_files(copy_path(spark, t)) == files
+    finally:
+        _bindex_drop(spark, t)
         evict_session_caches(str(tmp_path))
