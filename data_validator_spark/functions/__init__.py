@@ -1,6 +1,7 @@
 from data_validator_spark.functions.text import (
     STOPWORDS_EN,
     doc_fingerprint,
+    hash60,
     lang_id,
     quality_features,
     token_count,
@@ -10,6 +11,7 @@ from data_validator_spark.functions.text import (
 __all__ = [
     "STOPWORDS_EN",
     "doc_fingerprint",
+    "hash60",
     "lang_id",
     "quality_features",
     "token_count",

@@ -140,6 +140,15 @@ def normalized_text(text: Column) -> Column:
     return F.trim(t)
 
 
+def hash60(s: Column) -> Column:
+    """THE package 60-bit hash: the first 15 hex digits of md5(utf-8
+    bytes of ``s``) as a bigint. DuckDB reproduces it exactly
+    (queries._sql_hash60: CAST('0x' || substr(md5(x), 1, 15) AS
+    BIGINT)), which is what makes every hashed operator
+    oracle-checkable (unlike xxhash64, whose seeds are Spark-private)."""
+    return F.conv(F.substring(F.md5(F.encode(s, "utf-8")), 1, 15), 16, 10).cast("long")
+
+
 def doc_fingerprint(text: Column) -> Column:
     """Content fingerprint: md5 of the normalized text. Two documents
     differing only in case/punct/whitespace collide."""
@@ -147,28 +156,24 @@ def doc_fingerprint(text: Column) -> Column:
 
 
 def fingerprint60(text: Column) -> Column:
-    """doc_fingerprint as a 60-bit bigint (first 15 md5 hex digits) —
-    the join/group key form of the fingerprint, engine-reproducible
-    (DuckDB: CAST('0x' || substr(md5(norm), 1, 15) AS BIGINT))."""
-    return F.conv(F.substring(doc_fingerprint(text), 1, 15), 16, 10).cast("long")
+    """doc_fingerprint as a 60-bit bigint — the join/group key form of
+    the fingerprint."""
+    return hash60(normalized_text(text))
 
 
-def rolling_shingle_hashes(text: Column, k: int = 3) -> Column:
-    """Array of 63-bit hashes of word k-shingles (the rolling-hash
-    fingerprint set used by minhash/Jaccard dedup).
+def shingle_hashes(toks: Column, k: int) -> Column:
+    """hash60 of every word k-shingle of the token array ``toks`` (one
+    whole-array shingle when it has fewer than k tokens) — the
+    fingerprint set minhash/Jaccard dedup builds on.
 
-    Hash = first 15 hex digits of md5(shingle) as a bigint — chosen
-    because DuckDB reproduces it exactly, making the dedup family
-    oracle-checkable (unlike xxhash64, which is Spark-private).
-    """
-    toks = tokens(normalized_text(text))
+    ``toks`` must be a BOUND column (one a projection already
+    materialized): the shingle lambda references it per element, so a
+    token expression passed here would be re-evaluated for every
+    shingle (see dedup._build_shingle_hashes)."""
     n = F.size(toks)
     idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
     shingles = F.when(
         n >= k,
-        F.transform(
-            idx,
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)),
-        ),
+        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k))),
     ).otherwise(F.array(F.concat_ws(" ", toks)))
-    return F.transform(shingles, lambda s: F.conv(F.substring(F.md5(F.encode(s, "utf-8")), 1, 15), 16, 10).cast("long"))
+    return F.transform(shingles, hash60)

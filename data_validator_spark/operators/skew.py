@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 DEFAULT_SALT_BUCKETS = 16
@@ -40,26 +40,3 @@ def salted_count_by_key(
     )
     return partial.groupBy(*keys).agg(F.sum("_partial").alias("count"))
 
-
-def salted_distinct_count(
-    df: DataFrame, keys: Sequence[str], buckets: int = DEFAULT_SALT_BUCKETS
-) -> int:
-    """Number of distinct key-tuples, skew-safe: stage 1 dedups inside
-    (keys, salt) buckets, stage 2 counts survivors."""
-    return (
-        with_salt(df, buckets)
-        .select(*keys, "_salt")
-        .distinct()
-        .select(*keys)
-        .distinct()
-        .count()
-    )
-
-
-def salted_duplicate_key_count(
-    df: DataFrame, keys: Sequence[str], buckets: int = DEFAULT_SALT_BUCKETS
-) -> int:
-    """uniqueCheck's metric — # of key-tuples with >1 row — via the
-    salted two-stage count (drop-in for heavily skewed key columns)."""
-    counts = salted_count_by_key(df.select(*keys), keys, buckets)
-    return counts.where(F.col("count") > 1).count()

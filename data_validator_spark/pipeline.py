@@ -27,9 +27,11 @@ dedupExact, dedupIncremental, qualityFilter, langFilter, split,
 splitFilter, tokenCount, boilerplateFilter, piiScrub, sample, select,
 chunk, weightedSample.
 Steps reuse the exact same column functions
-the oracle-checked queries use (functions/text.py, textops.split_bucket,
-pipeline_ops PII patterns) so pipeline behavior never diverges from
-the graded operators.
+the oracle-checked queries use (functions/text.py, textops.split_bucket
+and chunk_tokens/chunk_windows, pipeline_ops scrub_expr, sample_bucket
+and wsample_key) so pipeline behavior never diverges from the graded
+operators. Every option check that needs no schema runs in
+parse_pipeline, before a session exists.
 
 Scale: per-row steps (quality, lang, tokens, scrub) are codegen map
 expressions; dedupExact is one window shuffle on the fingerprint;
@@ -51,19 +53,26 @@ from data_validator_spark.functions.text import (
     quality_score,
     token_count,
 )
-from data_validator_spark.queries import _hash60, load
+from data_validator_spark.queries import DEC, load
 from data_validator_spark.queries.pipeline_ops import (
     SAMPLE_BUCKETS,
-    SAMPLE_SALT,
+    WSAMPLE_K,
+    sample_bucket,
     scrub_expr,
+    wsample_key,
 )
 from data_validator_spark.queries.textops import (
+    CHUNK_S,
+    CHUNK_W,
     QUALITY_CUTOFF,
     TRAIN_CUT,
     VAL_CUT,
+    chunk_tokens,
+    chunk_windows,
     split_bucket,
 )
 from data_validator_spark.sources.sinks import write_partitioned
+from data_validator_spark.validators.base import is_number
 
 
 class PipelineConfigError(ValueError):
@@ -83,11 +92,8 @@ def _step_quality_filter(df: DataFrame, opts: dict) -> DataFrame:
 
 
 def _step_lang_filter(df: DataFrame, opts: dict) -> DataFrame:
-    langs = opts.get("langs")
-    if not langs:
-        raise PipelineConfigError("langFilter requires langs: [..]")
     col = F.col("lang") if "lang" in df.columns else lang_id(F.col("text"))
-    return df.where(col.isin(list(langs)))
+    return df.where(col.isin(list(opts["langs"])))
 
 
 def _step_split(df: DataFrame, opts: dict) -> DataFrame:
@@ -151,20 +157,12 @@ def _step_pii_scrub(df: DataFrame, opts: dict) -> DataFrame:
 
 
 def _step_sample(df: DataFrame, opts: dict) -> DataFrame:
-    frac = float(opts.get("fraction", 0.2))
-    keep = int(round(frac * SAMPLE_BUCKETS))
-    bucket = (
-        _hash60(F.concat(F.lit(f"{SAMPLE_SALT}:"), F.col("doc_id").cast("string")))
-        % SAMPLE_BUCKETS
-    )
-    return df.where(bucket < keep)
+    keep = int(round(float(opts.get("fraction", 0.2)) * SAMPLE_BUCKETS))
+    return df.where(sample_bucket() < keep)
 
 
 def _step_select(df: DataFrame, opts: dict) -> DataFrame:
-    cols = opts.get("columns")
-    if not cols:
-        raise PipelineConfigError("select requires columns: [..]")
-    return df.select(*cols)
+    return df.select(*opts["columns"])
 
 
 def _step_chunk(df: DataFrame, opts: dict) -> DataFrame:
@@ -172,18 +170,9 @@ def _step_chunk(df: DataFrame, opts: dict) -> DataFrame:
     the doc_chunk operator as a pipeline stage). Adds chunk_idx /
     n_chunk_tokens and replaces text with the chunk text — a pure
     map-stage fan-out, no shuffle."""
-    from data_validator_spark.queries.textops import CHUNK_S, CHUNK_W
-
     width = int(opts.get("width", CHUNK_W))
     stride = int(opts.get("stride", CHUNK_S))
-    if width <= 0 or stride <= 0:
-        raise PipelineConfigError("chunk width/stride must be positive")
-    from data_validator_spark.queries.textops import chunk_windows
-
-    toks = df.where(F.length(F.trim(F.col("text"))) > 0).withColumn(
-        "toks", F.split(F.trim(F.col("text")), r"[ \t\n\x0B\f\r]+")
-    )
-    chunks = toks.select(
+    chunks = chunk_tokens(df).select(
         "*",
         F.posexplode(F.expr(chunk_windows(width, stride))).alias(
             "chunk_idx", "_chunk"
@@ -200,12 +189,8 @@ def _step_weighted_sample(df: DataFrame, opts: dict) -> DataFrame:
     """Keep the top-k documents by the deterministic Efraimidis–
     Spirakis key ln(u)/w (the weighted_sample operator as a pipeline
     stage); weightColumn defaults to n_chars."""
-    from data_validator_spark.queries.pipeline_ops import WSAMPLE_SALT
-
-    k = int(opts.get("k", 20))
+    k = int(opts.get("k", WSAMPLE_K))
     wcol = opts.get("weightColumn", "n_chars")
-    if k <= 0:
-        raise PipelineConfigError("weightedSample k must be positive")
     if wcol not in df.columns:
         raise PipelineConfigError(f"weightedSample weightColumn {wcol!r} not found")
     # the draw is keyed by doc_id — plus chunk_idx when the frame has
@@ -216,10 +201,7 @@ def _step_weighted_sample(df: DataFrame, opts: dict) -> DataFrame:
     if "chunk_idx" in df.columns:
         ident = F.concat(ident, F.lit(":"), F.col("chunk_idx").cast("string"))
         tiebreak.append(F.col("chunk_idx"))
-    u = (
-        _hash60(F.concat(F.lit(WSAMPLE_SALT + ":"), ident)) + 1
-    ).cast("double") / F.lit(float(2**60))
-    key = (F.log(u) / F.col(wcol).cast("double")).cast("decimal(30,6)")
+    key = wsample_key(ident, F.col(wcol)).cast(DEC)
     return (
         df.withColumn("_wkey", key)
         .orderBy(F.desc("_wkey"), *tiebreak)
@@ -242,11 +224,8 @@ def _step_dedup_incremental(df: DataFrame, opts: dict) -> DataFrame:
     and itself."""
     from data_validator_spark.functions.text import doc_fingerprint
 
-    path = opts.get("indexPath")
-    if not path:
-        raise PipelineConfigError("dedupIncremental requires indexPath")
     spark = df.sparkSession
-    index = spark.read.parquet(path).select(
+    index = spark.read.parquet(opts["indexPath"]).select(
         F.col("fingerprint").alias("__fp")
     )
     out = df.withColumn("__fp", doc_fingerprint(F.col("text"))).join(
@@ -285,6 +264,39 @@ def _require_list(value, where: str) -> list:
     return list(value)
 
 
+def _require_positive_int(value, where: str) -> None:
+    try:
+        ok = not isinstance(value, bool) and int(value) > 0
+    except (TypeError, ValueError):
+        ok = False
+    if not ok:
+        raise PipelineConfigError(f"{where} must be a positive integer, got {value!r}")
+
+
+def _check_options(name: str, opts: dict) -> None:
+    """Every step-option check that needs no schema, run by
+    parse_pipeline so a bad option fails before the JVM starts.
+    weightedSample's weightColumn needs the frame's columns, so its
+    step checks it at build time."""
+    if name == "langFilter" and not _require_list(opts.get("langs"), "langFilter.langs"):
+        raise PipelineConfigError("langFilter requires langs: [..]")
+    if name == "select" and not _require_list(opts.get("columns"), "select.columns"):
+        raise PipelineConfigError("select requires columns: [..]")
+    if name == "chunk":
+        _require_positive_int(opts.get("width", CHUNK_W), "chunk.width")
+        _require_positive_int(opts.get("stride", CHUNK_S), "chunk.stride")
+    if name == "weightedSample":
+        _require_positive_int(opts.get("k", WSAMPLE_K), "weightedSample.k")
+    if name == "sample":
+        frac = opts.get("fraction", 0.2)
+        if not is_number(frac) or not 0 <= frac <= 1:
+            raise PipelineConfigError(
+                f"sample.fraction must be a number in [0, 1], got {frac!r}"
+            )
+    if name == "dedupIncremental" and not opts.get("indexPath"):
+        raise PipelineConfigError("dedupIncremental requires indexPath")
+
+
 def parse_pipeline(config: dict | str) -> dict:
     """Validate the pipeline config shape; returns the pipeline dict.
     Every malformed-config path raises PipelineConfigError (never a
@@ -304,6 +316,8 @@ def parse_pipeline(config: dict | str) -> dict:
         raise PipelineConfigError("'pipeline' must be a map")
     if not isinstance(p.get("source"), dict):
         raise PipelineConfigError("pipeline.source required (a map)")
+    if "table" not in p["source"] and "path" not in p["source"]:
+        raise PipelineConfigError("source needs 'table' or 'path'")
     steps = p.get("steps") or []
     if not isinstance(steps, list):
         raise PipelineConfigError("pipeline.steps must be a list")
@@ -317,10 +331,7 @@ def parse_pipeline(config: dict | str) -> dict:
             )
         if step[name] is not None and not isinstance(step[name], dict):
             raise PipelineConfigError(f"step {name!r} options must be a map")
-        if name == "langFilter" and step[name]:
-            _require_list(step[name].get("langs"), "langFilter.langs")
-        if name == "select" and step[name]:
-            _require_list(step[name].get("columns"), "select.columns")
+        _check_options(name, step[name] or {})
     sink = p.get("sink")
     if sink is not None:
         if not isinstance(sink, dict) or "path" not in sink:
@@ -342,10 +353,8 @@ def build_pipeline(
         if sf_dir is None:
             raise PipelineConfigError("sf_dir required for table sources")
         df = load(spark, sf_dir, src["table"])
-    elif "path" in src:
-        df = spark.read.format(src.get("format", "parquet")).load(src["path"])
     else:
-        raise PipelineConfigError("source needs 'table' or 'path'")
+        df = spark.read.format(src.get("format", "parquet")).load(src["path"])
     for step in p.get("steps", []):
         (name,) = step
         df = STEPS[name](df, step[name] or {})

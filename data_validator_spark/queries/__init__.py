@@ -8,8 +8,9 @@ throughout (so the driver's order-insensitive value-hash matches):
 - double sums go through ``CAST(x AS DECIMAL(18,6))`` (see dsum) so
   they are exact and independent of partition/aggregation order in
   BOTH engines;
-- hashes are the first 15 hex digits of md5 parsed as a 60-bit bigint
-  (Spark ``conv(substr(md5,1,15),16,10)``, DuckDB ``CAST('0x'||... )``);
+- hashes are the first 15 hex digits of md5 parsed as a 60-bit bigint,
+  spelled once per engine: Spark ``functions.text.hash60``, DuckDB
+  ``_sql_hash60`` (``CAST('0x'||... )``);
 - timestamps are emitted as ``yyyy-MM-dd HH:mm:ss`` strings with the
   Spark session forced to UTC;
 - every top-k ordering carries a unique-key tiebreaker.
@@ -370,15 +371,7 @@ def sql_dsum(expr: str, alias: str) -> str:
     return f"CAST(SUM(CAST({expr} AS DECIMAL(18,6))) AS DOUBLE) AS {alias}"
 
 
-# The package-wide 60-bit hash convention (module docstring above):
-# first 15 md5 hex digits as a BIGINT. Defined here — the import root —
-# so any query module can use it without ordering constraints.
-def _hash60(col):
-    return F.conv(F.substring(F.md5(F.encode(col, "utf-8")), 1, 15), 16, 10).cast(
-        "long"
-    )
-
-
+# The DuckDB spelling of the package 60-bit hash (functions.text.hash60).
 def _sql_hash60(expr: str) -> str:
     return f"CAST('0x' || substr(md5({expr}), 1, 15) AS BIGINT)"
 

@@ -21,9 +21,9 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from data_validator_spark.functions.text import hash60, tokens
 from data_validator_spark.queries import (
     DEC,
-    _hash60,
     _sql_hash60,
     load,
     load_documents_by_id,
@@ -37,7 +37,7 @@ BLOOM_SEGMENT = "BUILDING"
 
 def _bloom_pos(col, j: int):
     return F.pmod(
-        _hash60(F.concat(F.lit(f"bf{j}:"), col.cast("string"))), F.lit(BLOOM_M)
+        hash60(F.concat(F.lit(f"bf{j}:"), col.cast("string"))), F.lit(BLOOM_M)
     )
 
 
@@ -157,9 +157,7 @@ def q_pareto_skyline(spark, sf):
     vocab for its own length.
     """
     df = load_documents_by_id(spark, sf)
-    toks = df.select(
-        "doc_id", F.explode(F.split(F.trim(F.col("text")), r"[ \t\n\x0B\f\r]+")).alias("t")
-    ).where(F.length("t") > 0)
+    toks = df.select("doc_id", F.explode(tokens(F.col("text"))).alias("t")).where(F.length("t") > 0)
     vocab = toks.groupBy("doc_id").agg(F.countDistinct("t").alias("v"))
     docs = df.select("doc_id", "n_chars").join(vocab, "doc_id")
     best_at_len = docs.groupBy("n_chars").agg(F.max("v").alias("v_max"))
@@ -296,9 +294,7 @@ def q_rrf_fusion(spark, sf):
     order; final ties break on doc_id.
     """
     df = load_documents_by_id(spark, sf)
-    toks = df.select(
-        "doc_id", F.explode(F.split(F.trim(F.col("text")), r"[ \t\n\x0B\f\r]+")).alias("t")
-    ).where(F.length("t") > 0)
+    toks = df.select("doc_id", F.explode(tokens(F.col("text"))).alias("t")).where(F.length("t") > 0)
     scores = toks.groupBy("doc_id").agg(
         F.sum(F.col("t").isin(RRF_TERMS).cast("long")).alias("rel"),
         F.countDistinct("t").alias("qual"),

@@ -23,13 +23,12 @@ from pyspark.sql import functions as F
 from data_validator_spark.queries import (
     DEC,
     SessionCache,
-    _hash60,
     _sql_hash60,
     load,
     load_documents_by_id,
     load_embeddings_by_id,
 )
-from data_validator_spark.functions.text import normalized_text, token_count
+from data_validator_spark.functions.text import hash60, normalized_text, token_count, tokens
 from data_validator_spark.queries.textops import SQL_NORM, SQL_TOKENS
 
 
@@ -57,8 +56,8 @@ def q_bm25_topk(spark, sf):
     engines; the emitted score passes through decimal(30,6).
     """
     df = load_documents_by_id(spark, sf)
-    toks = F.split(F.trim(F.col("text")), r"[ \t\n\x0B\f\r]+")
-    dl = F.when(F.length(F.trim(F.col("text"))) == 0, F.lit(0)).otherwise(F.size(toks))
+    toks = tokens(F.col("text"))
+    dl = token_count(F.col("text"))
 
     def tf(term: str):
         # single-arg lambda: a second parameter would be bound to
@@ -429,7 +428,7 @@ def q_substring_dedup(spark, sf):
                 " x -> x IS NOT NULL)"
             )
         ).alias("w"),
-    ).select("doc_id", _hash60(F.col("w")).alias("h"))
+    ).select("doc_id", hash60(F.col("w")).alias("h"))
     canon = wins.groupBy("h").agg(F.min("doc_id").alias("canon"))
     return (
         wins.join(canon, "h")
@@ -557,7 +556,7 @@ def q_domain_mix_sample(spark, sf):
             (F.col("n_total").cast("double") / F.col("n_src")) / F.col("cnt"),
         ).alias("rate"),
     )
-    bucket = _hash60(F.concat(F.lit(f"{MIX_SALT}:"), F.col("doc_id").cast("string")))
+    bucket = hash60(F.concat(F.lit(f"{MIX_SALT}:"), F.col("doc_id").cast("string")))
     return (
         docs.join(F.broadcast(rates), "source")
         .where(bucket < F.col("rate") * MIX_SCALE)
@@ -719,9 +718,7 @@ def q_heavy_hitters_cms(spark, sf):
     identical in both engines.
     """
     df = load_documents_by_id(spark, sf)
-    toks = df.select(
-        F.explode(F.split(F.trim(F.col("text")), r"[ \t\n\x0B\f\r]+")).alias("token")
-    ).where(F.length("token") > 0)
+    toks = df.select(F.explode(tokens(F.col("text"))).alias("token")).where(F.length("token") > 0)
     tf = toks.groupBy("token").agg(F.count("*").alias("exact_count"))
     hashed = tf.select(
         "token",
@@ -732,7 +729,7 @@ def q_heavy_hitters_cms(spark, sf):
                     F.struct(
                         F.lit(j).alias("j"),
                         (
-                            _hash60(F.concat(F.lit(f"cms{j}:"), F.col("token")))
+                            hash60(F.concat(F.lit(f"cms{j}:"), F.col("token")))
                             % CMS_W
                         ).alias("bucket"),
                     )
@@ -812,9 +809,7 @@ def _build_dsir_tagged(spark, sf):
     from data_validator_spark.queries.mining_ops import q_gopher_quality
 
     df = load_documents_by_id(spark, sf)
-    toks = df.select(
-        "doc_id", F.split(F.trim(F.col("text")), r"[ \t\n\x0B\f\r]+").alias("toks")
-    )
+    toks = df.select("doc_id", tokens(F.col("text")).alias("toks"))
     grams = toks.select(
         "doc_id",
         F.explode(
@@ -825,7 +820,7 @@ def _build_dsir_tagged(spark, sf):
                 "ELSE array() END)"
             )
         ).alias("g"),
-    ).select("doc_id", F.pmod(_hash60(F.col("g")), F.lit(DSIR_BUCKETS)).alias("b"))
+    ).select("doc_id", F.pmod(hash60(F.col("g")), F.lit(DSIR_BUCKETS)).alias("b"))
     dcounts = grams.groupBy("doc_id", "b").agg(F.count(F.lit(1)).alias("c"))
     target = q_gopher_quality(spark, sf).select("doc_id", "keep")
     return dcounts.join(target, "doc_id")

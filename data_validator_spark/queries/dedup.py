@@ -18,7 +18,14 @@ import math
 import pandas as pd
 from pyspark.sql import functions as F
 
-from data_validator_spark.functions.text import rolling_shingle_hashes
+from data_validator_spark.functions.text import (
+    doc_fingerprint,
+    fingerprint60,
+    hash60,
+    normalized_text,
+    shingle_hashes,
+    tokens,
+)
 from data_validator_spark.operators.bucketing import (
     BUCKET_SIDECAR,
     _read_sidecar,
@@ -93,9 +100,10 @@ def _build_shingle_hashes(spark, sf):
     heavy >1.3× ratio. The previous spread() build round-robined the
     cache, paying that exchange on every consumer.
 
-    Tokenization is materialized behind a projection barrier before the
-    per-shingle lambda runs. Without it, CollapseProject inlines the
-    whole lower→regexp_replace→split chain into the lambda body of
+    Tokenization is materialized behind a projection barrier before
+    shingle_hashes runs, which is why that function takes a bound token
+    array. Without the barrier, CollapseProject inlines the whole
+    lower→regexp_replace→split chain into the lambda body of
     ``transform(idx, i -> slice(toks, ...))`` — and lambda bodies are
     re-evaluated PER ELEMENT, so each ~100-shingle document would
     re-tokenize ~100 times (measured 10× slowdown at sf0.1). A
@@ -103,25 +111,12 @@ def _build_shingle_hashes(spark, sf):
     the lambda slices a bound array instead.
     """
     df = load_documents_by_id(spark, sf)
-    from data_validator_spark.functions.text import normalized_text, tokens
-
     tk = df.select(
         "doc_id",
         tokens(normalized_text(F.col("text"))).alias("t"),
         F.monotonically_increasing_id().alias("_barrier"),
     )
-    t = F.col("t")
-    n = F.size(t)
-    k = SHINGLE_K
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    shingles = F.when(
-        n >= k,
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(t, i + 1, k))),
-    ).otherwise(F.array(F.concat_ws(" ", t)))
-    h = F.transform(
-        shingles,
-        lambda s: F.conv(F.substring(F.md5(F.encode(s, "utf-8")), 1, 15), 16, 10).cast("long"),
-    )
+    h = shingle_hashes(F.col("t"), SHINGLE_K)
     return tk.select("doc_id", F.array_distinct(h).alias("h"))
 
 
@@ -129,8 +124,6 @@ def _build_shingle_hashes(spark, sf):
 def q_dedup_exact(spark, sf):
     """Exact dedup: group on the normalized-content fingerprint; keeper
     is the min doc_id. One shuffle on the fingerprint hash."""
-    from data_validator_spark.functions.text import doc_fingerprint
-
     df = load_documents_by_id(spark, sf)
     return (
         df.select("doc_id", doc_fingerprint(F.col("text")).alias("fingerprint"))
@@ -804,14 +797,7 @@ def q_dedup_simhash(spark, sf):
     splits give the same parallelism spread() bought, without the
     round-robin exchange."""
     df = load_documents_by_id(spark, sf)
-    from data_validator_spark.functions.text import normalized_text, tokens
-
-    th = F.array_distinct(
-        F.transform(
-            tokens(normalized_text(F.col("text"))),
-            lambda t: F.conv(F.substring(F.md5(F.encode(t, "utf-8")), 1, 15), 16, 10).cast("long"),
-        )
-    )
+    th = F.array_distinct(F.transform(tokens(normalized_text(F.col("text"))), hash60))
     return (
         df.select("doc_id", th.alias("th"))
         .where(F.size("th") > 0)
@@ -1095,7 +1081,6 @@ def _incremental_index(spark, sf):
 def _build_incremental_index(spark, sf):
     from pyspark import StorageLevel
 
-    from data_validator_spark.functions.text import doc_fingerprint
     from data_validator_spark.queries.accel_ops import BLOOM_K, _bloom_pos
 
     pivot = _incremental_pivot(spark, sf)
@@ -1146,7 +1131,6 @@ def q_dedup_incremental(spark, sf):
     false positives cannot flip a flag: dup_of_corpus is decided by
     the exact index join, the Bloom pass only routes rows around it.
     """
-    from data_validator_spark.functions.text import doc_fingerprint
     from data_validator_spark.queries.accel_ops import BLOOM_K, _bloom_pos
 
     index, bits = _incremental_index(spark, sf)
@@ -1320,8 +1304,6 @@ def _refresh_index(spark, t: str, key: str, buckets: int, delta) -> None:
 def _ensure_findex(spark, sf, table: str | None = None) -> str:
     """The fingerprint index table: distinct fp60 of the existing
     corpus, bucketed on fp60 (see _ensure_index)."""
-    from data_validator_spark.functions.text import fingerprint60
-
     return _ensure_index(
         spark, sf, table, "findex", "fp60", FINDEX_BUCKETS,
         lambda pivot: load_documents_by_id(spark, sf)
@@ -1358,8 +1340,6 @@ def q_dedup_index_refresh(spark, sf, table: str | None = None):
     count and SUM(fp60 % 1e6-ish) per fp60-mod-16 bucket are
     order-independent integer aggregates.
     """
-    from data_validator_spark.functions.text import fingerprint60
-
     t = _ensure_findex(spark, sf, table)
     _refresh_index(
         spark, t, "fp60", FINDEX_BUCKETS,
@@ -1409,11 +1389,7 @@ BINDEX_BUCKETS = 8
 
 
 def _sig64_col():
-    from data_validator_spark.queries import _hash60
-
-    return _hash60(
-        F.concat(F.col("band").cast("string"), F.lit(":"), F.col("sig"))
-    )
+    return hash60(F.concat(F.col("band").cast("string"), F.lit(":"), F.col("sig")))
 
 
 # The minhash screen's eligible-bucket census (groupBy sig64 over the

@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 from data_validator_spark.queries import (
     DEC,
     SessionCache,
-    _hash60,
     _sql_hash60,
     load,
     load_documents_by_id,
@@ -31,7 +30,7 @@ from data_validator_spark.queries import (
     sql_dsum,
 )
 from data_validator_spark.queries.textops import SQL_NORM, SQL_TOKENS
-from data_validator_spark.functions.text import normalized_text
+from data_validator_spark.functions.text import doc_fingerprint, hash60, normalized_text, tokens
 
 
 # -- hll_distinct ----------------------------------------------------------
@@ -105,7 +104,7 @@ def q_hll_distinct(spark, sf):
                 F.coalesce(
                     F.transform(
                         F.filter(
-                            F.split(F.trim(F.col("text")), r"[ \t\n\x0B\f\r]+"),
+                            tokens(F.col("text")),
                             lambda v: F.length(v) > 0,
                         ),
                         lambda v: F.struct(F.lit(0).alias("s"), v.alias("v")),
@@ -115,16 +114,14 @@ def q_hll_distinct(spark, sf):
                 F.array(
                     F.struct(
                         F.lit(1).alias("s"),
-                        F.md5(
-                            F.encode(normalized_text(F.col("text")), "utf-8")
-                        ).alias("v"),
+                        doc_fingerprint(F.col("text")).alias("v"),
                     )
                 ),
             )
         ).alias("e")
     ).select(F.col("e.s").alias("stream"), F.col("e.v").alias("v"))
     hashed = tagged.distinct().select(
-        "stream", _hash60(F.col("v")).alias("h")
+        "stream", hash60(F.col("v")).alias("h")
     ).select(
         "stream",
         "h",
@@ -269,9 +266,7 @@ def q_gopher_quality(spark, sf, base=None):
 
 def _build_gopher_stats(spark, sf, base):
     df = base if base is not None else load_documents_by_id(spark, sf)
-    toks = df.select(
-        "doc_id", F.explode(F.split(F.trim(F.col("text")), r"[ \t\n\x0B\f\r]+")).alias("t")
-    ).where(F.length("t") > 0)
+    toks = df.select("doc_id", F.explode(tokens(F.col("text"))).alias("t")).where(F.length("t") > 0)
     tf = toks.groupBy("doc_id", "t").agg(F.count("*").alias("c"))
     tok_stats = tf.groupBy("doc_id").agg(
         F.sum("c").alias("n_tokens"),
@@ -281,9 +276,7 @@ def _build_gopher_stats(spark, sf, base):
     # toks is materialized as a column FIRST: element_at inside the
     # transform lambda then reads the bound array — inlining split()
     # into the lambda would re-split the text per element (O(n²)/doc)
-    bi = df.select(
-        "doc_id", F.split(F.trim(F.col("text")), r"[ \t\n\x0B\f\r]+").alias("toks")
-    ).select(
+    bi = df.select("doc_id", tokens(F.col("text")).alias("toks")).select(
         "doc_id",
         F.explode(
             F.expr(
@@ -391,9 +384,7 @@ def q_tfidf_topk(spark, sf):
     """
     df = load_documents_by_id(spark, sf)
     n = df.agg(F.count("*").cast("double").alias("n_docs"))
-    toks = df.select(
-        "doc_id", F.explode(F.split(F.trim(F.col("text")), r"[ \t\n\x0B\f\r]+")).alias("t")
-    ).where(F.length("t") > 0)
+    toks = df.select("doc_id", F.explode(tokens(F.col("text"))).alias("t")).where(F.length("t") > 0)
     tf = toks.groupBy("doc_id", "t").agg(F.count("*").alias("tf"))
     dfreq = tf.groupBy("t").agg(F.count("*").alias("df"))
     scored = (
@@ -473,13 +464,11 @@ def q_pmi_collocations(spark, sf):
     Catalyst reuses it (ReusedExchange) instead of re-scanning.
     """
     df = load_documents_by_id(spark, sf)
-    toks = df.select(
-        "doc_id", F.explode(F.split(F.trim(F.col("text")), r"[ \t\n\x0B\f\r]+")).alias("t")
-    ).where(F.length("t") > 0)
+    toks = df.select("doc_id", F.explode(tokens(F.col("text"))).alias("t")).where(F.length("t") > 0)
     uni = toks.groupBy("t").agg(F.count("*").alias("c"))
     n_uni = uni.agg(F.sum("c").cast("double").alias("n_uni"))
     # materialize toks before the lambda — see q_gopher_quality
-    bi = df.select(F.split(F.trim(F.col("text")), r"[ \t\n\x0B\f\r]+").alias("toks")).select(
+    bi = df.select(tokens(F.col("text")).alias("toks")).select(
         F.explode(
             F.expr(
                 "CASE WHEN size(toks) >= 2 THEN "
@@ -576,9 +565,7 @@ def q_inverted_index(spark, sf):
     ranking breaks ties on the term string, counts are exact integers.
     """
     df = load_documents_by_id(spark, sf)
-    toks = df.select(
-        "doc_id", F.explode(F.split(F.trim(F.col("text")), r"[ \t\n\x0B\f\r]+")).alias("t")
-    ).where(F.length("t") > 0)
+    toks = df.select("doc_id", F.explode(tokens(F.col("text"))).alias("t")).where(F.length("t") > 0)
     tf = toks.groupBy("doc_id", "t").agg(F.count("*").alias("tf"))
     term_stats = tf.groupBy("t").agg(
         F.count("*").alias("df"), F.sum("tf").alias("total_tf")

@@ -19,10 +19,9 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from data_validator_spark.functions.text import token_count
+from data_validator_spark.functions.text import hash60, token_count
 from data_validator_spark.queries import (
     DEC,
-    _hash60,
     _sql_hash60,
     load,
     load_documents_by_id,
@@ -81,7 +80,7 @@ def q_pii_scrub(spark, sf):
         n_emails.alias("n_emails"),
         n_ips.alias("n_ips"),
         n_phones.alias("n_phones"),
-        _hash60(scrubbed).alias("scrub_hash"),
+        hash60(scrubbed).alias("scrub_hash"),
     )
 
 
@@ -112,6 +111,16 @@ SAMPLE_BUCKETS = 1000
 SAMPLE_KEEP = 200  # 20% per stratum
 
 
+def sample_bucket():
+    """0-999 salted hash bucket of doc_id — THE sample function, shared
+    by q_stratified_sample and the pipeline `sample` step (a row is
+    kept when its bucket is below the kept-bucket count)."""
+    return (
+        hash60(F.concat(F.lit(f"{SAMPLE_SALT}:"), F.col("doc_id").cast("string")))
+        % SAMPLE_BUCKETS
+    )
+
+
 def q_stratified_sample(spark, sf):
     """Per-language 20% deterministic sample, reported as per-stratum
     totals plus an id-checksum of the kept set (proves membership, not
@@ -122,11 +131,7 @@ def q_stratified_sample(spark, sf):
     + one partial-aggregated groupBy on `lang` — at 100 TB the shuffle
     carries only (lang, partial sums): bytes, not rows."""
     df = load_documents_by_id(spark, sf)
-    bucket = (
-        _hash60(F.concat(F.lit(f"{SAMPLE_SALT}:"), F.col("doc_id").cast("string")))
-        % SAMPLE_BUCKETS
-    )
-    kept = (bucket < SAMPLE_KEEP).cast("int")
+    kept = (sample_bucket() < SAMPLE_KEEP).cast("int")
     return (
         df.select("lang", "doc_id", kept.alias("kept"))
         .groupBy("lang")
@@ -442,6 +447,19 @@ WSAMPLE_SALT = "dv-wsample-v1"
 WSAMPLE_K = 20
 
 
+def wsample_key(ident, weight):
+    """The A-ES key ln(u)/w of a row whose draw identity is the string
+    column ``ident``: u = (hash60(salt:ident) + 1) / 2^60 ∈ (0,1], so
+    the key is ≤ 0 and the k LARGEST keys are the sample. Shared by
+    q_weighted_sample and the pipeline `weightedSample` step; callers
+    round it through decimal(30,6) before ordering (see
+    q_weighted_sample)."""
+    u = (hash60(F.concat(F.lit(WSAMPLE_SALT + ":"), ident)) + 1).cast("double") / F.lit(
+        float(2**60)
+    )
+    return F.log(u) / weight.cast("double")
+
+
 def q_weighted_sample(spark, sf):
     """Weighted sampling without replacement (Efraimidis–Spirakis
     A-ES): pick 20 documents with probability proportional to length
@@ -461,11 +479,7 @@ def q_weighted_sample(spark, sf):
     cannot reorder the cut.
     """
     df = load_documents_by_id(spark, sf)
-    u = (
-        _hash60(F.concat(F.lit(WSAMPLE_SALT + ":"), F.col("doc_id").cast("string")))
-        + 1
-    ).cast("double") / F.lit(float(2**60))
-    key = (F.log(u) / F.col("n_chars").cast("double")).cast(DEC).cast("double")
+    key = wsample_key(F.col("doc_id").cast("string"), F.col("n_chars")).cast(DEC).cast("double")
     return (
         df.select("doc_id", "n_chars", key.alias("sample_key"))
         .orderBy(F.desc("sample_key"), "doc_id")
@@ -509,7 +523,7 @@ def q_global_shuffle(spark, sf):
     ties (impossible for distinct ids, but stated) break on doc_id.
     """
     df = load_documents_by_id(spark, sf)
-    h = _hash60(F.concat(F.lit(f"{SHUFFLE_SALT}:"), F.col("doc_id").cast("string")))
+    h = hash60(F.concat(F.lit(f"{SHUFFLE_SALT}:"), F.col("doc_id").cast("string")))
     proj = df.select(
         "doc_id",
         h.alias("h"),

@@ -25,10 +25,10 @@ import math
 
 from pyspark.sql import functions as F
 
+from data_validator_spark.functions.text import hash60, tokens
 from data_validator_spark.queries import (
     DEC,
     SessionCache,
-    _hash60,
     _sql_hash60,
     load,
     load_documents_by_id,
@@ -542,7 +542,7 @@ def _contam_grams(spark, sf):
     toks = df.select(
         "doc_id",
         bucket.alias("bucket"),
-        F.split(F.trim(F.col("text")), r"[ \t\n\x0B\f\r]+").alias("toks"),
+        tokens(F.col("text")).alias("toks"),
     )
     return toks.select(
         "doc_id",
@@ -555,7 +555,7 @@ def _contam_grams(spark, sf):
                 "ELSE array() END"
             )
         ).alias("g"),
-    ).select("doc_id", "bucket", _hash60(F.col("g")).alias("gh"))
+    ).select("doc_id", "bucket", hash60(F.col("g")).alias("gh"))
 
 
 def q_ngram_contamination(spark, sf):

@@ -16,11 +16,13 @@ from data_validator_spark.functions.text import (
     LANG_STOPWORDS,
     bpe_ish_token_count,
     doc_fingerprint,
+    hash60,
     lang_id,
     normalized_text,
     quality_features,
     quality_score,
     token_count,
+    tokens,
 )
 from data_validator_spark.queries import DEC, load_documents_by_id
 
@@ -159,7 +161,7 @@ SQL_NORM = (
     "'[^a-z0-9_ \\t\\n]', '', 'g'), '[ \\t\\n]+', ' ', 'g'))"
 )
 # Tokens of `text`: split on runs of ASCII whitespace, the same class the
-# Spark side passes to F.split.
+# Spark side tokenizes with (functions.text.tokens).
 SQL_TOKENS = r"string_split_regex(trim(text), '[ \t\n\x0B\f\r]+')"
 
 SQL_DOC_FINGERPRINT = f"""
@@ -262,7 +264,7 @@ def q_token_frequencies(spark, sf):
     cutoff break on the token string for cross-engine determinism."""
     df = load_documents_by_id(spark, sf)
     toks = df.select(
-        F.explode(F.split(F.trim(normalized_text(F.col("text"))), r"[ \t\n\x0B\f\r]+")).alias("token")
+        F.explode(tokens(normalized_text(F.col("text")))).alias("token")
     ).where(F.col("token") != "")
     return (
         toks.groupBy("token")
@@ -387,11 +389,21 @@ CHUNK_W = 64  # window width (tokens)
 CHUNK_S = 48  # stride (tokens) → 16-token overlap between neighbors
 
 
+def chunk_tokens(df):
+    """``df`` without its blank documents, plus the bound token array
+    ``toks`` that chunk_windows slices. split('') yields [''] (size 1,
+    never 0), so the guard is on trimmed text length (the token_count
+    rule): a blank doc emits no phantom chunk."""
+    return df.where(F.length(F.trim(F.col("text"))) > 0).withColumn(
+        "toks", tokens(F.col("text"))
+    )
+
+
 def chunk_windows(width: int, stride: int):
-    """SQL expression producing the list of token-window slices for a
-    bound array column named `toks` — THE chunking definition, shared
-    by the graded q_doc_chunk operator and the pipeline `chunk` step
-    so the two can never diverge."""
+    """SQL expression producing the list of token-window slices for the
+    bound array column `toks` (chunk_tokens) — with chunk_tokens, THE
+    chunking definition, shared by the graded q_doc_chunk operator and
+    the pipeline `chunk` step so the two can never diverge."""
     return (
         f"transform(sequence(0, "
         f"CASE WHEN size(toks) <= {width} THEN 0 "
@@ -415,15 +427,8 @@ def q_doc_chunk(spark, sf):
     Determinism: chunk identity is the 60-bit md5 prefix of the
     space-joined token slice; offsets and lengths are integers.
     """
-    from data_validator_spark.queries import _hash60
-
     df = load_documents_by_id(spark, sf)
-    # split('') yields [''] (size 1, never 0) — guard on trimmed text
-    # length, the token_count rule, so blank docs emit no phantom chunk
-    toks = df.where(F.length(F.trim(F.col("text"))) > 0).select(
-        "doc_id", F.split(F.trim(F.col("text")), r"[ \t\n\x0B\f\r]+").alias("toks")
-    )
-    chunks = toks.select(
+    chunks = chunk_tokens(df).select(
         "doc_id",
         "toks",
         F.posexplode(F.expr(chunk_windows(CHUNK_W, CHUNK_S))).alias(
@@ -435,7 +440,7 @@ def q_doc_chunk(spark, sf):
         "chunk_idx",
         (F.col("chunk_idx") * CHUNK_S + 1).alias("start_tok"),
         F.size("chunk").alias("n_chunk_tokens"),
-        _hash60(F.array_join(F.col("chunk"), " ")).alias("chunk_hash"),
+        hash60(F.array_join(F.col("chunk"), " ")).alias("chunk_hash"),
     )
 
 
@@ -500,8 +505,6 @@ def q_repetition_strip(spark, sf):
     not, so a bare \\s+ tokenizes a vertical-tab document differently
     per engine. NULL text coalesces to '' on both sides.
     """
-    from data_validator_spark.queries import _hash60
-
     df = load_documents_by_id(spark, sf)
     text = F.coalesce(F.col("text"), F.lit(""))
     # regexp-trim ALL leading/trailing whitespace (F.trim strips only
@@ -524,7 +527,7 @@ def q_repetition_strip(spark, sf):
             "doc_id",
             F.size("toks").alias("n_tokens"),
             F.size(kept).alias("n_kept"),
-            _hash60(F.array_join(kept, " ")).alias("clean_hash"),
+            hash60(F.array_join(kept, " ")).alias("clean_hash"),
         )
     )
 

@@ -28,6 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from data_validator_spark.functions.text import hash60
 from data_validator_spark.operators.bucketing import (
     FACT_BUCKETS,
     _source_signature,
@@ -53,11 +54,11 @@ CONTAINERS = [
 ]  # 40 values, TPC-H container vocabulary
 
 
-def _hash60(*cols):
-    """First 15 md5 hex digits as a 60-bit bigint — the repo's
-    cross-engine hash convention (queries/__init__ docstring)."""
-    s = F.concat_ws("|", *[c.cast("string") for c in cols])
-    return F.conv(F.substring(F.md5(F.encode(s, "utf-8")), 1, 15), 16, 10).cast("long")
+
+def _hash_key(tag: str, *cols: str):
+    """'tag|c1|c2…': the string a derived column hashes with hash60
+    (the oracle CTEs spell the same concatenation)."""
+    return F.concat_ws("|", F.lit(tag), *[F.col(c).cast("string") for c in cols])
 
 
 # The derived relations are shared by EIGHT queries (q2/q9/q11/q16/q20
@@ -93,7 +94,7 @@ def _partsupp_build(spark, sf):
             "s",
             F.explode(F.sequence(F.lit(0), F.lit(3))).alias("i"),
         )
-        .withColumn("h", _hash60(F.lit("ps"), F.col("p_partkey"), F.col("i")))
+        .withColumn("h", hash60(_hash_key("ps", "p_partkey", "i")))
     )
     return raw.select(
         F.col("p_partkey").alias("ps_partkey"),
@@ -133,7 +134,7 @@ def _lineitem_ext_build(spark, sf):
     instr = F.array(*[F.lit(x) for x in INSTRUCTS])
     ship = F.to_date("l_shipdate")
     return (
-        li.withColumn("h", _hash60(F.lit("le"), F.col("l_orderkey"), F.col("l_linenumber")))
+        li.withColumn("h", hash60(_hash_key("le", "l_orderkey", "l_linenumber")))
         .withColumn("l_shipmode", F.element_at(mode, (F.col("h") % 7 + 1).cast("int")))
         .withColumn(
             "l_shipinstruct",
@@ -195,7 +196,7 @@ def ensure_bucketed_lineitem_ext(spark, sf) -> str:
 def _part_ext_build(spark, sf):
     part = spread(load(spark, sf, "part"))
     cont = F.array(*[F.lit(c) for c in CONTAINERS])
-    h = _hash60(F.lit("pc"), F.col("p_partkey"))
+    h = hash60(_hash_key("pc", "p_partkey"))
     return part.withColumn(
         "p_container", F.element_at(cont, (h % 40 + 1).cast("int"))
     )
@@ -556,7 +557,7 @@ def q16_parts_supplier(spark, sf):
     )
     complaints = (
         load(spark, sf, "supplier")
-        .where(_hash60(F.lit("sc"), F.col("s_suppkey")) % 25 == 0)
+        .where(hash60(_hash_key("sc", "s_suppkey")) % 25 == 0)
         .select(F.col("s_suppkey").alias("bad_suppkey"))
     )
     return (

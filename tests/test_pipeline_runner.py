@@ -128,6 +128,60 @@ pipeline:
         parse_pipeline("pipeline:")
 
 
+@pytest.mark.parametrize(
+    "step",
+    [
+        {"langFilter": {}},
+        {"langFilter": {"langs": []}},
+        {"select": {}},
+        {"select": {"columns": []}},
+        {"chunk": {"width": 0}},
+        {"chunk": {"stride": -1}},
+        {"chunk": {"width": "wide"}},
+        {"weightedSample": {"k": 0}},
+        {"weightedSample": {"k": True}},
+        {"sample": {"fraction": 20}},
+        {"sample": {"fraction": -0.1}},
+        {"sample": {"fraction": True}},
+        {"sample": {"fraction": "0.2"}},
+        {"dedupIncremental": {}},
+    ],
+)
+def test_step_options_rejected_by_parse(step):
+    """Every step-option check that needs no schema fails in
+    parse_pipeline, which the CLI runs before it starts a session."""
+    with pytest.raises(PipelineConfigError):
+        parse_pipeline({"pipeline": {"source": {"table": "documents"}, "steps": [step]}})
+
+
+def test_sample_fraction_bounds_accepted():
+    for frac in (0, 0.2, 1, 1.0):
+        parse_pipeline(
+            {"pipeline": {"source": {"table": "documents"},
+                          "steps": [{"sample": {"fraction": frac}}]}}
+        )
+
+
+def test_cli_rejects_sample_fraction_before_session(tmp_path):
+    """fraction: 20 would keep every row; the CLI exits 2 before the
+    session starts (a session would fail on the bogus master instead)."""
+    import subprocess
+    import sys
+
+    bad = tmp_path / "frac.yaml"
+    bad.write_text(
+        "pipeline:\n  source: {table: documents}\n  steps: [{sample: {fraction: 20}}]\n"
+    )
+    r = subprocess.run(
+        [sys.executable, "-m", "data_validator_spark.pipeline", "--config", str(bad),
+         "--sfDir", SF, "--master", "no-such-master"],
+        capture_output=True, text=True,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
+    assert r.returncode == 2, (r.returncode, r.stderr[-500:])
+    assert "PIPELINE_CONFIG_ERROR" in r.stderr and "sample.fraction" in r.stderr
+
+
 def test_cli_exit_2_on_bad_config(tmp_path):
     import subprocess
     import sys
@@ -186,6 +240,35 @@ def test_weighted_sample_step_agrees_with_operator(spark):
     got = sorted(r["doc_id"] for r in df.select("doc_id").collect())
     want = sorted(r["doc_id"] for r in q_weighted_sample(spark, SF).collect())
     assert got == want
+
+
+def test_sample_step_agrees_with_stratified_sample(spark):
+    """At fraction 0.2 the sample step keeps exactly the rows
+    q_stratified_sample counts: per lang, the same count and doc_id
+    sum."""
+    from data_validator_spark.queries.pipeline_ops import (
+        SAMPLE_BUCKETS,
+        SAMPLE_KEEP,
+        q_stratified_sample,
+    )
+
+    assert SAMPLE_KEEP == round(0.2 * SAMPLE_BUCKETS)
+    cfg = {
+        "pipeline": {
+            "source": {"table": "documents"},
+            "steps": [{"sample": {"fraction": 0.2}}],
+        }
+    }
+    kept = build_pipeline(spark, cfg, sf_dir=SF).groupBy("lang").agg(
+        F.count(F.lit(1)).alias("n"), F.sum("doc_id").alias("s")
+    )
+    got = {r["lang"]: (r["n"], r["s"]) for r in kept.collect()}
+    want = {
+        r["lang"]: (r["n_sampled"], r["sampled_id_sum"])
+        for r in q_stratified_sample(spark, SF).collect()
+        if r["n_sampled"]
+    }
+    assert got and got == want
 
 
 def test_chunk_and_weighted_sample_bad_configs(spark):
@@ -319,7 +402,10 @@ def test_dedup_incremental_step(spark, tmp_path):
     out2 = STEPS["dedupIncremental"](delta, {"indexPath": idx, "withinBatch": False})
     assert sorted(r["doc_id"] for r in out2.collect()) == [11, 12, 13]
     with pytest.raises(PipelineConfigError):
-        STEPS["dedupIncremental"](delta, {})
+        parse_pipeline(
+            {"pipeline": {"source": {"table": "documents"},
+                          "steps": [{"dedupIncremental": {}}]}}
+        )
 
 
 def test_written_rows_come_from_the_write(spark, tmp_path):

@@ -5,11 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from data_validator_spark.operators.skew import (
-    salted_count_by_key,
-    salted_distinct_count,
-    salted_duplicate_key_count,
-)
+from data_validator_spark.operators.skew import salted_count_by_key
 from data_validator_spark.plans import audit as pa
 
 
@@ -30,18 +26,6 @@ def test_salted_count_is_two_stage(spark, skewed):
     df = salted_count_by_key(skewed, ["k"])
     # two shuffles: (k, salt) partial agg, then k merge
     assert pa.exchange_count(df) >= 2
-
-
-def test_salted_distinct_count(spark, skewed):
-    assert salted_distinct_count(skewed, ["k"]) == 11
-    assert salted_distinct_count(skewed, ["k", "v"]) == skewed.distinct().count()
-
-
-def test_salted_duplicate_key_count_matches_unique_check(spark, skewed):
-    expected = (
-        skewed.groupBy("k").count().where(F.col("count") > 1).count()
-    )
-    assert salted_duplicate_key_count(skewed, ["k"]) == expected
 
 
 def test_audit_reports_plan_shape(spark, skewed):

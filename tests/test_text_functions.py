@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import ast
+import pathlib
+
 import pytest
 
 from data_validator_spark.functions.text import (
@@ -10,8 +13,9 @@ from data_validator_spark.functions.text import (
     lang_id,
     normalized_text,
     quality_features,
-    rolling_shingle_hashes,
+    shingle_hashes,
     token_count,
+    tokens,
 )
 from pyspark.sql import functions as F
 
@@ -88,8 +92,8 @@ def test_quality_features_empty_text_null_ratios(spark):
 def test_rolling_shingle_hashes(spark):
     df = spark.createDataFrame(
         [(1, "a b c d"), (2, "a b"), (3, "a b c d")], "id int, text string"
-    )
-    out = vals(df.select("id", rolling_shingle_hashes(F.col("text"), 3).alias("h")), "h")
+    ).select("id", tokens(normalized_text(F.col("text"))).alias("t"))
+    out = vals(df.select("id", shingle_hashes(F.col("t"), 3).alias("h")), "h")
     assert len(out[1]) == 2  # "a b c", "b c d"
     assert len(out[2]) == 1  # short doc → one whole-text shingle
     assert out[1] == out[3]  # deterministic
@@ -212,3 +216,58 @@ def test_quality_and_token_count_match_vectorized_reference(spark):
         jq, jt = jvm[i]
         assert st.pack("d", jq) == st.pack("d", rq), (i, cases[i], jq, rq)
         assert jt == rt, (i, cases[i], jt, rt)
+
+
+WS_TOKENIZER = r"[ \t\n\x0B\f\r]+"
+
+
+def _is_f_call(node, name):
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == name
+        and isinstance(node.func.value, ast.Name)
+        and node.func.value.id == "F"
+    )
+
+
+def _kernel_spellings(tree):
+    """(tokenizer, hash60) counts: F.split calls with the whitespace-class
+    literal, and F.conv(F.substring(F.md5(..), 1, 15), ..) chains."""
+    n_tok = n_hash = 0
+    for node in ast.walk(tree):
+        if _is_f_call(node, "split") and any(
+            isinstance(a, ast.Constant) and a.value == WS_TOKENIZER for a in node.args
+        ):
+            n_tok += 1
+        if (
+            _is_f_call(node, "conv")
+            and node.args
+            and _is_f_call(node.args[0], "substring")
+            and node.args[0].args
+            and _is_f_call(node.args[0].args[0], "md5")
+            and [getattr(a, "value", None) for a in node.args[0].args[1:]] == [1, 15]
+        ):
+            n_hash += 1
+    return n_tok, n_hash
+
+
+def test_corpus_kernels_have_one_home():
+    """The whitespace tokenizer and the 60-bit md5 hash are spelled once,
+    in functions/text.py (tokens, hash60); every other module calls
+    them, so the registry queries and the pipeline steps the DuckDB
+    oracle vouches for cannot drift apart. textops.split_bucket's
+    8-digit bucket is a different hash and is not matched."""
+    import data_validator_spark
+    from data_validator_spark.functions import text
+
+    pkg = pathlib.Path(data_validator_spark.__file__).parent
+    home = pathlib.Path(text.__file__)
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        counts = _kernel_spellings(ast.parse(path.read_text(), str(path)))
+        if path == home:
+            assert counts == (1, 1), counts
+        elif counts != (0, 0):
+            offenders.append((str(path.relative_to(pkg)), counts))
+    assert not offenders, offenders
