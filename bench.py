@@ -17,6 +17,7 @@ stamped with the core count and scale factor
 (BENCH_FULL_c{cpus}_sf{sf}.json), then prints ONE compact JSON line:
   {"metric": "headline_queries_total", "value": <warm sec>, "unit": "sec",
    "cold_total_sec": <sec>, "queries": {...slowest warm sec that fit...},
+   "copy_buckets": <bucket count of the dataset's at-rest copies>,
    "n_errors": <n>, ...}
 
 Exits 1 when any query errored (its time is the -1.0 sentinel), else 0.
@@ -107,6 +108,7 @@ def main() -> int:
     cpus = local_cpus()
     spark = local_session("bench")
 
+    from data_validator_spark.operators.bucketing import dataset_buckets
     from data_validator_spark.queries import build_registry, evict_session_caches
 
     queries, _ = build_registry()
@@ -236,6 +238,9 @@ def main() -> int:
         "cold_total_sec": _total(results_cold),
         "queries_cold": results_cold,
         "sf": sf,
+        # the bucket count of every at-rest copy of the dataset: which
+        # layout the copy-reading queries measured
+        "copy_buckets": dataset_buckets(spark, sf_dir),
         "runs_per_query": runs,
         # diagnostics (BENCH_FULL only — compact_line drops them):
         # every run's wall time (codegen-vs-steady-state visible per
@@ -288,6 +293,7 @@ COMPACT_KEYS = (
     "value",
     "unit",
     "sf",
+    "copy_buckets",
     "runs_per_query",
     "cold_total_sec",
     "run_conditions",

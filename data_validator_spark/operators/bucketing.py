@@ -9,6 +9,12 @@ ZERO Exchange — each task reads matching bucket files from both sides.
 That's the pattern these helpers package; the plan property is
 asserted in tests/test_bucketing.py.
 
+The bucket count of a dataset's copies follows its size
+(dataset_buckets): a bucketed scan runs one task per bucket file, so
+a count sized for 100 TB turns every job over a small copy into that
+many near-empty tasks. Every copy of one dataset shares the count, so
+their joins stay colocated.
+
 Parity note: the reference (a single-pass validator over one table at
 a time, ValidatorTable.scala) never joins tables, so this operator is
 part of the beyond-reference scale surface, not reference parity.
@@ -98,6 +104,12 @@ def assert_colocated(df: DataFrame) -> None:
 # each stamps its watermark in BUCKET_SIDECAR and is laid out by
 # write_bucketed.
 BUCKET_SIDECAR = "_dv_bucket_watermark.json"
+# The cap of dataset_buckets, the bucket-count rule of the raw-fact and
+# derived copies: a dataset whose largest table is 128 MB or more
+# (32 × the 4 MB open cost) gets 32 buckets per copy; sf0.1 (lineitem
+# 10.8 MB) gets 3 and sf0.01 gets 1.
+# The dedup indexes keep fixed counts (queries/dedup.py): they grow by
+# appends, not by source rewrites.
 FACT_BUCKETS = 32
 
 # Watermark scheme (r13, promised in the r11/r12 verdicts): the copy's
@@ -144,6 +156,33 @@ def _source_signature(path: str) -> list:
             "a source rewrite."
         )
     return out
+
+
+def dataset_buckets(spark: SparkSession, sf: str) -> int:
+    """Bucket count of every at-rest copy of dataset ``sf``: one bucket
+    per ``spark.sql.files.openCostInBytes`` (4 MB, Spark's "not worth a
+    separate scan task" size) of the dataset's largest source table
+    (``*.parquet`` under ``sf``), at least 1 and at most FACT_BUCKETS.
+
+    A bucketed scan runs one task per bucket file and cannot pack small
+    files into one task the way a raw read does. One count per dataset,
+    not per table, keeps every colocated merge join between its copies
+    exchange-free. Sizes come from the dataset directory's
+    source-file signature, so no Spark job runs; raises
+    FileNotFoundError, as _source_signature does, when ``sf`` is not a
+    local directory."""
+    import collections
+    import math
+    import os
+
+    sizes = collections.Counter()
+    for rel, size, _mtime in _source_signature(str(sf)):
+        table = rel.split(os.sep, 1)[0]
+        if table.endswith(".parquet"):
+            sizes[table] += size
+    largest = max(sizes.values(), default=0)
+    open_cost = spark._jsparkSession.sessionState().conf().filesOpenCostInBytes()
+    return max(1, min(FACT_BUCKETS, math.ceil(largest / open_cost)))
 
 
 def copy_name(sf: str, *parts: str) -> str:
@@ -217,8 +256,11 @@ def ensure_copy(
     ``table`` (data under copy_path, external to the catalog); returns
     the catalog table name. Every at-rest copy goes through here.
 
-    The copy is current when its sidecar agrees with ``watermark`` on
-    every key of ``watermark``; extra sidecar keys are ignored, so a
+    The copy is current when its sidecar agrees with ``watermark``,
+    plus ``num_buckets`` under ``"buckets"``, on every key of the
+    watermark: a copy laid out under another count (or from a sidecar
+    that predates the key) is rebuilt, never re-registered under a
+    count its files do not have. Extra sidecar keys are ignored, so a
     copy whose sidecar also carries older verification data (parquet
     footer digests, content hashes) is served, not rebuilt. Verified on
     every call, never memoized: a same-path source rewrite must be
@@ -241,6 +283,7 @@ def ensure_copy(
     import shutil
 
     path = copy_path(spark, table)
+    watermark = {**watermark, "buckets": num_buckets}
     disk = _read_sidecar(path)
     current = disk is not None and all(disk.get(k) == v for k, v in watermark.items())
     in_catalog = spark.catalog.tableExists(table)
@@ -275,10 +318,10 @@ def ensure_bucketed_fact(
     sf: str,
     name: str,
     key: str,
-    num_buckets: int = FACT_BUCKETS,
 ) -> str:
-    """The at-rest copy of source table ``name`` bucketed on ``key``;
-    returns the catalog table name. The build cost amortizes like any
+    """The at-rest copy of source table ``name`` bucketed on ``key``
+    into the dataset's bucket count (dataset_buckets); returns the
+    catalog table name. The build cost amortizes like any
     at-rest table layout: it is the one-time price for exchange-free
     SMJs in every downstream ``key`` join.
 
@@ -305,7 +348,7 @@ def ensure_bucketed_fact(
         spark,
         copy_name(sf, "dv_bkt", name, key),
         [key],
-        num_buckets,
+        dataset_buckets(spark, sf),
         wm,
         lambda: load(spark, sf, name),
     )
@@ -316,7 +359,6 @@ def bucketed_fact(
     sf: str,
     name: str,
     key: str,
-    num_buckets: int = FACT_BUCKETS,
 ) -> DataFrame:
     """The DataFrame-returning front door every query consumer uses:
     serve the at-rest bucketed copy (ensure_bucketed_fact) when one can
@@ -331,9 +373,7 @@ def bucketed_fact(
     engine-deterministic on that path (ADVICE r14)."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     try:
-        return spark.table(
-            ensure_bucketed_fact(spark, sf, name, key, num_buckets)
-        )
+        return spark.table(ensure_bucketed_fact(spark, sf, name, key))
     except FileNotFoundError as e:
         import warnings
 

@@ -264,13 +264,13 @@ def _require_list(value, where: str) -> list:
     return list(value)
 
 
-def _require_positive_int(value, where: str) -> None:
-    try:
-        ok = not isinstance(value, bool) and int(value) > 0
-    except (TypeError, ValueError):
-        ok = False
-    if not ok:
-        raise PipelineConfigError(f"{where} must be a positive integer, got {value!r}")
+def _require_int(value, where: str, low: int = 1) -> int:
+    """``value`` when it is an int of at least ``low``; a YAML boolean,
+    float or string is not one (``int(2.5)`` would silently be 2)."""
+    if isinstance(value, bool) or not isinstance(value, int) or value < low:
+        kind = "a positive integer" if low == 1 else f"an integer >= {low}"
+        raise PipelineConfigError(f"{where} must be {kind}, got {value!r}")
+    return value
 
 
 def _check_options(name: str, opts: dict) -> None:
@@ -283,10 +283,31 @@ def _check_options(name: str, opts: dict) -> None:
     if name == "select" and not _require_list(opts.get("columns"), "select.columns"):
         raise PipelineConfigError("select requires columns: [..]")
     if name == "chunk":
-        _require_positive_int(opts.get("width", CHUNK_W), "chunk.width")
-        _require_positive_int(opts.get("stride", CHUNK_S), "chunk.stride")
+        _require_int(opts.get("width", CHUNK_W), "chunk.width")
+        _require_int(opts.get("stride", CHUNK_S), "chunk.stride")
     if name == "weightedSample":
-        _require_positive_int(opts.get("k", WSAMPLE_K), "weightedSample.k")
+        _require_int(opts.get("k", WSAMPLE_K), "weightedSample.k")
+    if name == "qualityFilter" and not is_number(opts.get("minScore", QUALITY_CUTOFF)):
+        raise PipelineConfigError(
+            f"qualityFilter.minScore must be a number, got {opts['minScore']!r}"
+        )
+    if name in ("split", "splitFilter"):
+        # split_bucket() is 0-99: train + val past 100 empties val/test
+        train = _require_int(opts.get("train", TRAIN_CUT), f"{name}.train", 0)
+        val = _require_int(opts.get("val", VAL_CUT - TRAIN_CUT), f"{name}.val", 0)
+        if train + val > 100:
+            raise PipelineConfigError(
+                f"{name}.train + {name}.val must be at most 100, got {train} + {val}"
+            )
+    if name == "splitFilter" and opts.get("keep", "train") not in ("train", "val", "test"):
+        raise PipelineConfigError(
+            f"splitFilter.keep must be train, val or test, got {opts['keep']!r}"
+        )
+    if name == "boilerplateFilter":
+        # maxGroup 0 drops every doc that has a prefix to match on
+        for k, low in (("maxGroup", 0), ("prefixTokens", 1)):
+            if k in opts:
+                _require_int(opts[k], f"boilerplateFilter.{k}", low)
     if name == "sample":
         frac = opts.get("fraction", 0.2)
         if not is_number(frac) or not 0 <= frac <= 1:

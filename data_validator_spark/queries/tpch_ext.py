@@ -30,9 +30,9 @@ from pyspark.sql import functions as F
 
 from data_validator_spark.functions.text import hash60
 from data_validator_spark.operators.bucketing import (
-    FACT_BUCKETS,
     _source_signature,
     copy_name,
+    dataset_buckets,
     ensure_copy,
 )
 from data_validator_spark.queries import (
@@ -236,7 +236,7 @@ def _ensure_bucketed_derived(
         spark,
         copy_name(sf, "dv_bkt", relname, *([key] if keyed else [])),
         [key],
-        FACT_BUCKETS,
+        dataset_buckets(spark, sf),
         wm,
         lambda: build_df(spark, sf),
     )

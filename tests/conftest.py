@@ -49,6 +49,19 @@ def _sweep_tmp_path_copies():
             shutil.rmtree(p, ignore_errors=True)
 
 
+@pytest.fixture
+def fact_buckets_at_cap(monkeypatch):
+    """Lay every copy out at the cap (FACT_BUCKETS), the count
+    operators/bucketing.dataset_buckets gives a dataset whose largest
+    table is 128 MB or more: for tests of many-bucket layouts on small
+    data. Pins the rule in both modules that call it."""
+    from data_validator_spark.operators import bucketing
+    from data_validator_spark.queries import tpch_ext
+
+    for mod in (bucketing, tpch_ext):
+        monkeypatch.setattr(mod, "dataset_buckets", lambda spark, sf: bucketing.FACT_BUCKETS)
+
+
 class DFSource(TableSource):
     """In-memory source for runner tests (no files needed)."""
 

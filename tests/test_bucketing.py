@@ -407,6 +407,153 @@ def test_copy_with_retired_sidecar_keys_is_served(spark, tmp_path):
         _drop_fact_tables(spark, sf)
 
 
+def test_copy_rebuilds_when_bucket_count_moves(spark, tmp_path, monkeypatch):
+    """The bucket count is part of every copy's watermark. When the
+    dataset's count moves with the source files unchanged, the next
+    call rebuilds the copy under the new count: from the catalog, and
+    from files on disk only (a later session), where a metadata-only
+    CREATE TABLE … INTO n BUCKETS would declare a count the files do
+    not have. A sidecar that records no count (the format before the
+    count joined the watermark) is rebuilt too."""
+    import json as _json
+    import os as _os
+    import re
+
+    from data_validator_spark.operators import bucketing
+
+    _plain_parquet(str(tmp_path / "orders.parquet"), offset=0)
+    sf = str(tmp_path)
+
+    def copy(n):
+        monkeypatch.setattr(bucketing, "dataset_buckets", lambda spark, sf: n)
+        return bucketing.ensure_bucketed_fact(spark, sf, "orders", "o_orderkey")
+
+    def check(t, n) -> set:
+        path = bucketing.copy_path(spark, t)
+        counts = _files_per_bucket(path)
+        assert len(counts) == n and set(counts.values()) == {1}, dict(counts)
+        declared = (
+            spark.sql(f"DESCRIBE TABLE EXTENDED {t}")
+            .where("col_name = 'Num Buckets'").first().data_type
+        )
+        assert int(declared) == n
+        rows = spark.table(t).select(
+            F.input_file_name().alias("f"),
+            F.expr(f"pmod(hash(o_orderkey), {n})").alias("b"),
+        ).collect()
+        assert len(rows) == 400
+        assert all(int(re.search(r"_(\d{5})\.c\d+", r.f).group(1)) == r.b for r in rows)
+        return {f for f in _os.listdir(path) if f.endswith(".parquet")}
+
+    try:
+        t = copy(4)
+        files = check(t, 4)
+        assert copy(4) == t and check(t, 4) == files  # current: served as is
+        # the count moves, the source does not: catalog entry present
+        files2 = check(copy(2), 2)
+        assert files2.isdisjoint(files)
+        # a later session: files on disk, no catalog entry
+        spark.sql(f"DROP TABLE {t}")
+        files3 = check(copy(3), 3)
+        assert files3.isdisjoint(files2)
+        # a sidecar with no bucket count is rebuilt, not re-registered
+        sc = _os.path.join(bucketing.copy_path(spark, t), bucketing.BUCKET_SIDECAR)
+        with open(sc) as f:
+            stamp = _json.load(f)
+        assert stamp["buckets"] == 3
+        del stamp["buckets"]
+        with open(sc, "w") as f:
+            _json.dump(stamp, f)
+        spark.sql(f"DROP TABLE {t}")
+        assert check(copy(3), 3).isdisjoint(files3)
+    finally:
+        _drop_fact_tables(spark, sf)
+
+
+def _sparse(path, size: int) -> None:
+    """A file of ``size`` bytes that takes no disk space."""
+    import os
+
+    with open(path, "wb"):
+        pass
+    os.truncate(path, size)
+
+
+def _session_with_open_cost(open_cost: int = 4 * 2**20):
+    """Stands in for a session: dataset_buckets reads only its
+    spark.sql.files.openCostInBytes."""
+    from types import SimpleNamespace as NS
+
+    conf = NS(filesOpenCostInBytes=lambda: open_cost)
+    return NS(_jsparkSession=NS(sessionState=lambda: NS(conf=lambda: conf)))
+
+
+MB = 2**20
+
+
+@pytest.mark.parametrize(
+    "tables, want",
+    [
+        ({"lineitem": [4 * MB], "orders": [MB]}, 1),
+        ({"lineitem": [1]}, 1),
+        ({"lineitem": [4 * MB + 1]}, 2),
+        ({"lineitem": [10_818_932], "orders": [2_723_766]}, 3),  # sf0.1
+        ({"lineitem": [3 * MB, 3 * MB], "orders": [5 * MB]}, 2),  # a table's files add up
+        ({"lineitem": [128 * MB]}, 32),
+        ({"lineitem": [2**40]}, 32),
+    ],
+)
+def test_dataset_buckets_rule(tmp_path, tables, want):
+    """One bucket per 4 MB open cost of the largest *.parquet table,
+    at least 1 and at most FACT_BUCKETS; other files in the dataset
+    directory do not count. Sparse files, no Spark."""
+    import os
+
+    from data_validator_spark.operators.bucketing import dataset_buckets
+
+    for name, sizes in tables.items():
+        if len(sizes) == 1:
+            _sparse(tmp_path / f"{name}.parquet", sizes[0])
+            continue
+        os.makedirs(tmp_path / f"{name}.parquet")
+        for i, size in enumerate(sizes):
+            _sparse(tmp_path / f"{name}.parquet" / f"part-{i}.parquet", size)
+    _sparse(tmp_path / "notes.txt", 2**40)
+    assert dataset_buckets(_session_with_open_cost(), str(tmp_path)) == want
+    # the open cost is the unit
+    assert dataset_buckets(_session_with_open_cost(2**40), str(tmp_path)) == 1
+
+
+def test_every_copy_of_a_dataset_gets_its_count(tmp_path, monkeypatch):
+    """Raw-fact copies under every key and the derived copies all ask
+    the rule for their dataset's count, so colocated merge joins
+    between them stay exchange-free. No Spark: the copy lifecycle is
+    replaced by a recorder."""
+    from data_validator_spark.operators import bucketing
+    from data_validator_spark.queries import tpch_ext
+
+    for name, size in (("lineitem", 10_818_932), ("orders", 2_723_766), ("customer", MB), ("part", MB)):
+        _sparse(tmp_path / f"{name}.parquet", size)
+    seen = {}
+
+    def record(spark, table, keys, num_buckets, watermark, build):
+        seen[table] = num_buckets
+        return table
+
+    for mod in (bucketing, tpch_ext):
+        monkeypatch.setattr(mod, "ensure_copy", record)
+    spark, sf = _session_with_open_cost(), str(tmp_path)
+    for name, key in (
+        ("lineitem", "l_orderkey"), ("lineitem", "l_partkey"), ("orders", "o_orderkey"),
+        ("orders", "o_custkey"), ("customer", "c_custkey"), ("part", "p_partkey"),
+    ):
+        bucketing.ensure_bucketed_fact(spark, sf, name, key)
+    tpch_ext.ensure_bucketed_lineitem_ext(spark, sf)
+    tpch_ext.ensure_bucketed_lineitem_ext_by_part(spark, sf)
+    tpch_ext.ensure_bucketed_part_ext(spark, sf)
+    assert len(seen) == 9 and set(seen.values()) == {3}, seen
+
+
 def _plain_lineitem_orders(sf, n: int = 400):
     """Mini lineitem and orders for the validator queries, PLAIN-encoded
     and uncompressed like _plain_parquet: every l_extendedprice is a
@@ -739,7 +886,7 @@ def _files_per_bucket(path: str) -> dict:
     return counts
 
 
-def test_bucketed_copies_single_sorted_file_per_bucket(spark, multi_file_sf):
+def test_bucketed_copies_single_sorted_file_per_bucket(spark, multi_file_sf, fact_buckets_at_cap):
     """The at-rest copy program lays out exactly ONE (sorted) parquet
     file per bucket — the invariant that lets
     spark.sql.legacy.bucketedTableScan.outputOrdering=true (session
@@ -749,7 +896,9 @@ def test_bucketed_copies_single_sorted_file_per_bucket(spark, multi_file_sf):
     hold for single-file sources and for sources of several files
     (several input tasks), for raw-fact copies, derived copies and the
     dedup indexes alike: write_bucketed repartitions on the bucket key,
-    whose hash is the bucket-id hash."""
+    whose hash is the bucket-id hash. Laid out at the cap
+    (fact_buckets_at_cap): a one-bucket copy would hold one file by
+    construction."""
     from data_validator_spark.operators.bucketing import (
         FACT_BUCKETS,
         copy_path,
@@ -1006,7 +1155,7 @@ def test_copy_drop_evicts_dependent_session_caches(spark, tmp_path):
             _os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
 
     def orders():
-        return ensure_bucketed_fact(spark, sf, "orders", "o_orderkey", 4)
+        return ensure_bucketed_fact(spark, sf, "orders", "o_orderkey")
 
     # (copy, source change, row count)
     cases = {

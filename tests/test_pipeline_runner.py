@@ -138,6 +138,7 @@ pipeline:
         {"chunk": {"width": 0}},
         {"chunk": {"stride": -1}},
         {"chunk": {"width": "wide"}},
+        {"chunk": {"width": 2.5}},
         {"weightedSample": {"k": 0}},
         {"weightedSample": {"k": True}},
         {"sample": {"fraction": 20}},
@@ -145,6 +146,19 @@ pipeline:
         {"sample": {"fraction": True}},
         {"sample": {"fraction": "0.2"}},
         {"dedupIncremental": {}},
+        {"qualityFilter": {"minScore": "high"}},
+        {"qualityFilter": {"minScore": True}},
+        {"split": {"train": 200}},
+        {"split": {"train": 60, "val": 41}},
+        {"split": {"val": -1}},
+        {"split": {"train": "most"}},
+        {"split": {"train": "50"}},
+        {"splitFilter": {"train": 101}},
+        {"splitFilter": {"keep": "dev"}},
+        {"boilerplateFilter": {"maxGroup": -1}},
+        {"boilerplateFilter": {"maxGroup": False}},
+        {"boilerplateFilter": {"prefixTokens": 0}},
+        {"boilerplateFilter": {"prefixTokens": "ten"}},
     ],
 )
 def test_step_options_rejected_by_parse(step):
@@ -160,6 +174,23 @@ def test_sample_fraction_bounds_accepted():
             {"pipeline": {"source": {"table": "documents"},
                           "steps": [{"sample": {"fraction": frac}}]}}
         )
+
+
+@pytest.mark.parametrize(
+    "step",
+    [
+        {"qualityFilter": {"minScore": 0}},
+        {"qualityFilter": {"minScore": 0.8}},
+        {"split": {}},
+        {"split": {"train": 0, "val": 0}},
+        {"split": {"train": 80, "val": 20}},
+        {"splitFilter": {"keep": "test", "train": 90, "val": 5}},
+        {"boilerplateFilter": {"maxGroup": 0}},
+        {"boilerplateFilter": {"maxGroup": 2, "prefixTokens": 8}},
+    ],
+)
+def test_numeric_step_options_accepted(step):
+    parse_pipeline({"pipeline": {"source": {"table": "documents"}, "steps": [step]}})
 
 
 def test_cli_rejects_sample_fraction_before_session(tmp_path):

@@ -91,7 +91,7 @@ def _drop_events_copy(spark, sf):
     evict_session_caches(str(sf))
 
 
-def test_hot_user_skew_cap_and_sessionize_end_to_end(spark, tmp_path):
+def test_hot_user_skew_cap_and_sessionize_end_to_end(spark, tmp_path, fact_buckets_at_cap):
     """Drive a bot-grade hot user (20k events vs a 20-event long tail)
     through the behavioral family's skew story: the bucketed-copy scan
     REALLY holds a hot partition (recorded), key-skew detection sees
@@ -99,7 +99,9 @@ def test_hot_user_skew_cap_and_sessionize_end_to_end(spark, tmp_path):
     events_sessionized still matches the DuckDB oracle bit-for-bit on
     the same skewed files (windows need whole per-user partitions, so
     the cap — not AQE splitting — is the mitigation; key_skew_audit's
-    ratio is the signal that says when to apply it)."""
+    ratio is the signal that says when to apply it). The events copy is
+    laid out at the cap (fact_buckets_at_cap): a hot bucket needs other
+    buckets to stand out from."""
     import duckdb
 
     from data_validator_spark.queries import build_registry, load_events_by_user
