@@ -16,7 +16,7 @@ import sys
 from typing import Optional
 
 from data_validator_spark import report as report_mod
-from data_validator_spark.config import load_config, main as config_main
+from data_validator_spark.config import config_faults, load_config, main as config_main, report_faults
 from data_validator_spark.runner import run_config
 
 
@@ -64,20 +64,21 @@ def main(argv: Optional[list[str]] = None) -> int:
         cli_vars = parse_vars(args.vars)
     except ValueError as e:
         p.error(str(e))  # exit 2, before the JVM starts
+    if report_faults(config_faults(args.config)):  # the --checkConfig walk, before the JVM
+        return 1
 
     from data_validator_spark.session import build_session
 
     spark = build_session("data-validator-spark")
     try:
-        config = load_config(args.config, spark, cli_vars)
         try:
-            for t in config.tables:
-                t.build()  # constructs the source and checks; opens nothing
-        except ValueError as e:
-            print(f"CONFIG ERROR: {e}", file=sys.stderr)
-            return 1
-        for out in config.outputs:
-            report_mod.check_output_target(out, spark)
+            config = load_config(args.config, spark, cli_vars)
+            for out in config.outputs:
+                report_mod.check_output_target(out, spark)
+        except (ValueError, OSError) as e:
+            # a fault in a value a variable supplied, or an output that
+            # cannot be written
+            return report_faults(str(e).splitlines())
 
         report = run_config(spark, config)
         failed = report["failed"]

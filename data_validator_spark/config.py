@@ -8,14 +8,16 @@ outputs) + `tables:` each with a source, keyColumns, condition and a
 
 from __future__ import annotations
 
+import sys
 from dataclasses import dataclass, field
-from typing import Any, Optional
+from typing import Any, Callable, NamedTuple, Optional
 
 import yaml
 
 from data_validator_spark.sources import TableSource, source_from_dict
-from data_validator_spark.substitution import VarSubstitution, build_dict
+from data_validator_spark.substitution import _VAR_RE, VarSubstitution, build_dict
 from data_validator_spark.validators import CHECK_TYPES, Check, check_from_dict
+from data_validator_spark.validators.base import require_bool, require_int, require_list, require_map
 
 
 @dataclass
@@ -84,64 +86,150 @@ class ValidatorConfig:
         return runners
 
 
+class Fault(NamedTuple):
+    """One config fault: what is wrong, and where (``tables[0].checks[1]``;
+    empty when the message names its field). Printed message first, as
+    CONFIG ERROR lines; ``located`` is the place-first form that
+    check_config_text has always returned."""
+
+    message: str
+    where: str = ""
+
+    def __str__(self) -> str:
+        return f"{self.message} ({self.where})" if self.where else self.message
+
+    @property
+    def located(self) -> str:
+        return f"{self.where}: {self.message}" if self.where else self.message
+
+
+class ConfigError(ValueError):
+    """Every fault of a config document, one per line of the message."""
+
+    def __init__(self, faults: list[Fault]):
+        super().__init__("\n".join(map(str, faults)))
+        self.faults = faults
+
+
+def _has_placeholder(value: Any) -> bool:
+    """A ``$var``/``${var}`` token (VarSubstitution.scala:141's syntax) in
+    any string leaf; a literal ``$`` such as a regex anchor is none."""
+    if isinstance(value, str):
+        return _VAR_RE.search(value) is not None
+    if isinstance(value, dict):
+        return any(_has_placeholder(v) for v in value.values())
+    if isinstance(value, (list, tuple)):
+        return any(_has_placeholder(v) for v in value)
+    return False
+
+
+def _decode(
+    text: str, resolve: Optional[Callable[[list], VarSubstitution]] = None
+) -> tuple[Optional[ValidatorConfig], list[Fault]]:
+    """The one walk over a config document, for the config check and
+    for a run; returns the config and every fault it found. ``resolve``
+    builds the variable dict from the `vars:` specs, and its
+    substitution applies to the rest of the document.
+
+    Without ``resolve`` this is the config check: placeholders stay in
+    place, and a field or entry that fails while it carries one is
+    deferred to the run, which has the values (the reference's check
+    does not resolve variables either). Deferral is per entry, so a
+    placeholder in one check masks neither its siblings nor the
+    source; an unknown check `type:` is a fault even then. Sources
+    and checks are trial-constructed here; a run builds them again
+    (TableConfig.build), so each run gets fresh check objects."""
+    try:
+        raw = yaml.safe_load(text) or {}
+    except yaml.YAMLError as e:
+        return None, [Fault(f"YAML parse error: {e}")]
+    if not isinstance(raw, dict):
+        return None, [Fault(f"Config root must be a mapping, got {type(raw).__name__}")]
+    faults: list[Fault] = []
+
+    def tried(build: Callable, value: Any, *args: Any, where: str = "", hard: bool = False) -> Any:
+        try:
+            return build(value, *args)
+        except Exception as e:  # any failure is a config fault, not a crash
+            if resolve or hard or not _has_placeholder(value):
+                faults.append(Fault(str(e), where))
+            return None
+
+    specs = tried(require_list, raw.get("vars") or [], "vars") or []
+    for spec in specs:
+        if not isinstance(spec, dict) or "name" not in spec:
+            faults.append(Fault(f"vars entry missing 'name': {spec!r}"))
+        elif not any(k in spec for k in ("value", "env", "shell", "sql")):
+            faults.append(Fault(f"Variable '{spec['name']}' has no value/env/shell/sql source"))
+    if resolve and faults:
+        return None, faults
+    dict_ = resolve(specs) if resolve else VarSubstitution()
+    # build_dict already substituted each spec, in order, as it read it
+    doc = dict_.replace({k: v for k, v in raw.items() if k != "vars"}) if resolve else raw
+
+    tables = []
+    for i, t in enumerate(tried(require_list, doc.get("tables") or [], "tables") or []):
+        if (t := tried(require_map, t, f"tables[{i}]")) is None:
+            continue
+        checks = tried(require_list, t.pop("checks", None) or [], f"tables[{i}].checks") or []
+        tried(source_from_dict, t, where=f"tables[{i}]")
+        for j, c in enumerate(checks):
+            where = f"tables[{i}].checks[{j}]"
+            if tried(require_map, c, where) is not None:
+                tried(check_from_dict, c, where=where, hard=c.get("type") not in CHECK_TYPES)
+        tables.append(TableConfig(source_dict=t, checks_dicts=checks))
+
+    outputs = []
+    for i, o in enumerate(tried(require_list, doc.get("outputs") or [], "outputs") or []):
+        if (o := tried(require_map, o, f"outputs[{i}]")) is not None:
+            outputs.append(
+                OutputSpec(
+                    filename=o.get("filename"),
+                    append=tried(require_bool, o.get("append", False), f"outputs[{i}].append"),
+                    pipe=o.get("pipe"),
+                    ignore_error=tried(require_bool, o.get("ignoreError", False), f"outputs[{i}].ignoreError"),
+                )
+            )
+
+    e = tried(require_map, doc["email"], "email") if doc.get("email") else None
+    email = None if e is None else EmailConfig(
+        smtp_host=e.get("smtpHost", ""),
+        subject=e.get("subject", ""),
+        from_addr=e.get("from", ""),
+        to=tried(require_list, e.get("to") or [], "email.to"),
+        cc=tried(require_list, e.get("cc") or [], "email.cc"),
+        bcc=tried(require_list, e.get("bcc") or [], "email.bcc"),
+        smtp_port=tried(require_int, e.get("smtpPort", 25), "email.smtpPort"),
+        deliver=tried(require_bool, e.get("deliver", False), "email.deliver"),
+    )
+
+    config = ValidatorConfig(
+        num_key_cols=tried(require_int, doc.get("numKeyCols", 2), "numKeyCols", 0),
+        num_errors_to_report=tried(require_int, doc.get("numErrorsToReport", 5), "numErrorsToReport", 0),
+        detailed_errors=tried(require_bool, doc.get("detailedErrors", True), "detailedErrors"),
+        tables=tables,
+        outputs=outputs,
+        email=email,
+        var_specs=specs,
+        var_sub_dict=dict(dict_.vars),
+    )
+    return config, faults
+
+
 def parse_config(
     text: str,
     spark: Optional[Any] = None,
     cli_vars: Optional[dict[str, str]] = None,
 ) -> ValidatorConfig:
-    """Parse YAML, resolving variables first. CLI --vars override the
-    config's own `vars:` by the reference's actual mechanism
-    (Main.scala): the dict is SEEDED with the CLI vars, and adding a
-    name twice keeps the first value, so the config's re-definition of
-    a CLI-supplied name is a logged no-op."""
-    raw = yaml.safe_load(text) or {}
-    dict_ = build_dict(raw.get("vars"), spark, seed=cli_vars)
-
-    def sub(v: Any) -> Any:
-        return dict_.replace(v)
-
-    tables = []
-    for t in raw.get("tables", []) or []:
-        t = sub(t)
-        checks = t.pop("checks", []) or []
-        tables.append(TableConfig(source_dict=t, checks_dicts=checks))
-
-    outputs = []
-    for o in raw.get("outputs", []) or []:
-        o = sub(o)
-        outputs.append(
-            OutputSpec(
-                filename=o.get("filename"),
-                append=bool(o.get("append", False)),
-                pipe=o.get("pipe"),
-                ignore_error=bool(o.get("ignoreError", False)),
-            )
-        )
-
-    email = None
-    if raw.get("email"):
-        e = sub(raw["email"])
-        email = EmailConfig(
-            smtp_host=e.get("smtpHost", ""),
-            subject=e.get("subject", ""),
-            from_addr=e.get("from", ""),
-            to=list(e.get("to", []) or []),
-            cc=list(e.get("cc", []) or []),
-            bcc=list(e.get("bcc", []) or []),
-            smtp_port=int(e.get("smtpPort", 25)),
-            deliver=bool(e.get("deliver", False)),
-        )
-
-    return ValidatorConfig(
-        num_key_cols=int(raw.get("numKeyCols", 2)),
-        num_errors_to_report=int(raw.get("numErrorsToReport", 5)),
-        detailed_errors=bool(raw.get("detailedErrors", True)),
-        tables=tables,
-        outputs=outputs,
-        email=email,
-        var_specs=raw.get("vars") or [],
-        var_sub_dict=dict(dict_.vars),
-    )
+    """Parse YAML, resolving variables first; raises ConfigError listing
+    every fault. CLI --vars override the config's own `vars:` by the
+    reference's actual mechanism (Main.scala): the dict is SEEDED with
+    the CLI vars, and adding a name twice keeps the first value, so the
+    config's re-definition of a CLI-supplied name is a logged no-op."""
+    config, faults = _decode(text, lambda specs: build_dict(specs, spark, seed=cli_vars))
+    if faults:
+        raise ConfigError(faults)
+    return config
 
 
 def load_config(path: str, spark: Optional[Any] = None, cli_vars: Optional[dict[str, str]] = None) -> ValidatorConfig:
@@ -149,120 +237,50 @@ def load_config(path: str, spark: Optional[Any] = None, cli_vars: Optional[dict[
         return parse_config(f.read(), spark, cli_vars)
 
 
-def check_config_text(text: str) -> list[str]:
-    """Parse-only configuration check — no SparkSession, no variable
-    resolution, no table reads. Parity: the reference ships a
+def config_faults(path: str) -> list[Fault]:
+    """The config check of a file: parse-only, no SparkSession, no
+    variable resolution, no table reads. Parity: the reference ships a
     config-check entrypoint (ConfigParser.scala:68 main; README
     'Configuration parser check') that verifies the YAML decodes into
     the config model and explicitly does NOT resolve variables
-    ('those have runtime implications'). Returns a list of error
-    strings (empty = config OK).
-
-    Beyond raw decoding, each table's source and checks are
-    trial-constructed to catch type-key typos early — but an entry
-    whose fields still contain unresolved ``$var`` / ``${var}``
-    placeholders only gets the structural pass (its deep validation
-    needs runtime values, same caveat as the reference). Placeholder
-    detection matches the actual substitution token syntax
-    (VarSubstitution.scala:141 ``\\$\\{?[A-Za-z]\\w*\\}?``) against
-    string leaves only, and suppression is scoped to the specific
-    entry carrying the placeholder — a literal ``$`` in e.g. a regex
-    anchor (``abc$``) does not defer validation, and a placeholder in
-    one check does not mask errors in its siblings or the source.
-    """
-    from data_validator_spark.substitution import _VAR_RE
-
-    def _has_placeholder(value: Any) -> bool:
-        if isinstance(value, str):
-            return _VAR_RE.search(value) is not None
-        if isinstance(value, dict):
-            return any(_has_placeholder(v) for v in value.values())
-        if isinstance(value, (list, tuple)):
-            return any(_has_placeholder(v) for v in value)
-        return False
-
-    errors: list[str] = []
+    ('those have runtime implications'). A run applies it before its
+    session starts."""
     try:
-        raw = yaml.safe_load(text) or {}
-    except yaml.YAMLError as e:
-        return [f"YAML parse error: {e}"]
-    if not isinstance(raw, dict):
-        return [f"Config root must be a mapping, got {type(raw).__name__}"]
+        with open(path) as f:
+            return _decode(f.read())[1]
+    except OSError as e:
+        return [Fault(f"Cannot read config file: {e}")]
 
-    for spec in raw.get("vars") or []:
-        if not isinstance(spec, dict) or "name" not in spec:
-            errors.append(f"vars entry missing 'name': {spec!r}")
-        elif not any(k in spec for k in ("value", "env", "shell", "sql")):
-            errors.append(
-                f"Variable '{spec['name']}' has no value/env/shell/sql source"
-            )
 
-    for i, t in enumerate(raw.get("tables") or []):
-        if not isinstance(t, dict):
-            errors.append(f"tables[{i}] must be a mapping, got {type(t).__name__}")
-            continue
-        label = f"tables[{i}]"
-        try:
-            t = dict(t)
-            checks = t.pop("checks", []) or []
-            try:
-                source_from_dict(t)
-            except Exception as e:
-                # deep source validation is deferred only when the
-                # source entry itself carries a placeholder
-                if not _has_placeholder(t):
-                    errors.append(f"{label}: {e}")
-            if not isinstance(checks, list):
-                errors.append(f"{label}.checks must be a list, got {type(checks).__name__}")
-                continue
-            for j, c in enumerate(checks):
-                if not isinstance(c, dict):
-                    errors.append(f"{label}.checks[{j}] must be a mapping")
-                    continue
-                try:
-                    check_from_dict(c)
-                except Exception as e:
-                    # an unknown `type:` is a hard error even with
-                    # placeholders present; parameter errors are
-                    # deferred only for the check that needs variable
-                    # resolution, never for its siblings
-                    if not _has_placeholder(c) or c.get("type") not in CHECK_TYPES:
-                        errors.append(f"{label}.checks[{j}]: {e}")
-        except Exception as e:  # any unexpected failure = config error, not a crash
-            errors.append(f"{label}: unexpected error during config check: {e!r}")
-    return errors
+def check_config_text(text: str) -> list[str]:
+    """The config check of a document: one string per fault, empty when
+    the config is OK."""
+    return [f.located for f in _decode(text)[1]]
 
 
 def check_config_file(path: str) -> list[str]:
-    try:
-        with open(path) as f:
-            text = f.read()
-    except OSError as e:
-        return [f"Cannot read config file: {e}"]
-    return check_config_text(text)
+    return [f.located for f in config_faults(path)]
+
+
+def report_faults(faults: list) -> int:
+    """Print each fault as a CONFIG ERROR line; returns the exit code."""
+    for f in faults:
+        print(f"CONFIG ERROR: {f}", file=sys.stderr)
+    return 1 if faults else 0
 
 
 def main(argv: Optional[list] = None) -> int:
     """``python -m data_validator_spark.config config.yaml`` — the
     standalone config-check entrypoint (reference ConfigParser main:
     print a message and exit non-zero on error)."""
-    import sys
-
     args = list(sys.argv[1:] if argv is None else argv)
     if len(args) != 1:
         print("usage: python -m data_validator_spark.config <config.yaml>", file=sys.stderr)
         return 2
-    errs = check_config_file(args[0])
-    if errs:
-        for e in errs:
-            print(f"CONFIG ERROR: {e}", file=sys.stderr)
-        print("DATA_VALIDATOR_CONFIG=INVALID")
-        return 1
-    print("DATA_VALIDATOR_CONFIG=OK")
-    return 0
+    invalid = report_faults(config_faults(args[0]))
+    print(f"DATA_VALIDATOR_CONFIG={'INVALID' if invalid else 'OK'}")
+    return invalid
 
 
 if __name__ == "__main__":
-    import sys
-
     sys.exit(main())

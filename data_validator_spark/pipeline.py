@@ -54,6 +54,7 @@ from data_validator_spark.functions.text import (
     token_count,
 )
 from data_validator_spark.queries import DEC, load
+from data_validator_spark.queries.curation_ops import PREFIX_TOKENS, prefix_expr
 from data_validator_spark.queries.pipeline_ops import (
     SAMPLE_BUCKETS,
     WSAMPLE_K,
@@ -72,7 +73,7 @@ from data_validator_spark.queries.textops import (
     split_bucket,
 )
 from data_validator_spark.sources.sinks import write_partitioned
-from data_validator_spark.validators.base import is_number
+from data_validator_spark.validators.base import is_number, require_bool, require_int, require_list
 
 
 class PipelineConfigError(ValueError):
@@ -87,18 +88,16 @@ def _step_dedup_exact(df: DataFrame, opts: dict) -> DataFrame:
 
 
 def _step_quality_filter(df: DataFrame, opts: dict) -> DataFrame:
-    min_score = float(opts.get("minScore", QUALITY_CUTOFF))
-    return df.where(quality_score(F.col("text")) >= min_score)
+    return df.where(quality_score(F.col("text")) >= opts["minScore"])
 
 
 def _step_lang_filter(df: DataFrame, opts: dict) -> DataFrame:
     col = F.col("lang") if "lang" in df.columns else lang_id(F.col("text"))
-    return df.where(col.isin(list(opts["langs"])))
+    return df.where(col.isin(opts["langs"]))
 
 
 def _step_split(df: DataFrame, opts: dict) -> DataFrame:
-    train = int(opts.get("train", TRAIN_CUT))
-    val = int(opts.get("val", VAL_CUT - TRAIN_CUT))
+    train, val = opts["train"], opts["val"]
     b = split_bucket()
     split = (
         F.when(b < train, "train")
@@ -109,10 +108,9 @@ def _step_split(df: DataFrame, opts: dict) -> DataFrame:
 
 
 def _step_split_filter(df: DataFrame, opts: dict) -> DataFrame:
-    keep = opts.get("keep", "train")
     had_split = "split" in df.columns
     out = df if had_split else _step_split(df, opts)
-    out = out.where(F.col("split") == keep)
+    out = out.where(F.col("split") == opts["keep"])
     # the internally materialized column must not leak into the output
     # schema — only an explicit split step adds it
     return out if had_split else out.drop("split")
@@ -131,23 +129,18 @@ def _step_boilerplate_filter(df: DataFrame, opts: dict) -> DataFrame:
     prefix partition — the groups are prefix-scale, never
     corpus-wide."""
     from data_validator_spark.functions.text import normalized_text
-    from data_validator_spark.queries.curation_ops import PREFIX_TOKENS
 
-    from data_validator_spark.queries.curation_ops import prefix_expr
-
-    max_group = int(opts.get("maxGroup", 1))
-    n_tok = int(opts.get("prefixTokens", PREFIX_TOKENS))
     norm = normalized_text(F.col("text"))
     # NULL text normalizes to NULL: fold it into the unmatchable class
     # with empty strings (a NULL prefix would otherwise collect ALL
     # null-text docs into one window partition and delete them as a
     # fake template group)
     unmatchable = norm.isNull() | (norm == "")
-    size = F.count(F.lit(1)).over(Window.partitionBy(prefix_expr(norm, n_tok)))
+    size = F.count(F.lit(1)).over(Window.partitionBy(prefix_expr(norm, opts["prefixTokens"])))
     # unmatchable docs bypass the filter entirely (group size 0)
     return (
         df.withColumn("__pg", F.when(unmatchable, F.lit(0)).otherwise(size))
-        .where(F.col("__pg") <= max_group)
+        .where(F.col("__pg") <= opts["maxGroup"])
         .drop("__pg")
     )
 
@@ -157,8 +150,7 @@ def _step_pii_scrub(df: DataFrame, opts: dict) -> DataFrame:
 
 
 def _step_sample(df: DataFrame, opts: dict) -> DataFrame:
-    keep = int(round(float(opts.get("fraction", 0.2)) * SAMPLE_BUCKETS))
-    return df.where(sample_bucket() < keep)
+    return df.where(sample_bucket() < round(opts["fraction"] * SAMPLE_BUCKETS))
 
 
 def _step_select(df: DataFrame, opts: dict) -> DataFrame:
@@ -170,11 +162,9 @@ def _step_chunk(df: DataFrame, opts: dict) -> DataFrame:
     the doc_chunk operator as a pipeline stage). Adds chunk_idx /
     n_chunk_tokens and replaces text with the chunk text — a pure
     map-stage fan-out, no shuffle."""
-    width = int(opts.get("width", CHUNK_W))
-    stride = int(opts.get("stride", CHUNK_S))
     chunks = chunk_tokens(df).select(
         "*",
-        F.posexplode(F.expr(chunk_windows(width, stride))).alias(
+        F.posexplode(F.expr(chunk_windows(opts["width"], opts["stride"]))).alias(
             "chunk_idx", "_chunk"
         ),
     )
@@ -189,8 +179,7 @@ def _step_weighted_sample(df: DataFrame, opts: dict) -> DataFrame:
     """Keep the top-k documents by the deterministic Efraimidis–
     Spirakis key ln(u)/w (the weighted_sample operator as a pipeline
     stage); weightColumn defaults to n_chars."""
-    k = int(opts.get("k", WSAMPLE_K))
-    wcol = opts.get("weightColumn", "n_chars")
+    wcol = opts["weightColumn"]
     if wcol not in df.columns:
         raise PipelineConfigError(f"weightedSample weightColumn {wcol!r} not found")
     # the draw is keyed by doc_id — plus chunk_idx when the frame has
@@ -205,7 +194,7 @@ def _step_weighted_sample(df: DataFrame, opts: dict) -> DataFrame:
     return (
         df.withColumn("_wkey", key)
         .orderBy(F.desc("_wkey"), *tiebreak)
-        .limit(k)
+        .limit(opts["k"])
         .drop("_wkey")
     )
 
@@ -231,7 +220,7 @@ def _step_dedup_incremental(df: DataFrame, opts: dict) -> DataFrame:
     out = df.withColumn("__fp", doc_fingerprint(F.col("text"))).join(
         index, "__fp", "left_anti"
     )
-    if bool(opts.get("withinBatch", True)):
+    if opts.get("withinBatch", True):
         keeper = F.min("doc_id").over(Window.partitionBy("__fp"))
         out = out.withColumn("__keeper", keeper).where(
             F.col("doc_id") == F.col("__keeper")
@@ -256,72 +245,77 @@ STEPS: dict[str, Callable[[DataFrame, dict], DataFrame]] = {
 }
 
 
-def _require_list(value, where: str) -> list:
-    """YAML scalars are the classic config trap: `langs: en` arrives as
-    the string 'en' and list('en') silently becomes ['e', 'n']."""
-    if not isinstance(value, (list, tuple)):
-        raise PipelineConfigError(f"{where} must be a YAML list, got {value!r}")
-    return list(value)
+class Pipeline(dict):
+    """A pipeline map parse_pipeline has checked, each step's options
+    with their defaults filled in; parse_pipeline returns one as is."""
 
 
-def _require_int(value, where: str, low: int = 1) -> int:
-    """``value`` when it is an int of at least ``low``; a YAML boolean,
-    float or string is not one (``int(2.5)`` would silently be 2)."""
-    if isinstance(value, bool) or not isinstance(value, int) or value < low:
-        kind = "a positive integer" if low == 1 else f"an integer >= {low}"
-        raise PipelineConfigError(f"{where} must be {kind}, got {value!r}")
-    return value
+# Every step option that has a default. parse_pipeline fills these in,
+# so a step reads its options as they are.
+DEFAULTS: dict[str, dict[str, Any]] = {
+    "qualityFilter": {"minScore": QUALITY_CUTOFF},
+    "split": {"train": TRAIN_CUT, "val": VAL_CUT - TRAIN_CUT},
+    "splitFilter": {"train": TRAIN_CUT, "val": VAL_CUT - TRAIN_CUT, "keep": "train"},
+    "boilerplateFilter": {"maxGroup": 1, "prefixTokens": PREFIX_TOKENS},
+    "sample": {"fraction": 0.2},
+    "chunk": {"width": CHUNK_W, "stride": CHUNK_S},
+    "weightedSample": {"k": WSAMPLE_K, "weightColumn": "n_chars"},
+}
 
 
-def _check_options(name: str, opts: dict) -> None:
-    """Every step-option check that needs no schema, run by
-    parse_pipeline so a bad option fails before the JVM starts.
+def _options(name: str, opts: dict) -> dict:
+    """The step's options with the defaults filled in, after every check
+    that needs no schema, so a bad option fails before the JVM starts.
     weightedSample's weightColumn needs the frame's columns, so its
     step checks it at build time."""
-    if name == "langFilter" and not _require_list(opts.get("langs"), "langFilter.langs"):
+    o = {**DEFAULTS.get(name, {}), **opts}
+    if name == "langFilter" and not require_list(o.get("langs"), "langFilter.langs"):
         raise PipelineConfigError("langFilter requires langs: [..]")
-    if name == "select" and not _require_list(opts.get("columns"), "select.columns"):
+    if name == "select" and not require_list(o.get("columns"), "select.columns"):
         raise PipelineConfigError("select requires columns: [..]")
     if name == "chunk":
-        _require_int(opts.get("width", CHUNK_W), "chunk.width")
-        _require_int(opts.get("stride", CHUNK_S), "chunk.stride")
+        require_int(o["width"], "chunk.width")
+        require_int(o["stride"], "chunk.stride")
     if name == "weightedSample":
-        _require_int(opts.get("k", WSAMPLE_K), "weightedSample.k")
-    if name == "qualityFilter" and not is_number(opts.get("minScore", QUALITY_CUTOFF)):
+        require_int(o["k"], "weightedSample.k")
+    if name == "qualityFilter" and not is_number(o["minScore"]):
         raise PipelineConfigError(
-            f"qualityFilter.minScore must be a number, got {opts['minScore']!r}"
+            f"qualityFilter.minScore must be a number, got {o['minScore']!r}"
         )
     if name in ("split", "splitFilter"):
         # split_bucket() is 0-99: train + val past 100 empties val/test
-        train = _require_int(opts.get("train", TRAIN_CUT), f"{name}.train", 0)
-        val = _require_int(opts.get("val", VAL_CUT - TRAIN_CUT), f"{name}.val", 0)
+        train = require_int(o["train"], f"{name}.train", 0)
+        val = require_int(o["val"], f"{name}.val", 0)
         if train + val > 100:
             raise PipelineConfigError(
                 f"{name}.train + {name}.val must be at most 100, got {train} + {val}"
             )
-    if name == "splitFilter" and opts.get("keep", "train") not in ("train", "val", "test"):
+    if name == "splitFilter" and o["keep"] not in ("train", "val", "test"):
         raise PipelineConfigError(
-            f"splitFilter.keep must be train, val or test, got {opts['keep']!r}"
+            f"splitFilter.keep must be train, val or test, got {o['keep']!r}"
         )
     if name == "boilerplateFilter":
         # maxGroup 0 drops every doc that has a prefix to match on
-        for k, low in (("maxGroup", 0), ("prefixTokens", 1)):
-            if k in opts:
-                _require_int(opts[k], f"boilerplateFilter.{k}", low)
-    if name == "sample":
-        frac = opts.get("fraction", 0.2)
-        if not is_number(frac) or not 0 <= frac <= 1:
-            raise PipelineConfigError(
-                f"sample.fraction must be a number in [0, 1], got {frac!r}"
-            )
-    if name == "dedupIncremental" and not opts.get("indexPath"):
+        require_int(o["maxGroup"], "boilerplateFilter.maxGroup", 0)
+        require_int(o["prefixTokens"], "boilerplateFilter.prefixTokens")
+    if name == "sample" and (not is_number(o["fraction"]) or not 0 <= o["fraction"] <= 1):
+        raise PipelineConfigError(
+            f"sample.fraction must be a number in [0, 1], got {o['fraction']!r}"
+        )
+    if name == "dedupIncremental" and not o.get("indexPath"):
         raise PipelineConfigError("dedupIncremental requires indexPath")
+    if name == "dedupIncremental" and "withinBatch" in o:  # its default (true) is the step's
+        require_bool(o["withinBatch"], "dedupIncremental.withinBatch")
+    return o
 
 
-def parse_pipeline(config: dict | str) -> dict:
-    """Validate the pipeline config shape; returns the pipeline dict.
-    Every malformed-config path raises PipelineConfigError (never a
-    raw YAML/Type error) so the CLI's exit-2 contract holds."""
+def parse_pipeline(config: dict | str) -> Pipeline:
+    """Validate the pipeline config shape; returns the pipeline map with
+    every step's options filled in. Every malformed-config path raises
+    PipelineConfigError (never a raw YAML/Type error) so the CLI's
+    exit-2 contract holds."""
+    if isinstance(config, Pipeline):
+        return config
     if isinstance(config, str):
         try:
             config = yaml.safe_load(config)
@@ -330,8 +324,6 @@ def parse_pipeline(config: dict | str) -> dict:
     if not isinstance(config, dict):
         raise PipelineConfigError("top-level 'pipeline' key required")
     # accept the full document or an already-unwrapped pipeline map
-    # (validation is idempotent, so run_pipeline can hand its parsed
-    # dict straight to build_pipeline without a second YAML parse)
     p = config.get("pipeline", config)
     if not isinstance(p, dict):
         raise PipelineConfigError("'pipeline' must be a map")
@@ -342,32 +334,36 @@ def parse_pipeline(config: dict | str) -> dict:
     steps = p.get("steps") or []
     if not isinstance(steps, list):
         raise PipelineConfigError("pipeline.steps must be a list")
-    for step in steps:
-        if not isinstance(step, dict) or len(step) != 1:
-            raise PipelineConfigError(f"each step must be a 1-key map: {step}")
-        (name,) = step
-        if name not in STEPS:
-            raise PipelineConfigError(
-                f"unknown step {name!r}; known: {sorted(STEPS)}"
-            )
-        if step[name] is not None and not isinstance(step[name], dict):
-            raise PipelineConfigError(f"step {name!r} options must be a map")
-        _check_options(name, step[name] or {})
-    sink = p.get("sink")
-    if sink is not None:
-        if not isinstance(sink, dict) or "path" not in sink:
-            raise PipelineConfigError("pipeline.sink needs a 'path'")
-        if "partitionBy" in sink:
-            _require_list(sink["partitionBy"], "sink.partitionBy")
-    return p
+    parsed = []
+    try:
+        for step in steps:
+            if not isinstance(step, dict) or len(step) != 1:
+                raise PipelineConfigError(f"each step must be a 1-key map: {step}")
+            (name,) = step
+            if name not in STEPS:
+                raise PipelineConfigError(
+                    f"unknown step {name!r}; known: {sorted(STEPS)}"
+                )
+            if step[name] is not None and not isinstance(step[name], dict):
+                raise PipelineConfigError(f"step {name!r} options must be a map")
+            parsed.append({name: _options(name, step[name] or {})})
+        sink = p.get("sink")
+        if sink is not None:
+            if not isinstance(sink, dict) or "path" not in sink:
+                raise PipelineConfigError("pipeline.sink needs a 'path'")
+            if "partitionBy" in sink:
+                require_list(sink["partitionBy"], "sink.partitionBy")
+    except ValueError as e:  # the type rules raise ValueError
+        raise PipelineConfigError(str(e)) from None
+    return Pipeline(p, steps=parsed)
 
 
 def build_pipeline(
     spark: SparkSession, config: dict | str, sf_dir: str | None = None
 ) -> DataFrame:
     """Fold source + steps into one lazy DataFrame (no execution).
-    Accepts raw YAML, the full config dict, or a pipeline dict already
-    validated by parse_pipeline (validation is idempotent)."""
+    Accepts raw YAML, the full config dict, or what parse_pipeline
+    returned (not parsed again)."""
     p = parse_pipeline(config)
     src = p["source"]
     if "table" in src:
@@ -376,9 +372,9 @@ def build_pipeline(
         df = load(spark, sf_dir, src["table"])
     else:
         df = spark.read.format(src.get("format", "parquet")).load(src["path"])
-    for step in p.get("steps", []):
-        (name,) = step
-        df = STEPS[name](df, step[name] or {})
+    for step in p["steps"]:
+        ((name, opts),) = step.items()
+        df = STEPS[name](df, opts)
     return df
 
 
@@ -418,8 +414,8 @@ def main(argv: list[str] | None = None) -> int:
 
     with open(args.config) as fh:
         cfg = fh.read()
-    # validate BEFORE paying JVM startup; parse is idempotent so the
-    # parsed dict goes straight to run_pipeline
+    # validate BEFORE paying JVM startup; run_pipeline takes the parsed
+    # pipeline as it is
     try:
         parsed = parse_pipeline(cfg)
     except PipelineConfigError as e:

@@ -31,8 +31,9 @@ def execute_to_final_plan(df: DataFrame) -> str:
     return plan[:cut] if cut != -1 else plan
 
 
-def live_plan_string(df: DataFrame) -> str:
-    """Executed-plan string with every cached subtree pruned.
+def prune_cached_subtrees(plan: str) -> str:
+    """Drop the re-printed build plan under every cached-relation node
+    of an (already obtained) plan string.
 
     Spark reprints the FULL cached build plan under each
     InMemoryTableScan/InMemoryRelation reference, so operator counts
@@ -42,12 +43,6 @@ def live_plan_string(df: DataFrame) -> str:
     cost per iteration is zero of each (r11: the PLANS.md scorecard
     counts live operators only). The cache node line itself is kept,
     so cached references stay visible and countable."""
-    return prune_cached_subtrees(plan_string(df))
-
-
-def prune_cached_subtrees(plan: str) -> str:
-    """Drop the re-printed build plan under every cached-relation node
-    of an (already obtained) plan string — see live_plan_string."""
     out: list[str] = []
     skip_depth: int | None = None
     for ln in plan.splitlines():

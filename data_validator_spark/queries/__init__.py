@@ -27,6 +27,8 @@ from pyspark.sql import functions as F
 # Exact decimal type used for order-independent double sums.
 DEC = "decimal(30,6)"
 
+# Every table of the synthetic dataset (the oracle tools build one
+# DuckDB view per name).
 TABLES = [
     "region",
     "nation",
@@ -125,8 +127,9 @@ def load_documents_by_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     HashPartitioning(doc_id) survives the in-row text kernels and
     explodes, so every downstream groupBy("doc_id")/doc-keyed join
     plans exchange-free; it also supersedes spread() for these
-    consumers (32 bucket splits = the local parallelism target, and
-    at real scale the scan has thousands of splits anyway)."""
+    consumers (one split per bucket, and the bucket count is sized to
+    the dataset by bucketing.dataset_buckets: 1 at sf0.01, 3 at sf0.1,
+    up to 32; at real scale the scan has thousands of splits anyway)."""
     from data_validator_spark.operators.bucketing import bucketed_fact
 
     return bucketed_fact(spark, sf_dir, "documents", "doc_id")
@@ -138,8 +141,8 @@ def load_embeddings_by_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     purity, knn, recall — re-keys the corpus on vec_id when joining
     per-vector signals back to vectors, and EVERY consumer paid a
     round-robin spread() exchange to unblock the per-row kernels. The
-    bucketed scan gives both for free: 32 splits of parallelism at
-    local scale — thousands at real scale — AND
+    bucketed scan gives both for free: one split per bucket (a
+    dataset-sized count, bucketing.dataset_buckets) AND
     HashPartitioning(vec_id) that the join-backs reuse)."""
     from data_validator_spark.operators.bucketing import bucketed_fact
 

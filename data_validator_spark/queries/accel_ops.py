@@ -70,9 +70,10 @@ def q_bloom_filter_semijoin(spark, sf):
     """
     cust = load(spark, sf, "customer")
     # r19: the fact scan rides the o_orderkey-bucketed orders copy —
-    # 32 bucket files feed the probe-map stage directly, replacing the
-    # spread() round-robin exchange (A/B at sf0.1 0.63s → 0.54s
-    # best-of-5, row-identical). Any orders layout serves: the probes
+    # its bucket files (a dataset-sized count, bucketing.dataset_buckets;
+    # 32 when this was measured) feed the probe-map stage directly,
+    # replacing the spread() round-robin exchange (A/B at sf0.1 0.63s →
+    # 0.54s best-of-5, row-identical). Any orders layout serves: the probes
     # are per-row map work with no key requirement.
     from data_validator_spark.operators.bucketing import bucketed_fact
 

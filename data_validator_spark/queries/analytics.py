@@ -39,10 +39,11 @@ from data_validator_spark.queries import (
 # -- q1: pricing summary (TPC-H Q1 shape) ----------------------------------
 def q1_pricing_summary(spark, sf):
     # r19: the scan rides the at-rest l_orderkey-bucketed lineitem copy
-    # (drift_ks's r18 class) — 32 bucket files give the partial-agg
-    # stage its parallelism directly, so the spread() round-robin
-    # exchange (and its sort-before-repartition, SPARK-23207) is gone
-    # along with the 8 MB shuffle of the 6 agg columns. Same rows, one
+    # (drift_ks's r18 class) — its bucket files (a dataset-sized count,
+    # bucketing.dataset_buckets; 32 when this was measured) give the
+    # partial-agg stage its parallelism directly, so the spread()
+    # round-robin exchange (and its sort-before-repartition, SPARK-23207)
+    # is gone along with the 8 MB shuffle of the 6 agg columns. Same rows, one
     # less exchange; A/B at sf0.1: 1.05s → 0.43s best-of-5, identical
     # output. At real scale the raw scan has thousands of splits and
     # spread() was already a no-op — the copy is simply the at-rest

@@ -252,8 +252,9 @@ def q_lang_id_confusion(spark, sf):
     GREATEST/CASE mirror in the oracle).
 
     Reads the doc_id-bucketed copy (r18): the stopword-scan struct is
-    the heavy per-row stage and runs on the scan's bucket splits —
-    spread()'s parallelism without its round-robin exchange."""
+    the heavy per-row stage and runs on the scan's bucket splits (a
+    dataset-sized count, bucketing.dataset_buckets), with no
+    round-robin exchange."""
     df = load_documents_by_id(spark, sf)
     pred = df.select(
         "lang", lang_best_struct(F.col("text")).alias("b")

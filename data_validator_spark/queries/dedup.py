@@ -793,8 +793,8 @@ def q_dedup_simhash(spark, sf):
     the majority vote of bit i across the document's token hashes.
     Map-only — see _get_simhash_kernel. Documents with no tokens are
     dropped (parity with the previous explode semantics; none exist in
-    the corpus). Reads the doc_id-bucketed copy (r17): 32 bucket
-    splits give the same parallelism spread() bought, without the
+    the corpus). Reads the doc_id-bucketed copy (r17): one split per
+    bucket (a dataset-sized count, bucketing.dataset_buckets), with no
     round-robin exchange."""
     df = load_documents_by_id(spark, sf)
     th = F.array_distinct(F.transform(tokens(normalized_text(F.col("text"))), hash60))

@@ -178,9 +178,9 @@ def q_sequence_pack(spark, sf):
 
     Reads the doc_id-bucketed copy (r18: last members of the raw-scan
     class — the window re-keys on lang, but the token_count kernel
-    runs pre-shuffle on the scan's 32 splits, which is what spread()
-    bought; the copy gives the same parallelism without the
-    round-robin exchange)."""
+    runs pre-shuffle on the scan's bucket splits, whose count is
+    sized to the dataset (bucketing.dataset_buckets); spread() bought
+    the same parallelism with a round-robin exchange)."""
     df = load_documents_by_id(spark, sf)
     toks = token_count(F.col("text"))
     w = (
@@ -248,8 +248,8 @@ def q_dedup_keep_best(spark, sf):
     bounds the shuffle.
 
     Reads the doc_id-bucketed copy (r18): the fingerprint kernel runs
-    pre-shuffle on the scan's bucket splits — same parallelism spread()
-    bought, minus its round-robin exchange."""
+    pre-shuffle on the scan's bucket splits (a dataset-sized count,
+    bucketing.dataset_buckets), with no round-robin exchange."""
     df = load_documents_by_id(spark, sf)
     from data_validator_spark.functions.text import fingerprint60
 

@@ -77,9 +77,10 @@ def q_drift_psi(spark, sf):
     # A/B looked favorable (0.67→0.51s), but under the driver's own
     # bench methodology the switch ran 0.45→0.75-0.78s across four
     # runs in two sessions — two sequential trivial-per-row passes
-    # each pay the ~0.1s/task shuffle-free stage floor on 32 bucket
-    # files, where the raw 1-split scan pays it once (the
-    # col_quantiles/mad_outliers class, history/OPTIMIZATION_r19.md §3).
+    # each pay the ~0.1s/task shuffle-free stage floor on the 32
+    # bucket files copies then had, where the raw 1-split scan pays it
+    # once (the col_quantiles/mad_outliers class,
+    # history/OPTIMIZATION_r19.md §3).
     li = load(spark, sf, "lineitem").select("l_extendedprice", "l_shipdate")
     cents = F.expr(PSI_CENTS)
     is_ref = F.col("l_shipdate") < F.lit(PSI_PIVOT)
@@ -196,9 +197,11 @@ FK_RELATIONS = [
 
 
 # fact tables with an at-rest bucketed layout: the audit scans ride
-# the copy for its SPLIT COUNT alone (32 bucket files vs the raw
-# single-file scan's handful of row-group splits — the r17 fk profile
-# put 1.2s of the 2.6s wall on a 6-task child-scan stage). No exchange
+# the copy for its SPLIT COUNT alone (one split per bucket file; the
+# r17 fk profile, at 32 buckets, put 1.2s of the 2.6s wall on a 6-task
+# child-scan stage of the raw scan). Bucket counts are now sized to
+# the dataset (bucketing.dataset_buckets: 1 at sf0.01, 3 at sf0.1), so
+# below ~128 MB the copy gives fewer splits than that. No exchange
 # changes: the audit's groupBy/join shuffle on (tag, k) either way.
 _AUDIT_SCAN_LAYOUT = {
     "lineitem": "l_orderkey",

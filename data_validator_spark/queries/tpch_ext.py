@@ -120,15 +120,9 @@ partsupp AS (
 """
 
 
-def lineitem_ext_df(spark, sf):
-    """lineitem + derived ship metadata from one md5 per line,
-    session-persisted (_EXT_CACHE)."""
-    return _EXT_CACHE.get(
-        spark, sf, lambda: _lineitem_ext_build(spark, sf), "lineitem_ext"
-    )
-
-
 def _lineitem_ext_build(spark, sf):
+    """lineitem + derived ship metadata from one md5 per line; its
+    consumers read the at-rest copies of it."""
     li = spread(load(spark, sf, "lineitem"))
     mode = F.array(*[F.lit(m) for m in MODES])
     instr = F.array(*[F.lit(x) for x in INSTRUCTS])
@@ -194,17 +188,13 @@ def ensure_bucketed_lineitem_ext(spark, sf) -> str:
 
 
 def _part_ext_build(spark, sf):
+    """part + derived p_container; its consumers read the at-rest copy."""
     part = spread(load(spark, sf, "part"))
     cont = F.array(*[F.lit(c) for c in CONTAINERS])
     h = hash60(_hash_key("pc", "p_partkey"))
     return part.withColumn(
         "p_container", F.element_at(cont, (h % 40 + 1).cast("int"))
     )
-
-
-def part_ext_df(spark, sf):
-    """part + derived p_container, session-persisted (_EXT_CACHE)."""
-    return _EXT_CACHE.get(spark, sf, lambda: _part_ext_build(spark, sf), "part_ext")
 
 
 # -- generalized derived-relation copies (r15: q19's partkey meet) ----------
@@ -689,8 +679,9 @@ def q20_potential_promotion(spark, sf):
     same key, part/nation broadcast, and the final supplier pick is a
     left-semi join — no row explosion anywhere."""
     # r19: ride the l_partkey-bucketed copy (q14/q17's layout) instead
-    # of spread(load()): the 32 bucket files parallelize the scan with
-    # no round-robin exchange, and HashPartitioning(l_partkey)
+    # of spread(load()): the bucket files (a dataset-sized count,
+    # bucketing.dataset_buckets) parallelize the scan with no
+    # round-robin exchange, and HashPartitioning(l_partkey)
     # satisfies the (l_partkey, l_suppkey) groupBy's clustering, so
     # the shipped aggregate plans exchange-free. A/B at sf0.1:
     # 1.22s → 0.69s best-of-5, identical output.

@@ -80,6 +80,41 @@ def is_number(value: Any) -> bool:
     return isinstance(value, (int, float)) and not isinstance(value, bool)
 
 
+# Type rules for config fields (validator config and pipeline steps):
+# each returns the value when it has its YAML type and raises
+# ValueError naming the field (``where``) when it does not.
+
+
+def require_list(value: Any, where: str) -> list:
+    """YAML scalars are the classic config trap: `langs: en` arrives as
+    the string 'en' and list('en') silently becomes ['e', 'n']."""
+    if not isinstance(value, (list, tuple)):
+        raise ValueError(f"{where} must be a YAML list, got {value!r}")
+    return list(value)
+
+
+def require_int(value: Any, where: str, low: int = 1) -> int:
+    """``value`` when it is an int of at least ``low``; a YAML boolean,
+    float or string is not one (``int(2.5)`` would silently be 2)."""
+    if not is_number(value) or not isinstance(value, int) or value < low:
+        kind = "a positive integer" if low == 1 else f"an integer >= {low}"
+        raise ValueError(f"{where} must be {kind}, got {value!r}")
+    return value
+
+
+def require_bool(value: Any, where: str) -> bool:
+    """A YAML ``true``/``false``; ``bool("false")`` would be True."""
+    if not isinstance(value, bool):
+        raise ValueError(f"{where} must be a YAML boolean (true/false), got {value!r}")
+    return value
+
+
+def require_map(value: Any, where: str) -> dict:
+    if not isinstance(value, dict):
+        raise ValueError(f"{where} must be a mapping, got {type(value).__name__}")
+    return dict(value)
+
+
 def is_column_ref(value: Any) -> bool:
     """Backtick-prefixed string = reference to another column.
 

@@ -182,3 +182,67 @@ def test_cli_malformed_vars_is_usage_error_before_session(tmp_path, monkeypatch,
         cli.main(["--config", str(p), "--vars", "foo"])
     assert exit_info.value.code == 2
     assert "Bad --vars entry: 'foo'" in capsys.readouterr().err
+
+
+STRUCTURAL = [
+    "tables:\n  - parquetFile: /x.parquet\n    checks: nullCheck\n",
+    "tables:\n  - /x.parquet\n",
+    "vars:\n  - name: v\ntables: []\n",
+    "numKeyCols: two\ntables: []\n",
+    'detailedErrors: "false"\ntables: []\n',
+    "email:\n  to: ops@example.com\ntables: []\n",
+    "tables:\n  - parquetFile: /x.parquet\n    checks:\n      - type: nullCheck\n",
+]
+
+
+@pytest.mark.parametrize("text", STRUCTURAL)
+def test_cli_structural_fault_is_config_error_before_session(text, tmp_path, monkeypatch, capsys):
+    """A run applies the --checkConfig walk before it starts the JVM:
+    each malformed config exits 1 with CONFIG ERROR lines, and no Spark
+    session is built."""
+    from data_validator_spark import cli, session
+
+    def no_session(*args, **kwargs):
+        raise AssertionError("build_session called")
+
+    monkeypatch.setattr(session, "build_session", no_session)
+    p = tmp_path / "t.yaml"
+    p.write_text(text)
+    assert cli.main(["--config", str(p)]) == 1
+    err = capsys.readouterr().err
+    assert "CONFIG ERROR: " in err and "Traceback" not in err
+
+
+class _IdleSession:
+    """Stands in for the session in runs that must stop before any
+    table is read: nothing but stop() may be called on it."""
+
+    stopped = False
+
+    def stop(self):
+        self.stopped = True
+
+
+@pytest.mark.parametrize(
+    "outputs,message",
+    [
+        ("filename: /no/such/dir/report.json", "CONFIG ERROR: Cannot write to output file: /no/such/dir/report.json"),
+        ("pipe: /no/such/program --flag", "CONFIG ERROR: Pipe program not executable: /no/such/program --flag"),
+        # an undefined variable is found once the run resolves variables
+        ("filename: $nowhere/report.json", "CONFIG ERROR: Undefined variable: $nowhere"),
+    ],
+)
+def test_cli_output_and_variable_faults_are_config_errors(outputs, message, tmp_path, monkeypatch, capsys):
+    """Faults found after the session starts (an output that cannot be
+    written, a variable with no value) exit 1 with a CONFIG ERROR line,
+    not a traceback, and stop the session."""
+    from data_validator_spark import cli, session
+
+    idle = _IdleSession()
+    monkeypatch.setattr(session, "build_session", lambda *a, **k: idle)
+    p = tmp_path / "t.yaml"
+    p.write_text(f"tables: []\noutputs:\n  - {outputs}\n")
+    assert cli.main(["--config", str(p)]) == 1
+    err = capsys.readouterr().err
+    assert message in err and "Traceback" not in err
+    assert idle.stopped

@@ -283,16 +283,83 @@ MALFORMED = [
         "tables:\n  - parquetFile: /x\n    checks:\n      - type: nullCheck\n",
         "checks[0]",
     ),  # nullCheck without column
+    # the type rules of the one decoder: each of these used to crash a
+    # run or change it without a word
+    (
+        "tables:\n  - parquetFile: /x\n    checks: nullCheck\n",
+        "tables[0].checks must be a YAML list, got 'nullCheck'",
+    ),
+    ("tables:\n  - /x.parquet\n", "tables[0] must be a mapping, got str"),
+    ("numKeyCols: two\ntables: []\n", "numKeyCols must be an integer >= 0, got 'two'"),
+    (
+        'detailedErrors: "false"\ntables: []\n',
+        "detailedErrors must be a YAML boolean (true/false), got 'false'",
+    ),
+    ("numErrorsToReport: 2.7\ntables: []\n", "numErrorsToReport must be an integer >= 0, got 2.7"),
+    (
+        "email:\n  subject: s\n  to: ops@example.com\ntables: []\n",
+        "email.to must be a YAML list, got 'ops@example.com'",
+    ),
+    ("outputs:\n  - /tmp/report.json\ntables: []\n", "outputs[0] must be a mapping, got str"),
+    (
+        'outputs:\n  - filename: /tmp/report.json\n    append: "yes"\ntables: []\n',
+        "outputs[0].append must be a YAML boolean (true/false), got 'yes'",
+    ),
 ]
 
 
 @pytest.mark.parametrize("text,fragment", MALFORMED)
 def test_malformed_config_rejected(text, fragment):
-    from data_validator_spark.config import check_config_text
+    """--checkConfig (check_config_text) and a run (parse_config) go
+    through one decoder: the same faults, in the same words."""
+    from data_validator_spark.config import ConfigError, check_config_text
 
     errs = check_config_text(text)
     assert errs, f"expected rejection for: {text!r}"
     assert any(fragment in e for e in errs), (errs, fragment)
+    with pytest.raises(ConfigError) as info:
+        parse_config(text)
+    assert [f.located for f in info.value.faults] == errs
+    assert fragment in str(info.value)
+
+
+def test_config_counts_and_flags_keep_their_yaml_types():
+    """Legal values of the typed globals decode as written."""
+    cfg = parse_config(
+        "numKeyCols: 0\nnumErrorsToReport: 0\ndetailedErrors: false\n"
+        "email:\n  to: [a@x]\n  smtpPort: 2525\n  deliver: true\n"
+        "outputs:\n  - filename: /tmp/r.json\n    append: true\n    ignoreError: false\n"
+    )
+    assert (cfg.num_key_cols, cfg.num_errors_to_report, cfg.detailed_errors) == (0, 0, False)
+    assert (cfg.email.to, cfg.email.smtp_port, cfg.email.deliver) == (["a@x"], 2525, True)
+    assert (cfg.outputs[0].append, cfg.outputs[0].ignore_error) == (True, False)
+
+
+def test_run_lists_every_fault():
+    """A run's ConfigError carries every fault of the document, each
+    message first with its place after it."""
+    from data_validator_spark.config import ConfigError
+
+    with pytest.raises(ConfigError) as info:
+        parse_config(
+            "numKeyCols: two\n"
+            "tables:\n  - parquetFile: /x\n    checks:\n      - type: nullCheck\n"
+        )
+    assert str(info.value).splitlines() == [
+        "nullCheck check is missing required field 'column' (tables[0].checks[0])",
+        "numKeyCols must be an integer >= 0, got 'two'",
+    ]
+
+
+def test_placeholder_defers_type_rules_until_the_run():
+    """A `$var` in a typed field is checked once the run resolves it."""
+    from data_validator_spark.config import ConfigError, check_config_text
+
+    text = "vars:\n  - name: n\n    value: {v}\nnumKeyCols: $n\ntables: []\n"
+    assert check_config_text(text.format(v="three")) == []
+    assert parse_config(text.format(v=3)).num_key_cols == 3
+    with pytest.raises(ConfigError, match="numKeyCols must be an integer"):
+        parse_config(text.format(v="three"))
 
 
 def test_unknown_variable_in_config_rejected():

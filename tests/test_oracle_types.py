@@ -16,11 +16,9 @@ from __future__ import annotations
 import duckdb
 import pytest
 
+from data_validator_spark.queries import TABLES
+
 SF = "/root/testdata/sf0.001"
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 # DataFrame construction triggers execution for these (streaming runs
 # to completion; dedup_clusters iterates) — schema is covered by their

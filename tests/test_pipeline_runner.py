@@ -159,6 +159,7 @@ pipeline:
         {"boilerplateFilter": {"maxGroup": False}},
         {"boilerplateFilter": {"prefixTokens": 0}},
         {"boilerplateFilter": {"prefixTokens": "ten"}},
+        {"dedupIncremental": {"indexPath": "/idx", "withinBatch": "no"}},
     ],
 )
 def test_step_options_rejected_by_parse(step):
@@ -191,6 +192,32 @@ def test_sample_fraction_bounds_accepted():
 )
 def test_numeric_step_options_accepted(step):
     parse_pipeline({"pipeline": {"source": {"table": "documents"}, "steps": [step]}})
+
+
+def test_parse_fills_in_defaults_once(spark, monkeypatch):
+    """parse_pipeline returns every step's options with the defaults
+    filled in; what it returned is not parsed again, by itself or by
+    build_pipeline."""
+    from data_validator_spark import pipeline
+    from data_validator_spark.queries.textops import QUALITY_CUTOFF, TRAIN_CUT, VAL_CUT
+
+    parsed = parse_pipeline(
+        "pipeline:\n  source: {table: documents}\n"
+        "  steps: [{split: {train: 90}}, {qualityFilter: }, {sample: {fraction: 0.5}}, {dedupExact: {}}]\n"
+    )
+    assert parsed["steps"] == [
+        {"split": {"train": 90, "val": VAL_CUT - TRAIN_CUT}},
+        {"qualityFilter": {"minScore": QUALITY_CUTOFF}},
+        {"sample": {"fraction": 0.5}},
+        {"dedupExact": {}},
+    ]
+
+    def parsed_again(*args):
+        raise AssertionError("options parsed twice")
+
+    monkeypatch.setattr(pipeline, "_options", parsed_again)
+    assert parse_pipeline(parsed) is parsed
+    assert "split" in build_pipeline(spark, parsed, SF).columns
 
 
 def test_cli_rejects_sample_fraction_before_session(tmp_path):

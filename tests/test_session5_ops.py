@@ -442,17 +442,17 @@ def test_evict_session_caches(spark):
     releasable (ADVICE r5 hygiene): populate two of them, evict, and
     confirm the dicts empty and re-materialization still works."""
     from data_validator_spark.queries import evict_session_caches
-    from data_validator_spark.queries.tpch_ext import _EXT_CACHE, part_ext_df
+    from data_validator_spark.queries.tpch_ext import _EXT_CACHE, partsupp_df
     from data_validator_spark.queries.mining_ops import _BASKET_CACHE, _basket_lines
 
-    part_ext_df(spark, SF).count()
+    partsupp_df(spark, SF).count()
     _basket_lines(spark, SF).count()
     assert _EXT_CACHE and _BASKET_CACHE
     n = evict_session_caches()
     assert n >= 2
     assert not _EXT_CACHE and not _BASKET_CACHE
     # consumers re-materialize on demand
-    assert part_ext_df(spark, SF).count() > 0
+    assert partsupp_df(spark, SF).count() > 0
     evict_session_caches(SF)
 
 

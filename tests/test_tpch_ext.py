@@ -34,7 +34,7 @@ def test_partsupp_keys_unique_and_in_range(spark):
 
 
 def test_lineitem_ext_derived_columns(spark):
-    li = tx.lineitem_ext_df(spark, SF)
+    li = tx._lineitem_ext_build(spark, SF)
     ship = F.to_date("l_shipdate")
     row = li.agg(
         F.sum(F.when(F.col("l_shipmode").isin(*tx.MODES), 0).otherwise(1)).alias("bad_mode"),
@@ -53,11 +53,11 @@ def test_derivation_is_stable_across_partitionings(spark):
     """The derived columns must be pure functions of the row (no
     nondeterminism): recomputing under a different partitioning yields
     the identical relation."""
-    a = tx.lineitem_ext_df(spark, SF).select(
+    a = tx._lineitem_ext_build(spark, SF).select(
         "l_orderkey", "l_linenumber", "l_shipmode", "l_commitdate"
     )
     b = (
-        tx.lineitem_ext_df(spark, SF)
+        tx._lineitem_ext_build(spark, SF)
         .repartition(7)
         .select("l_orderkey", "l_linenumber", "l_shipmode", "l_commitdate")
     )

@@ -28,12 +28,6 @@ import pandas as pd
 
 sys.path.insert(0, ".")
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
-
 def norm_cell(v) -> str:
     import datetime
     import math
@@ -93,6 +87,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
+    from data_validator_spark.queries import TABLES
     from data_validator_spark.session import local_session
 
     spark = local_session("oracle_check")
