@@ -49,10 +49,15 @@ def _run_conditions(cpus: int, sf: float) -> dict:
     and the code identity it measured — git HEAD plus a dirty flag. A
     reader can reject a BENCH_FULL.json whose conditions don't match
     the record it is being compared to, instead of discovering the
-    mismatch from implausible numbers."""
+    mismatch from implausible numbers. It also names the class archive
+    the session's JVM was started with (path and size, or null): a cold
+    total from a JVM that loaded Spark's classes from jars is not
+    comparable with one that mapped them."""
     import subprocess
 
-    cond = {"cpus": int(cpus), "sf": sf}
+    from data_validator_spark.class_archive import started_with
+
+    cond = {"cpus": int(cpus), "sf": sf, "class_archive": started_with()}
     repo = os.path.dirname(os.path.abspath(__file__))
     try:
         head = subprocess.run(

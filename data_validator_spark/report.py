@@ -161,6 +161,8 @@ def check_output_target(out: OutputSpec, spark: Any = None) -> None:
             if spark is None:
                 raise IOError(f"Remote output needs a SparkSession: {out.filename}")
             return  # existence/writability resolved by the FS at write time
+        if os.path.isdir(path):
+            raise IOError(f"Output file is a directory: {out.filename}")
         d = os.path.dirname(os.path.abspath(path)) or "."
         if not os.access(d, os.W_OK):
             raise IOError(f"Cannot write to output file: {out.filename}")

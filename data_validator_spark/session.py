@@ -7,11 +7,17 @@ builder confs to a session that is already running (under spark-submit,
 in tests): static confs never, runtime SQL confs only where the Spark
 version and mode re-apply them.  Every conf in ``ENGINE_CONFS`` is a
 runtime SQL conf, effective at next planning.
+
+``apply_engine_confs``, which perfbench's worker calls too, also starts
+the driver JVM from the host's class-data-sharing archive when there is
+one, and otherwise has the process build it at exit (class_archive.py).
 """
 
 from __future__ import annotations
 
 import os
+
+from data_validator_spark import class_archive
 
 # Conf -> value required by the engine's storage layout or arithmetic.
 # Keep this to invariants the engine relies on at any scale; tuning
@@ -33,10 +39,12 @@ ENGINE_CONFS: dict[str, str] = {
 
 
 def apply_engine_confs(builder):
-    """Fold the engine confs into a SparkSession.Builder (chainable)."""
+    """Fold the engine confs into a SparkSession.Builder (chainable),
+    and start its driver JVM from the host's class archive when there
+    is one (``class_archive.apply``)."""
     for k, v in ENGINE_CONFS.items():
         builder = builder.config(k, v)
-    return builder
+    return class_archive.apply(builder)
 
 
 def ensure_engine_confs(spark) -> None:

@@ -57,11 +57,13 @@ class VarSubstitution:
         self.add(name, os.environ[env_key])
 
     def add_shell(self, name: str, command: str) -> None:
-        out = subprocess.run(
-            command, shell=True, capture_output=True, text=True, check=True
-        ).stdout
-        first = out.splitlines()[0] if out.splitlines() else ""
-        self.add(name, first)
+        done = subprocess.run(command, shell=True, capture_output=True, text=True)
+        if done.returncode != 0:
+            raise VarSubstitutionError(
+                f"shell variable '{name}' command {command!r} exited with status {done.returncode}"
+            )
+        lines = done.stdout.splitlines()
+        self.add(name, lines[0] if lines else "")
 
     def add_sql(self, name: str, sql: str, spark: SparkSession) -> None:
         rows = spark.sql(sql).take(1)

@@ -228,6 +228,8 @@ class _IdleSession:
     [
         ("filename: /no/such/dir/report.json", "CONFIG ERROR: Cannot write to output file: /no/such/dir/report.json"),
         ("pipe: /no/such/program --flag", "CONFIG ERROR: Pipe program not executable: /no/such/program --flag"),
+        # refused before any check runs, not an IsADirectoryError after the run
+        ("filename: /tmp", "CONFIG ERROR: Output file is a directory: /tmp"),
         # an undefined variable is found once the run resolves variables
         ("filename: $nowhere/report.json", "CONFIG ERROR: Undefined variable: $nowhere"),
     ],
@@ -246,3 +248,18 @@ def test_cli_output_and_variable_faults_are_config_errors(outputs, message, tmp_
     err = capsys.readouterr().err
     assert message in err and "Traceback" not in err
     assert idle.stopped
+
+
+def test_cli_failing_shell_variable_is_config_error(tmp_path, monkeypatch, capsys):
+    """A `shell:` variable whose command exits non-zero is a CONFIG
+    ERROR naming the command and its status, exit 1, no traceback."""
+    from data_validator_spark import cli, session
+
+    idle = _IdleSession()
+    monkeypatch.setattr(session, "build_session", lambda *a, **k: idle)
+    p = tmp_path / "t.yaml"
+    p.write_text('vars:\n  - name: day\n    shell: "exit 3"\ntables: []\n')
+    assert cli.main(["--config", str(p)]) == 1
+    err = capsys.readouterr().err
+    assert "CONFIG ERROR: shell variable 'day' command 'exit 3' exited with status 3" in err
+    assert "Traceback" not in err and idle.stopped
